@@ -117,8 +117,19 @@ USERS_ONLY = [
 ]
 
 
-def _mk_sink(spark, tmp_path):
-    return ParquetStateSink(spark, str(tmp_path / "state"), pk_cols=["pk"])
+def _mk_sink(spark, tmp_path, **kw):
+    return ParquetStateSink(spark, str(tmp_path / "state"), pk_cols=["pk"], **kw)
+
+
+def _no_worker(sink):
+    """`sink` with its rounds queueing no compaction: deltas wait for
+    compact(), so layout assertions see one deterministic pointer."""
+    sink._schedule = lambda meta, keys: None
+    return sink
+
+
+def _manual_sink(spark, tmp_path, **kw):
+    return _no_worker(_mk_sink(spark, tmp_path, **kw))
 
 
 def test_sink_untouched_tables_not_rewritten(spark, tmp_path):
@@ -126,13 +137,17 @@ def test_sink_untouched_tables_not_rewritten(spark, tmp_path):
     must not rewrite (or even re-version) the pets state files."""
     import os
 
-    sink = _mk_sink(spark, tmp_path)
+    sink = _manual_sink(spark, tmp_path)
     sink.apply_batch(spark.createDataFrame(MULTI, SCHEMA), batch_id=0)
+    sink.compact()
     pets_rel = sink._read_pointer()["pets"]
     pets_dir = os.path.join(sink.state_dir, pets_rel)
     before = {f: os.path.getmtime(os.path.join(pets_dir, f)) for f in os.listdir(pets_dir)}
 
     sink.apply_batch(spark.createDataFrame(USERS_ONLY, SCHEMA), batch_id=1)
+    # the round appends one users delta and touches nothing else
+    assert sink._read_meta()["deltas"] == {"users": ["tables/users/d_1"]}
+    sink.compact()
 
     assert sink._read_pointer()["pets"] == pets_rel  # same version dir
     after = {f: os.path.getmtime(os.path.join(pets_dir, f)) for f in os.listdir(pets_dir)}
@@ -150,9 +165,10 @@ def test_sink_steady_batch_work_independent_of_backlog_width(spark, tmp_path):
     touched set, not total state. tools/scale_probe.py --fanout
     measures the same invariant as wall clock at 16→32 tables; this
     pins the structural fact that makes the measurement hold."""
-    sink = _mk_sink(spark, tmp_path)
+    sink = _manual_sink(spark, tmp_path)
     seed1 = [(i, "INSERT", f"t{i % 4}", i, "x") for i in range(8)]
     sink.apply_batch(spark.createDataFrame(seed1, SCHEMA), batch_id=0)
+    sink.compact()
 
     reads: list[list[str]] = []
     orig_read = sink._read_tables
@@ -168,11 +184,18 @@ def test_sink_steady_batch_work_independent_of_backlog_width(spark, tmp_path):
             (id_base, "UPDATE", "t0", 0, "u"),
             (id_base + 1, "UPDATE", "t1", 1, "u"),
         ]
-        p0 = sink._read_pointer()
+        p0 = sink._read_meta()
         reads.clear()
         sink.apply_batch(spark.createDataFrame(batch, SCHEMA), batch_id)
-        p1 = sink._read_pointer()
-        rewritten = {k for k in p1 if p1[k] != p0.get(k)}
+        p1 = sink._read_meta()
+        # the round reads no state at all; it only appends deltas
+        assert reads == []
+        rewritten = {
+            k for part in ("tables", "deltas")
+            for k in set(p0[part]) | set(p1[part])
+            if p1[part].get(k) != p0[part].get(k)
+        }
+        sink.compact()  # the deferred merge, O(touched) as well
         tables_read = {
             rel.split("/")[1] for call in reads for rel in call
         }
@@ -183,6 +206,7 @@ def test_sink_steady_batch_work_independent_of_backlog_width(spark, tmp_path):
     # double the backlog: 4 more tables that the narrow batch never touches
     seed2 = [(200 + i, "INSERT", f"t{4 + i % 4}", i, "x") for i in range(8)]
     sink.apply_batch(spark.createDataFrame(seed2, SCHEMA), batch_id=2)
+    sink.compact()
     assert len(sink._read_pointer()) == 8
 
     rewritten_b, read_b = narrow(3, 300)
@@ -201,18 +225,33 @@ def test_sink_crash_before_pointer_commit_keeps_old_state(spark, tmp_path):
     """Version dirs written but pointer NOT swapped (crash window) →
     readers still see the previous committed state; replaying the batch
     converges."""
+    import os
+
     sink = _mk_sink(spark, tmp_path)
     b0 = spark.createDataFrame(MULTI, SCHEMA)
     sink.apply_batch(b0, batch_id=0)
+    committed = sink._read_meta()
 
     b1 = spark.createDataFrame(USERS_ONLY, SCHEMA)
     # simulate the crash: batch-1 data dirs get written, then the
-    # process dies AT the commit point — the pointer swap never happens
+    # process dies AT the commit point — the pointer swap never happens.
+    # Only the commit that would land batch-1's delta dies; any other
+    # commit (a GC of superseded dirs) goes through.
     real_commit = sink._commit_pointer
-    sink._commit_pointer = lambda *a, **kw: (_ for _ in ()).throw(OSError("crash"))
+
+    def crash_on_append(meta):
+        if meta["deltas"] != committed["deltas"]:
+            raise OSError("crash")
+        real_commit(meta)
+
+    sink._commit_pointer = crash_on_append
     with pytest.raises(OSError):
         sink.apply_batch(b1, batch_id=1)
     sink._commit_pointer = real_commit
+    # the crash hit the append's own commit: its delta is on disk, the
+    # pointer does not reference it
+    assert os.path.isdir(os.path.join(sink.state_dir, "tables/users/d_1"))
+    assert sink._read_meta()["deltas"] == committed["deltas"]
 
     got = {(r["pk"], r["val"]) for r in sink.read_state().filter("table_name='users'").collect()}
     assert got == {(1, "a")}  # pre-crash state, not a torn mix
@@ -262,10 +301,10 @@ def test_sink_crash_during_first_batch_recovers_on_replay(spark, tmp_path):
     b0 = spark.createDataFrame(MULTI, SCHEMA)
     real_commit = sink._commit_pointer
 
-    def crash_on_batch_commit(tables, batch_id, **kw):
-        if tables:  # let the pre-write empty commit through
+    def crash_on_batch_commit(meta):
+        if meta["deltas"]:  # let the pre-write empty commit through
             raise OSError("crash at first batch's commit point")
-        real_commit(tables, batch_id, **kw)
+        real_commit(meta)
 
     sink._commit_pointer = crash_on_batch_commit
     with pytest.raises(OSError):
@@ -427,11 +466,10 @@ def test_bucketed_sink_rewrites_only_touched_bucket(spark, tmp_path):
     import os
 
     B = 8
-    sink = ParquetStateSink(
-        spark, str(tmp_path / "state"), pk_cols=["pk"], n_buckets=B
-    )
+    sink = _manual_sink(spark, tmp_path, n_buckets=B)
     seed = [(i, "INSERT", "users", i, f"v{i}") for i in range(1, 33)]
     sink.apply_batch(spark.createDataFrame(seed, SCHEMA), batch_id=0)
+    sink.compact()
     p0 = sink._read_pointer()
     assert all("#b" in k for k in p0)
     assert len(p0) > 1  # 32 pks spread over several buckets
@@ -440,6 +478,9 @@ def test_bucketed_sink_rewrites_only_touched_bucket(spark, tmp_path):
         spark.createDataFrame([(100, "UPDATE", "users", 7, "v7b")], SCHEMA),
         batch_id=1,
     )
+    # the round wrote exactly one bucket's delta
+    assert len(sink._read_meta()["deltas"]) == 1
+    sink.compact()
     p1 = sink._read_pointer()
     changed = {k for k in p1 if p1[k] != p0.get(k)}
     assert len(changed) == 1  # exactly one bucket re-versioned
@@ -454,11 +495,10 @@ def test_bucketed_sink_delete_empties_bucket_cleanly(spark, tmp_path):
     it (a version dir with zero parquet files is unreadable on restart)
     and the remaining state must read back intact."""
     B = 4
-    sink = ParquetStateSink(
-        spark, str(tmp_path / "state"), pk_cols=["pk"], n_buckets=B
-    )
+    sink = _manual_sink(spark, tmp_path, n_buckets=B)
     seed = [(i, "INSERT", "users", i, f"v{i}") for i in range(1, 17)]
     sink.apply_batch(spark.createDataFrame(seed, SCHEMA), batch_id=0)
+    sink.compact()
     p0 = sink._read_pointer()
     # delete every pk that landed in one bucket
     target_key = sorted(p0)[0]
@@ -468,8 +508,10 @@ def test_bucketed_sink_delete_empties_bucket_cleanly(spark, tmp_path):
     assert victims
     dels = [(100 + j, "DELETE", "users", pk, None) for j, pk in enumerate(victims)]
     sink.apply_batch(spark.createDataFrame(dels, SCHEMA), batch_id=1)
+    sink.compact()
     p1 = sink._read_pointer()
     assert target_key not in p1  # emptied bucket: pointer entry dropped
+    assert sink._read_meta()["deltas"] == {}
     survivors = {(i, f"v{i}") for i in range(1, 17) if i not in victims}
     assert {(r["pk"], r["val"]) for r in sink.read_state().collect()} == survivors
     # a fresh sink instance reads the committed state without error
@@ -585,7 +627,8 @@ def test_keyset_poller_with_bucketed_sink_converges(spark, tmp_path):
         for r in replay(spark.createDataFrame(rows, SCHEMA), ["pk"]).collect()
     }
     assert got == want
-    assert all("#b" in k for k in sink._read_pointer())
+    sink.compact()
+    assert sink._read_pointer() and all("#b" in k for k in sink._read_pointer())
 
 
 def test_sink_time_travel_asof(spark, tmp_path):
@@ -613,17 +656,24 @@ def test_sink_time_travel_asof(spark, tmp_path):
 
 
 def test_sink_default_still_garbage_collects(spark, tmp_path):
-    """Without retain_history the superseded v_0 dir is deleted at the
-    batch-1 commit, and read_state_asof refuses (the history it would
-    need was never kept)."""
+    """Without retain_history the superseded v_0 dir is deleted — at
+    the start of the round after the compaction that superseded it, so
+    a frame read in between stays readable — and read_state_asof
+    refuses (the history it would need was never kept)."""
     import os
 
     import pytest as _pytest
 
     sink = ParquetStateSink(spark, str(tmp_path / "state"), pk_cols=["pk"])
     sink.apply_batch(spark.createDataFrame(BATCH1, SCHEMA), batch_id=0)
+    sink.compact()
     v0 = os.path.join(sink.state_dir, sink._read_pointer()["users"])
     sink.apply_batch(spark.createDataFrame(BATCH2, SCHEMA), batch_id=1)
+    sink.compact()
+    frame = sink.read_state()
+    assert os.path.exists(v0)  # superseded, but GC waits for the next round
+    assert {(r["pk"], r["val"]) for r in frame.collect()} == {(2, "b2"), (3, "c")}
+    sink.apply_batch(spark.createDataFrame([], SCHEMA), batch_id=2)
     assert not os.path.exists(v0)
     with _pytest.raises(ValueError):
         sink.read_state_asof(0)
@@ -635,19 +685,20 @@ def test_sink_vacuum_history_bounds_storage(spark, tmp_path):
     and the current state is untouched."""
     import os
 
-    sink = ParquetStateSink(
-        spark, str(tmp_path / "state"), pk_cols=["pk"], retain_history=True
-    )
-    sink.apply_batch(spark.createDataFrame(BATCH1, SCHEMA), batch_id=0)
-    sink.apply_batch(spark.createDataFrame(BATCH2, SCHEMA), batch_id=1)
-    sink.apply_batch(
-        spark.createDataFrame([(6, "INSERT", "users", 4, "d")], SCHEMA), batch_id=2
-    )
+    sink = _manual_sink(spark, tmp_path, retain_history=True)
+    for batch_id, rows in enumerate(
+        [BATCH1, BATCH2, [(6, "INSERT", "users", 4, "d")]]
+    ):
+        sink.apply_batch(spark.createDataFrame(rows, SCHEMA), batch_id=batch_id)
+        sink.compact()
     v0 = os.path.join(sink.state_dir, "tables/users/v_0")
     assert os.path.isdir(v0)
 
     n = sink.vacuum_history(keep_last=2)
-    assert n == 1 and not os.path.exists(v0)
+    # batch 0's delta and base, and the deltas batches 1 and 2 folded:
+    # only the bases of the two kept batches survive
+    assert n == 4 and not os.path.exists(v0)
+    assert os.path.isdir(os.path.join(sink.state_dir, "tables/users/v_1"))
     # asof(0) now resolves to nothing older than the kept window
     assert sink.read_state_asof(0) is None
     assert {(r["pk"], r["val"]) for r in sink.read_state_asof(1).collect()} == {
@@ -714,32 +765,50 @@ def test_bucketed_sink_truncate_clears_all_buckets(spark, tmp_path):
     from warp_pipe_spark.apply import TRUNCATE_KINDS
 
     B = 8
-    sink = ParquetStateSink(
-        spark, str(tmp_path / "state"), pk_cols=["pk"], n_buckets=B,
-        truncate_kinds=TRUNCATE_KINDS,
+    sink = _manual_sink(
+        spark, tmp_path, n_buckets=B, truncate_kinds=TRUNCATE_KINDS
     )
     seed = [(i, "INSERT", "users", i, f"v{i}") for i in range(1, 33)] + [
         (100, "INSERT", "pets", 1, "rex")
     ]
     sink.apply_batch(spark.createDataFrame(seed, SCHEMA), batch_id=0)
+    sink.compact()
     assert sink.read_state().count() == 33
+    seeded = [k for k in sink._read_pointer() if k.startswith("users#b")]
+    assert len(seeded) > 1
 
     batch = [
         (200, "truncate", "users", None, None),
         (201, "INSERT", "users", 50, "survivor"),
     ]
     sink.apply_batch(spark.createDataFrame(batch, SCHEMA), batch_id=1)
-    got = {
-        (r["table_name"], r["pk"], r["val"])
-        for r in sink.read_state().collect()
+    # the truncate reaches every bucket of its table as a delta, so a
+    # compaction of any one bucket clears it
+    assert {k for k in sink._read_meta()["deltas"]} == {
+        f"users#b{b}" for b in range(B)
     }
-    assert got == {("pets", 1, "rex"), ("users", 50, "survivor")}
+    want = {("pets", 1, "rex"), ("users", 50, "survivor")}
+
+    def state():
+        return {
+            (r["table_name"], r["pk"], r["val"])
+            for r in sink.read_state().collect()
+        }
+
+    assert state() == want  # merge-on-read
+    for key in seeded:  # one bucket at a time, the worker's grain
+        sink._compact_key(key)
+        assert state() == want
+    sink.compact()
+    got = state()
+    assert got == want
     # emptied buckets lost their pointer entries; no truncate row in state
     p = sink._read_pointer()
     users_keys = [k for k in p if k.startswith("users#b")]
     assert len(users_keys) == 1  # only the survivor's bucket remains
     # redelivery of the truncate batch converges to the same state
     sink.apply_batch(spark.createDataFrame(batch, SCHEMA), batch_id=1)
+    sink.compact()
     got2 = {
         (r["table_name"], r["pk"], r["val"])
         for r in sink.read_state().collect()
@@ -817,8 +886,10 @@ def test_sink_single_write_handles_escaped_table_names(spark, tmp_path):
     dirs the per-table writer produced."""
     weird = ["users", "a/b:c", "x=y", "100%", ""]
     rows = [(i + 1, "INSERT", t, i + 1, f"v{i}") for i, t in enumerate(weird)]
-    sink = ParquetStateSink(spark, str(tmp_path / "state"), pk_cols=["pk"])
+    sink = _manual_sink(spark, tmp_path)
     sink.apply_batch(spark.createDataFrame(rows, SCHEMA), batch_id=0)
+    assert set(sink._read_meta()["deltas"]) == set(weird)
+    sink.compact()
     pointer = sink._read_pointer()
     assert set(pointer) == set(weird)
     got = {
@@ -832,6 +903,7 @@ def test_sink_single_write_handles_escaped_table_names(spark, tmp_path):
         spark.createDataFrame([(10, "UPDATE", "a/b:c", 2, "v1b")], SCHEMA),
         batch_id=1,
     )
+    sink.compact()
     p1 = sink._read_pointer()
     assert p1["a/b:c"].endswith("v_1")
     assert p1["users"] == pointer["users"]
@@ -842,10 +914,12 @@ def test_sink_single_write_handles_escaped_table_names(spark, tmp_path):
 
 
 def test_batch_stats_matches_apply_batch_derivation(spark, tmp_path):
-    """batch_stats' one-job (touched, max_id, n) must agree with what
-    apply_batch derives itself — including NULL-table rows, which count
-    toward the offset watermark but never into the touched set — and
-    feeding the hint back must produce the identical committed state."""
+    """The (max_id, n) apply_batch observes inside its write must agree
+    with the base-class batch_stats job — including NULL-table rows,
+    which count toward the offset watermark but are never applied —
+    bucketed or not."""
+    from warp_pipe_spark.merge_sink import InMemoryMergeExecutor, MergeStateSink
+
     rows = [
         (1, "INSERT", "users", 1, "a"),
         (7, "INSERT", None, 9, "poison"),  # null-table: offset-only
@@ -853,45 +927,38 @@ def test_batch_stats_matches_apply_batch_derivation(spark, tmp_path):
         (5, "UPDATE", "users", 1, "a2"),
     ]
     batch = spark.createDataFrame(rows, SCHEMA)
-    plain = ParquetStateSink(spark, str(tmp_path / "plain"), pk_cols=["pk"])
-    hinted = ParquetStateSink(spark, str(tmp_path / "hinted"), pk_cols=["pk"])
-    touched, mx, n = hinted.batch_stats(batch)
-    assert touched == [("pets", None), ("users", None)]
-    assert (mx, n) == (7, 4)
-    plain.apply_batch(batch, batch_id=0)
-    hinted.apply_batch(batch, batch_id=0, touched=touched)
-    as_set = lambda s: {  # noqa: E731
-        (r["table_name"], r["pk"], r["id"], r["val"])
-        for r in s.read_state().collect()
-    }
-    assert as_set(plain) == as_set(hinted)
-    assert plain._read_pointer() == hinted._read_pointer()
-    # bucketed sinks key the touched set by (table, bucket)
-    b = ParquetStateSink(
-        spark, str(tmp_path / "bucketed"), pk_cols=["pk"], n_buckets=4
-    )
-    touched_b, mx_b, n_b = b.batch_stats(batch)
-    assert (mx_b, n_b) == (7, 4)
-    assert all(t in ("pets", "users") and 0 <= bk < 4 for t, bk in touched_b)
-    b.apply_batch(batch, batch_id=0, touched=touched_b)
-    assert {
-        (r["table_name"], r["pk"]) for r in b.read_state().collect()
-    } == {("users", 1), ("pets", 1)}
+    assert MergeStateSink(spark, InMemoryMergeExecutor(spark)).batch_stats(
+        batch
+    ) == (7, 4)
+    for n_buckets in (None, 4):
+        sink = ParquetStateSink(
+            spark, str(tmp_path / f"b{n_buckets}"), pk_cols=["pk"],
+            n_buckets=n_buckets,
+        )
+        assert sink.batch_stats(batch) == (7, 4)
+        assert sink.apply_batch(batch, batch_id=0) == (7, 4)
+        assert {
+            (r["table_name"], r["pk"], r["id"], r["val"])
+            for r in sink.read_state().collect()
+        } == {("users", 1, 5, "a2"), ("pets", 1, 3, "rex")}
+    empty = spark.createDataFrame([], SCHEMA)
+    assert sink.apply_batch(empty, batch_id=1) == (None, 0)
 
 
 def test_redelivered_batch_never_unlinks_committed_dirs(spark, tmp_path):
-    """ADVICE r14: a redelivered batch_id must NEVER delete the version
-    dir the committed pointer references before the new pointer lands —
-    a crash in that window used to leave the pointer referencing
-    deleted dirs. Now the redelivery writes a `.r<n>`-suffixed dir and
-    the committed dir survives until after the commit point."""
-    sink = _mk_sink(spark, tmp_path)
-    b = spark.createDataFrame(USERS_ONLY, SCHEMA)
-    sink.apply_batch(b, batch_id=1)
-    committed_rel = sink._read_pointer()["users"]
-    committed_dir = str(tmp_path / "state" / committed_rel)
+    """ADVICE r14: a redelivered batch_id must NEVER delete the dir the
+    committed pointer references before the new pointer lands — a crash
+    in that window used to leave the pointer referencing deleted dirs.
+    Now the redelivery writes a `.r<n>`-suffixed delta and the committed
+    one survives; both are garbage only after the compaction that folds
+    them commits, and are swept by the round after it."""
     import os
 
+    sink = _manual_sink(spark, tmp_path)
+    b = spark.createDataFrame(USERS_ONLY, SCHEMA)
+    sink.apply_batch(b, batch_id=1)
+    committed_rel = sink._read_meta()["deltas"]["users"][0]
+    committed_dir = str(tmp_path / "state" / committed_rel)
     assert os.path.isdir(committed_dir)
 
     # redeliver the same batch_id, but crash AT the commit point: the
@@ -911,28 +978,39 @@ def test_redelivered_batch_never_unlinks_committed_dirs(spark, tmp_path):
     } == {(1, "a2")}
 
     # the completed redelivery converges; its dir is the suffixed one
-    # and the superseded canonical dir is swept after the commit
     sink.apply_batch(b, batch_id=1)
-    rel2 = sink._read_pointer()["users"]
+    deltas = sink._read_meta()["deltas"]["users"]
+    rel2 = deltas[-1]
+    assert deltas[0] == committed_rel
     assert rel2 != committed_rel and rel2.startswith(committed_rel)
     assert {
         (r["pk"], r["val"]) for r in sink.read_state().collect()
     } == {(1, "a2")}
+    sink.compact()
+    assert {
+        (r["pk"], r["val"]) for r in sink.read_state().collect()
+    } == {(1, "a2")}
+    assert os.path.isdir(committed_dir)  # superseded; GC is next round's
+    sink.apply_batch(spark.createDataFrame([], SCHEMA), batch_id=2)
     assert not os.path.isdir(committed_dir)  # garbage only POST-commit
 
 
 def test_orphan_version_dir_is_reclaimed_not_suffixed(spark, tmp_path):
-    """A colliding version dir that NO committed pointer references is
-    an orphan of a delivery that died pre-commit: it is cleared and the
-    canonical name reused (no unbounded .rN growth from crash loops)."""
+    """A colliding dir that NO committed pointer references is an orphan
+    of a delivery (or compaction) that died pre-commit: it is cleared
+    and the canonical name reused (no unbounded .rN growth from crash
+    loops)."""
     import os
 
-    sink = _mk_sink(spark, tmp_path)
+    sink = _manual_sink(spark, tmp_path)
     sink.apply_batch(spark.createDataFrame(MULTI, SCHEMA), batch_id=0)
-    orphan = tmp_path / "state" / "tables" / "users" / "v_1"
-    os.makedirs(orphan)
-    (orphan / "garbage.parquet").write_bytes(b"not parquet")
+    for name in ("d_1", "v_1"):
+        orphan = tmp_path / "state" / "tables" / "users" / name
+        os.makedirs(orphan)
+        (orphan / "garbage.parquet").write_bytes(b"not parquet")
     sink.apply_batch(spark.createDataFrame(USERS_ONLY, SCHEMA), batch_id=1)
+    assert sink._read_meta()["deltas"]["users"][-1] == "tables/users/d_1"
+    sink.compact()
     assert sink._read_pointer()["users"] == "tables/users/v_1"
     assert {
         (r["pk"], r["val"])
@@ -964,29 +1042,362 @@ def test_redelivery_with_history_preserves_asof_reads(spark, tmp_path):
 def test_marker_table_name_rejected_loudly(spark, tmp_path):
     """ADVICE r14: a table literally named __HIVE_DEFAULT_PARTITION__
     would collide with Spark's marker for the empty-string table and be
-    filed under the wrong pointer key — both batch_stats and
-    apply_batch must reject it up front."""
+    filed under the wrong pointer key — apply_batch must reject it
+    before anything commits."""
     sink = _mk_sink(spark, tmp_path)
     rows = [(1, "INSERT", "__HIVE_DEFAULT_PARTITION__", 1, "x")]
     batch = spark.createDataFrame(rows, SCHEMA)
     with pytest.raises(ValueError, match="default-partition marker"):
-        sink.batch_stats(batch)
-    with pytest.raises(ValueError, match="default-partition marker"):
         sink.apply_batch(batch, batch_id=0)
+    assert sink.read_state() is None
 
 
 def test_state_sink_abc_default_batch_stats(spark):
     """The StateSink base class (VERDICT r14 #9): every sink inherits a
-    batch_stats returning (None, max_id, n) so the poller's fast path
-    can never AttributeError again; MergeStateSink uses the default."""
+    batch_stats returning (max_id, n) and an apply_observed built on it,
+    so the poller can never AttributeError again; MergeStateSink uses
+    the defaults."""
     from warp_pipe_spark.merge_sink import InMemoryMergeExecutor, MergeStateSink
     from warp_pipe_spark.streaming import StateSink
 
     sink = MergeStateSink(spark, InMemoryMergeExecutor(spark))
     assert isinstance(sink, StateSink)
     batch = spark.createDataFrame(MULTI, SCHEMA)
-    touched, mx, n = sink.batch_stats(batch)
-    assert touched is None and (mx, n) == (3, 3)
+    assert sink.batch_stats(batch) == (3, 3)
     empty = spark.createDataFrame([], SCHEMA)
-    touched, mx, n = sink.batch_stats(empty)
-    assert touched is None and mx is None and n == 0
+    assert sink.batch_stats(empty) == (None, 0)
+    assert sink.apply_observed(empty, batch_id=0) == (None, 0)
+    assert sink.read_state() is None or sink.read_state().count() == 0
+    assert sink.apply_observed(batch, batch_id=0) == (3, 3)
+    assert sink.read_state().count() == 3
+
+
+# --- merge-on-read commit protocol -------------------------------------
+
+
+def _rows(df):
+    return None if df is None else {tuple(r) for r in df.collect()}
+
+
+def test_steady_keyset_round_is_one_spark_job(spark, tmp_path):
+    """A steady keyset round is ONE Spark job: the batch's (max_id, n)
+    ride the sink's single append write as an Observation — no stats
+    job, no persist, no old-state read. Counted by job group, which the
+    compaction worker's thread does not carry."""
+    import uuid
+
+    from warp_pipe_spark.streaming import KeysetPoller, dataframe_keyset_fetch
+
+    log = spark.createDataFrame(
+        [(i, "UPDATE", f"t{i % 3}", i % 97, f"v{i}") for i in range(1, 2001)],
+        SCHEMA,
+    ).cache()
+    log.count()
+    sink = ParquetStateSink(spark, str(tmp_path / "state"), pk_cols=["pk"])
+    poller = KeysetPoller(
+        spark, dataframe_keyset_fetch(log), sink, str(tmp_path / "off.json"),
+        limit=400,
+    )
+    assert poller.poll_once() == 400  # first round, onto empty state
+    sink.compact()
+    sc = spark.sparkContext
+    jobs = []
+    try:
+        for _ in range(3):
+            group = f"steady-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, "steady keyset round")
+            assert poller.poll_once() == 400
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    finally:
+        sc._jsc.clearJobGroup()
+        log.unpersist()
+    assert jobs == [1, 1, 1]
+    want = replay(log.filter("id <= 1600"), ["pk"])
+    assert _rows(sink.read_state().select(*log.columns)) == _rows(want)
+
+
+class _CrashAt:
+    """os.replace stand-in that raises on its `n`-th call (never when
+    n=0) and counts the calls."""
+
+    def __init__(self, n):
+        import os
+
+        self.n, self.calls, self.real = n, 0, os.replace
+
+    def __call__(self, src, dst):
+        self.calls += 1
+        if self.calls == self.n:
+            raise OSError(f"crash at os.replace #{self.n}")
+        return self.real(src, dst)
+
+
+@pytest.mark.parametrize("phase", ["append", "compact"])
+def test_crash_at_every_replace_leaves_a_committed_prefix(
+    spark, tmp_path, monkeypatch, phase
+):
+    """Fail the Nth os.replace of an append (GC commit, delta renames,
+    pointer commit) or of a compaction (base renames, pointer commits),
+    for every N: a restarted sink reads a committed prefix, and replay
+    converges to the no-crash state."""
+    import os
+
+    b0 = spark.createDataFrame(MULTI, SCHEMA)
+    b1 = spark.createDataFrame(
+        [(4, "UPDATE", "users", 1, "a2"), (5, "INSERT", "pets", 3, "max"),
+         (6, "DELETE", "pets", 1, None)],
+        SCHEMA,
+    )
+    s0 = {("users", 1, "a"), ("pets", 1, "rex"), ("pets", 2, "ada")}
+    s1 = {("users", 1, "a2"), ("pets", 2, "ada"), ("pets", 3, "max")}
+
+    def state(sink):
+        return {
+            (r["table_name"], r["pk"], r["val"])
+            for r in sink.read_state().collect()
+        }
+
+    def run(state_dir, crash_at):
+        sink = _no_worker(ParquetStateSink(spark, state_dir, pk_cols=["pk"]))
+        sink.apply_batch(b0, batch_id=0)
+        sink.compact()  # leaves garbage: the next append GC-commits first
+        if phase == "compact":
+            sink.apply_batch(b1, batch_id=1)
+        crash = _CrashAt(crash_at)
+        monkeypatch.setattr(os, "replace", crash)
+        try:
+            if phase == "append":
+                sink.apply_batch(b1, batch_id=1)
+            else:
+                sink.compact()
+        finally:
+            monkeypatch.setattr(os, "replace", crash.real)
+        return crash.calls
+
+    n_replaces = run(str(tmp_path / "clean"), 0)
+    assert n_replaces >= (3 if phase == "append" else 4)
+    for n in range(1, n_replaces + 1):
+        state_dir = str(tmp_path / f"crash{n}")
+        with pytest.raises(OSError, match="crash at os.replace"):
+            run(state_dir, n)
+        restarted = _no_worker(
+            ParquetStateSink(spark, state_dir, pk_cols=["pk"])
+        )
+        assert state(restarted) in ((s0, s1) if phase == "append" else (s1,))
+        if phase == "append":
+            restarted.apply_batch(b1, batch_id=1)  # redelivery
+        assert state(restarted) == s1
+        restarted.compact()
+        assert state(restarted) == s1
+        assert restarted._read_meta()["deltas"] == {}
+
+
+@pytest.mark.parametrize("n_buckets", [None, 4])
+def test_reads_identical_before_and_after_compact(spark, tmp_path, n_buckets):
+    """read_state() and read_state_asof() fold base ∪ deltas on read;
+    compaction folds the same rows into bases, so both return identical
+    rows before and after compact()."""
+    sink = _manual_sink(
+        spark, tmp_path, n_buckets=n_buckets, retain_history=True
+    )
+    batches = [
+        MULTI,
+        BATCH2 + [(7, "INSERT", "pets", 4, "kit")],
+        [(8, "DELETE", "pets", 2, None), (9, "UPDATE", "users", 3, "c2")],
+    ]
+    for batch_id, rows in enumerate(batches):
+        sink.apply_batch(spark.createDataFrame(rows, SCHEMA), batch_id=batch_id)
+    sink.compact()  # batches 0-2 in bases ...
+    sink.apply_batch(
+        spark.createDataFrame([(10, "UPDATE", "pets", 4, "kat")], SCHEMA),
+        batch_id=3,
+    )  # ... batch 3 a delta
+    meta = sink._read_meta()
+    # reads mix both paths: delta-free bases scanned plain, pets folded
+    assert meta["deltas"] and all(k.startswith("pets") for k in meta["deltas"])
+    assert any(k.startswith("users") for k in meta["tables"])
+
+    def reads():
+        return _rows(sink.read_state()), [
+            _rows(sink.read_state_asof(b)) for b in range(-1, 5)
+        ]
+
+    before = reads()
+    sink.compact()
+    assert sink._read_meta()["deltas"] == {}
+    assert reads() == before
+    assert before[0] == _rows(
+        replay(
+            spark.createDataFrame(
+                [r for rows in batches for r in rows]
+                + [(10, "UPDATE", "pets", 4, "kat")],
+                SCHEMA,
+            ),
+            ["pk"],
+        )
+    )
+
+
+def test_compaction_worker_folds_bounds_debt_and_surfaces_errors(spark, tmp_path):
+    """The background worker folds due keys; a key at twice the cap
+    makes the round wait for it; a worker error re-raises on the next
+    apply_batch."""
+    import time
+
+    sink = _mk_sink(spark, tmp_path)
+    sink.COMPACT_DELTAS = 1  # every delta is due, a second one is debt
+    sink.apply_batch(spark.createDataFrame(MULTI, SCHEMA), batch_id=0)
+    with sink._cv:
+        assert sink._cv.wait_for(lambda: sink._worker is None, timeout=120)
+    meta = sink._read_meta()
+    assert meta["deltas"] == {} and set(meta["tables"]) == {"users", "pets"}
+
+    real = ParquetStateSink._compact_key
+
+    def slow(key, only_if_due=False):
+        time.sleep(1.0)
+        real(sink, key, only_if_due)
+
+    sink._compact_key = slow
+    sink.apply_batch(spark.createDataFrame(USERS_ONLY, SCHEMA), batch_id=1)
+    sink.apply_batch(
+        spark.createDataFrame([(5, "UPDATE", "users", 1, "a3")], SCHEMA),
+        batch_id=2,
+    )
+    # the second delta put users at 2x the cap: the round waited
+    assert sink._read_meta()["deltas"] == {}
+
+    def boom(key, only_if_due=False):
+        raise RuntimeError("compaction failed")
+
+    sink._compact_key = boom
+    sink.apply_batch(
+        spark.createDataFrame([(6, "UPDATE", "users", 1, "a4")], SCHEMA),
+        batch_id=3,
+    )
+    with sink._cv:
+        assert sink._cv.wait_for(lambda: sink._worker is None, timeout=120)
+    with pytest.raises(RuntimeError, match="compaction failed"):
+        sink.apply_batch(spark.createDataFrame([], SCHEMA), batch_id=4)
+    # nothing committed was lost, and the sink recovers
+    del sink._compact_key
+    assert {
+        (r["pk"], r["val"])
+        for r in sink.read_state().filter("table_name='users'").collect()
+    } == {(1, "a4")}
+    sink.compact()
+    assert sink._read_meta()["deltas"] == {}
+
+
+def test_pre_schema_pointer_seeds_schema_from_every_dir(spark, tmp_path):
+    """ADVICE r15: a pointer committed before the pointer carried a
+    schema must not be seeded from the batch alone — that clips columns
+    only untouched tables' dirs hold (here `email`, held by users while
+    the batch touches pets), and the next commit makes the clip
+    permanent. The schema is seeded once from every committed dir."""
+    import json
+    import os
+
+    state = tmp_path / "state"
+    spark.createDataFrame(
+        [(1, "INSERT", "users", 1, "a", "a@x.com")], SCHEMA + ", email STRING"
+    ).write.parquet(str(state / "tables" / "users" / "v_0"))
+    spark.createDataFrame([(2, "INSERT", "pets", 1, "rex")], SCHEMA).write.parquet(
+        str(state / "tables" / "pets" / "v_0")
+    )
+    with open(os.path.join(state, "_POINTER.json"), "w") as f:
+        json.dump(
+            {
+                "batch_id": 0,
+                "n_buckets": None,
+                "tables": {"users": "tables/users/v_0", "pets": "tables/pets/v_0"},
+            },
+            f,
+        )
+    sink = _mk_sink(spark, tmp_path)
+    sink.apply_batch(
+        spark.createDataFrame([(3, "UPDATE", "pets", 1, "rex2")], SCHEMA),
+        batch_id=1,
+    )
+    want = {("users", "a", "a@x.com"), ("pets", "rex2", None)}
+    for s in (sink, _mk_sink(spark, tmp_path)):  # and after a restart
+        assert {
+            (r["table_name"], r["val"], r["email"])
+            for r in s.read_state().collect()
+        } == want
+
+
+def test_appends_racing_the_worker_lose_no_delta(spark, tmp_path):
+    """Stress: every append makes a key due, so the worker compacts
+    while the caller keeps appending (switch interval shortened to
+    interleave the threads more often). A compaction commit that dropped
+    a delta appended meanwhile, or an append that lost a compaction's
+    base, would show as a state differing from the one-shot replay."""
+    import sys
+
+    sink = _mk_sink(spark, tmp_path)
+    sink.COMPACT_DELTAS = 1
+    rows = [
+        (i, ("INSERT", "UPDATE", "UPDATE", "DELETE")[i % 4], f"t{i % 3}", i % 7, f"v{i}")
+        for i in range(1, 121)
+    ]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for b in range(20):
+            chunk = rows[6 * b: 6 * b + 6]
+            sink.apply_batch(spark.createDataFrame(chunk, SCHEMA), batch_id=b)
+        sink.compact()
+    finally:
+        sys.setswitchinterval(interval)
+    assert sink._read_meta()["deltas"] == {}
+    assert _rows(sink.read_state()) == _rows(
+        replay(spark.createDataFrame(rows, SCHEMA), ["pk"])
+    )
+
+
+def test_run_until_drained_closes_the_sink(spark, tmp_path):
+    """No compaction outlives a drained tail: run_until_drained closes
+    the sink, which waits for the worker and deletes the dirs its
+    compactions superseded, so only the live pointer's dirs stay on
+    disk; close() re-raises a worker error."""
+    import os
+
+    from warp_pipe_spark.streaming import KeysetPoller, dataframe_keyset_fetch
+
+    rows = [
+        (i, ("INSERT", "UPDATE")[i % 2], f"t{i % 2}", i % 5, f"v{i}")
+        for i in range(1, 41)
+    ]
+    sink = _mk_sink(spark, tmp_path)
+    sink.COMPACT_DELTAS = 2
+    poller = KeysetPoller(
+        spark, dataframe_keyset_fetch(spark.createDataFrame(rows, SCHEMA)),
+        sink, str(tmp_path / "off.json"), limit=4,
+    )
+    assert poller.run_until_drained() == len(rows)
+    assert sink._worker is None
+    meta = sink._read_meta()
+    assert meta["garbage"] == []
+    on_disk = {
+        os.path.relpath(d, sink.state_dir)
+        for d, _, fs in os.walk(os.path.join(sink.state_dir, "tables"))
+        if any(f.endswith(".parquet") for f in fs)
+    }
+    assert on_disk == set(sink._rels(meta))
+    assert _rows(sink.read_state()) == _rows(
+        replay(spark.createDataFrame(rows, SCHEMA), ["pk"])
+    )
+
+    def boom(key, only_if_due=False):
+        raise RuntimeError("compaction failed")
+
+    sink.compact()
+    sink.COMPACT_DELTAS = 1  # the next delta is due at once
+    sink._compact_key = boom
+    sink.apply_batch(
+        spark.createDataFrame([(50, "UPDATE", "t0", 1, "x")], SCHEMA),
+        batch_id=40,
+    )
+    with pytest.raises(RuntimeError, match="compaction failed"):
+        sink.close()

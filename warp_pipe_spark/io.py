@@ -225,19 +225,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    """Load and register temp views so both DataFrame and spark.sql
-    queries see the same tables."""
-    out = {}
-    for n in names:
-        df = read_table(spark, sf_dir, n)
-        df.createOrReplaceTempView(n)
-        out[n] = df
-    return out
-
-
 # --- deterministic changeset derivation (FIXTURES.md §4) -------------------
 
 def derive_changesets(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -238,12 +238,3 @@ def ws_handshake(host: str, port: int) -> socket.socket:
     if expect not in resp:
         raise ValueError("bad Sec-WebSocket-Accept")
     return s
-
-
-def json_lines(df: DataFrame) -> DataFrame:
-    """S7 helper shared by console/socket sinks: one JSON doc per row —
-    the same serialization rule as changeset.to_json_lines (delegated,
-    so the two sinks can never silently diverge), aliased 'value'."""
-    from warp_pipe_spark.changeset import to_json_lines
-
-    return to_json_lines(df).withColumnRenamed("json", "value")
