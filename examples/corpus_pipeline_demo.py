@@ -7,7 +7,7 @@ Stages (each one a driver query too — see __spark_entry__.queries()):
   1. quality + language annotation        (text.quality_scores, lang_id)
   2. exact dedup                          (dedup.exact_dedup)
   3. near-dup candidates → clusters       (minhash_lsh_pairs →
-                                           connected_components)
+                                           connected_components_star)
   4. keep one doc per cluster, filter     (cluster rep = min doc_id)
   5. deterministic train/val hash split   (h32(doc_id) % 10)
   6. corpus mix report per source         (docs_source_mix shape)
@@ -28,7 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from warp_pipe_spark.datapipe.dedup import (
-    connected_components,
+    connected_components_star,
     exact_dedup,
     minhash_lsh_pairs,
 )
@@ -54,7 +54,7 @@ def main() -> None:
     surviving = annotated.join(keep_exact, "doc_id", "left_semi")
 
     # 3./4. near-dup clusters: keep only each cluster's representative
-    clusters = connected_components(minhash_lsh_pairs(docs))
+    clusters = connected_components_star(minhash_lsh_pairs(docs))
     losers = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select("doc_id")
     surviving = surviving.join(losers, "doc_id", "left_anti")
 

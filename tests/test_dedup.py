@@ -121,21 +121,6 @@ def test_regex_shingles_match_slice_form(spark):
         assert bad.count() == 0, f"n={n} mismatch"
 
 
-def test_connected_components_small_graph(spark):
-    from warp_pipe_spark.datapipe.dedup import connected_components
-
-    # two components: {1,2,3,9} via chain, {5,7}; 11-12-13 chain merges late
-    pairs = spark.createDataFrame(
-        [(2, 3), (1, 2), (3, 9), (5, 7), (12, 13), (11, 12)],
-        "doc_a long, doc_b long",
-    )
-    got = {
-        r.doc_id: r.cluster_id
-        for r in connected_components(pairs).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 9: 1, 5: 5, 7: 5, 11: 11, 12: 11, 13: 11}
-
-
 def test_clusters_consistent_with_pairs(spark, sf_dir):
     import __spark_entry__ as entrymod
 
@@ -182,16 +167,23 @@ def _union_find_clusters(edges):
     return {n: find(n) for n in parent}
 
 
-def test_star_cc_matches_union_find_on_mixed_topologies(spark):
-    from warp_pipe_spark.datapipe.dedup import connected_components_star
-
-    # chain + blob + triangle-with-tail + isolated edge, interleaved ids
-    edges = (
+@pytest.mark.parametrize(
+    "edges",
+    [
+        # chain + blob + triangle-with-tail + isolated edge, interleaved ids
         [(i, i + 1) for i in range(0, 12)]  # chain 0..12
         + [(20, 21), (20, 22), (21, 22), (22, 23), (21, 23)]  # dense blob
         + [(30, 31), (31, 32), (30, 32), (32, 40)]  # triangle + tail
-        + [(50, 51)]
-    )
+        + [(50, 51)],
+        # two components: {1,2,3,9} via chain, {5,7}; 11-12-13 chain
+        # merges late
+        [(2, 3), (1, 2), (3, 9), (5, 7), (12, 13), (11, 12)],
+    ],
+    ids=["mixed", "small_graph"],
+)
+def test_star_cc_matches_union_find_on_mixed_topologies(spark, edges):
+    from warp_pipe_spark.datapipe.dedup import connected_components_star
+
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
     got = {r.doc_id: r.cluster_id for r in connected_components_star(pairs).collect()}
     assert got == _union_find_clusters(edges)
@@ -199,23 +191,12 @@ def test_star_cc_matches_union_find_on_mixed_topologies(spark):
 
 def test_star_cc_converges_where_min_label_budget_cannot(spark):
     """Adversarial chain: diameter 60 — min-label propagation moves the
-    label ONE hop per round, so a 25-round budget provably cannot
-    finish; star contraction collapses the same chain in O(log²)
-    rounds. Same output contract."""
-    from warp_pipe_spark.datapipe.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    label ONE hop per round, so a 25-round budget could not finish;
+    star contraction collapses the same chain in O(log²) rounds."""
+    from warp_pipe_spark.datapipe.dedup import connected_components_star
 
     edges = [(i, i + 1) for i in range(60)]
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-
-    # min-label at 25 rounds: the label provably cannot cross the
-    # 60-hop chain — it must fail LOUD, never return a component split
-    # across several cluster_ids (downstream dedup would keep dups)
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, max_iter=25).collect()
-
     got = {
         r.doc_id: r.cluster_id
         for r in connected_components_star(pairs, max_iter=15).collect()
@@ -223,9 +204,8 @@ def test_star_cc_converges_where_min_label_budget_cannot(spark):
     assert got == {i: 0 for i in range(61)}
 
 
-def test_star_cc_agrees_with_min_label_on_lsh_pairs(spark, sf_dir):
+def test_star_cc_matches_union_find_on_lsh_pairs(spark, sf_dir):
     from warp_pipe_spark.datapipe.dedup import (
-        connected_components,
         connected_components_star,
         minhash_lsh_pairs,
     )
@@ -233,9 +213,9 @@ def test_star_cc_agrees_with_min_label_on_lsh_pairs(spark, sf_dir):
 
     docs = read_table(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(docs).localCheckpoint()
-    a = {r.doc_id: r.cluster_id for r in connected_components(pairs).collect()}
-    b = {r.doc_id: r.cluster_id for r in connected_components_star(pairs).collect()}
-    assert a == b
+    edges = [(r.doc_a, r.doc_b) for r in pairs.collect()]
+    got = {r.doc_id: r.cluster_id for r in connected_components_star(pairs).collect()}
+    assert edges and got == _union_find_clusters(edges)
 
 
 def test_embedding_all_pairs_guard_refuses_unbounded_input(spark):
@@ -697,6 +677,62 @@ def test_ingest_dedup_sink_crash_after_marker_recovers(spark, tmp_path):
         len(fs) for _, _, fs in os.walk(str(tmp_path / "idx" / "bands"))
     )
     assert n_after == n_band_files
+
+
+def test_ingest_sink_heals_crashed_compaction_swap(spark, tmp_path, monkeypatch):
+    """A crash between compact_minhash_index's two renames leaves
+    `bands` missing. The next sink call (a fresh sink, as after a
+    restart) must repair it before the marker check skips the append:
+    the redelivered batch and the one after it surface exactly the
+    candidates of a run with no crash."""
+    import os
+
+    import pyspark.sql.functions as F
+
+    from warp_pipe_spark.datapipe.dedup_index import (
+        IngestDedupSink,
+        build_minhash_index,
+    )
+
+    rows = [(i, BASE if i % 3 == 0 else (NEAR if i % 3 == 1 else OTHER))
+            for i in range(8)]
+    docs = spark.createDataFrame(rows, "doc_id LONG, text STRING")
+    base = docs.filter(F.col("doc_id") < 2)
+    batches = [
+        docs.filter(F.col("doc_id").isin(2 + 2 * b, 3 + 2 * b)) for b in range(3)
+    ]
+
+    def run(name):
+        idx, out = str(tmp_path / f"idx_{name}"), str(tmp_path / f"out_{name}")
+        build_minhash_index(base, idx)
+        # threshold 0: every batch compacts inline
+        return idx, out, IngestDedupSink(spark, idx, out, auto_compact_files=0)
+
+    _, _, ref = run("ref")
+    for b, batch in enumerate(batches):
+        ref(batch, b)
+    want = {tuple(r) for r in ref.candidates().collect()}
+
+    idx, out, sink = run("crash")
+    sink(batches[0], 0)
+    real_rename, calls = os.rename, {"n": 0}
+
+    def crash_on_second(src, dst):
+        calls["n"] += 1
+        if calls["n"] == 2:
+            raise OSError("crash between the swap renames")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_second)
+    with pytest.raises(OSError, match="swap renames"):
+        sink(batches[1], 1)
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert not os.path.isdir(os.path.join(idx, "bands"))
+
+    healed = IngestDedupSink(spark, idx, out, auto_compact_files=0)
+    healed(batches[1], 1)  # foreachBatch redelivery of the crashed batch
+    healed(batches[2], 2)
+    assert {tuple(r) for r in healed.candidates().collect()} == want and want
 
 
 def test_quality_model_score_exact_and_sign(spark):

@@ -35,7 +35,7 @@ SHOW = [
     ("tpch_q7", "nation-only hints; AQE broadcasts at small SF, shuffles at 100 TB"),
     ("tpch_q18", "post-agg survivor set broadcast back into orders"),
     ("events_kmv_distinct", "KMV sketch: TakeOrdered k-smallest, no global sort"),
-    ("dedup_clusters", "connected components: converged label frame (edges checkpointed)"),
+    ("dedup_clusters", "star contraction via the shared star-CC memo: same frame as dedup_clusters_star"),
     ("multimodal_frame_sample", "zero-shuffle sequence-explode expansion"),
     ("text_gopher_rules", "2-gram stats ride the word shuffle: two aggs, zero joins"),
     ("dedup_clusters_star", "star contraction: O(log^2) rounds, converged star frame"),

@@ -1236,11 +1236,12 @@ def compact_probe(spark, n_appends: int = 200, batch_docs: int = 25) -> int:
 def ccchain_probe(spark) -> int:
     """Star-contraction round count on its ADVERSARIAL topology,
     MEASURED: the O(log² n) convergence claim (Kiveris et al. SoCC'14,
-    dedup.py connected_components_star docstring) is why the variant
-    exists — min-label propagation needs diameter rounds, which on a
-    chain graph is the corpus length. Unit tests pin a 60-node chain;
-    this measures 10k / 100k / 1M-node chains (diameter = n), counting
-    REAL rounds by intercepting the per-round fingerprint probe.
+    dedup.py connected_components_star docstring) is why star is the
+    package's CC algorithm — label propagation needs diameter rounds,
+    which on a chain graph is the corpus length. Unit tests pin a
+    60-node chain; this measures 10k / 100k / 1M-node chains
+    (diameter = n), counting REAL rounds by intercepting the per-round
+    fingerprint probe.
     log2(1M) ≈ 20, so the claim predicts rounds growing by a small
     additive step per 10x nodes and staying far under the max_iter=40
     budget; the probe asserts both, plus label exactness (every node
@@ -1257,8 +1258,8 @@ def ccchain_probe(spark) -> int:
     D._star_fingerprint = counting
     rounds: dict[int, int] = {}
     try:
-        print("chain-CC probe: path graph, diameter = n (min-label would "
-              "need n rounds; budget raises past 25)")
+        print("chain-CC probe: path graph, diameter = n (label "
+              "propagation would need n rounds)")
         print("| n nodes | rounds | wall s | labels exact |")
         print("|---|---|---|---|")
         for n in (10_000, 100_000, 1_000_000):

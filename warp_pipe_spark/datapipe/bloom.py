@@ -12,14 +12,17 @@ aggregate — every stage map-side-combinable) and PROBED two ways:
   - `bloom_gate` (pure DataFrame): the batch explodes to k
     (word_idx, mask) probes, broadcast-joins the packed word table,
     and a key-keyed count(matched) == k decides. No UDF, no driver
-    state; right when the word table fits the broadcast threshold.
-  - `bloom_gate_packed` (mapInPandas): the word table is materialized
-    ONCE into an m_bits/8-byte numpy bitmap — bounded BY CONSTRUCTION
-    by the `m_bits` parameter, which is the bloom filter's memory
-    contract, NOT data-dependent driver state — and broadcast; each
-    Arrow batch then probes locally with zero joins and zero
-    shuffles. This is the 100 TB path: a 2^30-bit filter is a 128 MB
-    broadcast, and the petabyte-scale batch side never shuffles.
+    state. It is the REFERENCE path only: the property tests pin the
+    packed probe's verdicts to it, and no production gate calls it.
+  - `bloom_gate_packed` (mapInPandas), the one production probe
+    (`bloom_gate_verified`, ingest.BloomGateSink, curate stage 0):
+    the word table is materialized ONCE into an m_bits/8-byte numpy
+    bitmap — bounded BY CONSTRUCTION by the `m_bits` parameter, which
+    is the bloom filter's memory contract, NOT data-dependent driver
+    state — and broadcast; each Arrow batch then probes locally with
+    zero joins and zero shuffles. This is the 100 TB path: a 2^30-bit
+    filter is a 128 MB broadcast, and the petabyte-scale batch side
+    never shuffles.
 
 No false negatives ever (every reference key probes true); false
 positives at the textbook rate ≈ (1 − e^{−kn/m})^k, so a positive is
@@ -342,21 +345,20 @@ def bloom_gate_packed(
 
 def bloom_gate_verified(
     batch: DataFrame,
-    words: DataFrame,
+    words,
     ref_keys: DataFrame,
     key_col: str = "key",
     m_bits: int = 1 << 20,
     k_hashes: int = 4,
-    packed: bool = False,
 ) -> DataFrame:
-    """The complete dedup gate: bloom-probe the batch, then exact
-    LEFT SEMI join ONLY the flagged subset against the reference keys
-    to strip false positives. Adds `is_member` (exact). The economy:
-    the join input is |flagged| ≈ dup_rate·|batch| + fp_rate·|batch|
+    """The complete dedup gate: bloom-probe the batch with the packed
+    probe, then exact LEFT SEMI join ONLY the flagged subset against
+    the reference keys to strip false positives. Adds `is_member`
+    (exact); `words` takes anything bloom_gate_packed takes. The
+    economy: the join input is |flagged| ≈ dup_rate·|batch| + fp_rate·|batch|
     rows, not |batch| — at a 1% dup rate the shuffle is ~50× smaller
     than joining the raw batch."""
-    gate = bloom_gate_packed if packed else bloom_gate
-    gated = gate(batch, words, key_col, m_bits, k_hashes)
+    gated = bloom_gate_packed(batch, words, key_col, m_bits, k_hashes)
     # distinct flagged keys: the confirm frame must stay one row per
     # key or the join-back would fan out duplicate batch rows
     flagged = gated.filter(F.col("maybe_member")).select(key_col).distinct()

@@ -627,95 +627,6 @@ def cosine(a: F.Column, b: F.Column) -> F.Column:
     return dot / (na * nb)
 
 
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Connected components over an undirected candidate-pair edge list
-    — the cluster-assignment step of corpus dedup ("keep one doc per
-    near-dup cluster"). Output (doc_id, cluster_id) with cluster_id =
-    min doc_id in the component; only nodes that appear in a pair are
-    returned (singletons are their own trivial cluster).
-
-    Iterative min-label propagation: each round joins labels to edges
-    (one shuffle keyed by node id, map-side min combine), takes the
-    elementwise min with the node's own label, and localCheckpoints so
-    the plan stays O(1) deep instead of growing with iterations. A
-    cheap changed-row probe stops the loop at convergence; rounds
-    needed = graph diameter, which for near-dup clusters (dense blobs
-    of mutually-similar docs) is a few hops. For adversarially long
-    chain graphs swap in the large-star/small-star variant — same
-    interface, same output."""
-    # materialize the edge list ONCE — its lineage is the whole
-    # candidate-generation pipeline (LSH bands etc.) and every loop
-    # round joins against it; without the checkpoint each round would
-    # re-run that pipeline from the scan. The mirror is one array
-    # explode over the pair rows, NOT a self-union (r15): the union's
-    # two branches each re-executed the candidate pipeline below the
-    # checkpoint — no exchange sits between them, so ReuseExchange
-    # dedups nothing and the most expensive subtree of every CC
-    # consumer ran twice. Row multiset is identical (each pair emits
-    # exactly its two directed edges).
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
-                    ),
-                    F.struct(
-                        F.col(b_col).alias("src"), F.col(a_col).alias("dst")
-                    ),
-                )
-            ).alias("_e")
-        )
-        .select("_e.src", "_e.dst")
-        .distinct()
-        .localCheckpoint()
-    )
-    labels = (
-        edges.select(F.col("src").alias("node")).distinct().withColumn("lbl", F.col("node"))
-    )
-    for _ in range(max_iter):
-        nbr_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("lbl").alias("nbr_lbl"))
-        )
-        # carry a changed flag through the same projection so the
-        # convergence probe is a filter on the materialized frame, not
-        # another join
-        new_lbl = F.least(F.col("l.lbl"), F.coalesce(F.col("p.nbr_lbl"), F.col("l.lbl")))
-        updated = (
-            labels.alias("l")
-            .join(nbr_min.alias("p"), F.col("l.node") == F.col("p.src"), "left")
-            .select(
-                F.col("l.node").alias("node"),
-                new_lbl.alias("lbl"),
-                (new_lbl < F.col("l.lbl")).alias("chg"),
-            )
-            .localCheckpoint()
-        )
-        changed = updated.filter("chg").limit(1).count()
-        labels = updated.drop("chg")
-        if changed == 0:
-            break
-    else:
-        # fail LOUD like connected_components_star: returning the
-        # partial labels would hand downstream "keep one per cluster"
-        # dedup a component split across several cluster_ids — silently
-        # keeping duplicate documents. Rounds needed = graph diameter;
-        # a chain longer than max_iter wants the star variant.
-        raise RuntimeError(
-            f"min-label propagation did not converge in {max_iter} "
-            "rounds (graph diameter exceeds the budget) — raise "
-            "max_iter or use connected_components_star"
-        )
-    return labels.select(F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_id"))
-
-
 def _star_fingerprint(e: DataFrame):
     """(count, 60-bit pair-hash sum) — an order-free set fingerprint."""
     h = h60(F.concat_ws("_", F.col("u"), F.col("v")))
@@ -730,17 +641,20 @@ def connected_components_star(
     b_col: str = "doc_b",
     max_iter: int = 40,
 ) -> DataFrame:
-    """Connected components by alternating large-star/small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — same interface and output contract as
-    `connected_components` ((doc_id, cluster_id = component-min), nodes
-    appearing in a pair only).
+    """Connected components over an undirected candidate-pair edge list
+    — the cluster-assignment step of corpus dedup ("keep one doc per
+    near-dup cluster"). Output (doc_id, cluster_id) with cluster_id =
+    min doc_id in the component; only nodes that appear in a pair are
+    returned (singletons are their own trivial cluster).
 
-    Why a second variant: min-label propagation needs one round per
-    graph-diameter hop, which is fine for near-dup blobs (diameter ≈ 2)
-    but adversarial for chain-shaped graphs (transcript-like corpora
-    where doc i overlaps only doc i±1: diameter = corpus length).
-    Star contraction converges in O(log²) rounds on ANY topology:
+    Alternating large-star/small-star contraction (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14). This is
+    the package's one CC implementation: label propagation would need
+    one round per graph-diameter hop, fine for near-dup blobs
+    (diameter ≈ 2) but adversarial for chain-shaped graphs
+    (transcript-like corpora where doc i overlaps only doc i±1:
+    diameter = corpus length). Star contraction converges in O(log²)
+    rounds on ANY topology:
 
       large-star: every node points its LARGER neighbors at the min of
         its neighborhood ∪ itself   (per-edge emission off a groupBy

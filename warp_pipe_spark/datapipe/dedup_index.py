@@ -86,6 +86,25 @@ def update_minhash_index(
     ).write.mode("append").partitionBy("band").parquet(path + "/bands")
 
 
+def _recover_bands(path: str) -> tuple[str, str, str]:
+    """Repair a crash inside compact_minhash_index's two-rename swap —
+    the only window in which `bands` is missing — by restoring
+    whichever side is complete, preferring the verified compacted copy;
+    then drop the leftover sidecars. A path with no index at all is
+    left as it is. Returns the (bands, compacting, pre_compact) dirs."""
+    bands = os.path.join(path, "bands")
+    tmp = os.path.join(path, "bands.compacting")
+    old = os.path.join(path, "bands.pre_compact")
+    if not os.path.isdir(bands):
+        if os.path.isdir(tmp) and os.path.exists(os.path.join(tmp, "_SUCCESS")):
+            os.rename(tmp, bands)  # compacted copy was complete: finish
+        elif os.path.isdir(old):
+            os.rename(old, bands)  # compacted copy gone/partial: undo
+    shutil.rmtree(tmp, ignore_errors=True)
+    shutil.rmtree(old, ignore_errors=True)
+    return bands, tmp, old
+
+
 def compact_minhash_index(spark: SparkSession, path: str) -> dict:
     """Rewrite the band partitions into one file each — the
     maintenance op that keeps the append-only design viable long-term.
@@ -115,30 +134,16 @@ def compact_minhash_index(spark: SparkSession, path: str) -> dict:
     Crash-safe: the compacted copy is fully written and row-count
     verified BEFORE the two-rename swap, the pre-compact dir is kept
     until the swap completes, and a crash in the swap window is
-    repaired by the recovery step at the next call (the only window
-    with `bands` missing is between the two renames — recovery
-    restores whichever side is complete, preferring the verified
-    compacted copy). Requires the same exclusive access as
+    repaired by `_recover_bands` at the next call or the next
+    IngestDedupSink batch. Requires the same exclusive access as
     build_minhash_index: pause ingest for the swap, not for the
     rewrite.
 
     Returns {"rows_before", "rows_after", "files_before",
     "files_after"} so callers (and tests) can assert the effect."""
-    bands = os.path.join(path, "bands")
-    tmp = os.path.join(path, "bands.compacting")
-    old = os.path.join(path, "bands.pre_compact")
-
-    # recovery from a previous call's crash inside the swap window
+    bands, tmp, old = _recover_bands(path)
     if not os.path.isdir(bands):
-        if os.path.isdir(tmp) and os.path.exists(os.path.join(tmp, "_SUCCESS")):
-            os.rename(tmp, bands)  # compacted copy was complete: finish
-            shutil.rmtree(old, ignore_errors=True)
-        elif os.path.isdir(old):
-            os.rename(old, bands)  # compacted copy gone/partial: undo
-        else:
-            raise FileNotFoundError(f"no index at {bands}")
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
+        raise FileNotFoundError(f"no index at {bands}")
 
     df = spark.read.parquet(bands)
     rows_before = df.count()
@@ -296,6 +301,10 @@ class IngestDedupSink:
         return os.path.join(self.index_dir, "_ingested", f"batch_{batch_id}")
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
+        # an auto-compaction that crashed inside its swap left `bands`
+        # missing: repair it before the marker check skips the append
+        # and the query or the file-count threshold reads the void
+        _recover_bands(self.index_dir)
         # ONE persisted signature pass per micro-batch: without it the
         # banding fold runs three times (index append + the query
         # plan's two uses of the batch side)
