@@ -5,7 +5,7 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from warp_pipe_spark.session import get_spark
 

@@ -1,9 +1,5 @@
 """Pins for bench.py's artifact-shaping logic."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from bench import split_keyset_rounds
 
 

@@ -161,6 +161,29 @@ def test_debezium_stream_decodes_drop_dir(spark, tmp_path):
     }
 
 
+
+def test_debezium_stream_bounds_micro_batches(spark, tmp_path):
+    """max_files_per_trigger splits an availableNow backlog into one
+    micro-batch per file, so a sink that collects each batch to the
+    driver never sees the whole backlog at once."""
+    from warp_pipe_spark.streaming import debezium_stream
+
+    drop = tmp_path / "topic"
+    drop.mkdir()
+    for i, msg in enumerate((DBZ_INSERT, DBZ_UPDATE, DBZ_DELETE)):
+        (drop / f"part-{i}.jsonl").write_text(msg + "\n")
+    q = (
+        debezium_stream(spark, str(drop), max_files_per_trigger=1)
+        .writeStream.format("memory")
+        .queryName("dbz_bounded")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert [p.numInputRows for p in q.recentProgress if p.numInputRows] == [1, 1, 1]
+    assert spark.sql("SELECT * FROM dbz_bounded").count() == 3
+
 def test_wal2json_undecodable_complement(spark):
     """Corrupt CDC input must be routable to a dead letter, not a
     silent gap: decode emits nothing for an unparseable document, and

@@ -9,8 +9,6 @@ import sys
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
 import __spark_entry__ as entrymod
 from tools.oracle_check import table_hash
 from warp_pipe_spark.io import TABLES
@@ -129,8 +127,9 @@ def test_driver_window_holds_all_new_changed_and_stale_queries():
     import json
     import re
 
+    repo = os.path.dirname(os.path.abspath(entrymod.__file__))
     rounds = {}
-    for p in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for p in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
         n = int(re.search(r"r(\d+)", p).group(1))
         with open(p) as f:
             rounds[n] = json.load(f)

@@ -9,12 +9,13 @@ Usage: python tools/oracle_check.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from warp_pipe_spark.io import TABLES  # noqa: E402

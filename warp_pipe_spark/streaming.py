@@ -16,10 +16,11 @@ Parity map (SURVEY.md §2.8):
     foreachBatch (apply.merge_batch is a pure function of state ∪ batch).
 
 The foreachBatch sink keeps per-table state as parquet, merge-on-read:
-each micro-batch is appended as a delta in one write, reads fold base ∪
-deltas, and a background worker folds deltas into new bases — at
-cluster scale you'd swap the parquet dirs for Delta MERGE-on-read
-(deletion vectors), same plan shape.
+each micro-batch is collected to the driver as Arrow in one job and
+appended as one delta file per touched key, reads fold base ∪ deltas,
+and a background worker folds deltas into new bases — at cluster scale
+you'd swap the parquet dirs for Delta MERGE-on-read (deletion vectors),
+same plan shape.
 """
 
 from __future__ import annotations
@@ -30,7 +31,11 @@ import os
 import shutil
 import threading
 from collections.abc import Sequence
-from urllib.parse import quote, unquote
+from urllib.parse import quote
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -72,7 +77,7 @@ class StateSink(abc.ABC):
     report the batch's offset watermark. The base class derives it with
     the `batch_stats` job over a persisted copy of the batch (the r14
     `MergeStateSink` AttributeError is why both live on the BASE class);
-    ParquetStateSink observes it inside its own write instead."""
+    ParquetStateSink reads it off its own Arrow collect instead."""
 
     id_col: str
 
@@ -147,10 +152,20 @@ class ParquetStateSink(StateSink):
     by one.
 
     Guarantees:
-      - ONE JOB PER APPLY: `apply_batch` appends the batch as one delta
-        per key it touches in a single partitionBy write, and the
-        batch's (max_id, n_rows) ride that write as an Observation. No
-        stats job, no persist, no read of old state, no state shuffle.
+      - ONE JOB PER APPLY: the apply's only Spark job is the Arrow
+        collect of the batch (`toArrow`); the driver then writes one
+        parquet file per key the batch touches with pyarrow, and reads
+        the batch's (max_id, n_rows) off the collected id column. No
+        stats job, no persist, no read of old state, no state shuffle,
+        no Spark file-commit protocol.
+      - DRIVER MEMORY: an apply collects one whole micro-batch to the
+        driver, so a batch must fit `spark.driver.maxResultSize` (1g by
+        default) and the driver heap. Bound it with the poller's `limit`
+        or the file stream's `max_files_per_trigger`: a stream without
+        one delivers an availableNow backlog as ONE batch, and a batch
+        over that ceiling fails again on every redelivery.
+      - TYPES: any column type `toArrow` carries; a year-month interval
+        cannot be collected, so a batch holding one fails before commit.
       - O(BATCH) WRITES: an apply writes the batch's rows and nothing
         else; dirs of keys it does not touch stay closed. Per-key
         routing is safe because the bucket is a pure function of the pk.
@@ -184,17 +199,17 @@ class ParquetStateSink(StateSink):
         collects its garbage (a drained tail, shutdown); `compact()`
         drains the worker and folds every key (tests, single-scan reads).
 
-    LOCAL-FS CONTRACT: the staged write commits via `os.replace` /
-    `shutil.rmtree` / `os.listdir` against `state_dir`, so the state
-    dir must be a driver-local path on one POSIX filesystem (the
-    fixtures use tmpfs). There the per-batch renames are metadata-only
-    and `os.replace` is atomic. On HDFS the same sequencing holds via
-    FileSystem.rename; on an OBJECT STORE (s3://, gs://) renames are
-    COPY+DELETE — neither atomic nor metadata-only — so this sink does
-    not apply there: swap the parquet dirs for a Delta/Iceberg
-    merge-on-read table, which keeps the identical plan shape (append
-    per touched key, keyed fold on read) behind the table format's own
-    atomic commit.
+    LOCAL-FS CONTRACT: the driver writes deltas with pyarrow and
+    commits via `os.replace` / `shutil.rmtree` / `os.listdir` against
+    `state_dir`, so the state dir must be a driver-local path on one
+    POSIX filesystem (the fixtures use tmpfs). There a compaction's
+    base rename is metadata-only and `os.replace` is atomic. On HDFS
+    the same sequencing holds via FileSystem.rename; on an OBJECT STORE
+    (s3://, gs://) renames are COPY+DELETE — neither atomic nor
+    metadata-only — so this sink does not apply there: swap the parquet
+    dirs for a Delta/Iceberg merge-on-read table, which keeps the
+    identical plan shape (append per touched key, keyed fold on read)
+    behind the table format's own atomic commit.
     """
 
     POINTER = "_POINTER.json"
@@ -405,12 +420,7 @@ class ParquetStateSink(StateSink):
     def _bucket_col(self):
         return F.pmod(F.hash(*[F.col(c) for c in self.pk_cols]), F.lit(self.n_buckets))
 
-    BUCKET_PART = "_wpb"  # partition-dir column for bucketed writes
-    TABLE_PART = "_wpt"  # staging partition-dir column (one write/batch)
-    #: Spark writes null/empty partition values under this marker dir.
-    #: table_name NULL rows are filtered before the write, so within a
-    #: staging dir the marker can only mean the empty-string table.
-    HIVE_DEFAULT = "__HIVE_DEFAULT_PARTITION__"
+    BUCKET_PART = "_wpb"  # bucket sub-dir name of a bucketed key's dir
 
     def _key(self, table: str, bucket: "int | None") -> str:
         return table if bucket is None else f"{table}#b{bucket}"
@@ -476,16 +486,19 @@ class ParquetStateSink(StateSink):
         TABLE ADD COLUMN null-fill the missing columns (the parquet
         reader clips files to the requested schema). Without it
         (pre-r15 pointers) the mergeSchema read provides the same
-        null-fill semantics at the cost of a footer-scan job."""
+        null-fill semantics at the cost of a footer-scan job.
+
+        pyarrow deltas carry no Spark version, so their dates/timestamps
+        would follow the session's rebase mode (EXCEPTION fails on pre-
+        1582 dates): CORRECTED is pinned; Spark's files keep theirs."""
         if not rels:
             return None
         dirs = [os.path.join(self.state_dir, r) for r in rels]
+        reader = self.spark.read.option("datetimeRebaseMode", "CORRECTED")
         try:
             if schema is not None:
-                return self.spark.read.schema(
-                    StructType.fromJson(schema)
-                ).parquet(*dirs)
-            return self.spark.read.option("mergeSchema", "true").parquet(*dirs)
+                return reader.schema(StructType.fromJson(schema)).parquet(*dirs)
+            return reader.option("mergeSchema", "true").parquet(*dirs)
         except Exception as e:
             raise StateCorruptError(
                 f"pointer references unreadable state dirs {dirs}: {e}"
@@ -537,11 +550,42 @@ class ParquetStateSink(StateSink):
         self, batch: DataFrame, batch_id: int
     ) -> "tuple[int | None, int]":
         """Append `batch` as one delta per touched key and commit.
-        Returns (max_id, n_rows) over every batch row with a non-null id,
-        observed during the write — NULL-table rows included, though
-        they are never applied (see StateSink.apply_observed)."""
+        Returns (max_id, n_rows) over every batch row with a non-null id
+        — NULL-table rows included, though they are never applied (see
+        StateSink.apply_observed). The driver writes the deltas from the
+        batch's one Spark job, its Arrow collect; a crash mid-write leaves
+        an uncommitted dir that the redelivered batch reclaims."""
         self._raise_worker_error()
         self._collect_garbage()
+        out = batch
+        if self.n_buckets:
+            # each row's buckets as a list: its pk's bucket, or EVERY
+            # bucket for a truncate (the clear must reach buckets the
+            # batch's own rows don't touch)
+            buckets = F.array(self._bucket_col())
+            if self.truncate_kinds:
+                buckets = F.when(
+                    F.col(self.kind_col).isin(*self.truncate_kinds),
+                    F.sequence(F.lit(0), F.lit(self.n_buckets - 1)),
+                ).otherwise(buckets)
+            out = out.withColumn(self.BUCKET_PART, buckets)
+        rows = out.toArrow()
+        ids = rows[self.id_col]
+        mx, n = pc.max(ids).as_py(), pc.count(ids).as_py()
+        # rows whose routing key is NULL (decoders emit null-struct rows
+        # for malformed input lines) cannot be applied to any table —
+        # they would poison-pill the batch forever under at-least-once
+        # redelivery. The pipeline's dead-letter stage is where such rows
+        # are surfaced; the sink's contract is to apply the applicable
+        # rows (they still count toward the offset watermark).
+        rows = rows.filter(pc.is_valid(rows[self.table_col]))
+        if self.n_buckets:
+            lists = rows[self.BUCKET_PART]
+            rows = (
+                rows.drop_columns([self.BUCKET_PART])
+                .take(pc.list_parent_indices(lists))
+                .append_column(self.BUCKET_PART, pc.list_flatten(lists))
+            )
         meta = self._read_meta()
         if meta is None:
             # commit an EMPTY pointer before the first dirs are written:
@@ -559,61 +603,26 @@ class ParquetStateSink(StateSink):
                 "schema": None,
             }
             self._commit_pointer(meta)
-        obs = Observation()
-        batch = batch.observe(
-            obs,
-            F.max(F.col(self.id_col)).alias("_mx"),
-            F.count(F.col(self.id_col)).alias("_n"),
-            F.bool_or(F.col(self.table_col) == self.HIVE_DEFAULT).alias("_marker"),
-        )
-        # rows whose routing key is NULL (decoders emit null-struct rows
-        # for malformed input lines) cannot be applied to any table —
-        # they would poison-pill the batch forever under at-least-once
-        # redelivery. The pipeline's dead-letter stage is where such rows
-        # are surfaced; the sink's contract is to apply the applicable
-        # rows (they still count toward the observed offset watermark).
-        rows = batch.filter(F.col(self.table_col).isNotNull())
-        # widen the committed schema with the batch's columns BEFORE the
-        # write: the commit must describe every dir the new pointer
-        # references. Derived from the plan, not a job.
-        schema = self._merge_schema_json(self._committed_schema(meta), rows.schema)
-        # ONE write job per micro-batch, whatever it touches: the rows
-        # are laid down in a single partitionBy(_wpt[, _wpb]) write into
-        # a staging dir, then each `_wpt=<table>` subtree is renamed to
-        # the table's delta dir (same-filesystem renames are
-        # metadata-only). The duplicated `_wpt` partition column keeps
-        # the table column a DATA column, so every dir reads alike.
-        staging = os.path.join(self.state_dir, f"_staging.{batch_id}")
-        shutil.rmtree(staging, ignore_errors=True)
-        part_cols = [self.TABLE_PART]
-        out = rows.withColumn(self.TABLE_PART, F.col(self.table_col))
-        if self.n_buckets:
-            bucket = self._bucket_col()
-            if self.truncate_kinds:
-                bucket = F.explode(
-                    F.when(
-                        F.col(self.kind_col).isin(*self.truncate_kinds),
-                        F.sequence(F.lit(0), F.lit(self.n_buckets - 1)),
-                    ).otherwise(F.array(bucket))
+        # widen the committed schema with the batch's columns: the commit
+        # must describe every dir the new pointer references. Derived
+        # from the plan, not a job.
+        schema = self._merge_schema_json(self._committed_schema(meta), batch.schema)
+        landed: dict[str, str] = {}
+        for t in sorted(pc.unique(rows[self.table_col]).to_pylist()):
+            table_rows = rows.filter(pc.equal(rows[self.table_col], t))
+            rel = self._fresh_rel(
+                f"tables/{quote(t, safe='')}/d_{batch_id}", None, meta
+            )
+            if not self.n_buckets:
+                landed[t] = self._write_delta(rel, table_rows)
+                continue
+            part = table_rows[self.BUCKET_PART]
+            table_rows = table_rows.drop_columns([self.BUCKET_PART])
+            for b in sorted(pc.unique(part).to_pylist()):
+                landed[self._key(t, b)] = self._write_delta(
+                    f"{rel}/{self.BUCKET_PART}={b}",
+                    table_rows.filter(pc.equal(part, b)),
                 )
-            out = out.withColumn(self.BUCKET_PART, bucket)
-            part_cols.append(self.BUCKET_PART)
-        out.write.mode("overwrite").partitionBy(*part_cols).parquet(staging)
-        stats = obs.get
-        try:
-            if stats["_marker"]:
-                # a table literally named __HIVE_DEFAULT_PARTITION__ is
-                # written UNESCAPED by Spark's partitioned write and would
-                # be filed under the empty-string table's key (ADVICE
-                # r14): reject it loudly before anything commits
-                raise ValueError(
-                    f"table name {self.HIVE_DEFAULT!r} collides with Spark's "
-                    "default-partition marker and cannot be stored by "
-                    "ParquetStateSink — rename the table upstream"
-                )
-            landed = self._land_deltas(staging, batch_id, meta)
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
         if landed:
             with self._lock:
                 cur = self._read_meta()
@@ -623,33 +632,13 @@ class ParquetStateSink(StateSink):
                 cur["schema"] = schema
                 self._commit(cur)
             self._schedule(cur, sorted(landed))
-        return stats["_mx"], int(stats["_n"])
+        return mx, n
 
-    def _land_deltas(
-        self, staging: str, batch_id: int, meta: dict
-    ) -> dict[str, str]:
-        """Rename each staged `_wpt=<table>` subtree to the table's delta
-        dir; returns {key: rel} of every delta landed."""
-        landed: dict[str, str] = {}
-        for d in sorted(os.listdir(staging)):
-            if not d.startswith(self.TABLE_PART + "="):
-                continue  # _SUCCESS etc.
-            enc = d[len(self.TABLE_PART) + 1:]
-            t = "" if enc == self.HIVE_DEFAULT else unquote(enc)
-            rel = self._fresh_rel(
-                f"tables/{quote(t, safe='')}/d_{batch_id}", None, meta
-            )
-            vdir = os.path.join(self.state_dir, rel)
-            os.makedirs(os.path.dirname(vdir), exist_ok=True)
-            os.replace(os.path.join(staging, d), vdir)
-            if not self.n_buckets:
-                landed[t] = rel
-                continue
-            for sub in os.listdir(vdir):
-                if sub.startswith(self.BUCKET_PART + "="):
-                    bucket = int(sub[len(self.BUCKET_PART) + 1:])
-                    landed[self._key(t, bucket)] = f"{rel}/{sub}"
-        return landed
+    def _write_delta(self, rel: str, rows: "pa.Table") -> str:
+        path = os.path.join(self.state_dir, rel)
+        os.makedirs(path, exist_ok=True)
+        pq.write_table(rows, os.path.join(path, "part-00000.parquet"))
+        return rel
 
     # -- compaction ----------------------------------------------------------
 
@@ -911,7 +900,8 @@ class KeysetPoller:
     `jdbc.keyset_fetch` for a live Postgres audit table (one indexed
     range scan per round), `parquet_keyset_fetch` / a DataFrame closure
     for file-backed tables (tests, replays). Because each round is
-    bounded by `limit`, memory is O(batch) regardless of backlog size —
+    bounded by `limit`, memory is O(batch) regardless of backlog size
+    (the sink collects at most `limit` rows to the driver per round) —
     a poller pointed at a 100 TB backlog just takes more rounds.
     """
 
@@ -955,8 +945,8 @@ class KeysetPoller:
 
         The sink's version tag is the committed offset at fetch time:
         stable across redelivery and monotone. (The batch's high-water
-        id would be too, but it is unknown until the sink's write has
-        run — it rides that write, so the round is one Spark job.)"""
+        id would be too, but it is unknown until the sink's collect has
+        run — it is read off that, so the round is one Spark job.)"""
         last = self.committed_offset()
         batch = self.fetch(self.spark, last, self.limit)
         mx, n = self.sink.apply_observed(batch, batch_id=last)
@@ -1110,23 +1100,27 @@ def wal2json_stream(
     transaction, so 1 here means one micro-batch per source commit."""
     from warp_pipe_spark.decoders import decode_wal2json
 
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.load(drop_dir)
+    raw = changeset_stream(
+        spark, drop_dir, "value STRING", "text", max_files_per_trigger
+    )
     return decode_wal2json(raw, message_col="value")
 
 
-def debezium_stream(spark: SparkSession, drop_dir: str) -> DataFrame:
+def debezium_stream(
+    spark: SparkSession, drop_dir: str, max_files_per_trigger: int | None = None
+) -> DataFrame:
     """S1 via the idiomatic Kafka+Debezium deployment: tail a directory
     of Debezium-envelope JSONL (the shape `readStream.format("kafka")`
     + a value cast delivers; a file drop-dir stands in for the topic in
     this sandbox) and decode to normalized changesets. Swapping the
     source for real Kafka changes ONE line (the reader format) — the
-    decode plan is identical."""
+    decode plan is identical. `max_files_per_trigger` as in
+    changeset_stream."""
     from warp_pipe_spark.decoders import decode_debezium
 
-    raw = spark.readStream.format("text").load(drop_dir)
+    raw = changeset_stream(
+        spark, drop_dir, "value STRING", "text", max_files_per_trigger
+    )
     return decode_debezium(raw, message_col="value")
 
 
