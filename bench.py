@@ -257,17 +257,34 @@ SINGLE_SHOT = frozenset(
 RETIME_VS_IDLE_FACTOR = 1.5
 
 
-def load_idle_reference() -> dict[str, float]:
+def same_setup(ref: dict, cpus: int, sf) -> bool:
+    """Whether reference artifact `ref` was measured at this run's core
+    count and scale factor — the only runs a per-query or total ratio
+    means anything against (the r15 32-core bench was ratioed against
+    the 8-core reference). Raises KeyError when `ref` records no
+    `cpus`: such a reference is malformed."""
+    return int(ref["cpus"]) == cpus and ref.get("sf") == sf
+
+
+def load_idle_reference(
+    cpus: int = DEFAULT_CPUS, sf=0.1, path: str | None = None
+) -> dict[str, float]:
     """Per-query idle timings from the committed BENCH_SELF.json next
-    to this file (the repo's idle-run reference artifact). Missing or
-    malformed file degrades to {} — plan_runs then falls back to the
-    absolute threshold alone, which is round 9's behavior."""
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_SELF.json")
+    to this file (the repo's idle-run reference artifact), for a run at
+    `cpus` cores and scale `sf`. A missing or malformed file, or one
+    measured at another core count or scale, degrades to {} —
+    plan_runs then falls back to the absolute threshold alone, which is
+    round 9's behavior."""
+    path = path or os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "BENCH_SELF.json"
+    )
     try:
         with open(path) as f:
-            queries = json.load(f).get("queries")
-        return {k: float(v) for k, v in (queries or {}).items()}
-    except (OSError, ValueError, TypeError, AttributeError):
+            ref = json.load(f)
+        if not same_setup(ref, cpus, sf):
+            return {}
+        return {k: float(v) for k, v in (ref.get("queries") or {}).items()}
+    except (OSError, ValueError, TypeError, AttributeError, KeyError):
         return {}
 
 
@@ -300,6 +317,10 @@ def choose_self_artifact(result: dict, prev: dict | None) -> str:
          already arbitrates. Applies only when BOTH artifacts carry
          the field, and — like rule 1 — never against a strictly
          FASTER run.
+    A run at another core count or scale factor than the reference
+    (`same_setup`) is diverted outright: its timings are not comparable,
+    so it can neither replace the reference nor be judged by it. A
+    reference that records no `cpus` is malformed and is replaced.
     The shared-sum comparison ignores queries only one side has, so
     registering a new query never blocks the reference from updating.
     A genuine code regression also diverts — conservative in the safe
@@ -307,6 +328,7 @@ def choose_self_artifact(result: dict, prev: dict | None) -> str:
     (retimes stay aggressive) until a genuinely idle run confirms the
     new level."""
     try:
+        other_setup = not same_setup(prev, result["cpus"], result.get("sf"))
         prev_q = {k: float(v) for k, v in prev["queries"].items()}
         new_q = {k: float(v) for k, v in result["queries"].items()}
         shared = set(prev_q) & set(new_q)
@@ -332,7 +354,9 @@ def choose_self_artifact(result: dict, prev: dict | None) -> str:
         not_faster = float(result["value"]) >= float(prev["value"])
     except (KeyError, TypeError, ValueError, AttributeError):
         return "BENCH_SELF.json"  # no/malformed reference → become it
-    if shared_slower or ((more_loaded or sustained_loaded) and not_faster):
+    if other_setup or shared_slower or (
+        (more_loaded or sustained_loaded) and not_faster
+    ):
         return "BENCH_SELF_LAST.json"
     return "BENCH_SELF.json"
 
@@ -467,6 +491,8 @@ def split_keyset_rounds(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    sf = float(sf) if sf.replace(".", "").isdigit() else sf
     spark = get_spark("warp_pipe_bench")
     qs = entrymod.queries()
 
@@ -508,7 +534,7 @@ def main() -> None:
     # model; tools/scale_probe.py clears it to time raw computation)
     times: dict[str, float] = {}
     runs: dict[str, int] = {}
-    idle_ref = load_idle_reference()
+    idle_ref = load_idle_reference(DEFAULT_CPUS, sf)
     for name in HEADLINE:
         t0 = time.time()
         qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -700,7 +726,6 @@ def main() -> None:
     canary_end = run_canary(spark)
     sustained_end = run_sustained_canary(spark)
 
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     result = {
         "metric": "headline_queries_total_sec",
         "value": round(sum(times.values()), 3),
@@ -743,7 +768,10 @@ def main() -> None:
         # VM (see read_steal_ticks) — the r14 "contention gradient"
         # attributor. None off-Linux.
         "steal_pct": steal_pct(steal_start, read_steal_ticks()),
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "sf": sf,
+        # the reference guard refuses to ratio or promote across core
+        # counts (same_setup), so the full artifact must say its own
+        "cpus": DEFAULT_CPUS,
         "timing": (
             "noop-sink write, all output columns materialized; "
             "min-of-2 for first-runs under "

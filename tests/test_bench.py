@@ -1,6 +1,11 @@
 """Pins for bench.py's artifact-shaping logic."""
 
+import pytest
+
 from bench import split_keyset_rounds
+
+#: the core count and scale every comparable artifact pair shares
+SETUP = {"cpus": 8, "sf": 0.1}
 
 
 def _total(aux):
@@ -155,7 +160,7 @@ def test_choose_self_artifact_protects_the_idle_reference():
     def run(canary, total):
         # two-query split keeps the shared-sum test aligned with value
         return {
-            "canary_sec": canary,
+            **SETUP, "canary_sec": canary,
             "value": total,
             "queries": {"a": total * 0.6, "b": total * 0.4},
         }
@@ -179,15 +184,15 @@ def test_choose_self_artifact_catches_mid_run_contention():
     from bench import choose_self_artifact
 
     idle = {
-        "canary_sec": 1.46, "value": 161.8,
+        **SETUP, "canary_sec": 1.46, "value": 161.8,
         "queries": {"a": 100.0, "b": 61.8},
     }
     body_contended = {  # canary fine, body 13% slower
-        "canary_sec": 1.42, "value": 183.2,
+        **SETUP, "canary_sec": 1.42, "value": 183.2,
         "queries": {"a": 113.0, "b": 70.2},
     }
     with_new_query = {  # same shared speed + one new query: updates
-        "canary_sec": 1.45, "value": 163.0,
+        **SETUP, "canary_sec": 1.45, "value": 163.0,
         "queries": {"a": 100.5, "b": 61.5, "c": 1.0},
     }
     assert choose_self_artifact(body_contended, idle) == "BENCH_SELF_LAST.json"
@@ -205,15 +210,15 @@ def test_choose_self_artifact_skips_canary_rule_across_methods():
     from bench import choose_self_artifact
 
     v1_ref = {
-        "canary_sec": 1.16, "value": 148.8,
+        **SETUP, "canary_sec": 1.16, "value": 148.8,
         "queries": {"a": 90.0, "b": 58.8},
     }
     v2_clean = {  # canary above v1*1.10 but methods differ: rule skipped
-        "canary_sec": 1.40, "canary_method": "steady-v2", "value": 150.0,
+        **SETUP, "canary_sec": 1.40, "canary_method": "steady-v2", "value": 150.0,
         "queries": {"a": 90.5, "b": 59.5},
     }
     v2_contended_body = {  # low canary cannot excuse a slow body
-        "canary_sec": 0.95, "canary_method": "steady-v2", "value": 170.0,
+        **SETUP, "canary_sec": 0.95, "canary_method": "steady-v2", "value": 170.0,
         "queries": {"a": 102.0, "b": 68.0},
     }
     assert choose_self_artifact(v2_clean, v1_ref) == "BENCH_SELF.json"
@@ -224,7 +229,7 @@ def test_choose_self_artifact_skips_canary_rule_across_methods():
     # within ONE method the canary rule still bites
     v2_ref = dict(v2_clean)
     v2_loaded = {
-        "canary_sec": 1.60, "canary_method": "steady-v2", "value": 155.0,
+        **SETUP, "canary_sec": 1.60, "canary_method": "steady-v2", "value": 155.0,
         "queries": {"a": 93.0, "b": 62.0},
     }
     assert choose_self_artifact(v2_loaded, v2_ref) == "BENCH_SELF_LAST.json"
@@ -242,7 +247,7 @@ def test_choose_self_artifact_sustained_start_rule():
 
     def run(total, s_start, s_end, canary=0.86):
         return {
-            "canary_sec": canary,
+            **SETUP, "canary_sec": canary,
             "canary_method": "steady-v2",
             "value": total,
             "queries": {"a": total * 0.6, "b": total * 0.4},
@@ -260,6 +265,61 @@ def test_choose_self_artifact_sustained_start_rule():
     # no-sustained reference: rule skipped, canary/shared-sum still govern
     legacy = {k: v for k, v in idle.items() if k != "sustained"}
     assert choose_self_artifact(run(161.0, 9.9, 9.9), legacy) == "BENCH_SELF.json"
+
+
+def _artifact(cpus, sf, total=120.0, canary=0.9):
+    out = {
+        "sf": sf,
+        "canary_sec": canary,
+        "canary_method": "steady-v2",
+        "value": total,
+        "queries": {"a": total * 0.6, "b": total * 0.4},
+    }
+    if cpus is not None:
+        out["cpus"] = cpus
+    return out
+
+
+@pytest.mark.parametrize(
+    "ref_cpus, ref_sf", [(8, 0.1), (32, 0.1), (8, 0.01)],
+    ids=["same", "other-cpus", "other-sf"],
+)
+def test_reference_from_another_setup_is_never_compared(tmp_path, ref_cpus, ref_sf):
+    """An 8-core sf0.1 run against a reference from another core count
+    or scale: the run is diverted to BENCH_SELF_LAST.json even when it
+    is faster (faster may just mean more cores), and plan_runs gets no
+    idle reference (absolute threshold only)."""
+    import json
+
+    from bench import choose_self_artifact, load_idle_reference
+
+    ref = _artifact(ref_cpus, ref_sf)
+    path = tmp_path / "BENCH_SELF.json"
+    path.write_text(json.dumps(ref))
+    faster = _artifact(8, 0.1, total=100.0)
+    idle = load_idle_reference(8, 0.1, str(path))
+    if (ref_cpus, ref_sf) == (8, 0.1):
+        assert choose_self_artifact(faster, ref) == "BENCH_SELF.json"
+        assert idle == ref["queries"]
+    else:
+        assert choose_self_artifact(faster, ref) == "BENCH_SELF_LAST.json"
+        assert idle == {}
+
+
+def test_reference_without_cpus_is_malformed_and_replaced(tmp_path):
+    """The committed pre-guard artifact records no `cpus`: it is
+    malformed, so the next run becomes the reference (even a slower,
+    more loaded one) and no run ratios against it."""
+    import json
+
+    from bench import choose_self_artifact, load_idle_reference
+
+    legacy = _artifact(None, 0.1, total=100.0)
+    path = tmp_path / "BENCH_SELF.json"
+    path.write_text(json.dumps(legacy))
+    slower = _artifact(8, 0.1, total=150.0, canary=2.0)
+    assert choose_self_artifact(slower, legacy) == "BENCH_SELF.json"
+    assert load_idle_reference(8, 0.1, str(path)) == {}
 
 
 def test_compact_result_line_is_small_and_standalone():

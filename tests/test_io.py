@@ -1,0 +1,168 @@
+"""read_table's schema cache: a warm read launches no inference job, and
+a rewrite, a schema conf flip or the events nanos read never returns a
+stale schema."""
+
+import datetime as dt
+import uuid
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from warp_pipe_spark.io import _file_signature, read_table
+
+
+def _jobs(spark, fn):
+    """(fn's result, the Spark jobs launched while it ran)."""
+    sc = spark.sparkContext
+    group = f"test-io-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "read_table schema cache")
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _write(path, cols):
+    pq.write_table(pa.table(cols), str(path))
+
+
+def test_warm_read_launches_no_job_and_returns_the_same_frame(spark, tmp_path):
+    _write(tmp_path / "t.parquet", {"k": [1, 2, 3], "v": ["a", "b", "c"]})
+    cold, cold_jobs = _jobs(spark, lambda: read_table(spark, str(tmp_path), "t"))
+    warm, warm_jobs = _jobs(spark, lambda: read_table(spark, str(tmp_path), "t"))
+    assert len(cold_jobs) == 1  # the inference job, paid once
+    assert warm_jobs == []
+    assert warm.schema == cold.schema
+    assert _rows(warm) == _rows(cold) == [(1, "a"), (2, "b"), (3, "c")]
+
+
+@pytest.mark.parametrize("layout", ["file", "dir"])
+def test_rewritten_file_is_read_with_its_new_schema(spark, tmp_path, layout):
+    # "dir": the part file is rewritten in place, so the directory's
+    # own inode and mtime stay the same; only its files' signatures move
+    f = tmp_path / "t.parquet"
+    if layout == "dir":
+        f.mkdir()
+        f = f / "part-0.parquet"
+    _write(f, {"k": [1, 2]})
+    assert read_table(spark, str(tmp_path), "t").columns == ["k"]
+    assert read_table(spark, str(tmp_path), "t").columns == ["k"]  # cached
+    _write(f, {"k": [1, 2], "extra": [10, 20]})
+    df = read_table(spark, str(tmp_path), "t")
+    assert df.columns == ["k", "extra"]
+    assert _rows(df) == [(1, 10), (2, 20)]
+
+
+def test_spark_written_ntz_is_cast_on_miss_and_hit(spark, tmp_path):
+    """A Spark-written table (a directory) keeps its TIMESTAMP_NTZ
+    footer schema; read_table casts it to LTZ on a hit exactly as on a
+    miss, and an overwrite with another schema is seen."""
+    path = str(tmp_path / "t.parquet")
+    ntz = spark.sql(
+        "SELECT id AS k, TIMESTAMP_NTZ'2024-01-02 03:04:05' AS ts FROM range(4)"
+    )
+    ntz.repartition(2).write.parquet(path)
+    miss = read_table(spark, str(tmp_path), "t")
+    hit, hit_jobs = _jobs(spark, lambda: read_table(spark, str(tmp_path), "t"))
+    assert hit_jobs == []
+    for df in (miss, hit):
+        assert dict(df.dtypes) == {"k": "bigint", "ts": "timestamp"}
+        assert df.count() == 4
+    ntz.withColumn("extra", ntz["k"] * 2).write.mode("overwrite").parquet(path)
+    assert read_table(spark, str(tmp_path), "t").columns == ["k", "ts", "extra"]
+
+
+def test_events_nanos_read_is_identical_on_miss_and_hit(spark, tmp_path):
+    """Older testdata stored events.ts as TIMESTAMP(NANOS): read_table
+    reads it as long under nanosAsLong and converts to microseconds,
+    on a cache miss and a hit alike, and leaves the conf as it was."""
+    ns = [1_700_000_000_123_456_789, 1_600_000_000_000_001_999]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2], pa.int64()),
+                "ts": pa.array(ns, pa.timestamp("ns")),
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.set(key, "false")
+    miss = read_table(spark, str(tmp_path), "events")
+    assert spark.conf.get(key) == "false"
+    hit, hit_jobs = _jobs(spark, lambda: read_table(spark, str(tmp_path), "events"))
+    assert spark.conf.get(key) == "false"
+    assert hit_jobs == []
+    epoch = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+    want = [
+        (1, (epoch + dt.timedelta(microseconds=ns[0] // 1000)).replace(tzinfo=None)),
+        (2, (epoch + dt.timedelta(microseconds=ns[1] // 1000)).replace(tzinfo=None)),
+    ]
+    for df in (miss, hit):
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        got = [(r["event_id"], r["ts"]) for r in df.orderBy("event_id").collect()]
+        # the sessions run UTC: compare as naive UTC wall times
+        assert [(i, t.replace(tzinfo=None)) for i, t in got] == want
+
+
+@pytest.fixture
+def binary_as_string(spark):
+    key = "spark.sql.parquet.binaryAsString"
+    prev = spark.conf.get(key, "false")
+    yield key
+    spark.conf.set(key, prev)
+
+
+def test_binary_as_string_flip_changes_the_schema(spark, tmp_path, binary_as_string):
+    _write(tmp_path / "t.parquet", {"b": pa.array([b"x", b"yz"], pa.binary())})
+    spark.conf.set(binary_as_string, "false")
+    assert dict(read_table(spark, str(tmp_path), "t").dtypes)["b"] == "binary"
+    spark.conf.set(binary_as_string, "true")
+    df = read_table(spark, str(tmp_path), "t")
+    assert dict(df.dtypes)["b"] == "string"
+    assert _rows(df) == [("x",), ("yz",)]
+    spark.conf.set(binary_as_string, "false")
+    assert dict(read_table(spark, str(tmp_path), "t").dtypes)["b"] == "binary"
+
+
+def test_two_reads_of_one_table_self_join(spark, tmp_path):
+    # every call is a fresh relation: a cached DataFrame would share
+    # attribute ids and turn a["k"] == b["k"] + 1 into k == k + 1
+    _write(tmp_path / "t.parquet", {"k": [1, 2, 3], "v": ["a", "b", "c"]})
+    read_table(spark, str(tmp_path), "t")  # warm the cache
+    a = read_table(spark, str(tmp_path), "t")
+    b = read_table(spark, str(tmp_path), "t")
+    out = a.join(b, a["k"] == b["k"] + 1).select(a["v"], b["v"].alias("prev"))
+    assert _rows(out) == [("b", "a"), ("c", "b")]
+
+
+def test_warm_tpch_q16_runs_no_parquet_inference_stage(spark, sf_dir):
+    import __spark_entry__ as entry
+
+    q16 = entry.queries()["tpch_q16"]
+    q16(spark, sf_dir).collect()  # warm
+    rows, jobs = _jobs(spark, lambda: q16(spark, sf_dir).collect())
+    assert rows and jobs
+    st = spark.sparkContext.statusTracker()
+    names = [
+        st.getStageInfo(sid).name
+        for j in jobs
+        for sid in st.getJobInfo(j).stageIds
+        if st.getStageInfo(sid) is not None
+    ]
+    assert names and not [n for n in names if n.startswith("parquet at")], names
+
+
+def test_only_local_paths_are_cached(tmp_path):
+    f = tmp_path / "t.parquet"
+    f.write_bytes(b"x")
+    local, sig = _file_signature(f"file://{f}")
+    assert local == str(f) and sig[1] == 1  # (ino, size, mtime_ns)
+    assert _file_signature(str(tmp_path / "missing.parquet")) is None
+    assert _file_signature("hdfs://nn/warehouse/t.parquet") is None

@@ -796,3 +796,27 @@ def test_topk_update_cold_start_and_self_exclusion(spark):
     )
     assert got == want
     assert all(qid != nid for qid, nid, _, _ in got)
+
+
+def test_ivf_cand_must_match_the_search_parameters(emb):
+    """A pinned ivf_candidates set carries its n_queries/n_centroids/
+    n_probe in query_id's metadata (through localCheckpoint); a search
+    given cand= with other parameters, or a set without the stamp,
+    raises instead of silently searching other probe decisions."""
+    from warp_pipe_spark.datapipe.similarity import ivf_candidates, ivf_pq_topk
+
+    cand = ivf_candidates(emb, n_queries=10, n_centroids=10, n_probe=3)
+    cand = cand.localCheckpoint(eager=True)
+    hand_built = emb.selectExpr("vec_id % 10 AS query_id", "vec_id")
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    for search in (ivf_topk_cosine, ivf_pq_topk):
+        assert rows(search(emb, k=5, n_queries=10, cand=cand)) == rows(
+            search(emb, k=5, n_queries=10)
+        )
+        with pytest.raises(ValueError, match="n_probe': 3"):
+            search(emb, k=5, n_queries=10, n_probe=2, cand=cand)
+        with pytest.raises(ValueError, match="stamp is None"):
+            search(emb, k=5, n_queries=10, cand=hand_built)

@@ -1206,7 +1206,13 @@ def ivf_candidates(
     subtrees (0 ReusedExchange in the committed r14 plan — the paths
     prune different columns, so the canonical subtrees differ), so the
     composition paid the centroid scoring 6x. Pin this once
-    (localCheckpoint) and pass it as `cand=`."""
+    (localCheckpoint) and pass it as `cand=`.
+
+    The three parameters are stamped into `query_id`'s column metadata
+    (it survives localCheckpoint), and a search given `cand=` raises
+    unless the stamp matches its own n_queries/n_centroids/n_probe —
+    otherwise it would silently search other probe decisions than its
+    arguments name."""
     cent = _ivf_centroids(embeddings, n_centroids)
     scored = embeddings.crossJoin(F.broadcast(cent)).withColumn(
         "csim", F.round(cosine_v(F.col("embedding"), F.col("cent_emb")), 6)
@@ -1224,7 +1230,36 @@ def ivf_candidates(
         .filter(F.col("query_id") != F.col("vec_id"))
         .select("query_id", "vec_id")
         .distinct()
+        .select(
+            F.col("query_id").alias(
+                "query_id",
+                metadata={_IVF_STAMP: _ivf_params(n_queries, n_centroids, n_probe)},
+            ),
+            "vec_id",
+        )
     )
+
+
+_IVF_STAMP = "ivf_candidates"
+
+
+def _ivf_params(n_queries: int, n_centroids: int, n_probe: int) -> dict:
+    return {"n_queries": n_queries, "n_centroids": n_centroids, "n_probe": n_probe}
+
+
+def _check_ivf_cand(
+    cand: DataFrame, n_queries: int, n_centroids: int, n_probe: int
+) -> None:
+    """Raise unless `cand` is an ivf_candidates set built with these
+    parameters (its `query_id` metadata stamp)."""
+    got = None
+    if "query_id" in cand.columns:
+        got = cand.schema["query_id"].metadata.get(_IVF_STAMP)
+    want = _ivf_params(n_queries, n_centroids, n_probe)
+    if got != want:
+        raise ValueError(
+            f"cand= is not ivf_candidates{want}: its query_id stamp is {got}"
+        )
 
 
 def ivf_pq_topk(
@@ -1248,10 +1283,14 @@ def ivf_pq_topk(
     lookups. Deterministic centroids and codebook keep every decision
     oracle-replayable. Returns (query_id, neighbor_id, rank,
     adc_dist) — rank by ascending quantized distance, vec_id
-    tie-break, query row excluded."""
+    tie-break, query row excluded. A `cand=` must be an
+    ivf_candidates set built with this call's n_queries/n_centroids/
+    n_probe (ValueError otherwise)."""
     sub = dim // m
     if cand is None:
         cand = ivf_candidates(embeddings, n_queries, n_centroids, n_probe)
+    else:
+        _check_ivf_cand(cand, n_queries, n_centroids, n_probe)
     codes = pq_codes(embeddings, dim, m, k_cb)
     q = embeddings.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
@@ -1485,9 +1524,12 @@ def ivf_topk_cosine(
 
     Centroid choice is fully deterministic (every `step`-th vec_id,
     bounded, never a bare limit on an unordered scan) so the DuckDB
-    oracle can replay the probe decisions exactly."""
+    oracle can replay the probe decisions exactly. A `cand=` must be an
+    ivf_candidates set built with this call's n_queries/n_centroids/
+    n_probe (ValueError otherwise)."""
     sim = F.round(cosine_v(F.col("q_emb"), F.col("embedding")), 6)
     if cand is not None:
+        _check_ivf_cand(cand, n_queries, n_centroids, n_probe)
         # precomputed candidate set (a pinned ivf_candidates): attach
         # the query vectors (broadcast — n_queries rows) and the
         # neighbor vectors, score exactly as below. cand is already

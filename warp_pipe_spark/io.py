@@ -183,13 +183,86 @@ def scratch_dir(prefix: str) -> str:
     return path
 
 
+#: Session confs that change what parquet schema inference returns.
+_SCHEMA_CONFS = (
+    ("spark.sql.parquet.binaryAsString", "false"),
+    ("spark.sql.parquet.int96AsTimestamp", "true"),
+    ("spark.sql.parquet.mergeSchema", "false"),
+)
+
+#: abs path -> (file signature + schema confs, inferred StructType); one
+#: entry per path, replaced when the key changes. See read_table.
+_SCHEMAS: dict = {}
+
+
+def _file_signature(path: str):
+    """(absolute local path, signature): the signature is (st_ino,
+    st_size, st_mtime_ns) of a file; for a directory, (relative name,
+    st_ino, st_size, st_mtime_ns) of every file under it, sorted by
+    name. None when the path is not on the local filesystem or cannot
+    be stat'ed."""
+    import os
+    from urllib.parse import urlparse
+
+    # only the scheme is parsed: a bare local path may hold '#' or '?'
+    scheme = urlparse(path).scheme
+    if scheme not in ("", "file"):
+        return None
+    local = os.path.abspath(urlparse(path).path if scheme else path)
+    try:
+        st = os.stat(local)
+        if not os.path.isdir(local):
+            return local, (st.st_ino, st.st_size, st.st_mtime_ns)
+        files = []
+        for root, _, names in os.walk(local):
+            for n in names:
+                p = os.path.join(root, n)
+                fst = os.stat(p)
+                files.append(
+                    (os.path.relpath(p, local), fst.st_ino, fst.st_size, fst.st_mtime_ns)
+                )
+        return local, tuple(sorted(files))
+    except OSError:
+        return None
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """`<sf_dir>/<name>.parquet` as a DataFrame with plain TIMESTAMP
+    (LTZ) columns: naive and Spark-written NTZ timestamps read as UTC
+    epoch values, and an `events` file with TIMESTAMP(NANOS) `ts` comes
+    back as microsecond timestamps.
+
+    SCHEMA: parquet schema inference is a Spark job of its own, so each
+    input's schema is inferred once and every later call reads with it
+    (`spark.read.schema(cached)`), launching no job until an action.
+    The cache keys a path by its file signature — (st_ino, st_size,
+    st_mtime_ns) of the file, or of every file under a directory — plus
+    the session confs that change the inferred schema (binaryAsString,
+    int96AsTimestamp, mergeSchema) and whether the events nanos read
+    applies. A rewritten file changes the signature and replaces its
+    entry. Only local paths are cached: a non-`file` URI, or a path
+    that cannot be stat'ed, is inferred on every call. Each call still
+    returns a fresh relation with fresh attribute ids, so two reads of
+    one table self-join like two independent reads."""
+    from pyspark.sql import types as T
+
     # Testdata timestamps are naive parquet TIMESTAMP(MICROS)
     # (isAdjustedToUTC=false). Spark 4 infers those as TIMESTAMP_NTZ,
     # which unix_millis()/window() reject. Disabling NTZ inference reads
     # the stored micros as TIMESTAMP_LTZ epoch values directly — exactly
     # DuckDB's epoch_ms(naive ts) semantics, independent of session tz.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    path = f"{sf_dir}/{name}.parquet"
+    sig = _file_signature(path)
+    cached = None
+    if sig is not None:
+        local, files = sig
+        confs = tuple(spark.conf.get(k, d) for k, d in _SCHEMA_CONFS)
+        key = (files, confs, name == "events")
+        hit = _SCHEMAS.get(local)
+        if hit is not None and hit[0] == key:
+            cached = hit[1]
+    reader = spark.read if cached is None else spark.read.schema(cached)
     if name == "events":
         # Older testdata generations used TIMESTAMP(NANOS), which Spark 4
         # rejects; read nanos as long and convert to a microsecond
@@ -202,12 +275,19 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         try:
-            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+            df = reader.parquet(path)
         finally:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
     else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        df = reader.parquet(path)
+    schema = cached
+    if schema is None:
+        schema = df.schema
+        if sig is not None:
+            _SCHEMAS[local] = (key, schema)
+    if name == "events" and "ts" in schema.names and isinstance(
+        schema["ts"].dataType, T.LongType
+    ):
         # integer division — double division loses ULPs at 1e18 ns
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     # Spark-WRITTEN parquet carries its own schema in the footer
@@ -215,13 +295,9 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # from an NTZ frame stays NTZ however it is read. Cast such columns
     # to LTZ here (sessions run UTC, warp_pipe_spark.session pins it),
     # so every consumer sees plain TIMESTAMP whatever wrote the file.
-    from pyspark.sql import types as T
-
-    ntz = [
-        f.name for f in df.schema.fields if isinstance(f.dataType, T.TimestampNTZType)
-    ]
-    for c in ntz:
-        df = df.withColumn(c, F.col(c).cast("timestamp"))
+    for f in schema.fields:
+        if isinstance(f.dataType, T.TimestampNTZType):
+            df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
     return df
 
 
