@@ -384,20 +384,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         in DECIMAL(38,0) — fully map-side-partial, no sort, no collect
         (vs cs_checksum's order-normalized md5 chain, the wire-compat
         small-table variant)."""
-        from warp_pipe_spark.verify import row_hash
+        from warp_pipe_spark.verify import row_hash60
 
         final = _replay_final(spark, sf)
-        h60 = (
-            F.conv(
-                F.substring(
-                    row_hash(["pk", "user_id", "event_type", "value_cents"]), 1, 15
-                ),
-                16,
-                10,
-            )
-            .cast("decimal(38,0)")
-            .alias("h")
-        )
+        h60 = row_hash60(["pk", "user_id", "event_type", "value_cents"]).alias("h")
         return (
             final.select("table_name", h60)
             .groupBy("table_name")
@@ -1431,21 +1421,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # plane determinism semantics stay pinned in
     # tests/test_similarity.py / test_dedup.py.
 
-    def ann_lsh_pairs(spark, sf):
-        """Scale path for embedding near-dup: random-hyperplane LSH
-        signatures (deterministic md5-derived planes) banded 4×4 bits;
-        pairs = bucket co-membership. Exact-cosine verify happens
-        downstream on candidates only."""
-        from warp_pipe_spark.datapipe.similarity import hyperplane_lsh_pairs
-
-        return hyperplane_lsh_pairs(read_table(spark, sf, "embeddings"))
+    # (ann_lsh_pairs, the fixed 16-plane twin of ann_lsh_pairs_auto,
+    # is retired: its pinned plane count made pair emission
+    # superlinear in bucket occupancy, and the fixed-plane semantics
+    # stay pinned in tests/test_similarity.py.)
 
     def ann_lsh_pairs_auto(spark, sf):
-        """The configuration that survives 100 TB (VERDICT r4 item 2):
-        plane count derived from the corpus size (auto_lsh_params), so
-        band-bucket count grows linearly with rows and pair emission
-        stays linear — SCALE.md measured 5.1× at 10× rows for this
-        path vs 27.7× for the pinned-plane variant above. The
+        """Scale path for embedding near-dup: random-hyperplane LSH
+        signatures (deterministic md5-derived planes) banded into 4
+        bands; pairs = bucket co-membership, exact-cosine verify
+        downstream on candidates only. The configuration that survives
+        100 TB (VERDICT r4 item 2): plane count derived from the corpus
+        size (auto_lsh_params), so band-bucket count grows linearly with
+        rows and pair emission stays linear — SCALE.md measured 5.1× at
+        10× rows for this path vs 27.7× for the retired pinned-plane
+        variant. The
         derivation is a deterministic function of count(embeddings),
         so the DuckDB oracle replays the identical plane count."""
         from warp_pipe_spark.datapipe.similarity import hyperplane_lsh_pairs
@@ -1478,7 +1468,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ann_topk=ann_topk,
         ann_ivf_topk=ann_ivf_topk,
         ann_ivf_indexed=ann_ivf_indexed,
-        ann_lsh_pairs=ann_lsh_pairs,
         ann_lsh_pairs_auto=ann_lsh_pairs_auto,
         dedup_embedding_lsh_auto=dedup_embedding_lsh_auto,
     )
@@ -3849,6 +3838,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # oracle-pre-validated THIS round (r12 queue pattern), shipping
         # pytest-only until the r16 slot opens. The r14/r15 windows are
         # exactly their 50-query staleness cohorts — no slot, no tag.
+        # DONE: ann_lsh_pairs is retired (query, tag and oracle), which
+        # opens the r16 slot.
         #
         # ROUND-14 OPTIMIZATION PASS — result-identical execution
         # changes, tagged to each touched query's staleness-mandatory
@@ -3888,7 +3879,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_gopher_rules": 15,
         "ann_ivf_indexed": 16,
         "ann_ivf_topk": 16,
-        "ann_lsh_pairs": 16,
         "ann_topk": 16,
         "cs_attribute_changes": 16,
         "cs_count_stats": 16,
@@ -4918,22 +4908,6 @@ def oracle_sql() -> dict[str, str]:
         "list_reduce([v[d] * (" + _plane + ") FOR d IN range(1, len(v)+1)], "
         "(acc, x) -> acc + x)"
     )
-    _sig_terms = " + ".join(
-        f"(CASE WHEN ({_dot.format(i=i)}) > 0 THEN {1 << i}::BIGINT ELSE 0::BIGINT END)"
-        for i in range(16)
-    )
-    o["ann_lsh_pairs"] = f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    sig AS (SELECT vec_id, CAST({_sig_terms} AS BIGINT) AS sig FROM e),
-    bands AS (
-      SELECT vec_id, g.band, (sig >> (g.band * 4)) & 15 AS key
-      FROM sig CROSS JOIN (SELECT unnest(range(0, 4)) AS band) g
-    )
-    SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-    FROM bands a JOIN bands b
-      ON a.band = b.band AND a.key = b.key AND a.vec_id < b.vec_id
-    """
-
     # (dedup_embedding_lsh's fixed-plane oracle retired with the
     # query, r13 — the _lsh_auto entry below replays the identical
     # candidates→verify composition with corpus-derived parameters.)

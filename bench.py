@@ -141,7 +141,6 @@ HEADLINE = [
     "ann_topk",
     "ann_ivf_topk",
     "ann_ivf_indexed",
-    "ann_lsh_pairs",
     "ann_lsh_pairs_auto",
     "dedup_embedding_lsh_auto",
     "multimodal_features",

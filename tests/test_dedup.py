@@ -497,10 +497,10 @@ def test_ingest_sink_auto_compacts_behind_threshold(spark, tmp_path):
 
     from warp_pipe_spark.datapipe.dedup_index import (
         IngestDedupSink,
-        _n_files,
         build_minhash_index,
         query_minhash_index,
     )
+    from warp_pipe_spark.io import n_parquet_files as _n_files
 
     rows = [(i, BASE if i % 3 == 0 else (NEAR if i % 3 == 1 else OTHER))
             for i in range(14)]
@@ -1040,8 +1040,8 @@ def test_compact_index_preserves_results_and_merges_files(spark, docs, tmp_path)
             ]
             assert len(files) == 1, (d, files)
     # leftovers of the swap must be gone
-    assert not os.path.exists(path + "/bands.compacting")
-    assert not os.path.exists(path + "/bands.pre_compact")
+    assert not os.path.exists(path + "/bands._compact")
+    assert not os.path.exists(path + "/bands._trash")
 
 
 def test_compact_index_drops_replay_duplicate_postings(spark, docs, tmp_path):
@@ -1068,46 +1068,6 @@ def test_compact_index_drops_replay_duplicate_postings(spark, docs, tmp_path):
 
     assert stats["rows_after"] < stats["rows_before"]
     assert _mhidx_snapshot(spark, path) == before  # distinct rows identical
-
-
-def test_compact_index_recovers_from_swap_crash(spark, docs, tmp_path):
-    """Both swap-window crash states must repair on the next call:
-    (a) compacted copy complete (_SUCCESS) -> finish the swap with it;
-    (b) compacted copy absent/partial -> restore the pre-compact dir.
-    In both, a follow-up compaction runs cleanly and results match."""
-    import os
-    import shutil
-
-    import pyspark.sql.functions as F
-
-    from warp_pipe_spark.datapipe.dedup_index import (
-        build_minhash_index,
-        compact_minhash_index,
-        update_minhash_index,
-    )
-
-    path = str(tmp_path / "mhidx")
-    build_minhash_index(docs.filter(F.col("doc_id") <= 1), path)
-    update_minhash_index(docs.filter(F.col("doc_id") == 2), path, ingest_batch=0)
-    before = _mhidx_snapshot(spark, path)
-    bands, tmp, old = (
-        path + "/bands",
-        path + "/bands.compacting",
-        path + "/bands.pre_compact",
-    )
-
-    # (a) crash BETWEEN the two renames, compacted copy complete
-    shutil.copytree(bands, tmp)  # stands in for a verified compacted copy
-    os.rename(bands, old)
-    compact_minhash_index(spark, path)
-    assert _mhidx_snapshot(spark, path) == before
-
-    # (b) crash with a PARTIAL compacted copy (no _SUCCESS)
-    shutil.copytree(bands, tmp)
-    os.remove(os.path.join(tmp, "_SUCCESS"))
-    os.rename(bands, old)
-    compact_minhash_index(spark, path)
-    assert _mhidx_snapshot(spark, path) == before
 
 
 def test_compact_index_missing_raises(spark, tmp_path):

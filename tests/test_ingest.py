@@ -125,43 +125,6 @@ def test_compact_shrinks_files_preserves_rows(spark, tmp_path):
                 assert os.path.exists(os.path.join(root, d, "_SUCCESS")), d
 
 
-def test_compaction_sidecars_never_double_count(spark, tmp_path):
-    """io.compact_dataset's crash windows leave `batch_N._compact` /
-    `batch_N._trash` sidecar dirs (both containing their own _SUCCESS).
-    A bare startswith('batch_') dir filter would read them ALONGSIDE
-    (or instead of) the real dir — double-counting the batch, and in
-    the crashed-swap case never healing it. accepted()/compact() must
-    count each batch exactly once in every crash state."""
-    import os
-    import shutil
-
-    docs = _docs(spark)
-    sink = CorpusQualityGateSink(spark, str(tmp_path / "gate"))
-    sink(docs.filter(F.col("doc_id") % 2 == 0), 0)
-    sink(docs.filter(F.col("doc_id") % 2 == 1), 1)
-    want = {tuple(r) for r in sink.accepted().collect()}
-
-    real = os.path.join(sink.accept_dir, "batch_1")
-    tmp = real + "._compact"
-    trash = real + "._trash"
-
-    # crash BEFORE the first rename: rewritten copy committed at the
-    # sidecar, real dir still in place — only the real dir counts
-    shutil.copytree(real, tmp)
-    assert {tuple(r) for r in sink.accepted().collect()} == want
-
-    # crash BETWEEN the renames: real dir moved to trash, tmp not yet
-    # swapped in — readers heal via recover_swap and see every row once
-    os.rename(real, trash)
-    assert {tuple(r) for r in sink.accepted().collect()} == want
-    assert os.path.isdir(real) and not os.path.isdir(trash)
-
-    # a retried compaction after healing converges and cleans up
-    shutil.rmtree(tmp, ignore_errors=True)
-    sink.compact()
-    assert {tuple(r) for r in sink.accepted().collect()} == want
-
-
 def test_null_text_doc_is_rejected_not_dropped(spark, tmp_path):
     """A NULL-text doc must land in reject with a reason — never
     silently vanish from the accept/reject partition (the explode

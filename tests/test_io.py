@@ -78,10 +78,15 @@ def test_spark_written_ntz_is_cast_on_miss_and_hit(spark, tmp_path):
     assert read_table(spark, str(tmp_path), "t").columns == ["k", "ts", "extra"]
 
 
-def test_events_nanos_read_is_identical_on_miss_and_hit(spark, tmp_path):
+def test_events_nanos_read_is_identical_on_miss_and_hit(
+    spark, tmp_path, monkeypatch
+):
     """Older testdata stored events.ts as TIMESTAMP(NANOS): read_table
     reads it as long under nanosAsLong and converts to microseconds,
-    on a cache miss and a hit alike, and leaves the conf as it was."""
+    on a cache miss and a hit alike, and leaves the conf as it was. A
+    hit reads with the cached schema, so it does not touch the conf."""
+    from pyspark.sql.conf import RuntimeConfig
+
     ns = [1_700_000_000_123_456_789, 1_600_000_000_000_001_999]
     pq.write_table(
         pa.table(
@@ -96,7 +101,17 @@ def test_events_nanos_read_is_identical_on_miss_and_hit(spark, tmp_path):
     spark.conf.set(key, "false")
     miss = read_table(spark, str(tmp_path), "events")
     assert spark.conf.get(key) == "false"
+    set_keys = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, k, v):
+        set_keys.append(k)
+        return real_set(self, k, v)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
     hit, hit_jobs = _jobs(spark, lambda: read_table(spark, str(tmp_path), "events"))
+    monkeypatch.undo()
+    assert key not in set_keys
     assert spark.conf.get(key) == "false"
     assert hit_jobs == []
     epoch = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)

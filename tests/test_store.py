@@ -78,30 +78,6 @@ def test_retention_compact_requires_exactly_one_horizon(spark, tmp_path):
         retention_compact(spark, path, before_id=1, before_ts="2024-01-01")
 
 
-def test_retention_compact_recovers_from_crash_window(spark, tmp_path):
-    """Crash between the two renames leaves the dataset at ._trash;
-    the next compaction heals it before doing anything else."""
-    import os
-    import shutil
-
-    from warp_pipe_spark.io import recover_swap
-    from warp_pipe_spark.store import retention_compact
-
-    path = str(tmp_path / "cslog3")
-    spark.range(1, 51).selectExpr("id", "current_timestamp() AS ts").write.parquet(path)
-
-    # simulate the crash window: data moved to trash, new dir never landed
-    os.rename(path, path + "._trash")
-    assert recover_swap(path) is True
-    assert spark.read.parquet(path).count() == 50
-
-    # and retention_compact self-heals when entered in that state
-    os.rename(path, path + "._trash")
-    out = retention_compact(spark, path, before_id=20)
-    assert out == {"kept": 31, "deleted": 19}
-    assert spark.read.parquet(path).count() == 31
-
-
 def test_changeset_log_roundtrips_every_format(spark, sf_dir, tmp_path):
     """The audit-log shape must survive parquet/ORC/CSV/JSONL
     round-trips byte-identically — including NULL payload sides and

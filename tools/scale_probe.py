@@ -56,7 +56,6 @@ PROBE_QUERIES = [
     "text_gopher_rules",
     # ANN family
     "ann_topk",
-    "ann_lsh_pairs",
     "ann_lsh_pairs_auto",
     "ann_ivf_topk",
     # multimodal (Arrow decode paths)
@@ -1649,24 +1648,12 @@ def main() -> int:
         build_inflated(spark, out_dir, r)
 
     qs = entrymod.queries()
-
-    # the scale-path LSH configuration (auto planes) next to the pinned
-    # oracle configuration, so the probe shows both behaviors
-    def _lsh_auto(spark, d):
-        from warp_pipe_spark.datapipe.similarity import hyperplane_lsh_pairs
-        from warp_pipe_spark.io import read_table
-
-        return hyperplane_lsh_pairs(read_table(spark, d, "embeddings"), n_planes=None)
-
-    qs["ann_lsh_pairs_auto"] = _lsh_auto
     # deliberately-pinned configurations kept ONLY for oracle
-    # determinism (fixed plane count regardless of corpus size); their
-    # _auto twins are the scale path and measure linear. Excluded from
-    # the worst-ratio verdict so a by-design fixture doesn't read as an
-    # open hazard.
-    # emb_semdedup pins k=8 for oracle determinism; cluster sizes grow
-    # with N so its pair stage is quadratic-by-design (use _auto)
-    pinned_fixtures = {"ann_lsh_pairs", "emb_semdedup"}
+    # determinism, excluded from the worst-ratio verdict so a
+    # by-design fixture doesn't read as an open hazard: emb_semdedup
+    # pins k=8; cluster sizes grow with N so its pair stage is
+    # quadratic-by-design
+    pinned_fixtures = {"emb_semdedup"}
     names = [n for n in PROBE_QUERIES if n in qs and (not only or n in only)]
     print(f"| query | sf0.1 s | {r}x s | ratio | verdict (ideal ≤ {r}) |")
     print("|---|---|---|---|---|")

@@ -29,25 +29,18 @@ exactly like dedup.drop_hot_buckets.
 from __future__ import annotations
 
 import os
-import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from warp_pipe_spark.datapipe.dedup import band_rows
-
-
-def _n_files(d: str) -> int:
-    """Parquet data files under an index dir (driver-local walk — the
-    index shares the sink family's LOCAL-FS contract; on a real object
-    store this is one manifest/listing call)."""
-    return sum(
-        1
-        for _root, _, files in os.walk(d)
-        for f in files
-        if f.endswith(".parquet")
-    )
+from warp_pipe_spark.io import (
+    committed_batch_dirs,
+    n_parquet_files,
+    recover_swap,
+    rewrite_and_swap,
+)
 
 
 def build_minhash_index(docs: DataFrame, path: str, n: int = 3) -> None:
@@ -86,25 +79,6 @@ def update_minhash_index(
     ).write.mode("append").partitionBy("band").parquet(path + "/bands")
 
 
-def _recover_bands(path: str) -> tuple[str, str, str]:
-    """Repair a crash inside compact_minhash_index's two-rename swap —
-    the only window in which `bands` is missing — by restoring
-    whichever side is complete, preferring the verified compacted copy;
-    then drop the leftover sidecars. A path with no index at all is
-    left as it is. Returns the (bands, compacting, pre_compact) dirs."""
-    bands = os.path.join(path, "bands")
-    tmp = os.path.join(path, "bands.compacting")
-    old = os.path.join(path, "bands.pre_compact")
-    if not os.path.isdir(bands):
-        if os.path.isdir(tmp) and os.path.exists(os.path.join(tmp, "_SUCCESS")):
-            os.rename(tmp, bands)  # compacted copy was complete: finish
-        elif os.path.isdir(old):
-            os.rename(old, bands)  # compacted copy gone/partial: undo
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    return bands, tmp, old
-
-
 def compact_minhash_index(spark: SparkSession, path: str) -> dict:
     """Rewrite the band partitions into one file each — the
     maintenance op that keeps the append-only design viable long-term.
@@ -131,54 +105,51 @@ def compact_minhash_index(spark: SparkSession, path: str) -> dict:
       - `_ingested` markers are untouched: they describe which batch
         ids are IN the index, which compaction does not change.
 
-    Crash-safe: the compacted copy is fully written and row-count
-    verified BEFORE the two-rename swap, the pre-compact dir is kept
-    until the swap completes, and a crash in the swap window is
-    repaired by `_recover_bands` at the next call or the next
-    IngestDedupSink batch. Requires the same exclusive access as
-    build_minhash_index: pause ingest for the swap, not for the
-    rewrite.
+    Crash-safe: committed through io.rewrite_and_swap, with the
+    compacted copy row-count verified inside its write step, so a copy
+    that lost rows is discarded and the index left untouched. A crash
+    in the swap is healed at the next call or the next IngestDedupSink
+    batch. Requires the same exclusive access as build_minhash_index:
+    pause ingest for the compaction.
 
     Returns {"rows_before", "rows_after", "files_before",
     "files_after"} so callers (and tests) can assert the effect."""
-    bands, tmp, old = _recover_bands(path)
-    if not os.path.isdir(bands):
-        raise FileNotFoundError(f"no index at {bands}")
+    bands = os.path.join(path, "bands")
 
-    df = spark.read.parquet(bands)
-    rows_before = df.count()
-    files_before = _n_files(bands)
-    # repartition BY the partition column: each band lands wholly in
-    # one shuffle partition, so partitionBy emits exactly one file per
-    # band dir — the one shuffle is the price of the rewrite
-    (
-        df.dropDuplicates(["band", "key", "doc_id", "ingest_batch"])
-        .repartition("band")
-        .write.mode("overwrite")
-        .partitionBy("band")
-        .parquet(tmp)
-    )
-    rows_after = spark.read.parquet(tmp).count()
-    dupes = (
-        rows_before
-        - df.select("band", "key", "doc_id", "ingest_batch").distinct().count()
-    )
-    if rows_after != rows_before - dupes:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise RuntimeError(
-            f"compaction wrote {rows_after} rows, expected "
-            f"{rows_before - dupes} ({rows_before} - {dupes} replay "
-            "duplicates) — compacted copy discarded, index untouched"
+    def write(tmp: str) -> dict:
+        df = spark.read.parquet(bands)
+        rows_before = df.count()
+        files_before = n_parquet_files(bands)
+        # repartition BY the partition column: each band lands wholly in
+        # one shuffle partition, so partitionBy emits exactly one file
+        # per band dir — the one shuffle is the price of the rewrite
+        (
+            df.dropDuplicates(["band", "key", "doc_id", "ingest_batch"])
+            .repartition("band")
+            .write.mode("overwrite")
+            .partitionBy("band")
+            .parquet(tmp)
         )
-    os.rename(bands, old)
-    os.rename(tmp, bands)
-    shutil.rmtree(old, ignore_errors=True)
-    return {
-        "rows_before": rows_before,
-        "rows_after": rows_after,
-        "files_before": files_before,
-        "files_after": _n_files(bands),
-    }
+        rows_after = spark.read.parquet(tmp).count()
+        dupes = (
+            rows_before
+            - df.select("band", "key", "doc_id", "ingest_batch").distinct().count()
+        )
+        if rows_after != rows_before - dupes:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise RuntimeError(
+                f"compaction wrote {rows_after} rows, expected "
+                f"{rows_before - dupes} ({rows_before} - {dupes} replay "
+                "duplicates) — compacted copy discarded, index untouched"
+            )
+        return {
+            "rows_before": rows_before,
+            "rows_after": rows_after,
+            "files_before": files_before,
+        }
+
+    stats = rewrite_and_swap(bands, write)
+    return {**stats, "files_after": n_parquet_files(bands)}
 
 
 def query_minhash_index(
@@ -304,7 +275,7 @@ class IngestDedupSink:
         # an auto-compaction that crashed inside its swap left `bands`
         # missing: repair it before the marker check skips the append
         # and the query or the file-count threshold reads the void
-        _recover_bands(self.index_dir)
+        recover_swap(os.path.join(self.index_dir, "bands"))
         # ONE persisted signature pass per micro-batch: without it the
         # banding fold runs three times (index append + the query
         # plan's two uses of the batch side)
@@ -336,25 +307,16 @@ class IngestDedupSink:
         finally:
             rows.unpersist()
         if self.auto_compact_files is not None and (
-            _n_files(os.path.join(self.index_dir, "bands"))
+            n_parquet_files(os.path.join(self.index_dir, "bands"))
             > self.auto_compact_files
         ):
             compact_minhash_index(self.spark, self.index_dir)
 
     def candidates(self) -> DataFrame | None:
-        """All candidate pairs surfaced so far (one multi-path scan).
-        Committed dirs only: the name must be exactly `batch_<id>` and
-        carry Spark's _SUCCESS job-commit marker, so a dir a crash left
-        half-written (or a compaction sidecar) is invisible rather than
-        a scan error; a missing out_dir reads as no candidates yet."""
-        if not os.path.isdir(self.out_dir):
-            return None
-        dirs = [
-            os.path.join(self.out_dir, d)
-            for d in sorted(os.listdir(self.out_dir))
-            if re.fullmatch(r"batch_\d+", d)
-            and os.path.exists(os.path.join(self.out_dir, d, "_SUCCESS"))
-        ]
+        """All candidate pairs surfaced so far (one multi-path scan over
+        io.committed_batch_dirs); None before the first committed
+        batch."""
+        dirs = committed_batch_dirs(self.out_dir)
         if not dirs:
             return None
         return self.spark.read.parquet(*dirs).distinct()

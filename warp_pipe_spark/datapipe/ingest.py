@@ -25,6 +25,7 @@ from warp_pipe_spark.datapipe.text import (
     pii_scrub,
     quality_model_score,
 )
+from warp_pipe_spark.io import committed_batch_dirs, compact_dataset
 
 
 def quality_gate(docs: DataFrame) -> DataFrame:
@@ -100,50 +101,27 @@ class CorpusQualityGateSink:
             accepted = batch.join(
                 gate.filter("keep").select("doc_id"), "doc_id", "left_semi"
             )
-            pii_scrub(accepted).write.mode("overwrite").parquet(
-                os.path.join(self.accept_dir, f"batch_{batch_id}")
-            )
-            gate.filter(~F.col("keep")).select(
-                "doc_id", "reject_reason"
-            ).write.mode("overwrite").parquet(
-                os.path.join(self.reject_dir, f"batch_{batch_id}")
+            self._write_batch(
+                batch_id,
+                pii_scrub(accepted),
+                gate.filter(~F.col("keep")).select("doc_id", "reject_reason"),
             )
         finally:
             gate.unpersist()
             batch.unpersist()
 
-    @staticmethod
-    def _committed_batch_dirs(root: str) -> list[str]:
-        """COMMITTED batch dirs only, after healing crashed compaction
-        swaps. The name must be exactly `batch_<id>` — a bare
-        startswith would also match io.compact_dataset's sidecar dirs
-        (`batch_N._compact`, `batch_N._trash`, both of which contain a
-        _SUCCESS from their own write job) and double-count the batch.
-        A swap that crashed between its two renames leaves only
-        `batch_N._trash`; recover_swap restores the real dir before
-        listing, so no committed batch is ever invisible or counted
-        twice."""
-        import re as _re
-
-        from warp_pipe_spark.io import recover_swap
-
-        if not os.path.isdir(root):
-            return []
-        for d in os.listdir(root):
-            if d.endswith("._trash"):
-                recover_swap(os.path.join(root, d[: -len("._trash")]))
-        return [
-            os.path.join(root, d)
-            for d in sorted(os.listdir(root))
-            if _re.fullmatch(r"batch_\d+", d)
-            and os.path.exists(os.path.join(root, d, "_SUCCESS"))
-        ]
+    def _write_batch(
+        self, batch_id: int, accept: DataFrame, reject: DataFrame
+    ) -> None:
+        """Overwrite batch_id's accept and reject dirs: the committed-
+        batch layout every gate sink shares (read back through
+        io.committed_batch_dirs)."""
+        name = f"batch_{batch_id}"
+        accept.write.mode("overwrite").parquet(os.path.join(self.accept_dir, name))
+        reject.write.mode("overwrite").parquet(os.path.join(self.reject_dir, name))
 
     def _read(self, root: str) -> DataFrame | None:
-        # only COMMITTED batch dirs: Spark writes _SUCCESS at job
-        # commit, so a dir a crash left half-written (no marker) is
-        # invisible to readers and simply rewritten on redelivery
-        dirs = self._committed_batch_dirs(root)
+        dirs = committed_batch_dirs(root)
         if not dirs:
             return None
         return self.spark.read.parquet(*dirs)
@@ -165,14 +143,12 @@ class CorpusQualityGateSink:
         leave the redelivery contract untouched and inherit
         io.compact_dataset's rewrite-and-swap crash recovery. Returns
         total {"files_before", "files_after"}."""
-        from warp_pipe_spark.io import compact_dataset
-
         totals = {"files_before": 0, "files_after": 0}
         for root in (self.accept_dir, self.reject_dir):
-            # _committed_batch_dirs heals crashed swaps first, so a
+            # committed_batch_dirs heals crashed swaps first, so a
             # batch whose previous compaction died mid-rename is
-            # restored and re-compacted rather than skipped forever
-            for full in self._committed_batch_dirs(root):
+            # healed and re-compacted rather than skipped forever
+            for full in committed_batch_dirs(root):
                 r = compact_dataset(self.spark, full, target_files)
                 totals["files_before"] += r["files_before"]
                 totals["files_after"] += r["files_after"]
@@ -218,18 +194,11 @@ class DsirGateSink(CorpusQualityGateSink):
             batch, self._ratio, self._n_buckets
         ).persist()
         try:
-            keep = scored.filter(
-                F.col("logw_micro") >= self.min_logw_micro
-            )
-            batch.join(
-                keep.select("doc_id"), "doc_id", "left_semi"
-            ).write.mode("overwrite").parquet(
-                os.path.join(self.accept_dir, f"batch_{batch_id}")
-            )
-            scored.filter(
-                F.col("logw_micro") < self.min_logw_micro
-            ).write.mode("overwrite").parquet(
-                os.path.join(self.reject_dir, f"batch_{batch_id}")
+            keep = scored.filter(F.col("logw_micro") >= self.min_logw_micro)
+            self._write_batch(
+                batch_id,
+                batch.join(keep.select("doc_id"), "doc_id", "left_semi"),
+                scored.filter(F.col("logw_micro") < self.min_logw_micro),
             )
         finally:
             scored.unpersist()
@@ -289,15 +258,10 @@ class BloomGateSink(CorpusQualityGateSink):
             k_hashes=self.k_hashes,
         ).persist()
         try:
-            gated.filter(~F.col("maybe_member")).drop(
-                "maybe_member"
-            ).write.mode("overwrite").parquet(
-                os.path.join(self.accept_dir, f"batch_{batch_id}")
-            )
-            gated.filter(F.col("maybe_member")).select(
-                self.key_col
-            ).write.mode("overwrite").parquet(
-                os.path.join(self.reject_dir, f"batch_{batch_id}")
+            self._write_batch(
+                batch_id,
+                gated.filter(~F.col("maybe_member")).drop("maybe_member"),
+                gated.filter(F.col("maybe_member")).select(self.key_col),
             )
         finally:
             gated.unpersist()

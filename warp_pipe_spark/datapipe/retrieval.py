@@ -209,8 +209,9 @@ def update_text_index(new_docs: DataFrame, path: str) -> None:
     update_minhash_index / update_ivf_index. The bucket modulus comes
     from the index itself (_index_n_buckets) — an append can never
     write under a different partitioning than the build. After many
-    small appends, io.compact_dataset per bucket dir restores file
-    counts."""
+    small appends, io.compact_dataset on each of postings/, df/ and
+    stats/ rewrites every bucket dir down to one file, committed
+    through io.rewrite_and_swap (pause appends while it runs)."""
     from warp_pipe_spark.datapipe.text import h32
 
     n_term_buckets = _index_n_buckets(new_docs.sparkSession, path)

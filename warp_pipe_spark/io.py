@@ -21,6 +21,12 @@ form is produced by `changesets_as_audit_log` (to_json) on top.
 
 from __future__ import annotations
 
+import os
+import re
+import shutil
+from collections.abc import Callable
+from typing import TypeVar
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -38,6 +44,8 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
+
+_T = TypeVar("_T")
 
 _BYTE_SUFFIXES = {
     "": 1,
@@ -170,8 +178,6 @@ def scratch_dir(prefix: str) -> str:
     rmtree earlier (bench.py's soak fixture) are harmless double-frees
     under ignore_errors."""
     import atexit
-    import os
-    import shutil
     import tempfile
 
     base = "/dev/shm"
@@ -201,7 +207,6 @@ def _file_signature(path: str):
     st_ino, st_size, st_mtime_ns) of every file under it, sorted by
     name. None when the path is not on the local filesystem or cannot
     be stat'ed."""
-    import os
     from urllib.parse import urlparse
 
     # only the scheme is parsed: a bare local path may hold '#' or '?'
@@ -263,12 +268,13 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if hit is not None and hit[0] == key:
             cached = hit[1]
     reader = spark.read if cached is None else spark.read.schema(cached)
-    if name == "events":
+    if name == "events" and cached is None:
         # Older testdata generations used TIMESTAMP(NANOS), which Spark 4
         # rejects; read nanos as long and convert to a microsecond
         # timestamp (same truncation DuckDB applies for epoch_ms).
-        # Scoped to THIS read (schema conversion happens at read();
-        # execution after the restore is verified safe): left session-
+        # Scoped to THIS inference (the conf only steers schema
+        # conversion at read(); execution after the restore is verified
+        # safe, and a cached schema already says long): left session-
         # global, every later parquet read would silently get bigint
         # nanos columns — without this fixup — instead of Spark 4's
         # loud rejection, order-dependent on whether events loaded first.
@@ -452,20 +458,90 @@ def write_dataset(
 
 
 def recover_swap(path: str) -> bool:
-    """Heal the rewrite-and-swap crash window: if a compaction crashed
-    between `rename(path→trash)` and `rename(tmp→path)`, the dataset
-    still exists in full at `<path>._trash` — restore it. Called at the
-    start of every compaction (and safe to call from any reader that
-    finds `path` missing). Returns True if a recovery happened."""
-    import os
-    import shutil
-
-    trash = path + "._trash"
-    if not os.path.exists(path) and os.path.isdir(trash):
+    """Heal a `rewrite_and_swap` that crashed between its two renames,
+    the one state in which `path` is missing: finish the swap when
+    `<path>._compact` holds Spark's `_SUCCESS` job-commit marker,
+    otherwise put `<path>._trash` back. Acts only on a missing `path`
+    and deletes nothing, so any reader may call it. Returns True if it
+    renamed a sidecar into place."""
+    if os.path.exists(path):
+        return False
+    tmp, trash = path + "._compact", path + "._trash"
+    if os.path.exists(os.path.join(tmp, "_SUCCESS")):
+        os.rename(tmp, path)
+    elif os.path.isdir(trash):
         os.rename(trash, path)
-        shutil.rmtree(path + "._compact", ignore_errors=True)
-        return True
-    return False
+    else:
+        return False
+    return True
+
+
+def rewrite_and_swap(path: str, write: Callable[[str], _T]) -> _T:
+    """Crash-safe rewrite of the dataset dir `path`: the one commit
+    protocol behind compact_dataset, store.retention_compact and
+    dedup_index.compact_minhash_index.
+
+      1. heal an earlier crash (recover_swap); no dataset at `path`
+         raises FileNotFoundError;
+      2. delete stale `<path>._compact` and `<path>._trash` sidecars;
+      3. `write(<path>._compact)`: the caller reads `path` and writes
+         the rewritten copy as a Spark job (whose commit leaves
+         `_SUCCESS`); raising there abandons the swap, `path` untouched;
+      4. rename `path` to `._trash`, then `._compact` to `path`;
+      5. delete `._trash`.
+
+    The data is complete at `path` in every state but the one between
+    step 4's renames, where recover_swap finds it: the committed
+    rewrite at `._compact`, the old copy at `._trash`. So a reader
+    that heals a missing `path` reads exactly the pre- or the
+    post-rewrite rows after a crash anywhere, and the next rewrite
+    converges. Only writers delete sidecars. Single-writer: the caller
+    holds exclusive write access to `path` for the duration (a
+    cron-shaped maintenance job, or a sink's own sequential batches).
+    Returns what `write` returned."""
+    recover_swap(path)
+    if not os.path.exists(path):
+        raise FileNotFoundError(f"no dataset at {path}")
+    tmp, trash = path + "._compact", path + "._trash"
+    shutil.rmtree(tmp, ignore_errors=True)
+    shutil.rmtree(trash, ignore_errors=True)
+    out = write(tmp)
+    os.rename(path, trash)
+    os.rename(tmp, path)
+    shutil.rmtree(trash)
+    return out
+
+
+def committed_batch_dirs(root: str) -> list[str]:
+    """The committed `batch_<id>` dirs under `root`, sorted by name:
+    the layout of every foreachBatch sink that overwrites one dir per
+    batch id. A dir counts once Spark's job commit wrote its
+    `_SUCCESS`, and its name must be exactly `batch_<id>`, so neither a
+    dir a crash left half-written nor the `._compact`/`._trash`
+    sidecars of a compaction (each with its own `_SUCCESS`) is read. A
+    batch whose compaction crashed inside the swap is healed first. A
+    missing `root` holds no batches."""
+    if not os.path.isdir(root):
+        return []
+    for d in os.listdir(root):
+        m = re.fullmatch(r"(batch_\d+)\._(?:compact|trash)", d)
+        if m:
+            recover_swap(os.path.join(root, m.group(1)))
+    return [
+        os.path.join(root, d)
+        for d in sorted(os.listdir(root))
+        if re.fullmatch(r"batch_\d+", d)
+        and os.path.exists(os.path.join(root, d, "_SUCCESS"))
+    ]
+
+
+def n_parquet_files(path: str) -> int:
+    """Parquet data files under `path` (a driver-local walk: the sinks
+    and indexes share a local-filesystem contract; on an object store
+    this is one listing call)."""
+    return sum(
+        1 for _, _, files in os.walk(path) for f in files if f.endswith(".parquet")
+    )
 
 
 def compact_dataset(
@@ -475,47 +551,33 @@ def compact_dataset(
     parquet dataset down to `target_files` per partition directory —
     the maintenance job every long-lived streaming sink needs, since
     each micro-batch appends at least one file per touched partition.
-    Same rewrite-and-swap discipline as store.retention_compact; the
-    crash window between the two renames is healed by `recover_swap`
-    (the data always exists in full at either `path` or `._trash`).
+    Committed through rewrite_and_swap.
     Returns {"files_before": n, "files_after": m}.
     """
-    import os
-    import shutil
 
-    recover_swap(path)
+    def write(tmp: str) -> int:
+        df = spark.read.parquet(path)
+        # partition columns are inferred from the directory layout
+        part_cols = [
+            f.name
+            for f in df.schema.fields
+            if any(
+                seg.startswith(f.name + "=")
+                for root, dirs, _ in os.walk(path)
+                for seg in dirs
+            )
+        ]
+        before = n_parquet_files(path)
+        if part_cols:
+            write_dataset(
+                df, tmp, partition_by=part_cols, files_per_partition=target_files
+            )
+        else:
+            df.coalesce(target_files).write.mode("overwrite").parquet(tmp)
+        return before
 
-    def count_files(p: str) -> int:
-        return sum(
-            1
-            for root, _, files in os.walk(p)
-            for f in files
-            if f.endswith(".parquet")
-        )
-
-    before = count_files(path)
-    df = spark.read.parquet(path)
-    # partition columns are inferred from the directory layout
-    part_cols = [
-        f.name
-        for f in df.schema.fields
-        if any(
-            seg.startswith(f.name + "=")
-            for root, dirs, _ in os.walk(path)
-            for seg in dirs
-        )
-    ]
-    tmp, trash = path + "._compact", path + "._trash"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(trash, ignore_errors=True)
-    if part_cols:
-        write_dataset(df, tmp, partition_by=part_cols, files_per_partition=target_files)
-    else:
-        df.coalesce(target_files).write.mode("overwrite").parquet(tmp)
-    os.rename(path, trash)
-    os.rename(tmp, path)
-    shutil.rmtree(trash)
-    return {"files_before": before, "files_after": count_files(path)}
+    before = rewrite_and_swap(path, write)
+    return {"files_before": before, "files_after": n_parquet_files(path)}
 
 
 def changesets_as_audit_log(cs: DataFrame) -> DataFrame:

@@ -14,8 +14,6 @@ the log (or a Delta DELETE where available).
 from __future__ import annotations
 
 import datetime as _dt
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -112,24 +110,17 @@ def retention_compact(
     exec is literally `return nil` (changeset_store.go:104-106) — its
     audit log grows forever.
 
-    Swap discipline: write to `<path>._compact`, move the old dir to
-    `<path>._trash`, rename the new dir in, then drop the trash. This
-    is a single-writer maintenance job (retention is cron-shaped, not
-    concurrent with appends); a crash between the two renames leaves
-    the full dataset at `._trash`, and `io.recover_swap` (called on
-    entry) restores it — the data always exists in full at exactly one
-    of the two locations. On a cluster the same statement is a Delta
-    `DELETE WHERE id < h` with ACID semantics and the identical
-    anti-filter plan.
+    Committed through io.rewrite_and_swap: a single-writer maintenance
+    job (retention is cron-shaped, not concurrent with appends). On a
+    cluster the same statement is a Delta `DELETE WHERE id < h` with
+    ACID semantics and the identical anti-filter plan.
 
     Returns {"kept": n, "deleted": m}.
     """
-    from warp_pipe_spark.io import recover_swap
+    from warp_pipe_spark.io import rewrite_and_swap
 
-    recover_swap(path)
     if (before_id is None) == (before_ts is None):
         raise ValueError("exactly one of before_id / before_ts required")
-    df = spark.read.parquet(path)
     # NULL-safe keep: a row whose retention column is NULL cannot be
     # proven old — it must be KEPT and counted. A bare `col >= lit`
     # is NULL for it, which would destroy the row in the rewrite while
@@ -138,15 +129,14 @@ def retention_compact(
     col = F.col(id_col) if before_id is not None else F.col(ts_col)
     bound = F.lit(int(before_id)) if before_id is not None else F.lit(before_ts)
     keep = col.isNull() | (col >= bound)
-    counts = df.agg(
-        F.count(F.when(keep, 1)).alias("kept"),
-        F.count(F.when(~keep, 1)).alias("deleted"),
-    ).first()
-    tmp, trash = path + "._compact", path + "._trash"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(trash, ignore_errors=True)
-    df.filter(keep).write.mode("overwrite").parquet(tmp)
-    os.rename(path, trash)
-    os.rename(tmp, path)
-    shutil.rmtree(trash)
+
+    def write(tmp: str):
+        df = spark.read.parquet(path)
+        df.filter(keep).write.mode("overwrite").parquet(tmp)
+        return df.agg(
+            F.count(F.when(keep, 1)).alias("kept"),
+            F.count(F.when(~keep, 1)).alias("deleted"),
+        ).first()
+
+    counts = rewrite_and_swap(path, write)
     return {"kept": int(counts["kept"]), "deleted": int(counts["deleted"])}
