@@ -1,45 +1,24 @@
-"""Benchmark the headline queries at $SPARK_GRAFT_SF_DIR (default
+"""Benchmark every registered query at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line: {"metric": ..., "value": total_sec, "unit":
-"sec", "queries": {name: sec}, "sf": ...}.
+Prints ONE JSON line: {"metric", "value": total_sec, "unit": "sec",
+"queries": {name: sec}, "sf", "cpus", "steal_pct"}, under 8 KB. The full
+artifact (plus the "aux" splits and the per-query "layers") goes to
+BENCH_SELF.json, or to BENCH_SELF_LAST.json when the committed
+reference was measured at another core count or scale factor.
 
-Environment calibration (round 7): the artifact carries `canary_sec`
-plus a start/end `canary` dict — two fixed-cost probes (pure-Python
-spin + constant 32-task Spark job, see run_canary) bracketing the run.
-Idle reference on the build machine: ~1.4s total. Before reading any
-per-query delta between two artifacts as a regression, ratio their
-canaries: round 6's driver run was uniformly ~1.6x its idle twin from
-machine load alone, and proving that required forensic
-cross-referencing this field now replaces.
+Timing: each query writes to the noop sink, so every output column is
+materialized (.count() would let Catalyst prune the query's work).
+Every HEADLINE query outside SINGLE_SHOT runs twice and the min is
+recorded; SINGLE_SHOT queries run once.
 
-Timing methodology changed in round 4 (the "timing" field records it):
-rounds 1-3 timed .count(), which lets Catalyst PRUNE the aggregate and
-projection expressions that are the query's actual work — a groupBy
-query degenerates to counting groups. Round 4+ writes to the noop sink,
-materializing every output column. Totals are therefore not directly
-comparable across that boundary: the noop numbers are strictly more
-honest (higher for expression-heavy queries), not slower code.
-
-Round 9 adds per-query jitter control (VERDICT r7 #4 / r8 #1): a query
-whose first run lands under RETIME_THRESHOLD_SEC is run a second time
-and the MIN recorded — sub-second absolute deltas on untouched code
-(docs_bm25 1.18x in r8, multimodal_video_diffs 1.14x) were pure load
-jitter, and min-of-2 suppresses exactly that class without flattering
-real regressions (a real slowdown slows BOTH runs). Soak/sink fixtures
-(SINGLE_SHOT) stay single-shot: their cost is dominated by state
-commits a rerun would re-pay against a fresh tempdir, so a min is not
-better-defined than one honest run, and they are multi-second anyway.
-The per-query run count is recorded under "runs"; totals across the
-r8/r9 boundary compare min-of-2 vs single-shot for the sub-3s bulk —
-strictly lower-or-equal for identical code.
-
-Round 10 closes the policy's blind spot (VERDICT r9 #2): a load-spiked
-first run that crosses the absolute threshold used to escape re-timing
-entirely (ann_topk in r9: idle 1.31s, single-shot 3.00s, a fake 2.29x).
-Now a first run over RETIME_VS_IDLE_FACTOR x the query's committed idle
-reference (read from the repo's BENCH_SELF.json) is also re-run; a real
-regression still shows in both samples, so the min flatters nothing.
+Environment and layers: `steal_pct` is the share of the run's CPU ticks
+the host withheld (perfbench.env): on shared hosts steal, not the code,
+moves wall clock. `layers[name]` holds the Spark status-store counters
+(jobs, stages, tasks, executor run/CPU/GC ms, shuffle, spill, driver
+gap; perfbench.trace.spark_layer) and the Python-worker totals over the
+window of the recorded run; host load moves none of the counts and
+bytes among them.
 """
 
 from __future__ import annotations
@@ -52,6 +31,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
+from perfbench.env import read_cpu_ticks, steal_pct
+from perfbench.trace import RETAIN_CONF, SparkStatus, spark_layer
 from warp_pipe_spark.session import DEFAULT_CPUS, get_spark
 
 HEADLINE = [
@@ -217,15 +198,6 @@ HEADLINE = [
 ]
 
 
-#: First-run threshold below which a query is re-run and the min
-#: recorded. The 150-query registry is bimodal: a sub-3s bulk where
-#: absolute load jitter (~0.1-0.5s) reads as a 1.1-1.2x fake
-#: regression, and a multi-second tail where the same jitter is noise
-#: within rounding. Re-timing only the bulk bounds the added wall
-#: clock (~60-90s) while covering every entry the judge's >1.1x delta
-#: screen can misfire on.
-RETIME_THRESHOLD_SEC = 3.0
-
 #: Queries timed exactly once regardless of speed: each call builds
 #: and commits real state (tempdir sinks, persisted indexes, a
 #: multi-round poll soak), so a second run times a DIFFERENT workload
@@ -243,226 +215,44 @@ SINGLE_SHOT = frozenset(
 )
 
 
-#: A first run this many times slower than the query's committed idle
-#: reference gets a second run even when it crossed the absolute
-#: threshold. Round 9's `ann_topk` is the motivating case (VERDICT r9
-#: #2): idle reference 1.31s, a load spike pushed the single timed run
-#: to 3.00s — over the absolute threshold, so the min-of-2 guard built
-#: to kill exactly that class of fake regression never fired, and the
-#: artifact recorded a 2.29x "regression" on untouched code. 1.5x sits
-#: above the canary-normalized load band observed across rounds
-#: (~1.1-1.4x) so an idle run never pays the extra pass, while any
-#: spike big enough to trip the judge's >1.1x delta screen does.
-RETIME_VS_IDLE_FACTOR = 1.5
-
-
-def same_setup(ref: dict, cpus: int, sf) -> bool:
-    """Whether reference artifact `ref` was measured at this run's core
-    count and scale factor — the only runs a per-query or total ratio
-    means anything against (the r15 32-core bench was ratioed against
-    the 8-core reference). Raises KeyError when `ref` records no
-    `cpus`: such a reference is malformed."""
-    return int(ref["cpus"]) == cpus and ref.get("sf") == sf
-
-
-def load_idle_reference(
-    cpus: int = DEFAULT_CPUS, sf=0.1, path: str | None = None
-) -> dict[str, float]:
-    """Per-query idle timings from the committed BENCH_SELF.json next
-    to this file (the repo's idle-run reference artifact), for a run at
-    `cpus` cores and scale `sf`. A missing or malformed file, or one
-    measured at another core count or scale, degrades to {} —
-    plan_runs then falls back to the absolute threshold alone, which is
-    round 9's behavior."""
-    path = path or os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_SELF.json"
-    )
-    try:
-        with open(path) as f:
-            ref = json.load(f)
-        if not same_setup(ref, cpus, sf):
-            return {}
-        return {k: float(v) for k, v in (ref.get("queries") or {}).items()}
-    except (OSError, ValueError, TypeError, AttributeError, KeyError):
-        return {}
-
-
 def choose_self_artifact(result: dict, prev: dict | None) -> str:
-    """Which repo file this run's artifact lands in. BENCH_SELF.json is
-    the committed IDLE reference the retime policy keys off, so a
-    measurably-more-loaded run must not clobber a more-idle one (round
-    10 hygiene defect: a canary-1.51/loadavg-2.9 run overwrote the
-    genuine canary-1.49/loadavg-0.38 artifact, weakening the load
-    guard ~16%).
-
-    Two independent load tests, either diverts the run to
-    BENCH_SELF_LAST.json:
-      1. canary more than 10% above the committed one (instantaneous
-         contention at the run's bracket points) — unless the run is
-         strictly FASTER in total, which load inflation cannot produce;
-      2. the SHARED-query sum more than 5% above the committed one
-         (like-for-like total: catches mid-run contention the bracket
-         canaries miss — found in round 11 when a canary-1.42 run with
-         a 13%-slower body overwrote a canary-1.46 run's 162s);
-      3. the START-bracket sustained probe more than 1.5x the
-         committed one (round 14, VERDICT r13 item 7): the ~5s
-         all-core probe sees the sustained-saturation frequency
-         penalty the 1-2s burst canaries cannot — a run whose BODY
-         starts under that penalty is contended even if the burst
-         canary reads pristine. Start bracket only: an END-side
-         spike after a flat body (r14's accepted reference: tertile
-         ratios 1.067/1.021/1.015 with the wave arriving in the
-         closing bracket) is post-body noise the shared-sum test
-         already arbitrates. Applies only when BOTH artifacts carry
-         the field, and — like rule 1 — never against a strictly
-         FASTER run.
-    A run at another core count or scale factor than the reference
-    (`same_setup`) is diverted outright: its timings are not comparable,
-    so it can neither replace the reference nor be judged by it. A
-    reference that records no `cpus` is malformed and is replaced.
-    The shared-sum comparison ignores queries only one side has, so
-    registering a new query never blocks the reference from updating.
-    A genuine code regression also diverts — conservative in the safe
-    direction: the idle reference stays the fastest known-clean run
-    (retimes stay aggressive) until a genuinely idle run confirms the
-    new level."""
+    """Which repo file this run's artifact lands in. BENCH_SELF.json
+    holds the reference run; a run at another core count or scale
+    factor than it goes to BENCH_SELF_LAST.json, since the two cannot
+    be ratioed (a faster run may just have more cores) and it must not
+    replace the reference. A missing reference, or one that records no
+    `cpus`, is malformed and is replaced."""
     try:
-        other_setup = not same_setup(prev, result["cpus"], result.get("sf"))
-        prev_q = {k: float(v) for k, v in prev["queries"].items()}
-        new_q = {k: float(v) for k, v in result["queries"].items()}
-        shared = set(prev_q) & set(new_q)
-        shared_slower = sum(new_q[q] for q in shared) > 1.05 * sum(
-            prev_q[q] for q in shared
-        )
-        # canaries are ratio-comparable only within one measurement
-        # method (v1 included the warm-up transient; steady-v2 does
-        # not and reads systematically lower on the same machine).
-        # Across methods, rule 1 is skipped and the shared-sum test —
-        # method-independent, per-query like-for-like — carries the
-        # guard alone; it alone diverted every contended run in r13.
-        same_method = prev.get("canary_method") == result.get("canary_method")
-        more_loaded = same_method and (
-            result["canary_sec"] > float(prev["canary_sec"]) * 1.10
-        )
-        try:
-            sustained_loaded = float(
-                result["sustained"]["start"]
-            ) > 1.5 * float(prev["sustained"]["start"])
-        except (KeyError, TypeError, ValueError):
-            sustained_loaded = False  # either side predates the probe
-        not_faster = float(result["value"]) >= float(prev["value"])
-    except (KeyError, TypeError, ValueError, AttributeError):
-        return "BENCH_SELF.json"  # no/malformed reference → become it
-    if other_setup or shared_slower or (
-        (more_loaded or sustained_loaded) and not_faster
-    ):
-        return "BENCH_SELF_LAST.json"
-    return "BENCH_SELF.json"
+        same = int(prev["cpus"]) == result["cpus"]
+        same = same and prev.get("sf") == result.get("sf")
+    except (KeyError, TypeError, ValueError):
+        return "BENCH_SELF.json"
+    return "BENCH_SELF.json" if same else "BENCH_SELF_LAST.json"
 
 
-def plan_runs(name: str, first_sec: float, idle_sec: float | None = None) -> int:
-    """How many timed runs query `name` gets, given its first run took
-    `first_sec` and its committed idle reference is `idle_sec` (None
-    when no reference exists): 1 for soak/sink fixtures; otherwise 2
-    (record the min) when the first run is under the absolute re-time
-    threshold OR more than RETIME_VS_IDLE_FACTOR x the idle reference —
-    the second arm closes round 9's blind spot where a load-spiked
-    first run crossing the absolute threshold escaped re-timing. Pure
-    decision logic, pinned in tests/test_bench.py."""
-    if name in SINGLE_SHOT:
-        return 1
-    if first_sec < RETIME_THRESHOLD_SEC:
-        return 2
-    if idle_sec is not None and first_sec > RETIME_VS_IDLE_FACTOR * idle_sec:
-        return 2
-    return 1
+def time_min(name: str, run) -> tuple[float, float]:
+    """(seconds, start time) of the fastest of `name`'s timed calls of
+    `run`: two, or one for SINGLE_SHOT."""
+    samples = []
+    for _ in range(1 if name in SINGLE_SHOT else 2):
+        t0 = time.time()
+        run()
+        samples.append((time.time() - t0, t0))
+    return min(samples)
 
 
-def run_canary(spark) -> dict[str, float]:
-    """Fixed-cost environment calibration (VERDICT r6 item 3): the
-    round-6 driver bench ran uniformly ~1.6x the committed idle run of
-    the IDENTICAL commit — pure machine load — and proving that took
-    forensic cross-referencing of artifacts. These two probes make the
-    bench self-calibrating: their cost is pinned by construction (no
-    data dependence, no code under test), so any multiplier they show
-    vs a prior artifact is environment, and per-query numbers can be
-    normalized by it before being read as regressions.
-
-    - python_spin_sec: a deterministic single-thread integer spin —
-      pure interpreter throughput, immune to Spark/JVM state.
-    - spark_fixed_sec: a constant 32-task range-sum through the noop
-      sink — JVM task-dispatch + scheduling cost at the same fan-out
-      the real queries use.
-    """
-    t0 = time.time()
-    acc = 0
-    for i in range(5_000_000):
-        acc = (acc * 1103515245 + i) % 2147483647
-    py = round(time.time() - t0, 3)
-    t0 = time.time()
-    spark.range(0, 10_000_000, 1, 32).selectExpr(
-        "sum(id * 3 + 1) as s"
-    ).write.format("noop").mode("overwrite").save()
-    jvm = round(time.time() - t0, 3)
-    return {"python_spin_sec": py, "spark_fixed_sec": jvm}
-
-
-def run_sustained_canary(spark) -> float:
-    """Fixed-cost SUSTAINED all-core probe (round 13): ~5 s of md5
-    hashing across 32 tasks. The 1-2 s bracket probes above measure
-    burst throughput, which on this class of host can be 1.4-1.7x the
-    ALL-CORE-SUSTAINED throughput (all-core turbo drop / co-tenant
-    frequency pressure that engages only under minutes of saturation
-    and relaxes within seconds — measured r13: single-thread spin
-    0.64-0.75 s solo, 0.85-1.06 s under 31 busy cores, recovered 3 s
-    later). A bench body that reads uniformly slower than the
-    committed reference while both burst canaries are pristine is
-    THIS effect, not a regression; the field makes that attribution
-    readable from the artifact alone instead of requiring the
-    forensic positional analysis it took to find."""
-    t0 = time.time()
-    spark.range(0, 64_000_000, 1, 32).selectExpr(
-        "md5(cast(id as string)) as h"
-    ).selectExpr(
-        "sum(conv(substring(h, 1, 8), 16, 10)) as s"
-    ).write.format("noop").mode("overwrite").save()
-    return round(time.time() - t0, 3)
-
-
-def read_steal_ticks() -> tuple[int, int] | None:
-    """(steal_ticks, total_ticks) from /proc/stat, or None where the
-    file is absent. Steal is time the HOST scheduler did not run this
-    VM's vCPUs — invisible to guest-side cgroup stats (cpu.stat showed
-    nr_throttled=0 while this was happening). Measured r15 on an idle
-    guest: steal ramped 1.8% -> ~15% under a few MINUTES of 32-core
-    saturation and recovered within seconds of going idle, i.e. the
-    host throttles sustained saturation. That is what inflated the
-    late-registry queries positionally in the r14 driver run (and made
-    the 8-core run, which never triggers it, read faster than the
-    32-core one). steal_pct in the artifact makes a run self-diagnose:
-    high steal = host throttling, not a code regression."""
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        vals = [int(x) for x in parts[1:9]]
-    except (OSError, ValueError, IndexError):
-        return None
-    if len(vals) < 8:
-        return None
-    return vals[7], sum(vals)
-
-
-def steal_pct(
-    start: tuple[int, int] | None, end: tuple[int, int] | None
-) -> float | None:
-    """Percent of this run's cpu-ticks stolen by the host, or None if
-    either bracket is unavailable or no time elapsed."""
-    if start is None or end is None:
-        return None
-    dsteal, dtotal = end[0] - start[0], end[1] - start[1]
-    if dtotal <= 0:
-        return None
-    return round(100.0 * dsteal / dtotal, 2)
+def layer_profile(
+    status: SparkStatus, windows: dict[str, tuple[float, float]]
+) -> dict[str, dict[str, float]]:
+    """Per query: the Spark layer counters and the Python-worker totals
+    over the (start, end) window of its recorded run."""
+    return {
+        name: {
+            **spark_layer(status.window(lo, hi)),
+            **status.python_window(lo, hi),
+        }
+        for name, (lo, hi) in windows.items()
+    }
 
 
 def split_keyset_rounds(
@@ -492,61 +282,29 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf = float(sf) if sf.replace(".", "").isdigit() else sf
-    spark = get_spark("warp_pipe_bench")
+    spark = get_spark("warp_pipe_bench", extra_conf=RETAIN_CONF)
     qs = entrymod.queries()
 
     # warm the JVM + parquet footers with the flagship once
     qs["cs_replay_final_state"](spark, sf_dir).count()
+    ticks_start = read_cpu_ticks()
 
-    # load canary AFTER warm-up (so JIT noise doesn't pollute it),
-    # re-run at the end: a loaded machine shows both probes inflated
-    # by the same multiplier the query timings carry.
-    #
-    # Round-13 measurement fix: ONE THROWAWAY canary first. The first
-    # post-warm-up canary in a session pays the noop datasource's
-    # one-time initialization AND runs inside the warm-up's decaying
-    # JVM transient (GC/cleanup of the flagship's shuffle) — measured
-    # on an idle box: 1.9 s for the first call, 0.41 s for the second,
-    # 0.27 s steady. That transient is VARIANCE, not environment: it
-    # made canary_sec swing 1.38-1.60 on a machine whose steady canary
-    # read 0.91-1.00, which is what kept tripping the >=10% guard on
-    # genuinely quiet runs (r12: seven diverted attempts). The
-    # throwaway absorbs it so canary_sec measures steady-state
-    # environment; artifacts carry canary_method so a reader never
-    # ratios a v2 canary against a v1 one. The choose_self_artifact
-    # guard keeps its protection either way — the SHARED-SUM test is
-    # methodology-independent and alone diverted every contended run
-    # this round.
-    loadavg_start = os.getloadavg()
-    steal_start = read_steal_ticks()
-    run_canary(spark)  # throwaway: absorbs one-time + transient cost
-    canary_start = run_canary(spark)
-    sustained_start = run_sustained_canary(spark)
-
-    # noop-sink writes, not .count(): count() lets Catalyst prune the
-    # aggregate/projection expressions that ARE the query's work (a
-    # groupBy query degenerates to counting groups), flattering exactly
-    # the expensive parts. The noop sink materializes every output
-    # column — what any real consumer pays — with zero I/O cost.
     # (the shared star-CC memo stays warm across queries here — sharing
     # the clustering across its consumers is the intended execution
     # model; tools/scale_probe.py clears it to time raw computation)
     times: dict[str, float] = {}
-    runs: dict[str, int] = {}
-    idle_ref = load_idle_reference(DEFAULT_CPUS, sf)
+    windows: dict[str, tuple[float, float]] = {}
     for name in HEADLINE:
-        t0 = time.time()
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        first = time.time() - t0
-        samples = [first]
-        if plan_runs(name, first, idle_ref.get(name)) == 2:
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            samples.append(time.time() - t0)
-        times[name] = round(min(samples), 3)
-        runs[name] = len(samples)
+        sec, t0 = time_min(
+            name,
+            lambda: qs[name](spark, sf_dir)
+            .write.format("noop")
+            .mode("overwrite")
+            .save(),
+        )
+        times[name] = round(sec, 3)
+        windows[name] = (t0, t0 + sec)
+    layers = layer_profile(SparkStatus(spark).read(), windows)
 
     # Instrumentation splits live in a SEPARATE dict: several re-time
     # work a registered headline query above already paid for (e.g. the
@@ -722,74 +480,21 @@ def main() -> None:
 
     shutil.rmtree(ks_base, ignore_errors=True)
 
-    canary_end = run_canary(spark)
-    sustained_end = run_sustained_canary(spark)
-
     result = {
         "metric": "headline_queries_total_sec",
         "value": round(sum(times.values()), 3),
         "unit": "sec",
         "queries": times,
-        # per-query timed-run count (1 = single-shot soak/sink fixture
-        # or first run >= RETIME_THRESHOLD_SEC; 2 = min-of-2 recorded)
-        "runs": runs,
         "aux": aux,
-        # environment calibration: fixed-cost probes bracketing the run
-        # (see run_canary). canary_sec = the scalar to ratio against a
-        # prior artifact's canary_sec before reading per-query deltas
-        # as regressions; the start/end split shows load drift WITHIN
-        # the run.
-        "canary_sec": round(
-            canary_start["python_spin_sec"] + canary_start["spark_fixed_sec"], 3
-        ),
-        # steady-v2 (round 13): canary_start is measured AFTER a
-        # throwaway canary absorbs the one-time noop-init + warm-up
-        # transient, so it reads steady-state environment. v1 canaries
-        # (no marker) include that transient and read ~0.3-1.2 s
-        # higher on the identical machine — never ratio across methods.
-        "canary_method": "steady-v2",
-        "canary": {"start": canary_start, "end": canary_end},
-        # ~5s fixed all-core md5 probe (run_sustained_canary): exposes
-        # the sustained-saturation frequency penalty the 1-2s burst
-        # canaries cannot see. Ratio against a prior artifact's value
-        # before reading a uniformly-slower body as a regression.
-        "sustained": {"start": sustained_start, "end": sustained_end},
-        # direct OS-level load evidence next to the behavioral canary:
-        # (1m, 5m, 15m) run-queue averages at run start and end. An
-        # idle 32-core box shows ~32 only if THIS bench saturates it;
-        # a canary inflation with loadavg far above ~32 is competing
-        # work, with loadavg near it is this process's own contention.
-        "loadavg": {
-            "start": [round(x, 2) for x in loadavg_start],
-            "end": [round(x, 2) for x in os.getloadavg()],
-        },
-        # percent of the run's cpu-ticks the HOST withheld from this
-        # VM (see read_steal_ticks) — the r14 "contention gradient"
-        # attributor. None off-Linux.
-        "steal_pct": steal_pct(steal_start, read_steal_ticks()),
+        "layers": layers,
+        "steal_pct": steal_pct(ticks_start, read_cpu_ticks()),
         "sf": sf,
-        # the reference guard refuses to ratio or promote across core
-        # counts (same_setup), so the full artifact must say its own
         "cpus": DEFAULT_CPUS,
         "timing": (
-            "noop-sink write, all output columns materialized; "
-            "min-of-2 for first-runs under "
-            f"{RETIME_THRESHOLD_SEC:g}s or over "
-            f"{RETIME_VS_IDLE_FACTOR:g}x the committed idle reference "
-            "(single-shot for soak/sink fixtures — see 'runs')"
+            "noop-sink write, all output columns materialized; min of 2 "
+            "runs, 1 run for the SINGLE_SHOT soak/sink fixtures"
         ),
     }
-    # full artifact into the repo so the driver's stdout-tail window
-    # can never truncate the per-query dict (VERDICT r4 item 3).
-    # BENCH_SELF.json is the repo's IDLE reference — the retime policy
-    # keys off it — so a measurably-more-loaded run must not clobber a
-    # more-idle one (round 10 hygiene defect: a canary-1.51/loadavg-2.9
-    # run overwrote the genuine canary-1.49/loadavg-0.38 artifact and
-    # weakened the load guard ~16%). Overwrite only when this run is
-    # comparably idle (canary within 10% of the committed one) or
-    # strictly FASTER in total (a faster-under-load run cannot be load
-    # inflation); otherwise the run lands in BENCH_SELF_LAST.json and
-    # the committed idle reference survives.
     here = os.path.dirname(os.path.abspath(__file__))
     try:
         with open(os.path.join(here, "BENCH_SELF.json")) as f:
@@ -805,27 +510,12 @@ def main() -> None:
 
 
 def compact_result(result: dict) -> dict:
-    """The final stdout line, kept standalone-parseable and small
-    (VERDICT r14 #2): the full artifact (runs, aux, canary brackets,
-    sustained probes, loadavg) lands in BENCH_SELF[_LAST].json above —
-    the one-line contract JSON carries only the driver-compared fields
-    (metric/value/unit/queries/sf) plus the scalar environment
-    calibrators (canary_sec, sustained start/end, cpus). The r13
-    round-over-round comparison died to a capture that truncated the
-    old ~25 KB line mid-JSON; this line is ~5 KB and pinned < 8 KB in
-    tests/test_bench.py."""
-    return {
-        "metric": result["metric"],
-        "value": result["value"],
-        "unit": result["unit"],
-        "queries": result["queries"],
-        "sf": result["sf"],
-        "cpus": DEFAULT_CPUS,
-        "canary_sec": result["canary_sec"],
-        "canary_method": result["canary_method"],
-        "sustained": result["sustained"],
-        "steal_pct": result.get("steal_pct"),
-    }
+    """The final stdout line: the driver-compared fields and the
+    environment scalars, small enough that a capture which keeps only
+    the tail of stdout cannot truncate it (pinned < 8 KB in
+    tests/test_bench.py). Everything else is in the full artifact."""
+    keys = ("metric", "value", "unit", "queries", "sf", "cpus", "steal_pct")
+    return {k: result.get(k) for k in keys}
 
 
 if __name__ == "__main__":

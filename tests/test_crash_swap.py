@@ -6,7 +6,9 @@ Each caller is crashed at each os.rename of the swap and inside the
 trash rmtree. The crashed state must read as exactly the pre- or the
 post-compaction rows once a reader has healed it, and a retried
 compaction, entered in the unhealed crashed state, must converge to the
-post-compaction rows and leave no sidecar behind."""
+post-compaction rows and leave no sidecar behind. A reader's heal
+deletes nothing, so the sink that owns the dataset deletes the sidecar
+a heal left on its next batch."""
 
 import os
 import shutil
@@ -15,6 +17,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from warp_pipe_spark.datapipe.dedup_index import (
+    IngestDedupSink,
     build_minhash_index,
     compact_minhash_index,
     update_minhash_index,
@@ -53,6 +56,16 @@ class _GateBatch:
 
     def read(self, spark, base):
         return _rows(CorpusQualityGateSink(spark, base).accepted())
+
+    def sink_batch(self, spark, base):
+        """One more gate-sink batch; returns the rows read back from
+        the batches before it."""
+        docs = spark.range(100, 104).selectExpr(
+            "id AS doc_id", "concat('new doc ', id) AS text"
+        )
+        sink = CorpusQualityGateSink(spark, base)
+        sink(docs, 2)
+        return _rows(sink.accepted().select("doc_id", "text").filter("doc_id < 100"))
 
 
 class _Retention:
@@ -108,6 +121,19 @@ class _MinhashIndex:
     def read(self, spark, base):
         recover_swap(self.swapped(base))
         df = spark.read.parquet(self.swapped(base))
+        return _rows(df.select("band", "key", "doc_id", "ingest_batch"))
+
+    def sink_batch(self, spark, base):
+        """One more ingest-sink batch (id 7); returns the index rows of
+        the batches before it."""
+        docs = spark.createDataFrame(
+            [(4, "the quick brown fox jumps over the lazy dog again")],
+            "doc_id LONG, text STRING",
+        )
+        IngestDedupSink(spark, os.path.join(base, "idx"), os.path.join(base, "out"))(
+            docs, 7
+        )
+        df = spark.read.parquet(self.swapped(base)).filter("ingest_batch != 7")
         return _rows(df.select("band", "key", "doc_id", "ingest_batch"))
 
 
@@ -172,6 +198,22 @@ CALLERS = {
 }
 
 
+def _crashed(c, spark, base, monkeypatch, crash):
+    """Build `c`'s dataset under `base` and crash its compaction at
+    `crash`; returns (pre rows, post rows, the rows a reader sees)."""
+    pre, post = c.build(spark, base)
+    attr, make, seen = CRASHES[crash]
+    with monkeypatch.context() as m:
+        m.setattr(os if attr == "rename" else shutil, attr, make())
+        with pytest.raises(Crash):
+            c.compact(spark, base)
+    return pre, post, (pre if seen == "pre" else post)
+
+
+def _sidecars(path):
+    return [p for p in (path + "._compact", path + "._trash") if os.path.exists(p)]
+
+
 @pytest.mark.parametrize("crash", sorted(CRASHES))
 @pytest.mark.parametrize("caller", sorted(CALLERS))
 def test_compaction_crash_reads_pre_or_post_and_retry_converges(
@@ -179,23 +221,36 @@ def test_compaction_crash_reads_pre_or_post_and_retry_converges(
 ):
     c = CALLERS[caller]()
     base = str(tmp_path / "crashed")
-    pre, post = c.build(spark, base)
-    attr, make, seen = CRASHES[crash]
-
-    with monkeypatch.context() as m:
-        m.setattr(os if attr == "rename" else shutil, attr, make())
-        with pytest.raises(Crash):
-            c.compact(spark, base)
+    pre, post, seen = _crashed(c, spark, base, monkeypatch, crash)
     swapped = c.swapped(base)
     assert os.path.exists(swapped) == (crash in ("rename_out", "rmtree_trash"))
 
     # a reader heals a copy of the crashed state: exactly one side
     healed = str(tmp_path / "healed")
     shutil.copytree(base, healed)
-    assert c.read(spark, healed) == (pre if seen == "pre" else post)
+    assert c.read(spark, healed) == seen
 
     # the writer retries from the unhealed state and converges
     c.compact(spark, base)
     assert c.read(spark, base) == post
-    assert not os.path.exists(swapped + "._compact")
-    assert not os.path.exists(swapped + "._trash")
+    assert _sidecars(swapped) == []
+
+
+@pytest.mark.parametrize("crash", ["rename_in", "rename_in_no_copy", "rename_in_torn"])
+@pytest.mark.parametrize("caller", ["compact_dataset", "compact_minhash_index"])
+def test_sink_batch_after_reader_heal_deletes_the_sidecar(
+    spark, tmp_path, monkeypatch, caller, crash
+):
+    c = CALLERS[caller]()
+    base = str(tmp_path / "crashed")
+    _, _, seen = _crashed(c, spark, base, monkeypatch, crash)
+    swapped = c.swapped(base)
+
+    # the reader heals and leaves the other side where it was: the old
+    # copy after a finished swap, the torn copy after a restore
+    assert c.read(spark, base) == seen
+    assert bool(_sidecars(swapped)) == (crash != "rename_in_no_copy")
+
+    # the sink's next batch deletes it and keeps every earlier row
+    assert c.sink_batch(spark, base) == seen
+    assert _sidecars(swapped) == []

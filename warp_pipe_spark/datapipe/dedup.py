@@ -972,7 +972,6 @@ def decontaminate(
     docs: DataFrame,
     benchmark: DataFrame,
     n: int = 13,
-    broadcast_benchmark: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Benchmark decontamination — the published training-corpus
     hygiene step (GPT-3 App. C / The Pile: drop any training document
@@ -994,10 +993,8 @@ def decontaminate(
     under broadcast thresholds — and the docs side is one explode
     feeding a BROADCAST semi-join probe per shingle (zero shuffle of
     the corpus; the only exchange is the per-doc hit count, and the
-    anti-join for `clean` reuses the same broadcast). Set
-    broadcast_benchmark=False for a pathologically large benchmark to
-    fall back to a shuffled join AQE can re-plan."""
-    bench_grams = (
+    anti-join for `clean` reuses the same broadcast)."""
+    bench_grams = F.broadcast(
         explode_nonnull(
             _hashed_shingle_arrays(
                 benchmark.select(F.col("doc_id"), F.col("text")), n
@@ -1008,8 +1005,6 @@ def decontaminate(
         .select("h")
         .distinct()
     )
-    if broadcast_benchmark:
-        bench_grams = F.broadcast(bench_grams)
     doc_grams = explode_nonnull(
         _hashed_shingle_arrays(docs, n), F.col("sh_arr"), "h"
     ).select("doc_id", "h")

@@ -38,8 +38,8 @@ from warp_pipe_spark.datapipe.dedup import band_rows
 from warp_pipe_spark.io import (
     committed_batch_dirs,
     n_parquet_files,
-    recover_swap,
     rewrite_and_swap,
+    settle_swap,
 )
 
 
@@ -274,8 +274,9 @@ class IngestDedupSink:
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         # an auto-compaction that crashed inside its swap left `bands`
         # missing: repair it before the marker check skips the append
-        # and the query or the file-count threshold reads the void
-        recover_swap(os.path.join(self.index_dir, "bands"))
+        # and the query or the file-count threshold reads the void, and
+        # delete the sidecar copy a heal (this one or a reader's) left
+        settle_swap(os.path.join(self.index_dir, "bands"))
         # ONE persisted signature pass per micro-batch: without it the
         # banding fold runs three times (index append + the query
         # plan's two uses of the batch side)

@@ -25,7 +25,12 @@ from warp_pipe_spark.datapipe.text import (
     pii_scrub,
     quality_model_score,
 )
-from warp_pipe_spark.io import committed_batch_dirs, compact_dataset
+from warp_pipe_spark.io import (
+    committed_batch_dirs,
+    compact_dataset,
+    settle_swap,
+    swapped_batch_dirs,
+)
 
 
 def quality_gate(docs: DataFrame) -> DataFrame:
@@ -115,7 +120,11 @@ class CorpusQualityGateSink:
     ) -> None:
         """Overwrite batch_id's accept and reject dirs: the committed-
         batch layout every gate sink shares (read back through
-        io.committed_batch_dirs)."""
+        io.committed_batch_dirs), after deleting the sidecars a
+        reader's heal of a crashed compaction left."""
+        for root in (self.accept_dir, self.reject_dir):
+            for path in swapped_batch_dirs(root):
+                settle_swap(path)
         name = f"batch_{batch_id}"
         accept.write.mode("overwrite").parquet(os.path.join(self.accept_dir, name))
         reject.write.mode("overwrite").parquet(os.path.join(self.reject_dir, name))

@@ -550,7 +550,6 @@ def graph_search(
     beam: int | None = None,
     n_planes: int = 16,
     n_bands: int = 4,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Greedy BEAM search over an nn_descent graph — the query-time
     primitive HNSW-style indexes run, batched for Spark: every query
@@ -576,22 +575,7 @@ def graph_search(
     measured on the embedding fixture at k=10/hops=3: recall 0.84
     over the 10-edge graph, 0.988 over the 20-edge graph with
     beam=3k. Same reason HNSW keeps M_max > M: the extra edges are
-    the detours greedy search needs.
-
-    `checkpoint` (VERDICT r13 item 5): the frontier appears TWICE in
-    each hop's expansion (frontier×edges ∪ frontier), so an
-    unmaterialized lineage doubles per hop — localCheckpoint(eager)
-    caps that at O(hops) jobs. checkpoint=False keeps one lazy plan
-    (Spark's ReusedExchange dedups the twin frontier subtrees only
-    partially: the two uses diverge immediately, so the expensive
-    scoring joins re-run). MEASURED both ways at sf0.1 — 25-query
-    batch, 1950-node k=20 graph, hops=3, warmed session, 3 runs each:
-    True 5.2-5.5 s, False 5.5-5.9 s — the barriers NEVER dominate the
-    recompute they prevent, even at the smallest realistic batch, so
-    every in-repo caller keeps the default. The flag stays because
-    the trade flips only in principle (a plan-compile-bound sub-row
-    frontier), and because it documents the measurement. Results are
-    bit-identical either way — the flag moves barriers, not math."""
+    the detours greedy search needs."""
     if beam is None:
         beam = 2 * k
     # Same zero-norm contract as nn_descent (they share the NaN
@@ -686,12 +670,11 @@ def graph_search(
     entry = qb.join(cb, ["band", "key"]).select(
         "query_id", "neighbor_id"
     ).join(q, "query_id")
-    _pin = (
-        (lambda df: df.localCheckpoint(eager=True))
-        if checkpoint
-        else (lambda df: df)
-    )
-    frontier = _pin(_truncate(_score(entry), beam))
+    # Each hop reads the frontier twice (frontier×edges ∪ frontier), so
+    # it is pinned: unpinned, the lineage doubles per hop. A/B at sf0.1
+    # (25 queries, 1950-node k=20 graph, hops=3): pinned 5.2-5.5 s, one
+    # lazy plan 5.5-5.9 s, bit-identical results.
+    frontier = _truncate(_score(entry), beam).localCheckpoint(eager=True)
     edges = graph.select(
         F.col("vec_id").alias("neighbor_id"), F.col("nbr_id")
     )
@@ -728,7 +711,7 @@ def graph_search(
         # barrier (one action + one RDD materialization per run) buys
         # nothing. Callers that fan the result out pin it themselves
         # (nn_graph_insert does).
-        frontier = scored if hop == hops - 1 else _pin(scored)
+        frontier = scored if hop == hops - 1 else scored.localCheckpoint(eager=True)
     return frontier.filter(F.col("rank") <= k).select(
         "query_id", "neighbor_id", "rank", "cos_sim"
     )

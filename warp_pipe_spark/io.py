@@ -476,6 +476,17 @@ def recover_swap(path: str) -> bool:
     return True
 
 
+def settle_swap(path: str) -> bool:
+    """Steps 1-2 of rewrite_and_swap, for writers only. Returns whether
+    `path` exists."""
+    recover_swap(path)
+    if not os.path.exists(path):
+        return False
+    shutil.rmtree(path + "._compact", ignore_errors=True)
+    shutil.rmtree(path + "._trash", ignore_errors=True)
+    return True
+
+
 def rewrite_and_swap(path: str, write: Callable[[str], _T]) -> _T:
     """Crash-safe rewrite of the dataset dir `path`: the one commit
     protocol behind compact_dataset, store.retention_compact and
@@ -483,7 +494,8 @@ def rewrite_and_swap(path: str, write: Callable[[str], _T]) -> _T:
 
       1. heal an earlier crash (recover_swap); no dataset at `path`
          raises FileNotFoundError;
-      2. delete stale `<path>._compact` and `<path>._trash` sidecars;
+      2. delete stale `<path>._compact` and `<path>._trash` sidecars
+         (steps 1-2 are settle_swap, which sinks also run per batch);
       3. `write(<path>._compact)`: the caller reads `path` and writes
          the rewritten copy as a Spark job (whose commit leaves
          `_SUCCESS`); raising there abandons the swap, `path` untouched;
@@ -499,12 +511,9 @@ def rewrite_and_swap(path: str, write: Callable[[str], _T]) -> _T:
     holds exclusive write access to `path` for the duration (a
     cron-shaped maintenance job, or a sink's own sequential batches).
     Returns what `write` returned."""
-    recover_swap(path)
-    if not os.path.exists(path):
+    if not settle_swap(path):
         raise FileNotFoundError(f"no dataset at {path}")
     tmp, trash = path + "._compact", path + "._trash"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(trash, ignore_errors=True)
     out = write(tmp)
     os.rename(path, trash)
     os.rename(tmp, path)
@@ -523,16 +532,26 @@ def committed_batch_dirs(root: str) -> list[str]:
     missing `root` holds no batches."""
     if not os.path.isdir(root):
         return []
-    for d in os.listdir(root):
-        m = re.fullmatch(r"(batch_\d+)\._(?:compact|trash)", d)
-        if m:
-            recover_swap(os.path.join(root, m.group(1)))
+    for path in swapped_batch_dirs(root):
+        recover_swap(path)
     return [
         os.path.join(root, d)
         for d in sorted(os.listdir(root))
         if re.fullmatch(r"batch_\d+", d)
         and os.path.exists(os.path.join(root, d, "_SUCCESS"))
     ]
+
+
+def swapped_batch_dirs(root: str) -> set[str]:
+    """The `batch_<id>` paths under `root` that have a `._compact` or
+    `._trash` sidecar."""
+    if not os.path.isdir(root):
+        return set()
+    return {
+        os.path.join(root, m.group(1))
+        for d in os.listdir(root)
+        if (m := re.fullmatch(r"(batch_\d+)\._(?:compact|trash)", d))
+    }
 
 
 def n_parquet_files(path: str) -> int:
