@@ -52,10 +52,10 @@ def test_empty_soak_emits_nothing():
     assert split_keyset_rounds([], limit=100) == {}
 
 
-def test_soak_fixtures_are_single_shot_and_the_rest_min_of_2():
+def test_plan_runs_soak_fixtures_are_always_single_shot():
     # sink/soak fixtures commit real state per call: a rerun times a
     # DIFFERENT workload (fresh tempdir), so min-of-2 is undefined and
-    # they run once; every other query runs twice and records the min.
+    # time_min gives each of them exactly one timed call.
     from bench import SINGLE_SHOT, time_min
 
     assert SINGLE_SHOT == {
@@ -68,11 +68,24 @@ def test_soak_fixtures_are_single_shot_and_the_rest_min_of_2():
         "ann_nn_descent",
         "ann_graph_search",
     }
-    for name, n_runs in (("ann_graph_search", 1), ("docs_bm25", 2)):
+    for name in SINGLE_SHOT:
         calls = []
         sec, t0 = time_min(name, lambda: calls.append(1))
-        assert len(calls) == n_runs
+        assert len(calls) == 1
         assert 0 <= sec < 1 and t0 > 0
+
+
+def test_time_min_records_the_faster_of_two_runs():
+    # every other query runs twice and records the min: a slow first
+    # (cold) call must not reach the artifact.
+    import time
+
+    from bench import time_min
+
+    naps = [0.05, 0.0]
+    sec, t0 = time_min("docs_bm25", lambda: time.sleep(naps.pop(0)))
+    assert naps == []
+    assert 0 <= sec < 0.05 and t0 > 0
 
 
 def test_single_shot_names_are_registered_headline_queries():
@@ -121,6 +134,27 @@ def test_reference_without_cpus_is_malformed_and_replaced():
     slower = _artifact(8, 0.1, total=150.0)
     for ref in (legacy, None, {"bad": 1}):
         assert choose_self_artifact(slower, ref) == "BENCH_SELF.json"
+
+
+def test_committed_reference_records_its_setup():
+    """The committed BENCH_SELF.json records the core count, scale
+    factor and every HEADLINE query, so a run at its setup is compared
+    with it; without `cpus` any run would replace it."""
+    import json
+    import os
+
+    from bench import HEADLINE, choose_self_artifact
+
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(here, "BENCH_SELF.json")) as f:
+        ref = json.load(f)
+    assert isinstance(ref["cpus"], int) and ref["cpus"] > 0
+    assert isinstance(ref["sf"], float) and ref["sf"] > 0
+    assert set(HEADLINE) <= set(ref["queries"])
+    run = {"cpus": ref["cpus"], "sf": ref["sf"], "value": 1.0}
+    assert choose_self_artifact(run, ref) == "BENCH_SELF.json"
+    run["cpus"] = ref["cpus"] + 1
+    assert choose_self_artifact(run, ref) == "BENCH_SELF_LAST.json"
 
 
 def test_compact_result_line_is_small_and_standalone():
