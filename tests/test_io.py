@@ -1,15 +1,17 @@
 """read_table's schema cache: a warm read launches no inference job, and
 a rewrite, a schema conf flip or the events nanos read never returns a
-stale schema."""
+stale schema. publish_file: the whole new file or the old one, never a
+torn or visible tmp file."""
 
 import datetime as dt
+import os
 import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from warp_pipe_spark.io import _file_signature, read_table
+from warp_pipe_spark.io import _file_signature, publish_file, read_table
 
 
 def _jobs(spark, fn):
@@ -181,3 +183,29 @@ def test_only_local_paths_are_cached(tmp_path):
     assert local == str(f) and sig[1] == 1  # (ino, size, mtime_ns)
     assert _file_signature(str(tmp_path / "missing.parquet")) is None
     assert _file_signature("hdfs://nn/warehouse/t.parquet") is None
+
+
+def test_publish_file_round_trips_and_leaves_no_tmp(tmp_path):
+    path = str(tmp_path / "offset.json")
+    publish_file(path, [b'{"last_id": ', b"7}"])
+    publish_file(path, (line + b"\n" for line in (b"a", b"b")))
+    with open(path, "rb") as f:
+        assert f.read() == b"a\nb\n"
+    assert os.listdir(tmp_path) == ["offset.json"]
+
+
+def test_publish_file_crash_at_replace_keeps_the_old_file(tmp_path, monkeypatch):
+    path = str(tmp_path / "lr_0_0.jsonl")
+    publish_file(path, [b"old\n"])
+
+    def crash(src, dst):
+        raise OSError("crash at os.replace")
+
+    monkeypatch.setattr(os, "replace", crash)
+    with pytest.raises(OSError, match="crash at os.replace"):
+        publish_file(path, [b"new\n", b"rows\n"])
+    with open(path, "rb") as f:
+        assert f.read() == b"old\n"
+    # the complete tmp file is left behind, hidden from file-source listings
+    leftover = sorted(set(os.listdir(tmp_path)) - {"lr_0_0.jsonl"})
+    assert leftover == [".lr_0_0.jsonl.tmp"]

@@ -25,6 +25,7 @@ from warp_pipe_spark.lr_client import (
     lsn_str,
     tail_to_drop_dir,
 )
+from warp_pipe_spark.pgoutput import tail_pgoutput_to_drop_dir
 
 
 def _msg(t: bytes, body: bytes) -> bytes:
@@ -330,71 +331,109 @@ def test_tail_to_drop_dir_feeds_wal2json_stream(spark, tmp_path):
     }
 
 
-def test_tail_idle_timeout_terminates_bounded_drain(tmp_path):
+def _pgoutput_payloads():
+    from test_pgoutput import REL, msg_begin, msg_commit, msg_insert
+
+    payloads = [REL]
+    for i in range(1, 4):
+        payloads += [
+            msg_begin(lsn=i << 12),
+            msg_insert(5001, str(i), f"v{i}"),
+            msg_commit(end_lsn=(i << 12) + 100),
+        ]
+    return payloads
+
+
+#: both drop-dir tails, each with the frames that carry the same three
+#: rows and the decoding of one written line to what the test compares
+TAILS = {
+    "wal2json": (
+        lambda: WAL2JSON_DOCS[:3],
+        lambda c, drop, batch_rows: tail_to_drop_dir(
+            c, drop, batch_rows=batch_rows, max_messages=10,
+            idle_timeout_s=0.5,
+        ),
+        lambda line: line,
+        WAL2JSON_DOCS[:3],
+    ),
+    "pgoutput": (
+        _pgoutput_payloads,
+        lambda c, drop, batch_rows: tail_pgoutput_to_drop_dir(
+            c, drop, publication="pub", max_changes=10, idle_timeout_s=0.5
+        ),
+        lambda line: json.loads(line)["change"][0]["columnvalues"],
+        [[str(i), f"v{i}"] for i in range(1, 4)],
+    ),
+}
+
+
+def _drop_lines(drop, decode):
+    lines = []
+    for fn in sorted(os.listdir(drop)):
+        with open(os.path.join(drop, fn), "rb") as f:
+            lines += [decode(ln) for ln in f.read().splitlines()]
+    return lines
+
+
+@pytest.mark.parametrize("plugin", sorted(TAILS))
+def test_tail_idle_timeout_terminates_bounded_drain(tmp_path, plugin):
     """ADVICE r7: max_messages only bounds the drain from above — a
     server that delivers fewer documents and then goes silent (one
     implicit transaction for a whole multi-statement simple query is
     the live-PG shape) left the tail blocked forever on a socket with
     no timeout. idle_timeout_s is the lower-bound exit: the drain
     returns once the wire is silent, with every delivered payload on
-    disk and its LSN confirmed."""
+    disk and its LSN confirmed. Both tails share the rule."""
+    payloads, tail, decode, expected = TAILS[plugin]
     srv = FakeWalsender(
-        WAL2JSON_DOCS[:3], keepalive_every=100,
+        payloads(), keepalive_every=100,
         hang_silent_after_payloads=True,
     )
     c = LRClient("127.0.0.1", srv.port, "testdb", "u", "wp_slot",
-                 status_interval_s=999.0)
+                 plugin=plugin, status_interval_s=999.0)
     c.connect()
     c.create_slot()
     drop = str(tmp_path / "drop")
     t0 = time.monotonic()
-    n = tail_to_drop_dir(
-        c, drop, batch_rows=2, max_messages=10, idle_timeout_s=0.5
-    )
+    n = tail(c, drop, 2)
     elapsed = time.monotonic() - t0
-    assert n == 3, n  # all delivered messages consumed, then idle-exit
+    assert n == 3, n  # all delivered rows consumed, then idle-exit
     assert elapsed < 5.0, elapsed
-    lines = []
-    for fn in sorted(os.listdir(drop)):
-        with open(os.path.join(drop, fn), "rb") as f:
-            lines += f.read().splitlines()
-    # the final PARTIAL batch (1 of 2 rows) was flushed by the timeout
-    # path, not lost waiting for batch_rows
-    assert lines == WAL2JSON_DOCS[:3]
+    # the wal2json tail's final PARTIAL batch (1 of 2 rows) was flushed
+    # by the timeout path, not lost waiting for batch_rows
+    assert _drop_lines(drop, decode) == expected
+    assert c.flushed_lsn == srv.max_delivered_lsn
     c.close()
     srv.thread.join(5)
 
 
-def test_tail_partial_frame_timeout_raises_not_idle(tmp_path):
+@pytest.mark.parametrize("plugin", sorted(TAILS))
+def test_tail_partial_frame_timeout_raises_not_idle(tmp_path, plugin):
     """ADVICE r8: "silent for N seconds" must mean NO byte of a next
     frame — a server that starts a frame and then stalls mid-frame is
     slow, not idle, and the stalled frame's bytes are unrecoverable.
     The idle-exit path must NOT swallow that timeout (it would report a
     clean drain having silently dropped a frame); it raises, and the
     already-delivered payloads still reach disk via the
-    unconfirmed-flush path in the finally block."""
+    unconfirmed-flush path in the finally block. Both tails share the
+    rule."""
+    payloads, tail, decode, expected = TAILS[plugin]
     srv = FakeWalsender(
-        WAL2JSON_DOCS[:3], keepalive_every=100,
+        payloads(), keepalive_every=100,
         partial_frame_then_hang=True,
     )
     c = LRClient("127.0.0.1", srv.port, "testdb", "u", "wp_slot",
-                 status_interval_s=999.0)
+                 plugin=plugin, status_interval_s=999.0)
     c.connect()
     c.create_slot()
     drop = str(tmp_path / "drop")
     with pytest.raises(TimeoutError):
-        tail_to_drop_dir(
-            c, drop, batch_rows=100, max_messages=10, idle_timeout_s=0.5
-        )
+        tail(c, drop, 100)
     # the mid-frame state is visible on the connection object
     assert c._conn.frame_bytes > 0
-    lines = []
-    for fn in sorted(os.listdir(drop)):
-        with open(os.path.join(drop, fn), "rb") as f:
-            lines += f.read().splitlines()
-    # batch_rows=100 means nothing flushed during the stream — the
-    # finally-path flush(confirm=False) preserved all delivered rows
-    assert lines == WAL2JSON_DOCS[:3]
+    # batch_rows=100 means the wal2json tail flushed nothing during the
+    # stream — the finally-path flush preserved all delivered rows
+    assert _drop_lines(drop, decode) == expected
     c.close()
     srv.thread.join(5)
 

@@ -8,7 +8,6 @@ import pytest
 from warp_pipe_spark.verify import (
     ordered_md5_chain,
     row_hash,
-    table_digest,
     table_digest_scalable,
     verify_tables,
 )
@@ -23,18 +22,16 @@ def t(spark):
 
 def test_digest_equal_for_equal_multisets(spark, t):
     shuffled = t.orderBy("s", ascending=False)
-    assert verify_tables(t, shuffled, scalable=False)
-    assert verify_tables(t, shuffled, scalable=True)
+    assert verify_tables(t, shuffled)
 
 
 def test_digest_detects_any_difference(spark, t):
     changed = spark.createDataFrame(
         [(1, "a", 1.5), (2, "b", 2.5), (3, "c", 0.0)], "id LONG, s STRING, v DOUBLE"
     )
-    assert not verify_tables(t, changed, scalable=False)
-    assert not verify_tables(t, changed, scalable=True)
+    assert not verify_tables(t, changed)
     missing = t.filter("id != 2")
-    assert not verify_tables(t, missing, scalable=True)
+    assert not verify_tables(t, missing)
 
 
 def test_ordered_chain_matches_hand_fold(spark, t):
@@ -51,8 +48,6 @@ def test_ordered_chain_matches_hand_fold(spark, t):
 def test_scalable_digest_is_one_row(t):
     row = table_digest_scalable(t).collect()
     assert len(row) == 1 and row[0]["row_count"] == 3
-    row2 = table_digest(t).collect()[0]
-    assert len(row2["digest"]) == 32
 
 
 def test_digest_distinguishes_delimiter_aliased_rows(spark):
@@ -62,13 +57,12 @@ def test_digest_distinguishes_delimiter_aliased_rows(spark):
     report convergence for tables that differ."""
     a = spark.createDataFrame([("a|b", "c")], "x STRING, y STRING")
     b = spark.createDataFrame([("a", "b|c")], "x STRING, y STRING")
-    assert not verify_tables(a, b, scalable=True)
-    assert not verify_tables(a, b, scalable=False)
+    assert not verify_tables(a, b)
 
     lit = spark.createDataFrame([("\\N",)], "x STRING")
     nul = spark.createDataFrame([(None,)], "x STRING")
-    assert not verify_tables(lit, nul, scalable=True)
+    assert not verify_tables(lit, nul)
 
     # escaping is a rendering detail only: equal tables still converge
-    assert verify_tables(a, a.select("x", "y"), scalable=True)
-    assert verify_tables(lit, lit.select("x"), scalable=False)
+    assert verify_tables(a, a.select("x", "y"))
+    assert verify_tables(lit, lit.select("x"))

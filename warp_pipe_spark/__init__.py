@@ -34,7 +34,7 @@ from warp_pipe_spark.pipeline import Pipeline
 from warp_pipe_spark.session import get_spark
 from warp_pipe_spark.skew import salted_agg, top_k
 from warp_pipe_spark.store import ChangesetStore
-from warp_pipe_spark.verify import table_digest, table_digest_scalable, verify_tables
+from warp_pipe_spark.verify import table_digest_scalable, verify_tables
 from warp_pipe_spark.warp_pipe import WarpPipe, WarpPipeConfig
 
 __all__ = [
@@ -56,7 +56,6 @@ __all__ = [
     "ChangesetStore",
     "replay",
     "merge_batch",
-    "table_digest",
     "table_digest_scalable",
     "verify_tables",
     "salted_agg",

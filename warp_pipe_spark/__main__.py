@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 
 
@@ -356,6 +355,7 @@ def main(argv: list[str] | None = None, out=None) -> int:
         # the only Spark-free command: socket -> drop dir, exactly the
         # reference CLI's LR mode (a downstream wal2json_stream /
         # batch decode job consumes the drop dir). No JDBC, no driver.
+        from warp_pipe_spark.io import publish_file
         from warp_pipe_spark.lr_client import LRClient, tail_to_drop_dir
         from warp_pipe_spark.pgoutput import tail_pgoutput_to_drop_dir
 
@@ -390,10 +390,10 @@ def main(argv: list[str] | None = None, out=None) -> int:
                 # feeds the seed file, the tail resumes from the
                 # consistent point — every change lands exactly once
                 # (see LRClient.create_slot_with_snapshot). The seed is
-                # one row_to_json JSONL per row, atomically renamed
-                # BEFORE the snapshot's validity window closes (the
-                # tail's START_REPLICATION is this connection's next
-                # command).
+                # one row_to_json JSONL per row, durably published
+                # (fsync, then rename) BEFORE the snapshot's validity
+                # window closes (the tail's START_REPLICATION is this
+                # connection's next command).
                 lsn, snap = client.create_slot_with_snapshot()
                 reader = LRClient(
                     args.host, args.port, args.dbname, args.user,
@@ -408,11 +408,10 @@ def main(argv: list[str] | None = None, out=None) -> int:
                     )
                 finally:
                     reader.close()
-                tmp = args.bootstrap_out + ".tmp"
-                with open(tmp, "w") as f:
-                    for (doc,) in rows:
-                        f.write(doc + "\n")
-                os.replace(tmp, args.bootstrap_out)
+                publish_file(
+                    args.bootstrap_out,
+                    ((doc + "\n").encode() for (doc,) in rows),
+                )
                 bootstrap_rows, start_lsn = len(rows), lsn
             elif args.create_slot:
                 client.create_slot(if_not_exists=True)

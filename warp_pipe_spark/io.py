@@ -24,7 +24,7 @@ from __future__ import annotations
 import os
 import re
 import shutil
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
@@ -519,6 +519,25 @@ def rewrite_and_swap(path: str, write: Callable[[str], _T]) -> _T:
     os.rename(tmp, path)
     shutil.rmtree(trash)
     return out
+
+
+def publish_file(path: str, chunks: Iterable[bytes]) -> None:
+    """Durably publish one small driver-side file: write `chunks` to
+    `<dir>/.<name>.tmp`, flush, fsync, then `os.replace` it onto
+    `path`. The commit protocol behind the state-sink pointer, the
+    keyset offset, the history-log rewrite, the drop-dir files of the
+    logical-replication tails and the live-tail bootstrap seed. A
+    reader sees the old file or the whole new one, never a torn one;
+    the leading dot keeps the tmp file out of Spark's file-source
+    listing. Single-writer per `path`."""
+    head, name = os.path.split(path)
+    tmp = os.path.join(head, f".{name}.tmp")
+    with open(tmp, "wb") as f:
+        for chunk in chunks:
+            f.write(chunk)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
 
 
 def committed_batch_dirs(root: str) -> list[str]:

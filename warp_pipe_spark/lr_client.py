@@ -17,9 +17,12 @@ Improvement over the reference, by construction: lr_listener.go never
 advances the slot's confirmed LSN (its standby status always reports
 the start position, so every restart replays the whole slot).
 `LRClient.send_standby_status` reports the caller's flushed LSN, and
-`tail_to_drop_dir` confirms only after the batch file is durably
-renamed — restart replays AT MOST the unconfirmed tail, which the
-downstream watermarked dedup / LWW merge absorbs (streaming.py).
+both drop-dir tails — `tail_to_drop_dir` (wal2json) and
+`pgoutput.tail_pgoutput_to_drop_dir` — run one loop,
+`_tail_drop_dir`, that confirms only after the batch file is durably
+published (`io.publish_file`) — restart replays AT MOST the
+unconfirmed tail, which the downstream watermarked dedup / LWW merge
+absorbs (streaming.py).
 
 Auth scope: `trust` (AuthenticationOk) only — the sandbox has no
 server at all; SCRAM would be dead code a test can't reach.
@@ -36,7 +39,11 @@ import os
 import socket
 import struct
 import time
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass
+
+from warp_pipe_spark.io import publish_file
 
 # epoch difference: Postgres timestamps count microseconds from
 # 2000-01-01, Unix from 1970-01-01
@@ -123,6 +130,22 @@ class _Conn:
         body = self._recv_exact(ln - 4)
         self.frame_bytes = 0
         return t, body
+
+    @contextmanager
+    def timeout(self, seconds: float | None) -> Iterator[None]:
+        """Socket timeout `seconds` for the block (None: leave it),
+        restored after; the restore ignores a socket closed meanwhile."""
+        prev = self.sock.gettimeout()
+        if seconds is not None:
+            self.sock.settimeout(seconds)
+        try:
+            yield
+        finally:
+            if seconds is not None:
+                try:
+                    self.sock.settimeout(prev)
+                except OSError:
+                    pass
 
     def send(self, type_byte: bytes, body: bytes) -> None:
         self.sock.sendall(type_byte + struct.pack("!i", len(body) + 4) + body)
@@ -273,11 +296,7 @@ class LRClient:
         if self._notifications:
             # delivered during an earlier simple query's round-trip
             return self._notifications.pop(0)
-        sock = self._conn.sock
-        prev = sock.gettimeout()
-        if timeout_s is not None:
-            sock.settimeout(timeout_s)
-        try:
+        with self._conn.timeout(timeout_s):
             while True:
                 t, body = self._conn.read_message()
                 if t == b"A":
@@ -285,12 +304,6 @@ class LRClient:
                 if t == b"E":
                     raise ProtocolError(_error_text(body))
                 # 'S' ParameterStatus / keepalive noise: skip
-        finally:
-            if timeout_s is not None:
-                try:
-                    sock.settimeout(prev)
-                except OSError:
-                    pass
 
     def identify_system(self) -> dict[str, str | None]:
         rows = self._simple_query("IDENTIFY_SYSTEM")
@@ -481,97 +494,108 @@ def tail_to_drop_dir(
     max_messages: int | None = None,
     idle_timeout_s: float | None = None,
 ) -> int:
-    """Bridge the socket stream into the Structured Streaming source
-    contract: buffer XLogData payloads, write each batch as one JSONL
-    file (atomic rename, so `wal2json_stream`'s file source never sees
-    a torn file), and confirm the batch's end LSN ONLY after the rename
-    — crash-redelivery is bounded by one batch and absorbed by the
-    idempotent downstream. Returns messages consumed (for tests /
-    bounded drains).
+    """Bridge the wal2json socket stream into the Structured Streaming
+    source contract: buffer XLogData payloads, write each `batch_rows`
+    of them as one JSONL file, and confirm the batch's end LSN ONLY
+    after the file is durably renamed into `drop_dir` — crash-redelivery
+    is bounded by one batch and absorbed by the idempotent downstream.
+    Returns messages consumed (for tests / bounded drains).
 
     `max_messages` only bounds the drain from ABOVE — if the WAL
     produces fewer documents than the bound (wal2json batches a whole
     multi-statement implicit transaction into ONE document; keepalives
     don't count), a drain waiting for the Nth message blocks forever on
-    an idle server. `idle_timeout_s` is the matching lower-bound exit:
-    stop cleanly (flushing and confirming the buffered batch) once the
-    socket has been silent that long — "nothing new for N seconds" IS
-    the done signal for one-shot backfills and tests. Idle means NO
-    byte of a next frame has arrived (`_Conn.frame_bytes == 0`): a
-    timeout mid-frame is a slow wire, not an idle one, and raises
-    rather than silently dropping the partial frame. The stop abandons
-    CopyBoth mid-stream, so treat the client session as consumed:
-    close it rather than reusing it for more walsender SQL (a slot drop
-    needs a fresh connection, which also releases this one's claim)."""
-    os.makedirs(drop_dir, exist_ok=True)
-    buf: list[bytes] = []
-    hi_lsn = start_lsn
+    an idle server. `idle_timeout_s` is the matching lower-bound exit,
+    with the idle rules of `_tail_drop_dir`."""
     n_seen = 0
-    seq = 0
 
-    def flush(confirm: bool = True) -> None:
-        nonlocal seq
-        if not buf:
-            return
-        tmp = os.path.join(drop_dir, f".tmp_{hi_lsn:016x}_{seq}")
-        with open(tmp, "wb") as f:
-            f.write(b"\n".join(buf) + b"\n")
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(drop_dir, f"lr_{hi_lsn:016x}_{seq}.jsonl"))
-        seq += 1
-        buf.clear()
-        if confirm:
-            client.send_standby_status(hi_lsn)
+    def feed(msg: XLogData, lines: list[bytes]) -> bool:
+        nonlocal n_seen
+        lines.append(msg.payload)
+        n_seen += 1
+        return len(lines) >= batch_rows
 
-    sock = client._conn.sock if client._conn else None
-    prev_timeout = sock.gettimeout() if sock is not None else None
-    if idle_timeout_s is not None and sock is not None:
-        sock.settimeout(idle_timeout_s)
-    try:
-        try:
-            for msg in client.start(start_lsn):
-                if isinstance(msg, XLogData):
-                    buf.append(msg.payload)
-                    # confirm the end of the RECEIVED message (wal_start +
-                    # payload length), never XLogData.wal_end: that field is
-                    # ServerWALEnd — the server's current WAL head, which
-                    # can be far past what this client has been sent.
-                    # Confirming it advances the slot's confirmed_flush_lsn
-                    # over transactions never delivered; a restart then
-                    # skips them forever (permanent data loss).
-                    hi_lsn = max(hi_lsn, msg.wal_start + len(msg.payload))
-                    n_seen += 1
-                    if len(buf) >= batch_rows:
-                        flush()
-                    if max_messages is not None and n_seen >= max_messages:
-                        break
-        except TimeoutError:
-            # socket.timeout is TimeoutError since 3.10; only swallow
-            # it when the caller OPTED INTO the idle-exit contract,
-            # and only when the wire is actually BETWEEN frames:
-            # a timeout with part of the next frame already received
-            # is a slow server, not an idle one — exiting "cleanly"
-            # there would silently drop the partial frame, so it
-            # raises instead (redelivered next session from the last
-            # confirmed LSN, per the at-most-unconfirmed-tail
-            # contract).
-            if idle_timeout_s is None or (
-                client._conn is not None and client._conn.frame_bytes > 0
-            ):
-                raise
-        flush()
-    finally:
-        if idle_timeout_s is not None and sock is not None:
-            try:
-                sock.settimeout(prev_timeout)
-            except OSError:
-                pass
-        if buf:
-            # after a stream error the socket may be dead: the batch
-            # FILE is what must not be lost — write it, but skip the
-            # status send (a BrokenPipeError here would mask the real
-            # ProtocolError). The unconfirmed LSN just means bounded
-            # redelivery next session, absorbed downstream.
-            flush(confirm=False)
+    _tail_drop_dir(
+        client, drop_dir, start_lsn, idle_timeout_s, feed,
+        done=lambda: max_messages is not None and n_seen >= max_messages,
+    )
     return n_seen
+
+
+def _tail_drop_dir(
+    client: LRClient,
+    drop_dir: str,
+    start_lsn: int,
+    idle_timeout_s: float | None,
+    feed: Callable[[XLogData, list[bytes]], bool],
+    done: Callable[[], bool],
+    confirm_floor: Callable[[], int | None] = lambda: None,
+    options: dict[str, str] | None = None,
+) -> None:
+    """The one drop-dir tail loop behind both plugin tails.
+
+    `feed(msg, lines)` appends each XLogData frame's finished JSONL
+    lines (if any) to `lines` and returns True when they are due: they
+    are written as one `lr_<lsn>_<seq>.jsonl` file (io.publish_file, so
+    `wal2json_stream` never sees a torn file), and only after that
+    rename is the received LSN confirmed — even with nothing written (a
+    commit without a document still consumed WAL). The LSN is the
+    received message's end (wal_start + payload length), never
+    XLogData.wal_end: that is ServerWALEnd, the server's WAL head, and
+    confirming it skips undelivered transactions after a restart. It
+    is capped at `confirm_floor()` when that is not None. `done()`,
+    asked after each frame, ends the drain.
+
+    `idle_timeout_s` stops cleanly (writing and confirming the pending
+    lines) once the socket has been silent that long — "nothing new
+    for N seconds" IS the done signal for one-shot backfills and tests.
+    Idle means NO byte of a next frame has arrived (`_Conn.frame_bytes
+    == 0`): a mid-frame timeout is a slow wire, and raises rather than
+    silently dropping the partial frame. The stop abandons CopyBoth, so
+    close the client afterwards rather than reusing it for walsender
+    SQL (a slot drop needs a fresh connection). After any error the
+    pending lines are still written but not confirmed: the socket may
+    be dead, and a failed status send would mask the real error;
+    redelivery of the unconfirmed tail is absorbed downstream."""
+    os.makedirs(drop_dir, exist_ok=True)
+    lines: list[bytes] = []
+    hi_lsn, seq = start_lsn, 0
+
+    def flush() -> bool:
+        nonlocal seq
+        if not lines:
+            return False
+        publish_file(
+            os.path.join(drop_dir, f"lr_{hi_lsn:016x}_{seq}.jsonl"),
+            [b"\n".join(lines) + b"\n"],
+        )
+        seq += 1
+        lines.clear()
+        return True
+
+    def confirm() -> None:
+        floor = confirm_floor()
+        client.send_standby_status(hi_lsn if floor is None else min(hi_lsn, floor))
+
+    assert client._conn, "connect() first"
+    try:
+        with client._conn.timeout(idle_timeout_s):
+            try:
+                for msg in client.start(start_lsn, options=options):
+                    if not isinstance(msg, XLogData):
+                        continue
+                    due = feed(msg, lines)
+                    hi_lsn = max(hi_lsn, msg.wal_start + len(msg.payload))
+                    if due:
+                        flush()
+                        confirm()
+                    if done():
+                        break
+            except TimeoutError:
+                # socket.timeout is TimeoutError since 3.10
+                if idle_timeout_s is None or client._conn.frame_bytes > 0:
+                    raise
+            if flush():
+                confirm()
+    finally:
+        flush()

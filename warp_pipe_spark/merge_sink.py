@@ -506,6 +506,3 @@ class MergeStateSink(StateSink):
 
     def read_state(self) -> DataFrame | None:
         return self.executor.read_state()
-
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        self.apply_batch(batch, batch_id)

@@ -127,10 +127,9 @@ carry the data.
 from __future__ import annotations
 
 import json
-import os
 import struct
 
-from warp_pipe_spark.lr_client import XLogData, lsn_str
+from warp_pipe_spark.lr_client import XLogData, _tail_drop_dir, lsn_str
 
 #: common scalar type oids (pg_type.dat, public catalog numbers)
 PG_TYPE_NAMES = {
@@ -905,6 +904,16 @@ class PgOutputAssembler:
             starts = list(starts) + [self._preparing_start]
         return min(starts) if starts else None
 
+    def at_tx_boundary(self) -> bool:
+        """True when no transaction is open: none between begin and
+        commit, no streamed block or buffered streamed transaction
+        (proto 2), no undecided prepared one (proto 3). A bounded
+        drain stops only here, so it never tears a transaction."""
+        return not (
+            self._in_tx or self._cur_stream is not None
+            or self._streamed or self._prepared
+        )
+
     def undelivered_count(self) -> int:
         """Changes feed() counted that are still BUFFERED — an open
         transaction's pending list, open streamed transactions,
@@ -1085,12 +1094,13 @@ def tail_pgoutput_to_drop_dir(
     messages: bool = False,
     binary: bool = False,
 ) -> int:
-    """The pgoutput twin of lr_client.tail_to_drop_dir: stream with the
-    built-in plugin, assemble one wal2json-shaped JSONL document per
-    committed transaction, write each as an atomically-renamed file,
-    and confirm the delivered LSN only after the rename. Returns the
-    number of CHANGES written (insert/update/delete/truncate rows —
-    begin/commit/relation messages are assembly, not payload).
+    """The drop-dir tail for the built-in pgoutput plugin: stream,
+    assemble one wal2json-shaped JSONL document per committed
+    transaction, and write each commit's documents as one file through
+    the wal2json tail's loop (lr_client._tail_drop_dir: durable
+    rename, then confirm). Returns the number of CHANGES written
+    (insert/update/delete/truncate rows — begin/commit/relation
+    messages are assembly, not payload).
 
     Long-running safety: per-message work is O(message) — change
     counting comes from feed()'s return value and flushed documents are
@@ -1112,118 +1122,61 @@ def tail_pgoutput_to_drop_dir(
     idle one). The slot must be created with plugin='pgoutput' and a
     PUBLICATION covering the tables must exist — both are server-side
     one-liners against stock Postgres, which is the point."""
-    os.makedirs(drop_dir, exist_ok=True)
     asm = PgOutputAssembler(proto_version=proto_version)
     n_changes = 0
-    seq = 0
-    hi_lsn = start_lsn
+    options = {
+        "proto_version": str(proto_version),
+        "publication_names": publication,
+    }
+    if proto_version >= 2:
+        options["streaming"] = "on"
+    if proto_version >= 3:
+        # needs a slot created with TWO_PHASE
+        # (LRClient.create_slot(two_phase=True))
+        options["two_phase"] = "on"
+    if messages:
+        # PG 14+: deliver pg_logical_emit_message payloads
+        # (kind='message' changes; non-transactional ones emit
+        # as their own single-change document immediately)
+        options["messages"] = "on"
+    if binary:
+        # PG 14+: tuple cells arrive in the types' binary wire
+        # formats; the assembler converts each back to the
+        # canonical text output, so the written documents are
+        # byte-identical to a text-mode tail (live-pinned)
+        options["binary"] = "on"
 
-    def confirm_lsn() -> None:
-        # cap at the oldest UNDECIDED prepared transaction's first
-        # frame (confirm_floor): confirming past it would stop the
-        # server redelivering the prepared changes after a restart,
-        # stranding the eventual commit-prepared
-        floor = asm.confirm_floor()
-        client.send_standby_status(
-            hi_lsn if floor is None else min(hi_lsn, floor)
+    def feed(msg: XLogData, lines: list[bytes]) -> bool:
+        nonlocal n_changes
+        n_changes += asm.feed(msg.wal_start, msg.payload)
+        docs = asm.take_docs()
+        lines.extend(json.dumps(d, separators=(",", ":")).encode() for d in docs)
+        # one file per commit batch reaching the dir; a commit of an
+        # empty transaction, stream-commit of a fully-aborted-subxact
+        # one, stream-abort, or rollback-prepared writes no file but
+        # its position is consumed — confirm so a huge rolled-back
+        # transaction doesn't pin WAL until the next real commit
+        return bool(docs) or msg.payload[:1] in (b"C", b"c", b"A", b"r")
+
+    def done() -> bool:
+        # the bound only fires BETWEEN transactions: breaking
+        # mid-transaction would discard the buffered changes of an
+        # uncommitted (but soon-committing) transaction — the 4th
+        # change of a 4-change transaction arrives BEFORE its commit
+        # message, and tearing there emits nothing at all
+        return (
+            max_changes is not None
+            and n_changes >= max_changes
+            and asm.at_tx_boundary()
         )
 
-    def flush(confirm: bool = True) -> None:
-        nonlocal seq
-        fresh = asm.take_docs()
-        if not fresh:
-            return
-        tmp = os.path.join(drop_dir, f".tmp_{hi_lsn:016x}_{seq}")
-        with open(tmp, "wb") as f:
-            for doc in fresh:
-                f.write(json.dumps(doc, separators=(",", ":")).encode())
-                f.write(b"\n")
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(
-            tmp, os.path.join(drop_dir, f"lr_{hi_lsn:016x}_{seq}.jsonl")
-        )
-        seq += 1
-        if confirm:
-            confirm_lsn()
-
-    sock = client._conn.sock if client._conn else None
-    prev_timeout = sock.gettimeout() if sock is not None else None
-    if idle_timeout_s is not None and sock is not None:
-        sock.settimeout(idle_timeout_s)
-    try:
-        try:
-            options = {
-                "proto_version": str(proto_version),
-                "publication_names": publication,
-            }
-            if proto_version >= 2:
-                options["streaming"] = "on"
-            if proto_version >= 3:
-                # needs a slot created with TWO_PHASE
-                # (LRClient.create_slot(two_phase=True))
-                options["two_phase"] = "on"
-            if messages:
-                # PG 14+: deliver pg_logical_emit_message payloads
-                # (kind='message' changes; non-transactional ones emit
-                # as their own single-change document immediately)
-                options["messages"] = "on"
-            if binary:
-                # PG 14+: tuple cells arrive in the types' binary wire
-                # formats; the assembler converts each back to the
-                # canonical text output, so the written documents are
-                # byte-identical to a text-mode tail (live-pinned)
-                options["binary"] = "on"
-            for msg in client.start(start_lsn, options=options):
-                if not isinstance(msg, XLogData):
-                    continue
-                n_changes += asm.feed(msg.wal_start, msg.payload)
-                hi_lsn = max(hi_lsn, msg.wal_start + len(msg.payload))
-                if asm.docs:
-                    flush()  # one file per commit batch reaching the dir
-                elif msg.payload[:1] in (b"C", b"c", b"A", b"r"):
-                    # commit of an empty transaction, stream-commit of a
-                    # fully-aborted-subxact one, stream-abort, or
-                    # rollback-prepared: no file, but the position is
-                    # consumed — confirm so a huge rolled-back
-                    # transaction doesn't pin WAL until the next real
-                    # commit. Confirms are floor-capped: an
-                    # UNDECIDED prepared transaction keeps the
-                    # confirmed LSN below its first frame, so a crash
-                    # before its commit-prepared restarts WITH the
-                    # prepared changes redelivered.
-                    confirm_lsn()
-                # the bound only fires BETWEEN transactions: breaking
-                # mid-transaction would discard the buffered changes of
-                # an uncommitted (but soon-committing) transaction —
-                # the 4th change of a 4-change transaction arrives
-                # BEFORE its commit message, and tearing there emits
-                # nothing at all
-                # (under proto 2 the bound also waits out open streamed
-                # transactions — their buffered changes are counted but
-                # not yet committed, and tearing would discard them)
-                if (
-                    max_changes is not None
-                    and n_changes >= max_changes
-                    and not asm._in_tx
-                    and asm._cur_stream is None
-                    and not asm._streamed
-                    and not asm._prepared
-                ):
-                    break
-        except TimeoutError:
-            if idle_timeout_s is None or (
-                client._conn is not None and client._conn.frame_bytes > 0
-            ):
-                raise
-        flush()
-    finally:
-        if idle_timeout_s is not None and sock is not None:
-            try:
-                sock.settimeout(prev_timeout)
-            except OSError:
-                pass
-        flush(confirm=False)
+    # confirms are floor-capped: an UNDECIDED prepared transaction
+    # keeps the confirmed LSN below its first frame, so a crash before
+    # its commit-prepared restarts WITH the prepared changes redelivered
+    _tail_drop_dir(
+        client, drop_dir, start_lsn, idle_timeout_s, feed, done,
+        confirm_floor=asm.confirm_floor, options=options,
+    )
     # idle-timeout exits can leave an open (streamed/prepared/plain)
     # transaction buffered: those changes were counted by feed() but
     # never written — subtract them so the return value (and the

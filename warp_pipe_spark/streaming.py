@@ -44,6 +44,7 @@ from pyspark.sql.types import StructType
 
 from warp_pipe_spark.apply import replay
 from warp_pipe_spark.changeset import AUDIT_LOG_SCHEMA
+from warp_pipe_spark.io import publish_file
 
 
 def changeset_stream(
@@ -320,12 +321,8 @@ class ParquetStateSink(StateSink):
         parquet schema inference entirely. None (the first empty commit
         / pre-r15 pointers) falls back to the mergeSchema read."""
         os.makedirs(self.state_dir, exist_ok=True)
-        tmp = self._pointer_path() + f".tmp.{meta['batch_id']}"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._pointer_path())  # atomic commit point
+        # atomic commit point
+        publish_file(self._pointer_path(), [json.dumps(meta).encode()])
 
     def _commit(self, meta: dict) -> None:
         """Commit `meta` (caller holds _lock). With retain_history the
@@ -854,15 +851,10 @@ class ParquetStateSink(StateSink):
             for rel in sorted(dead):
                 shutil.rmtree(os.path.join(self.state_dir, rel), ignore_errors=True)
                 self._sizes.pop(rel, None)
-            log = os.path.join(self.state_dir, self.POINTER_LOG)
-            tmp = log + ".tmp"
-            with open(tmp, "w") as f:
-                for e in kept:
-                    json.dump(e, f)
-                    f.write("\n")
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, log)
+            publish_file(
+                os.path.join(self.state_dir, self.POINTER_LOG),
+                (json.dumps(e).encode() + b"\n" for e in kept),
+            )
             return len(dead)
 
     def read_state_asof(self, batch_id: int) -> "DataFrame | None":
@@ -933,12 +925,7 @@ class KeysetPoller:
             ) from e
 
     def _commit_offset(self, last_id: int) -> None:
-        tmp = self.offset_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"last_id": last_id}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self.offset_path)
+        publish_file(self.offset_path, [json.dumps({"last_id": last_id}).encode()])
 
     def poll_once(self) -> int:
         """One micro-batch round; returns rows applied (0 = drained).
