@@ -1,0 +1,163 @@
+"""The five persisted indexes share one lifecycle (io.write_index /
+io.open_index): opening or appending launches no Spark job before the
+function's own action, and a build that dies before its manifest is
+published leaves an index that refuses to open."""
+
+import re
+import uuid
+
+import pytest
+from pyspark.sql import functions as F
+
+from warp_pipe_spark import io as wio
+from warp_pipe_spark.datapipe.bloom import read_bloom, update_bloom, write_bloom
+from warp_pipe_spark.datapipe.dedup_index import (
+    build_minhash_index,
+    query_minhash_index,
+    update_minhash_index,
+)
+from warp_pipe_spark.datapipe.ingest import DsirGateSink
+from warp_pipe_spark.datapipe.retrieval import (
+    bm25_topk_indexed,
+    build_text_index,
+    update_text_index,
+)
+from warp_pipe_spark.datapipe.sampling import build_dsir_index, dsir_score_indexed
+from warp_pipe_spark.datapipe.similarity import (
+    build_ivf_index,
+    ivf_topk_indexed,
+    update_ivf_index,
+)
+
+WORDS = ["the", "data", "pipeline", "spark", "index", "stream", "fox", "dog"]
+
+
+@pytest.fixture(scope="module")
+def docs(spark):
+    rows = [
+        (i, " ".join(WORDS[(i * j) % len(WORDS)] for j in range(1, 9)))
+        for i in range(40)
+    ]
+    return spark.createDataFrame(rows, "doc_id LONG, text STRING")
+
+
+@pytest.fixture(scope="module")
+def emb(spark):
+    rows = [(i, [float(i % 7), float((i * 3) % 5), 1.0]) for i in range(120)]
+    return spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
+
+
+#: kind -> (build(docs, emb, path, alt), open(spark, docs, emb, path),
+#: append(docs, emb, path) or None); `alt` builds with other parameters
+KINDS = {
+    "bloom": (
+        lambda d, e, p, alt: write_bloom(
+            d.select(F.col("doc_id").alias("key")), p,
+            m_bits=1 << (12 if alt else 14), k_hashes=3,
+        ),
+        lambda s, d, e, p: read_bloom(s, p)[0],
+        lambda d, e, p: update_bloom(d.select(F.col("doc_id").alias("key")), p),
+    ),
+    "bm25": (
+        lambda d, e, p, alt: build_text_index(d, p, n_term_buckets=4 if alt else 8),
+        lambda s, d, e, p: bm25_topk_indexed(s, p, ["the", "fox"]),
+        lambda d, e, p: update_text_index(d, p),
+    ),
+    "dsir": (
+        lambda d, e, p, alt: build_dsir_index(
+            d, d.filter("doc_id % 2 = 0"), p, n_buckets=32 if alt else 64
+        ),
+        lambda s, d, e, p: (
+            DsirGateSink(s, p + "_gate", p, 0),
+            dsir_score_indexed(s, d, p),
+        )[1],
+        None,
+    ),
+    "minhash": (
+        lambda d, e, p, alt: build_minhash_index(
+            d.filter(F.col("doc_id") % 2 == int(alt)), p
+        ),
+        lambda s, d, e, p: query_minhash_index(s, d, p),
+        lambda d, e, p: update_minhash_index(d, p, ingest_batch=0),
+    ),
+    "ivf": (
+        lambda d, e, p, alt: build_ivf_index(e, p, n_centroids=2 if alt else 3),
+        lambda s, d, e, p: ivf_topk_indexed(s, e.filter("vec_id < 5"), p, k=3),
+        lambda d, e, p: update_ivf_index(e.filter("vec_id < 10"), p),
+    ),
+}
+
+
+def _jobs(spark, monkeypatch, fn):
+    """(jobs fn launched outside its own actions, number of actions):
+    the actions are its DataFrame collects and parquet writes."""
+    sc = spark.sparkContext
+    group = f"test-indexes-{uuid.uuid4().hex}"
+    tracker = sc.statusTracker()
+    in_actions, n_actions = set(), [0]
+
+    def wrap(cls, name):
+        real = getattr(cls, name)
+
+        def action(self, *args, **kwargs):
+            before = set(tracker.getJobIdsForGroup(group))
+            try:
+                return real(self, *args, **kwargs)
+            finally:
+                in_actions.update(set(tracker.getJobIdsForGroup(group)) - before)
+                n_actions[0] += 1
+
+        monkeypatch.setattr(cls, name, action)
+
+    probe = spark.range(1)
+    wrap(type(probe), "collect")
+    wrap(type(probe.write), "parquet")
+    sc.setJobGroup(group, "index open/append jobs")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+        monkeypatch.undo()
+    return set(tracker.getJobIdsForGroup(group)) - in_actions, n_actions[0]
+
+
+@pytest.mark.parametrize("kind", sorted(KINDS))
+def test_open_and_append_launch_no_job_before_an_action(
+    spark, monkeypatch, docs, emb, tmp_path, kind
+):
+    build, open_, append = KINDS[kind]
+    path = str(tmp_path / kind)
+    build(docs, emb, path, False)
+    stray, n_actions = _jobs(spark, monkeypatch, lambda: open_(spark, docs, emb, path))
+    assert stray == set()
+    # ivf_topk_indexed collects the probed cell ids; nothing else acts
+    assert n_actions == (kind == "ivf")
+    if append is not None:
+        stray, n_actions = _jobs(spark, monkeypatch, lambda: append(docs, emb, path))
+        assert stray == set() and n_actions >= 1
+    assert open_(spark, docs, emb, path).count() > 0
+
+
+@pytest.mark.parametrize("kind", sorted(KINDS))
+def test_interrupted_rebuild_refuses_to_open(
+    spark, monkeypatch, docs, emb, tmp_path, kind
+):
+    build, open_, append = KINDS[kind]
+    path = str(tmp_path / kind)
+    build(docs, emb, path, False)
+    assert open_(spark, docs, emb, path).count() > 0
+
+    def crash(*args, **kwargs):
+        raise OSError("crash before the manifest publish")
+
+    monkeypatch.setattr(wio, "publish_file", crash)
+    with pytest.raises(OSError, match="crash before"):
+        build(docs, emb, path, True)
+    monkeypatch.undo()
+    with pytest.raises(FileNotFoundError, match="did not finish"):
+        open_(spark, docs, emb, path)
+    if append is not None:
+        with pytest.raises(FileNotFoundError, match=re.escape(path)):
+            append(docs, emb, path)
+    build(docs, emb, path, True)  # a finished rebuild opens again
+    assert open_(spark, docs, emb, path).count() > 0

@@ -1,7 +1,9 @@
 """read_table's schema cache: a warm read launches no inference job, and
 a rewrite, a schema conf flip or the events nanos read never returns a
 stale schema. publish_file: the whole new file or the old one, never a
-torn or visible tmp file."""
+torn or visible tmp file. The index manifest: write_index/open_index
+round-trip parameters and schemas, and refuse a missing manifest or
+one of another kind."""
 
 import datetime as dt
 import os
@@ -11,7 +13,14 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from warp_pipe_spark.io import _file_signature, publish_file, read_table
+from warp_pipe_spark.io import (
+    INDEX_MANIFEST,
+    _file_signature,
+    open_index,
+    publish_file,
+    read_table,
+    write_index,
+)
 
 
 def _jobs(spark, fn):
@@ -209,3 +218,47 @@ def test_publish_file_crash_at_replace_keeps_the_old_file(tmp_path, monkeypatch)
     # the complete tmp file is left behind, hidden from file-source listings
     leftover = sorted(set(os.listdir(tmp_path)) - {"lr_0_0.jsonl"})
     assert leftover == [".lr_0_0.jsonl.tmp"]
+
+
+def test_index_manifest_round_trips_params_and_schemas(spark, tmp_path):
+    path = str(tmp_path / "idx")
+    flat = spark.createDataFrame([(1, "a"), (2, "b")], "k LONG, v STRING")
+    parted = spark.createDataFrame(
+        [(0, 1, "x"), (1, 2, "y"), (1, 3, "z")], "part INT, k LONG, v STRING"
+    )
+    write_index(
+        path, "demo", {"n": 4}, {"flat": (flat, ()), "parted": (parted, ("part",))}
+    )
+    (params, read), jobs = _jobs(spark, lambda: open_index(spark, path, "demo"))
+    frames = {"flat": read("flat"), "parted": read("parted")}
+    assert params == {"n": 4}
+    assert jobs == []  # every schema comes from the manifest
+    assert frames["parted"].columns == ["k", "v", "part"]  # partition col last
+    for name, df in frames.items():  # the schema an inference would find
+        assert df.schema == spark.read.parquet(f"{path}/{name}").schema
+    assert _rows(frames["flat"]) == [(1, "a"), (2, "b")]
+    assert _rows(read("parted", "part", [1, 5])) == [(2, "y", 1), (3, "z", 1)]
+    assert read("parted", "part", [5]).count() == 0
+
+    write_index(path, "demo", {"n": 4}, {"flat": (flat, ())}, append=True)
+    assert len(_rows(read("flat"))) == 4
+    with pytest.raises(ValueError, match="other parameters"):
+        write_index(path, "demo", {"n": 5}, {"flat": (flat, ())}, append=True)
+
+
+def test_index_without_manifest_raises_naming_the_path(spark, tmp_path):
+    path = str(tmp_path / "idx")
+    write_index(path, "demo", {}, {"flat": (spark.range(3), ())})
+    os.remove(os.path.join(path, INDEX_MANIFEST))
+    with pytest.raises(FileNotFoundError, match="did not finish") as e:
+        open_index(spark, path, "demo")
+    assert path in str(e.value)
+    with pytest.raises(FileNotFoundError, match="did not finish"):
+        open_index(spark, str(tmp_path / "never_built"), "demo")
+
+
+def test_index_of_another_kind_raises(spark, tmp_path):
+    path = str(tmp_path / "idx")
+    write_index(path, "bloom", {}, {"words": (spark.range(3), ())})
+    with pytest.raises(ValueError, match="bloom index, not a bm25 index"):
+        open_index(spark, path, "bm25")

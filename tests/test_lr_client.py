@@ -331,11 +331,11 @@ def test_tail_to_drop_dir_feeds_wal2json_stream(spark, tmp_path):
     }
 
 
-def _pgoutput_payloads():
+def _pgoutput_payloads(n=3):
     from test_pgoutput import REL, msg_begin, msg_commit, msg_insert
 
     payloads = [REL]
-    for i in range(1, 4):
+    for i in range(1, n + 1):
         payloads += [
             msg_begin(lsn=i << 12),
             msg_insert(5001, str(i), f"v{i}"),
@@ -436,6 +436,49 @@ def test_tail_partial_frame_timeout_raises_not_idle(tmp_path, plugin):
     assert _drop_lines(drop, decode) == expected
     c.close()
     srv.thread.join(5)
+
+
+@pytest.mark.parametrize("plugin", sorted(TAILS))
+def test_back_to_back_drop_files_get_increasing_millisecond_mtimes(
+    tmp_path, plugin
+):
+    """Spark's file source orders a drop-dir backlog by modification
+    time alone, at millisecond resolution: files published within one
+    millisecond tie and come in listing order, not commit order (a
+    `maxFilesPerTrigger=1` stream then reads a later commit as an
+    earlier micro-batch). Twenty back-to-back commits must get strictly
+    increasing millisecond mtimes in `lr_<lsn>_<seq>` order."""
+    n = 20
+    if plugin == "wal2json":
+        payloads = [WAL2JSON_DOCS[0]] * n
+        tail = lambda c, drop: tail_to_drop_dir(  # noqa: E731
+            c, drop, batch_rows=1, idle_timeout_s=0.5
+        )
+    else:
+        payloads = _pgoutput_payloads(n)
+        tail = lambda c, drop: tail_pgoutput_to_drop_dir(  # noqa: E731
+            c, drop, publication="pub", idle_timeout_s=0.5
+        )
+    srv = FakeWalsender(
+        payloads, keepalive_every=100, hang_silent_after_payloads=True
+    )
+    c = LRClient("127.0.0.1", srv.port, "testdb", "u", "wp_slot",
+                 plugin=plugin, status_interval_s=999.0)
+    c.connect()
+    c.create_slot()
+    drop = str(tmp_path / "drop")
+    tail(c, drop)
+    c.close()
+    srv.thread.join(5)
+
+    def commit_order(name):
+        lsn, seq = name[len("lr_"):-len(".jsonl")].split("_")
+        return int(lsn, 16), int(seq)
+
+    names = sorted(os.listdir(drop), key=commit_order)
+    assert len(names) == n, names
+    ms = [os.stat(os.path.join(drop, f)).st_mtime_ns // 10**6 for f in names]
+    assert all(a < b for a, b in zip(ms, ms[1:])), ms
 
 
 # -- LISTEN/NOTIFY (S2 push mode, notify_listener.go:76-139) --------------

@@ -38,6 +38,11 @@ with hashlib.md5 over the identical strings. The packed-word table
 and the bit-position set are the same object by construction, so the
 DuckDB replica probes the position set directly.
 
+Persistence: write_bloom stores the word table at `<index>/words` and
+m_bits/k_hashes in the index manifest (io.write_index); read_bloom
+opens it with no Spark job, and update_bloom appends under the
+manifest's parameters.
+
 Reference parity: the reference engine has no bloom surface; this is
 part of the driver-mandated large-scale-pipeline inventory (same
 family as dedup_index's streaming MinHash gate).
@@ -51,6 +56,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from warp_pipe_spark.datapipe.text import h32
+from warp_pipe_spark.io import explode_nonnull, open_index, write_index
 
 # packed bitmap caps at 2 GiB (2^34 bits); h32 is a 32-bit hash so m
 # beyond 2^32 would leave the top of the filter permanently unset
@@ -88,8 +94,6 @@ def bloom_bits(
     (unpacked) form the DuckDB oracle probes directly. Returns
     (bit BIGINT)."""
     _check_params(m_bits, k_hashes)
-    from warp_pipe_spark.io import explode_nonnull
-
     return (
         explode_nonnull(
             keys.filter(F.col(key_col).isNotNull()),
@@ -125,8 +129,8 @@ def build_bloom(
     k_hashes: int = 4,
 ) -> DataFrame:
     """bloom_bits → pack_bloom: the packed word table for the two
-    probe paths. Persist it like any small index (parquet); rebuild is
-    one linear pass over the reference keys."""
+    probe paths. write_bloom persists it with its parameters; rebuild
+    is one linear pass over the reference keys."""
     return pack_bloom(bloom_bits(keys, key_col, m_bits, k_hashes))
 
 
@@ -149,8 +153,6 @@ def bloom_gate(
     # distinct keys first: a key appearing twice in the batch would
     # otherwise contribute 2k probe rows and count(hit) == k could
     # never hold for it
-    from warp_pipe_spark.io import explode_nonnull
-
     probes = (
         explode_nonnull(
             batch.select(key_col).distinct(),
@@ -216,45 +218,28 @@ def write_bloom(
     k_hashes: int = 4,
 ) -> None:
     """Build AND persist: `<path>/words` holds the packed word table,
-    `<path>/meta` a one-row (m_bits, k_hashes) frame. The parameters
-    TRAVEL WITH the index — a probe re-supplying different values
-    would either silently false-negative (smaller m at probe time:
-    bits land at different positions) or crash (larger stored m:
-    word_idx past the bitmap), so read_bloom is the only sanctioned
-    way to open a persisted filter."""
-    _check_params(m_bits, k_hashes)
-    spark = keys.sparkSession
-    build_bloom(keys, key_col, m_bits, k_hashes).write.mode(
-        "overwrite"
-    ).parquet(path + "/words")
-    spark.createDataFrame(
-        [(m_bits, k_hashes)], "m_bits long, k_hashes long"
-    ).write.mode("overwrite").parquet(path + "/meta")
-
-
-def _read_meta(spark, path: str) -> tuple[int, int]:
-    meta = spark.read.parquet(path + "/meta").collect()
-    if len(meta) != 1:
-        raise ValueError(
-            f"bloom index at {path} has {len(meta)} meta rows, want 1"
-        )
-    return int(meta[0]["m_bits"]), int(meta[0]["k_hashes"])
+    and the index manifest (io.write_index) holds m_bits and k_hashes.
+    The parameters TRAVEL WITH the index — a probe re-supplying
+    different values would either silently false-negative (smaller m
+    at probe time: bits land at different positions) or crash (larger
+    stored m: word_idx past the bitmap), so read_bloom is the only
+    sanctioned way to open a persisted filter."""
+    words = build_bloom(keys, key_col, m_bits, k_hashes)
+    params = {"m_bits": m_bits, "k_hashes": k_hashes}
+    write_index(path, "bloom", params, {"words": (words, ())})
 
 
 def read_bloom(spark, path: str):
-    """Open a persisted filter: returns (words DataFrame, m_bits,
-    k_hashes) with the build-time parameters, to be passed verbatim to
-    the probes. Appended batches (update_bloom) leave duplicate
-    word_idx rows in the words dataset; they OR together here with one
-    bit_or aggregate over the ≤ m_bits/64-row table, so both probe
-    paths see a unique-word frame."""
-    m_bits, k_hashes = _read_meta(spark, path)
-    words = (
-        spark.read.parquet(path + "/words")
-        .groupBy("word_idx")
-        .agg(F.bit_or("word").alias("word"))
-    )
-    return words, m_bits, k_hashes
+    """Open a persisted filter with no Spark job: returns (words
+    DataFrame, m_bits, k_hashes) with the manifest's build-time
+    parameters, to be passed verbatim to the probes. Appended batches
+    (update_bloom) leave duplicate word_idx rows in the words dataset;
+    they OR together here with one bit_or aggregate over the
+    ≤ m_bits/64-row table, so both probe paths see a unique-word
+    frame."""
+    params, read = open_index(spark, path, "bloom")
+    words = read("words").groupBy("word_idx").agg(F.bit_or("word").alias("word"))
+    return words, params["m_bits"], params["k_hashes"]
 
 
 def update_bloom(new_keys: DataFrame, path: str, key_col: str = "key") -> None:
@@ -265,12 +250,11 @@ def update_bloom(new_keys: DataFrame, path: str, key_col: str = "key") -> None:
     packed words: duplicate word_idx rows across appends OR together
     at open time (read_bloom's one bit_or aggregate). Cost ∝
     |batch|·k_hashes; the reference key set is never re-read. The
-    build-time m_bits/k_hashes come from the index meta — a batch can
-    never be hashed under a different geometry than the build."""
-    m_bits, k_hashes = _read_meta(new_keys.sparkSession, path)
-    build_bloom(new_keys, key_col, m_bits, k_hashes).write.mode(
-        "append"
-    ).parquet(path + "/words")
+    build-time m_bits/k_hashes come from the index manifest — a batch
+    can never be hashed under a different geometry than the build."""
+    params, _ = open_index(new_keys.sparkSession, path, "bloom")
+    words = build_bloom(new_keys, key_col, params["m_bits"], params["k_hashes"])
+    write_index(path, "bloom", params, {"words": (words, ())}, append=True)
 
 
 def bloom_gate_packed(

@@ -38,16 +38,19 @@ from warp_pipe_spark.datapipe.dedup import band_rows
 from warp_pipe_spark.io import (
     committed_batch_dirs,
     n_parquet_files,
+    open_index,
     rewrite_and_swap,
     settle_swap,
+    write_index,
 )
 
 
-def build_minhash_index(docs: DataFrame, path: str, n: int = 3) -> None:
+def build_minhash_index(docs: DataFrame, path: str) -> None:
     """Write the corpus banding rows partitioned by band (8 fixed
-    partitions; within each, files accumulate per append batch). The
-    base corpus is tagged ingest_batch = -1; appends tag their batch id
-    so queries can pin an as-of-batch view (replay determinism).
+    partitions; within each, files accumulate per append batch),
+    committed through the index manifest (io.write_index). The base
+    corpus is tagged ingest_batch = -1; appends tag their batch id so
+    queries can pin an as-of-batch view (replay determinism).
 
     A (re)build also clears the `_ingested` replay markers: they
     describe appends to the PREVIOUS index generation, and a streaming
@@ -55,28 +58,27 @@ def build_minhash_index(docs: DataFrame, path: str, n: int = 3) -> None:
     stale marker would silently skip the new run's index appends, and
     every cross-batch pair involving those documents would be missing
     with no error anywhere."""
-    band_rows(docs, n).withColumn(
-        "ingest_batch", F.lit(-1).cast("long")
-    ).write.mode("overwrite").partitionBy("band").parquet(path + "/bands")
     shutil.rmtree(os.path.join(path, "_ingested"), ignore_errors=True)
+    bands = band_rows(docs).withColumn("ingest_batch", F.lit(-1).cast("long"))
+    write_index(path, "minhash", {}, {"bands": (bands, ("band",))})
 
 
 def update_minhash_index(
     new_docs: DataFrame,
     path: str,
-    n: int = 3,
     ingest_batch: int = -1,
     rows: DataFrame | None = None,
 ) -> None:
     """Append one ingest batch's banding rows. Cost ∝ |batch|: one
     signature pass over the new docs, blind append into the band
     partitions — the existing index is never read or rewritten.
-    `rows` passes precomputed band_rows(new_docs, n) (e.g. a persisted
+    `rows` passes precomputed band_rows(new_docs) (e.g. a persisted
     copy shared with the query side) so the signature fold is not
     recomputed."""
-    (rows if rows is not None else band_rows(new_docs, n)).withColumn(
+    bands = (rows if rows is not None else band_rows(new_docs)).withColumn(
         "ingest_batch", F.lit(ingest_batch).cast("long")
-    ).write.mode("append").partitionBy("band").parquet(path + "/bands")
+    )
+    write_index(path, "minhash", {}, {"bands": (bands, ("band",))}, append=True)
 
 
 def compact_minhash_index(spark: SparkSession, path: str) -> dict:
@@ -156,7 +158,6 @@ def query_minhash_index(
     spark: SparkSession,
     batch: DataFrame,
     path: str,
-    n: int = 3,
     max_bucket: int | None = None,
     max_ingest_batch: int | None = None,
     rows: DataFrame | None = None,
@@ -167,7 +168,7 @@ def query_minhash_index(
     `max_ingest_batch` pins an as-of-batch view of the index (rows
     appended by later batches are excluded) — what makes a replayed
     micro-batch produce byte-identical output. `rows` passes
-    precomputed band_rows(batch, n) (ideally persisted: the query plan
+    precomputed band_rows(batch) (ideally persisted: the query plan
     uses the batch side twice — semi-join prune + final join — and a
     caller like IngestDedupSink shares the same rows with the index
     append, collapsing three signature folds into one).
@@ -177,11 +178,11 @@ def query_minhash_index(
     buckets larger than the cap via a streaming count before the join
     (boilerplate band keys are noise for near-dup anyway — the same
     stop-shingle argument as dedup.ngram_jaccard_pairs)."""
-    idx = spark.read.parquet(path + "/bands")
+    idx = open_index(spark, path, "minhash")[1]("bands")
     if max_ingest_batch is not None:
         idx = idx.filter(F.col("ingest_batch") <= max_ingest_batch)
     idx = idx.select("band", "key", F.col("doc_id").alias("match_id"))
-    qb = (rows if rows is not None else band_rows(batch, n)).select(
+    qb = (rows if rows is not None else band_rows(batch)).select(
         "band", "key", F.col("doc_id").alias("query_id")
     )
     # prune the index to buckets the BATCH touches before anything
@@ -234,21 +235,21 @@ class IngestDedupSink:
     which the pair distinct absorbs and the count-distinct bucket cap
     ignores), and the candidate output is overwritten per batch_id,
     never appended. Markers are cleared by build_minhash_index, so a
-    rebuilt index never skips appends for reused batch ids."""
+    rebuilt index never skips appends for reused batch ids. On an
+    `index_dir` with no index, the first batch builds an empty one
+    (publishing its manifest) before its append."""
 
     def __init__(
         self,
         spark: SparkSession,
         index_dir: str,
         out_dir: str,
-        n: int = 3,
         max_bucket: int | None = None,
         auto_compact_files: int | None = 512,
     ) -> None:
         self.spark = spark
         self.index_dir = index_dir
         self.out_dir = out_dir
-        self.n = n
         self.max_bucket = max_bucket
         # auto_compact_files (VERDICT r14 #6, guide §6): after a
         # batch's append+query, if the band partitions hold more than
@@ -276,20 +277,17 @@ class IngestDedupSink:
         # missing: repair it before the marker check skips the append
         # and the query or the file-count threshold reads the void, and
         # delete the sidecar copy a heal (this one or a reader's) left
-        settle_swap(os.path.join(self.index_dir, "bands"))
+        if not settle_swap(os.path.join(self.index_dir, "bands")):
+            build_minhash_index(batch.limit(0), self.index_dir)
         # ONE persisted signature pass per micro-batch: without it the
         # banding fold runs three times (index append + the query
         # plan's two uses of the batch side)
-        rows = band_rows(batch, self.n).persist()
+        rows = band_rows(batch).persist()
         try:
             marker = self._marker(batch_id)
             if not os.path.exists(marker):
                 update_minhash_index(
-                    batch,
-                    self.index_dir,
-                    self.n,
-                    ingest_batch=batch_id,
-                    rows=rows,
+                    batch, self.index_dir, ingest_batch=batch_id, rows=rows
                 )
                 os.makedirs(os.path.dirname(marker), exist_ok=True)
                 with open(marker, "w") as f:
@@ -298,7 +296,6 @@ class IngestDedupSink:
                 self.spark,
                 batch,
                 self.index_dir,
-                self.n,
                 self.max_bucket,
                 max_ingest_batch=batch_id,
                 rows=rows,

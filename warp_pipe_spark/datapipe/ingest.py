@@ -28,6 +28,7 @@ from warp_pipe_spark.datapipe.text import (
 from warp_pipe_spark.io import (
     committed_batch_dirs,
     compact_dataset,
+    open_index,
     settle_swap,
     swapped_batch_dirs,
 )
@@ -174,9 +175,8 @@ class DsirGateSink(CorpusQualityGateSink):
     batch_id redelivery contract, same accepted()/rejected()/compact()
     surface inherited unchanged).
 
-    The ratio table and its n_buckets are loaded ONCE at construction
-    (a long-lived tail must not re-read the parquet and re-count the
-    modulus per micro-batch); per-batch cost is one batch explode, one
+    The index is opened ONCE at construction, from its manifest and
+    with no Spark job; per-batch cost is one batch explode, one
     broadcast join against the ≤n_buckets table, one batch-keyed
     aggregate — O(batch), no state reads, no corpus joins."""
 
@@ -189,8 +189,8 @@ class DsirGateSink(CorpusQualityGateSink):
     ) -> None:
         super().__init__(spark, base_dir)
         self.min_logw_micro = int(min_logw_micro)
-        self._ratio = spark.read.parquet(index_path)
-        self._n_buckets = self._ratio.count()
+        params, read = open_index(spark, index_path, "dsir")
+        self._ratio, self._n_buckets = read("ratio"), params["n_buckets"]
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         from warp_pipe_spark.datapipe.sampling import dsir_score_against
@@ -225,8 +225,8 @@ class BloomGateSink(CorpusQualityGateSink):
     unchanged).
 
     The index is a write_bloom directory — m_bits/k_hashes travel
-    WITH it (re-supplied parameters that disagreed with the build
-    would silently false-negative, the r14 review finding). The
+    WITH it in its manifest (re-supplied parameters that disagreed
+    with the build would silently false-negative). The
     packed word table is materialized into the m_bits/8-byte numpy
     bitmap and broadcast ONCE at construction — a long-lived tail
     must not re-read the index parquet, rebuild the bitmap, or leak

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from warp_pipe_spark.io import open_index, write_index
+
 
 def _doc_tokens(docs: DataFrame) -> DataFrame:
     toks = F.split(F.col("text"), " ")
@@ -64,6 +66,15 @@ def bm25_topk(
     )
     tf = hits.groupBy("doc_id", "dl", "term").agg(F.count("*").alias("tf"))
     df_ = tf.groupBy("term").agg(F.count("*").alias("df"))
+    return _bm25_rank(tf, df_, stats, k1, b, top_k)
+
+
+def _bm25_rank(
+    tf: DataFrame, df_: DataFrame, stats: DataFrame, k1: float, b: float, top_k: int
+) -> DataFrame:
+    """The BM25 arithmetic and top-k of both bm25_topk paths, over
+    (doc_id, dl, term, tf) postings, per-term df and the one-row
+    (n_docs, avgdl) corpus stats."""
     scored = tf.join(F.broadcast(df_), "term").join(F.broadcast(stats))
     idf = F.log(
         F.lit(1.0)
@@ -75,7 +86,7 @@ def bm25_topk(
     per_term = scored.select(
         "doc_id", "term", (idf * tf_part).alias("term_score")
     )
-    ranked = (
+    return (
         per_term.groupBy("doc_id")
         .agg(
             F.count("*").alias("n_terms_hit"),
@@ -84,7 +95,6 @@ def bm25_topk(
         .orderBy(F.col("score").desc(), F.col("doc_id").asc())
         .limit(top_k)
     )
-    return ranked
 
 
 def tfidf_top_terms(docs: DataFrame, top_k: int = 3) -> DataFrame:
@@ -149,10 +159,27 @@ def build_text_index(
     bm25_topk's exact arithmetic: n_docs = count(*) over ALL docs
     (NULL text included), avgdl = sum(dl)/count(dl) over tokenized
     rows only, so indexed and non-indexed scores agree bit-for-bit
-    (pytest-pinned). n_term_buckets is PERSISTED on every stats row —
-    queries and updates read it from the index instead of trusting a
-    re-supplied parameter, because a modulus mismatch would silently
-    prune the WRONG partition dirs (missing postings, no error)."""
+    (pytest-pinned). n_term_buckets travels in the index manifest
+    (io.write_index): a modulus that disagreed with the build would
+    silently prune the WRONG partition dirs."""
+    _write_text_index(docs, path, n_term_buckets, append=False)
+
+
+def update_text_index(new_docs: DataFrame, path: str) -> None:
+    """Append an ingest batch to a persisted text index: postings, df
+    deltas, and stats partials all APPEND into place (the additive
+    layout makes the merge a query-time sum) — cost ∝ |batch| tokens,
+    the corpus is never re-read, and the bucket modulus is the
+    manifest's. The lexical twin of update_minhash_index /
+    update_ivf_index. After many small appends, io.compact_dataset on
+    each of postings/, df/ and stats/ rewrites every bucket dir down to
+    one file, committed through io.rewrite_and_swap (pause appends
+    while it runs)."""
+    params, _ = open_index(new_docs.sparkSession, path, "bm25")
+    _write_text_index(new_docs, path, params["n_term_buckets"], append=True)
+
+
+def _write_text_index(docs: DataFrame, path: str, n_term_buckets: int, append: bool):
     from warp_pipe_spark.datapipe.text import h32
 
     tokd = _doc_tokens(docs)
@@ -160,84 +187,17 @@ def build_text_index(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("dl").alias("dl_sum"),
         F.count("dl").alias("dl_cnt"),
-    ).withColumn("n_term_buckets", F.lit(n_term_buckets).cast("long"))
+    )
     posts = (
         tokd.select("doc_id", "dl", F.explode("toks").alias("term"))
         .groupBy("doc_id", "dl", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
         .withColumn("tbucket", h32(F.col("term")) % n_term_buckets)
     )
-    posts.write.mode("overwrite").partitionBy("tbucket").parquet(
-        path + "/postings"
-    )
-    (
-        posts.groupBy("tbucket", "term")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .write.mode("overwrite")
-        .partitionBy("tbucket")
-        .parquet(path + "/df")
-    )
-    stats.write.mode("overwrite").parquet(path + "/stats")
-
-
-def _index_n_buckets(spark, path: str) -> int:
-    """The modulus the index was BUILT with, read from the persisted
-    stats (one tiny parquet read, driver-side): every stats partial
-    carries the same value by construction; a mixed set means someone
-    appended with a different build — refuse loudly rather than prune
-    the wrong dirs."""
-    vals = [
-        r["n_term_buckets"]
-        for r in spark.read.parquet(path + "/stats")
-        .select("n_term_buckets")
-        .distinct()
-        .collect()
-    ]
-    if len(vals) != 1:
-        raise ValueError(
-            f"text index at {path} carries inconsistent n_term_buckets "
-            f"{sorted(vals)} — rebuild with build_text_index"
-        )
-    return int(vals[0])
-
-
-def update_text_index(new_docs: DataFrame, path: str) -> None:
-    """Append an ingest batch to a persisted text index: postings, df
-    deltas, and stats partials all APPEND into place (the additive
-    layout makes the merge a query-time sum) — cost ∝ |batch| tokens,
-    the corpus is never re-read. The lexical twin of
-    update_minhash_index / update_ivf_index. The bucket modulus comes
-    from the index itself (_index_n_buckets) — an append can never
-    write under a different partitioning than the build. After many
-    small appends, io.compact_dataset on each of postings/, df/ and
-    stats/ rewrites every bucket dir down to one file, committed
-    through io.rewrite_and_swap (pause appends while it runs)."""
-    from warp_pipe_spark.datapipe.text import h32
-
-    n_term_buckets = _index_n_buckets(new_docs.sparkSession, path)
-    tokd = _doc_tokens(new_docs)
-    stats = tokd.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("dl").alias("dl_sum"),
-        F.count("dl").alias("dl_cnt"),
-    ).withColumn("n_term_buckets", F.lit(n_term_buckets).cast("long"))
-    posts = (
-        tokd.select("doc_id", "dl", F.explode("toks").alias("term"))
-        .groupBy("doc_id", "dl", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .withColumn("tbucket", h32(F.col("term")) % n_term_buckets)
-    )
-    posts.write.mode("append").partitionBy("tbucket").parquet(
-        path + "/postings"
-    )
-    (
-        posts.groupBy("tbucket", "term")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .write.mode("append")
-        .partitionBy("tbucket")
-        .parquet(path + "/df")
-    )
-    stats.write.mode("append").parquet(path + "/stats")
+    df_ = posts.groupBy("tbucket", "term").agg(F.count(F.lit(1)).alias("df"))
+    parts = ("tbucket",)
+    datasets = {"postings": (posts, parts), "df": (df_, parts), "stats": (stats, ())}
+    write_index(path, "bm25", {"n_term_buckets": n_term_buckets}, datasets, append)
 
 
 def bm25_topk_indexed(
@@ -256,53 +216,27 @@ def bm25_topk_indexed(
     the summed additive stats — identical output to the non-indexed
     path over the same corpus (pytest-pinned), at I/O cost
     ∝ |query's posting lists| instead of |corpus|. The bucket modulus
-    is read from the index (one tiny stats read) — a caller-supplied
-    value that disagreed with the build would silently prune the
-    wrong dirs."""
+    and the schemas come from the index manifest: no Spark job runs
+    before the caller's action."""
     from warp_pipe_spark.datapipe.text import h32_py
 
     if not query_terms:
         return spark.createDataFrame(
             [], "doc_id long, n_terms_hit long, score double"
         )
-    n_term_buckets = _index_n_buckets(spark, path)
-    bks = sorted({h32_py(t) % n_term_buckets for t in query_terms})
-    post = (
-        spark.read.parquet(path + "/postings")
-        .filter(F.col("tbucket").isin(bks))
-        .filter(F.col("term").isin(query_terms))
-    )
+    params, read = open_index(spark, path, "bm25")
+    bks = sorted({h32_py(t) % params["n_term_buckets"] for t in query_terms})
+    post = read("postings", "tbucket", bks).filter(F.col("term").isin(query_terms))
     df_ = (
-        spark.read.parquet(path + "/df")
-        .filter(F.col("tbucket").isin(bks))
+        read("df", "tbucket", bks)
         .filter(F.col("term").isin(query_terms))
         .groupBy("term")
         .agg(F.sum("df").alias("df"))
     )
-    stats = spark.read.parquet(path + "/stats").agg(
+    stats = read("stats").agg(
         F.sum("n_docs").alias("n_docs"),
         (
             F.sum("dl_sum").cast("double") / F.sum("dl_cnt").cast("double")
         ).alias("avgdl"),
     )
-    scored = post.join(F.broadcast(df_), "term").join(F.broadcast(stats))
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs") - F.col("df") + F.lit(0.5))
-        / (F.col("df") + F.lit(0.5))
-    )
-    tf_part = (F.col("tf") * (1.0 + k1)) / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
-    )
-    per_term = scored.select(
-        "doc_id", "term", (idf * tf_part).alias("term_score")
-    )
-    return (
-        per_term.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_terms_hit"),
-            F.round(F.sum("term_score"), 6).alias("score"),
-        )
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(top_k)
-    )
+    return _bm25_rank(post, df_, stats, k1, b, top_k)

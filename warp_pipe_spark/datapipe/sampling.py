@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from warp_pipe_spark.io import explode_nonnull
+from warp_pipe_spark.io import explode_nonnull, open_index, write_index
 
 
 def _hash_rank(col) -> F.Column:
@@ -747,7 +747,8 @@ def build_dsir_index(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> None:
-    """Persist the DSIR log-ratio table — the train/serve split the
+    """Persist the DSIR log-ratio table at `<path>/ratio`, with
+    n_buckets in the index manifest — the train/serve split the
     persisted IVF and MinHash indexes already have: the two corpus
     passes (raw + target bucket counts) run ONCE batch-side, and any
     later batch (a streaming foreachBatch micro-batch, a new crawl
@@ -776,7 +777,7 @@ def build_dsir_index(
             F.sum("q_cnt").alias("q_tot"), F.sum("p_cnt").alias("p_tot")
         )
     )
-    (
+    ratio = (
         qp.crossJoin(totals)
         .select(
             "bucket",
@@ -801,9 +802,8 @@ def build_dsir_index(
             .cast("long")
             .alias("lr_micro"),
         )
-        .write.mode("overwrite")
-        .parquet(path)
     )
+    write_index(path, "dsir", {"n_buckets": n_buckets}, {"ratio": (ratio, ())})
 
 
 def dsir_score_indexed(
@@ -815,14 +815,15 @@ def dsir_score_indexed(
 ) -> DataFrame:
     """Score a batch against a persisted DSIR index: stateless — one
     explode of the BATCH, one broadcast join against the ≤n_buckets
-    ratio table, one batch-keyed aggregate. n_buckets is recovered
-    from the full-domain table itself (count of its rows), so callers
-    cannot desynchronize the hash modulus from the index they load.
+    ratio table, one batch-keyed aggregate. n_buckets comes from the
+    index manifest, and no Spark job runs before the caller's action.
     Returns (id_col, logw_micro); fit for foreachBatch ingest gating
     (filter on logw_micro ≥ threshold) the way the quality-gate and
     ingest-dedup sinks consume their frozen models."""
-    ratio = spark.read.parquet(path)
-    return dsir_score_against(batch, ratio, ratio.count(), id_col, text_col)
+    params, read = open_index(spark, path, "dsir")
+    return dsir_score_against(
+        batch, read("ratio"), params["n_buckets"], id_col, text_col
+    )
 
 
 def dsir_score_against(
@@ -833,9 +834,8 @@ def dsir_score_against(
     text_col: str = "text",
 ) -> DataFrame:
     """Score a batch against an ALREADY-LOADED ratio table — the
-    long-lived-sink path (DsirGateSink loads the table and its
-    n_buckets once at construction instead of re-reading the parquet
-    and re-counting per micro-batch). dsir_score_indexed is the
+    long-lived-sink path (DsirGateSink opens the index once at
+    construction instead of per micro-batch). dsir_score_indexed is the
     one-shot wrapper."""
     b = _dsir_buckets(batch, n_buckets, id_col, text_col)
     return (

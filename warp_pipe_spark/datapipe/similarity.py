@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from warp_pipe_spark.datapipe.dedup import _cast_double, cosine_v
+from warp_pipe_spark.io import open_index, write_index
 
 
 def topk_cosine(
@@ -1382,9 +1383,11 @@ def build_ivf_index(
 ) -> None:
     """Persist an IVF index: `<path>/cells` holds every vector
     partitioned BY ITS CELL (partitionBy(cent_id)), `<path>/centroids`
-    the centroid vectors. Searching then reads only the probed cells'
-    FILES — IVF's "touch n_probe/n_centroids of the data" realized as
-    parquet partition pruning, the property that matters at 100 TB
+    the centroid vectors, and the index manifest (io.write_index) the
+    requested n_centroids, which bounds the codebook. Searching then
+    reads only the probed cells' FILES — IVF's "touch
+    n_probe/n_centroids of the data" realized as parquet partition
+    pruning, the property that matters at 100 TB
     (the unprobed 70%+ of the corpus is never opened, not merely
     filtered after a full scan).
 
@@ -1400,10 +1403,9 @@ def build_ivf_index(
         cent = _ivf_centroids(embeddings, n_centroids, step=max(1, n // n_centroids))
     else:
         cent = _ivf_centroids(embeddings, n_centroids)
-    cent.write.mode("overwrite").parquet(path + "/centroids")
-    _ivf_assign(embeddings, cent).write.mode("overwrite").partitionBy(
-        "cent_id"
-    ).parquet(path + "/cells")
+    cells = _ivf_assign(embeddings, cent)
+    datasets = {"centroids": (cent, ()), "cells": (cells, ("cent_id",))}
+    write_index(path, "ivf", {"n_centroids": n_centroids}, datasets)
 
 
 def update_ivf_index(new_embeddings: DataFrame, path: str) -> None:
@@ -1414,11 +1416,9 @@ def update_ivf_index(new_embeddings: DataFrame, path: str) -> None:
     dedup_index.update_minhash_index). Centroids stay fixed; after
     heavy drift (cells ballooning past the √N balance), rebuild with
     build_ivf_index — the standard IVF maintenance tradeoff."""
-    spark = new_embeddings.sparkSession
-    cent = spark.read.parquet(path + "/centroids")
-    _ivf_assign(new_embeddings, cent).write.mode("append").partitionBy(
-        "cent_id"
-    ).parquet(path + "/cells")
+    params, read = open_index(new_embeddings.sparkSession, path, "ivf")
+    cells = _ivf_assign(new_embeddings, read("centroids"))
+    write_index(path, "ivf", params, {"cells": (cells, ("cent_id",))}, append=True)
 
 
 def ivf_topk_indexed(
@@ -1436,17 +1436,29 @@ def ivf_topk_indexed(
     metadata, not data) is collected and inlined as a LITERAL
     partition predicate, so the cells scan shows
     `PartitionFilters: [cent_id IN (...)]` and unprobed directories
-    are never listed. Output (query_id, neighbor_id, rank, cos_sim) —
-    identical to ivf_topk_cosine on the same parameters.
+    are never listed. That collect is the only Spark job before the
+    caller's action: the datasets are read with the manifest's schemas.
+    Output (query_id, neighbor_id, rank, cos_sim) — identical to
+    ivf_topk_cosine on the same parameters.
 
     The collect is bounded: what reaches the driver is the DISTINCT
     probed cent_ids, which can never exceed the codebook size — so the
-    guard is on n_centroids vs `max_probe_collect` (default 100k — a
-    few MB of ints), independent of how many queries are in the batch.
-    Beyond that the literal-predicate trick stops being planning
-    metadata; use a `probes.join(cells, "cent_id")` plan without the
-    partition-pruning inline (same results, full cell listing)."""
-    cent = spark.read.parquet(index_path + "/centroids")
+    guard is on the manifest's n_centroids vs `max_probe_collect`
+    (default 100k — a few MB of ints), independent of how many queries
+    are in the batch. Beyond that the literal-predicate trick stops
+    being planning metadata; use a `probes.join(cells, "cent_id")`
+    plan without the partition-pruning inline (same results, full cell
+    listing)."""
+    params, read = open_index(spark, index_path, "ivf")
+    if params["n_centroids"] > max_probe_collect:
+        raise ValueError(
+            f"ivf_topk_indexed: codebook has up to {params['n_centroids']} "
+            f"centroids, exceeding max_probe_collect ({max_probe_collect}); "
+            "the driver collect is of distinct probed cent_ids (bounded by "
+            "the codebook) — probe via a cent_id join without the "
+            "inlined partition predicate instead"
+        )
+    cent = read("centroids")
     q = queries.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
@@ -1461,29 +1473,29 @@ def ivf_topk_indexed(
         .filter(F.col("crank") <= n_probe)
         .select("query_id", "q_emb", "cent_id")
     )
-    n_cells = cent.count()
-    if n_cells > max_probe_collect:
-        raise ValueError(
-            f"ivf_topk_indexed: codebook has {n_cells} centroids, "
-            f"exceeding max_probe_collect ({max_probe_collect}); the "
-            "driver collect is of distinct probed cent_ids (bounded by "
-            "the codebook) — probe via a cent_id join without the "
-            "inlined partition predicate instead"
-        )
     probed_cells = sorted({r["cent_id"] for r in probes.select("cent_id").distinct().collect()})
-    cells = spark.read.parquet(index_path + "/cells").filter(
-        F.col("cent_id").isin(probed_cells)
-    )
-    cands = probes.join(cells, "cent_id").filter(F.col("query_id") != F.col("vec_id"))
+    return _ivf_search(probes, read("cells", "cent_id", probed_cells), k)
+
+
+def _ivf_search(probes: DataFrame, cells: DataFrame, k: int) -> DataFrame:
+    """Exact top-k inside the probed cells: each (query_id, q_emb,
+    cent_id) probe scores every other vector of its cell."""
     sim = F.round(cosine_v(F.col("q_emb"), F.col("embedding")), 6)
-    ranked = cands.select(
-        "query_id", F.col("vec_id").alias("neighbor_id"), sim.alias("cos_sim")
-    ).dropDuplicates(["query_id", "neighbor_id"])
-    w2 = Window.partitionBy("query_id").orderBy(
+    return _ivf_rank(
+        probes.join(cells, "cent_id")
+        .filter(F.col("query_id") != F.col("vec_id"))
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), sim.alias("cos_sim"))
+        .dropDuplicates(["query_id", "neighbor_id"]),
+        k,
+    )
+
+
+def _ivf_rank(ranked: DataFrame, k: int) -> DataFrame:
+    w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id").asc()
     )
     return (
-        ranked.withColumn("rank", F.row_number().over(w2))
+        ranked.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", "cos_sim")
     )
@@ -1510,7 +1522,6 @@ def ivf_topk_cosine(
     oracle can replay the probe decisions exactly. A `cand=` must be an
     ivf_candidates set built with this call's n_queries/n_centroids/
     n_probe (ValueError otherwise)."""
-    sim = F.round(cosine_v(F.col("q_emb"), F.col("embedding")), 6)
     if cand is not None:
         _check_ivf_cand(cand, n_queries, n_centroids, n_probe)
         # precomputed candidate set (a pinned ivf_candidates): attach
@@ -1523,40 +1534,27 @@ def ivf_topk_cosine(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_emb"),
         )
-        ranked = (
+        sim = F.round(cosine_v(F.col("q_emb"), F.col("embedding")), 6)
+        return _ivf_rank(
             cand.join(embeddings.select("vec_id", "embedding"), "vec_id")
             .join(F.broadcast(q), "query_id")
             .select(
                 "query_id",
                 F.col("vec_id").alias("neighbor_id"),
                 sim.alias("cos_sim"),
-            )
+            ),
+            k,
         )
-    else:
-        cent = _ivf_centroids(embeddings, n_centroids)
-        scored = embeddings.crossJoin(F.broadcast(cent)).withColumn(
-            "csim", F.round(cosine_v(F.col("embedding"), F.col("cent_emb")), 6)
-        )
-        w = Window.partitionBy("vec_id").orderBy(F.col("csim").desc(), F.col("cent_id").asc())
-        assign = _ivf_assign(embeddings, cent)
-        # queries probe n_probe nearest centroids
-        probes = (
-            scored.filter(F.col("vec_id") < n_queries)
-            .withColumn("crank", F.row_number().over(w))
-            .filter(F.col("crank") <= n_probe)
-            .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"), "cent_id")
-        )
-        cands = probes.join(assign, "cent_id").filter(
-            F.col("query_id") != F.col("vec_id")
-        )
-        ranked = cands.select(
-            "query_id", F.col("vec_id").alias("neighbor_id"), sim.alias("cos_sim")
-        ).dropDuplicates(["query_id", "neighbor_id"])
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
+    cent = _ivf_centroids(embeddings, n_centroids)
+    scored = embeddings.crossJoin(F.broadcast(cent)).withColumn(
+        "csim", F.round(cosine_v(F.col("embedding"), F.col("cent_emb")), 6)
     )
-    return (
-        ranked.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
+    w = Window.partitionBy("vec_id").orderBy(F.col("csim").desc(), F.col("cent_id").asc())
+    # queries probe n_probe nearest centroids
+    probes = (
+        scored.filter(F.col("vec_id") < n_queries)
+        .withColumn("crank", F.row_number().over(w))
+        .filter(F.col("crank") <= n_probe)
+        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"), "cent_id")
     )
+    return _ivf_search(probes, _ivf_assign(embeddings, cent), k)

@@ -21,6 +21,7 @@ form is produced by `changesets_as_audit_log` (to_json) on top.
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import shutil
@@ -29,6 +30,7 @@ from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -521,23 +523,100 @@ def rewrite_and_swap(path: str, write: Callable[[str], _T]) -> _T:
     return out
 
 
-def publish_file(path: str, chunks: Iterable[bytes]) -> None:
+def publish_file(
+    path: str, chunks: Iterable[bytes], mtime_ns: int | None = None
+) -> None:
     """Durably publish one small driver-side file: write `chunks` to
     `<dir>/.<name>.tmp`, flush, fsync, then `os.replace` it onto
     `path`. The commit protocol behind the state-sink pointer, the
     keyset offset, the history-log rewrite, the drop-dir files of the
-    logical-replication tails and the live-tail bootstrap seed. A
-    reader sees the old file or the whole new one, never a torn one;
-    the leading dot keeps the tmp file out of Spark's file-source
-    listing. Single-writer per `path`."""
+    logical-replication tails, the live-tail bootstrap seed and the
+    index manifests. A reader sees the old file or the whole new one,
+    never a torn one; the leading dot keeps the tmp file out of Spark's
+    file-source listing. `mtime_ns`, when given, is set on the file
+    before it becomes visible. Single-writer per `path`."""
     head, name = os.path.split(path)
     tmp = os.path.join(head, f".{name}.tmp")
     with open(tmp, "wb") as f:
         for chunk in chunks:
             f.write(chunk)
         f.flush()
+        if mtime_ns is not None:
+            os.utime(f.fileno(), ns=(mtime_ns, mtime_ns))
         os.fsync(f.fileno())
     os.replace(tmp, path)
+
+
+#: The manifest of a persisted index: its kind, build parameters and
+#: each dataset's schema (write_index).
+INDEX_MANIFEST = "_INDEX.json"
+
+
+def _index_manifest(path: str, kind: str) -> dict:
+    try:
+        with open(os.path.join(path, INDEX_MANIFEST)) as f:
+            m = json.load(f)
+    except FileNotFoundError:
+        raise FileNotFoundError(
+            f"no {kind} index at {path}: {INDEX_MANIFEST} is missing (not "
+            "built, or its build did not finish)"
+        ) from None
+    if m["kind"] != kind:
+        raise ValueError(f"{path} holds a {m['kind']} index, not a {kind} index")
+    return m
+
+
+def write_index(path: str, kind: str, params: dict, datasets: dict, append=False):
+    """Write `datasets`, `{name: (frame, partition columns)}`, as the
+    parquet datasets `<path>/<name>` of a persisted index: the commit
+    protocol of all five. A build deletes the manifest
+    `<path>/_INDEX.json`, overwrites the datasets, then publishes the
+    manifest (publish_file) with `kind`, `params` and each dataset's
+    read schema, taken from the frame's plan with no job. Parameters
+    thus travel with the index (one re-supplied at query time that
+    disagreed with the build would silently give wrong results), and a
+    build that dies midway leaves no manifest, so open_index refuses
+    the index instead of pairing new data with old parameters. An
+    append leaves the manifest as it is; its `params` must be the
+    manifest's."""
+    manifest = os.path.join(path, INDEX_MANIFEST)
+    if append and _index_manifest(path, kind)["params"] != params:
+        raise ValueError(f"append to {path} with other parameters: {params}")
+    if not append and os.path.exists(manifest):
+        os.remove(manifest)
+    mode, schemas = "append" if append else "overwrite", {}
+    for name, (df, part) in datasets.items():
+        df.write.mode(mode).partitionBy(*part).parquet(os.path.join(path, name))
+        # a read returns the partition columns last
+        fields = [f for f in df.schema.fields if f.name not in part]
+        schemas[name] = StructType(fields + [df.schema[c] for c in part]).jsonValue()
+    if not append:
+        index = {"kind": kind, "params": params, "schemas": schemas}
+        publish_file(manifest, [json.dumps(index).encode()])
+
+
+def open_index(spark: SparkSession, path: str, kind: str) -> tuple[dict, Callable]:
+    """(params, read) of the `kind` index at `path`, from its manifest
+    alone, so opening launches no Spark job. `read(name)` reads a
+    dataset with the manifest's schema; `read(name, col, values)` lists
+    only the existing `col=<value>` partition dirs and filters on them.
+    A missing manifest raises FileNotFoundError naming the path, one of
+    another kind ValueError."""
+    m = _index_manifest(path, kind)
+
+    def read(name: str, col: str | None = None, values=()) -> DataFrame:
+        root = os.path.join(path, name)
+        schema = StructType.fromJson(m["schemas"][name])
+        reader = spark.read.schema(schema)
+        if col is None:
+            return reader.parquet(root)
+        dirs = [d for v in values if os.path.isdir(d := f"{root}/{col}={v}")]
+        if not dirs:
+            return spark.createDataFrame([], schema)
+        pruned = reader.option("basePath", root).parquet(*dirs)
+        return pruned.filter(F.col(col).isin(list(values)))
+
+    return m["params"], read
 
 
 def committed_batch_dirs(root: str) -> list[str]:

@@ -537,14 +537,16 @@ def _tail_drop_dir(
     `feed(msg, lines)` appends each XLogData frame's finished JSONL
     lines (if any) to `lines` and returns True when they are due: they
     are written as one `lr_<lsn>_<seq>.jsonl` file (io.publish_file, so
-    `wal2json_stream` never sees a torn file), and only after that
-    rename is the received LSN confirmed — even with nothing written (a
-    commit without a document still consumed WAL). The LSN is the
-    received message's end (wal_start + payload length), never
-    XLogData.wal_end: that is ServerWALEnd, the server's WAL head, and
-    confirming it skips undelivered transactions after a restart. It
-    is capped at `confirm_floor()` when that is not None. `done()`,
-    asked after each frame, ends the drain.
+    `wal2json_stream` never sees a torn file; its millisecond mtime is
+    past the previous file's, since Spark's file source orders files by
+    mtime alone), and only after that rename is the received LSN
+    confirmed — even with nothing written (a commit without a document
+    still consumed WAL). The LSN is the received message's end
+    (wal_start + payload length), never XLogData.wal_end: that is
+    ServerWALEnd, the server's WAL head, and confirming it skips
+    undelivered transactions after a restart. It is capped at
+    `confirm_floor()` when that is not None. `done()`, asked after each
+    frame, ends the drain.
 
     `idle_timeout_s` stops cleanly (writing and confirming the pending
     lines) once the socket has been silent that long — "nothing new
@@ -559,15 +561,17 @@ def _tail_drop_dir(
     redelivery of the unconfirmed tail is absorbed downstream."""
     os.makedirs(drop_dir, exist_ok=True)
     lines: list[bytes] = []
-    hi_lsn, seq = start_lsn, 0
+    hi_lsn, seq, mtime_ms = start_lsn, 0, 0
 
     def flush() -> bool:
-        nonlocal seq
+        nonlocal seq, mtime_ms
         if not lines:
             return False
+        mtime_ms = max(time.time_ns() // 10**6, mtime_ms + 1)
         publish_file(
             os.path.join(drop_dir, f"lr_{hi_lsn:016x}_{seq}.jsonl"),
             [b"\n".join(lines) + b"\n"],
+            mtime_ns=mtime_ms * 10**6,
         )
         seq += 1
         lines.clear()
