@@ -3050,7 +3050,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # pin is inside the timed query, recomputed per invocation.
         rows = band_rows(batch, 3).localCheckpoint(eager=True)
         build_minhash_index(docs.filter(F.col("doc_id") % 10 != 7), path)
-        update_minhash_index(batch, path, rows=rows)
+        update_minhash_index(batch, path, 0, rows=rows)
         return query_minhash_index(spark, batch, path, rows=rows)
 
     def events_value_hist(spark, sf):

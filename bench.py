@@ -352,7 +352,7 @@ def main() -> None:
     build_minhash_index(docs.filter(F.col("doc_id") % 10 != 7), mh_dir)
     aux["mhidx_build"] = round(time.time() - t0, 3)
     t0 = time.time()
-    update_minhash_index(batch, mh_dir)
+    update_minhash_index(batch, mh_dir, 0)
     query_minhash_index(spark, batch, mh_dir).write.format("noop").mode(
         "overwrite"
     ).save()

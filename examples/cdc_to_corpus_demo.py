@@ -131,7 +131,7 @@ def main() -> None:
         f"bloom gate on the delta: {n_novel} novel / "
         f"{n_ins + n_upd - n_novel} already-seen (map-side, zero shuffles)"
     )
-    update_bloom(novel, bloom_dir)
+    update_bloom(novel, bloom_dir, 0)
     words2, _, _ = read_bloom(spark, bloom_dir)
     still_novel = (
         bloom_gate_packed(
@@ -143,7 +143,7 @@ def main() -> None:
     assert still_novel == 0, still_novel
     print("update_bloom: appended; the whole delta now reads already-seen")
 
-    update_minhash_index(delta, mh_dir)
+    update_minhash_index(delta, mh_dir, 0)
     cands = query_minhash_index(spark, inserts, mh_dir).count()
     print(f"MinHash index: delta bands appended; {cands} near-dup "
           "candidates served for the inserted docs")
@@ -152,7 +152,7 @@ def main() -> None:
     # delete+reinsert compaction, deliberately not silent)
     from warp_pipe_spark.datapipe.retrieval import update_text_index
 
-    update_text_index(inserts, tidx_dir)
+    update_text_index(inserts, tidx_dir, 0)
     grown = v1.unionByName(inserts)
     terms = ["the", "data", "pipeline"]
     fresh_dir = os.path.join(work, "tidx_fresh")

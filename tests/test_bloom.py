@@ -228,7 +228,7 @@ def test_update_bloom_append_equals_rebuild(spark, ref_keys, batch, tmp_path):
     write_bloom(
         ref_keys.filter("key % 2 = 0"), inc, m_bits=1 << 14, k_hashes=4
     )
-    update_bloom(ref_keys.filter("key % 2 = 1"), inc)
+    update_bloom(ref_keys.filter("key % 2 = 1"), inc, 0)
     words, m_bits, k_hashes = read_bloom(spark, inc)
     # the OR-fold leaves unique word_idx rows
     assert words.groupBy("word_idx").count().filter("count > 1").count() == 0

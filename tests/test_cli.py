@@ -146,6 +146,7 @@ def test_cli_quality_gate(spark, tmp_path):
     import io
 
     from warp_pipe_spark.__main__ import main
+    from warp_pipe_spark.datapipe.ingest import CorpusQualityGateSink
 
     docs_dir = str(tmp_path / "docs")
     # 60 distinct words -> passes gopher's n_words >= 50; short doc fails
@@ -155,18 +156,20 @@ def test_cli_quality_gate(spark, tmp_path):
         "overwrite"
     ).parquet(docs_dir)
 
+    first = str(tmp_path / "first")
+    spark.createDataFrame(rows[1:], "doc_id LONG, text STRING").write.parquet(first)
     out = str(tmp_path / "gated")
-    buf = io.StringIO()
-    rc = main(["quality-gate", "--docs", docs_dir, "--out", out], out=buf)
-    assert rc == 0
+    for docs in (first, docs_dir):  # a rerun replaces the output
+        buf = io.StringIO()
+        rc = main(["quality-gate", "--docs", docs, "--out", out], out=buf)
+        assert rc == 0
     msg = buf.getvalue()
     assert "-> " + out in msg and "accepted" in msg
-    rej = {
-        (r["doc_id"], r["reject_reason"])
-        for r in spark.read.parquet(out + "/reject/batch_0").collect()
-    }
+    gated = CorpusQualityGateSink(spark, out)
+    rej = {(r["doc_id"], r["reject_reason"]) for r in gated.rejected().collect()}
     assert any(d == 2 and "gopher" in rr for d, rr in rej)
-    acc = spark.read.parquet(out + "/accept/batch_0")
+    acc = gated.accepted()
+    assert acc.count() + len(rej) == 2  # exactly the second run's docs
     if acc.count():  # accepted docs are scrubbed
         texts = [r["text"] for r in acc.collect()]
         assert all("bob@example.com" not in t for t in texts)

@@ -1,29 +1,34 @@
-"""Crash consistency of io.rewrite_and_swap, the one commit protocol
-behind every compaction (io.compact_dataset, store.retention_compact,
-dedup_index.compact_minhash_index).
+"""Crash consistency of the package's two commit protocols.
 
-Each caller is crashed at each os.rename of the swap and inside the
-trash rmtree. The crashed state must read as exactly the pre- or the
-post-compaction rows once a reader has healed it, and a retried
-compaction, entered in the unhealed crashed state, must converge to the
-post-compaction rows and leave no sidecar behind. A reader's heal
-deletes nothing, so the sink that owns the dataset deletes the sidecar
-a heal left on its next batch."""
+io.rewrite_and_swap, the two-rename swap behind io.compact_dataset and
+store.retention_compact: each caller is crashed at each os.rename of
+the swap and inside the trash rmtree. The crashed state must read as
+exactly the pre- or the post-compaction rows once a reader has healed
+it, and a retried compaction, entered in the unhealed crashed state,
+must converge to the post-compaction rows and leave no sidecar behind.
+
+The generation ledger (io.write_index / io.compact_index) behind every
+appended index and sink: an index append, a compaction and a gate-sink
+batch are each crashed inside the generation write, at publish_file's
+os.replace and inside a generation delete. A reader sees exactly the
+pre- or the post-commit state, the retry converges to what a run with
+no crash gives, and no unrecorded `_gen=` dir survives it."""
 
 import os
 import shutil
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql.readwriter import DataFrameWriter
 
 from warp_pipe_spark.datapipe.dedup_index import (
-    IngestDedupSink,
     build_minhash_index,
     compact_minhash_index,
     update_minhash_index,
 )
 from warp_pipe_spark.datapipe.ingest import CorpusQualityGateSink
-from warp_pipe_spark.io import compact_dataset, recover_swap
+from warp_pipe_spark.datapipe.retrieval import build_text_index, update_text_index
+from warp_pipe_spark.io import compact_dataset, index_manifest, open_index, recover_swap
 from warp_pipe_spark.store import retention_compact
 
 
@@ -35,37 +40,24 @@ class Crash(Exception):
     pass
 
 
-class _GateBatch:
-    """compact_dataset on one committed batch dir of a gate sink, read
-    back through the sink (io.committed_batch_dirs)."""
+class _PlainDataset:
+    """io.compact_dataset on a plain three-file dataset dir."""
 
     def build(self, spark, base):
-        accept = os.path.join(base, "accept")
-        for b in range(2):
-            spark.range(10 * b, 10 * b + 10).selectExpr(
-                "id AS doc_id", "concat('doc ', id) AS text"
-            ).repartition(3).write.parquet(os.path.join(accept, f"batch_{b}"))
+        docs = spark.range(20).selectExpr("id AS doc_id", "concat('doc ', id) AS text")
+        docs.repartition(3).write.parquet(self.swapped(base))
         rows = [(i, f"doc {i}") for i in range(20)]
         return rows, rows
 
     def swapped(self, base):
-        return os.path.join(base, "accept", "batch_1")
+        return os.path.join(base, "data")
 
     def compact(self, spark, base):
         compact_dataset(spark, self.swapped(base))
 
     def read(self, spark, base):
-        return _rows(CorpusQualityGateSink(spark, base).accepted())
-
-    def sink_batch(self, spark, base):
-        """One more gate-sink batch; returns the rows read back from
-        the batches before it."""
-        docs = spark.range(100, 104).selectExpr(
-            "id AS doc_id", "concat('new doc ', id) AS text"
-        )
-        sink = CorpusQualityGateSink(spark, base)
-        sink(docs, 2)
-        return _rows(sink.accepted().select("doc_id", "text").filter("doc_id < 100"))
+        recover_swap(self.swapped(base))
+        return _rows(spark.read.parquet(self.swapped(base)))
 
 
 class _Retention:
@@ -89,54 +81,6 @@ class _Retention:
         return _rows(spark.read.parquet(self.swapped(base)))
 
 
-class _MinhashIndex:
-    """dedup_index.compact_minhash_index on an index whose batch 0 was
-    appended twice (the replay duplicates compaction drops)."""
-
-    def build(self, spark, base):
-        docs = spark.createDataFrame(
-            [
-                (1, "the quick brown fox jumps over the lazy dog"),
-                (2, "the quick brown fox jumps over the lazy cat"),
-                (3, "an entirely different sentence about spark"),
-            ],
-            "doc_id LONG, text STRING",
-        )
-        idx = os.path.join(base, "idx")
-        build_minhash_index(docs.filter(F.col("doc_id") == 1), idx)
-        batch = docs.filter(F.col("doc_id") > 1)
-        update_minhash_index(batch, idx, ingest_batch=0)
-        update_minhash_index(batch, idx, ingest_batch=0)  # the replay
-        pre = self.read(spark, base)
-        post = sorted(set(pre))
-        assert len(post) < len(pre)
-        return pre, post
-
-    def swapped(self, base):
-        return os.path.join(base, "idx", "bands")
-
-    def compact(self, spark, base):
-        compact_minhash_index(spark, os.path.join(base, "idx"))
-
-    def read(self, spark, base):
-        recover_swap(self.swapped(base))
-        df = spark.read.parquet(self.swapped(base))
-        return _rows(df.select("band", "key", "doc_id", "ingest_batch"))
-
-    def sink_batch(self, spark, base):
-        """One more ingest-sink batch (id 7); returns the index rows of
-        the batches before it."""
-        docs = spark.createDataFrame(
-            [(4, "the quick brown fox jumps over the lazy dog again")],
-            "doc_id LONG, text STRING",
-        )
-        IngestDedupSink(spark, os.path.join(base, "idx"), os.path.join(base, "out"))(
-            docs, 7
-        )
-        df = spark.read.parquet(self.swapped(base)).filter("ingest_batch != 7")
-        return _rows(df.select("band", "key", "doc_id", "ingest_batch"))
-
-
 def _crash_rename(n, damage=None):
     """os.rename that raises on its n-th call, after `damage(src)`."""
     real, calls = os.rename, {"n": 0}
@@ -152,13 +96,13 @@ def _crash_rename(n, damage=None):
     return rename
 
 
-def _crash_trash_rmtree():
-    """shutil.rmtree that, on the swap's final trash delete, removes one
-    file and raises: a crash part-way through the delete."""
+def _crash_rmtree(hit):
+    """shutil.rmtree that, on its first call for a path `hit` accepts,
+    removes one file and raises: a crash part-way through the delete."""
     real = shutil.rmtree
 
     def rmtree(path, ignore_errors=False, *a, **kw):
-        if str(path).endswith("._trash") and not ignore_errors:
+        if hit(str(path)) and not ignore_errors:
             for root, _, files in os.walk(path):
                 if files:
                     os.remove(os.path.join(root, files[0]))
@@ -188,14 +132,14 @@ CRASHES = {
     # between the renames, no copy at all: restore the trash
     "rename_in_no_copy": ("rename", lambda: _crash_rename(2, _drop_copy), "pre"),
     # part-way through deleting the old copy: the swap is done
-    "rmtree_trash": ("rmtree", _crash_trash_rmtree, "post"),
+    "rmtree_trash": (
+        "rmtree",
+        lambda: _crash_rmtree(lambda p: p.endswith("._trash")),
+        "post",
+    ),
 }
 
-CALLERS = {
-    "compact_dataset": _GateBatch,
-    "retention_compact": _Retention,
-    "compact_minhash_index": _MinhashIndex,
-}
+CALLERS = {"compact_dataset": _PlainDataset, "retention_compact": _Retention}
 
 
 def _crashed(c, spark, base, monkeypatch, crash):
@@ -237,13 +181,13 @@ def test_compaction_crash_reads_pre_or_post_and_retry_converges(
 
 
 @pytest.mark.parametrize("crash", ["rename_in", "rename_in_no_copy", "rename_in_torn"])
-@pytest.mark.parametrize("caller", ["compact_dataset", "compact_minhash_index"])
-def test_sink_batch_after_reader_heal_deletes_the_sidecar(
+@pytest.mark.parametrize("caller", sorted(CALLERS))
+def test_compaction_after_reader_heal_deletes_the_sidecar(
     spark, tmp_path, monkeypatch, caller, crash
 ):
     c = CALLERS[caller]()
     base = str(tmp_path / "crashed")
-    _, _, seen = _crashed(c, spark, base, monkeypatch, crash)
+    _, post, seen = _crashed(c, spark, base, monkeypatch, crash)
     swapped = c.swapped(base)
 
     # the reader heals and leaves the other side where it was: the old
@@ -251,6 +195,155 @@ def test_sink_batch_after_reader_heal_deletes_the_sidecar(
     assert c.read(spark, base) == seen
     assert bool(_sidecars(swapped)) == (crash != "rename_in_no_copy")
 
-    # the sink's next batch deletes it and keeps every earlier row
-    assert c.sink_batch(spark, base) == seen
+    # the next compaction deletes it and converges
+    c.compact(spark, base)
+    assert c.read(spark, base) == post
     assert _sidecars(swapped) == []
+
+
+def _docs(spark):
+    words = ["the", "data", "pipeline", "spark", "index", "stream", "fox", "dog"]
+    rows = [
+        (i, " ".join(words[(i * j) % len(words)] for j in range(1, 12 + i % 5)))
+        for i in range(24)
+    ]
+    return spark.createDataFrame(rows, "doc_id LONG, text STRING")
+
+
+class _IndexAppend:
+    """update_text_index of batch 0 onto a built BM25 index. A crashed
+    writer's torn generation is left beside it, so the append's delete
+    of unrecorded generations runs (and is crashed) first."""
+
+    kind, writes, leftover = "bm25", 3, True
+
+    def build(self, spark, path):
+        build_text_index(_docs(spark).filter("doc_id % 2 = 0"), path)
+
+    def run(self, spark, path):
+        update_text_index(_docs(spark).filter("doc_id % 2 = 1"), path, 0)
+
+
+class _IndexCompaction:
+    """compact_minhash_index (io.compact_index) of a MinHash index
+    built from eight docs plus two appended batches."""
+
+    kind, writes, leftover = "minhash", 1, False
+
+    def build(self, spark, path):
+        docs = _docs(spark)
+        build_minhash_index(docs.filter(F.col("doc_id") < 8), path)
+        for b in range(2):
+            update_minhash_index(docs.filter(F.col("doc_id") % 8 == b), path, b)
+
+    def run(self, spark, path):
+        compact_minhash_index(spark, path)
+
+
+class _GateBatch:
+    """A CorpusQualityGateSink's batch 1 after its batch 0, with a torn
+    generation of an earlier crashed batch-1 attempt left behind."""
+
+    kind, writes, leftover = "gate", 2, True
+
+    def build(self, spark, path):
+        CorpusQualityGateSink(spark, path)(_docs(spark).filter("doc_id % 2 = 0"), 0)
+
+    def run(self, spark, path):
+        CorpusQualityGateSink(spark, path)(_docs(spark).filter("doc_id % 2 = 1"), 1)
+
+
+LEDGER = {
+    "index_append": _IndexAppend,
+    "compact_index": _IndexCompaction,
+    "gate_batch": _GateBatch,
+}
+
+
+def _crash_write(n):
+    """DataFrameWriter.parquet whose n-th call writes its files, drops
+    Spark's `_SUCCESS` and raises: a crash inside the generation write."""
+    real, calls = DataFrameWriter.parquet, {"n": 0}
+
+    def parquet(self, path, *a, **kw):
+        real(self, path, *a, **kw)
+        calls["n"] += 1
+        if calls["n"] == n:
+            _drop_success(path)
+            raise Crash(f"crash inside the write of {path}")
+
+    return parquet
+
+
+def _crash_replace(src, dst):
+    raise Crash(f"crash at publish: {src} -> {dst}")
+
+
+def _gen_dirs(path, kind):
+    """{dataset: sorted generation numbers on disk}."""
+    names = index_manifest(path, kind)["datasets"]
+    return {
+        n: sorted(
+            int(d[5:])
+            for d in os.listdir(os.path.join(path, n))
+            if d.startswith("_gen=")
+        )
+        for n in names
+    }
+
+
+def _state(spark, path, kind):
+    """What a reader sees: each dataset's rows and generation count."""
+    m = index_manifest(path, kind)
+    read = open_index(spark, path, kind)[1]
+    return {n: (_rows(read(n)), len(d["gens"])) for n, d in m["datasets"].items()}
+
+
+def _leave_torn_generation(path, kind):
+    """Copy the newest generation of the first dataset to the next
+    generation number without `_SUCCESS`: what a writer that crashed
+    inside its write leaves."""
+    m = index_manifest(path, kind)
+    name, d = next(iter(m["datasets"].items()))
+    nxt = 1 + max(g for dd in m["datasets"].values() for g in dd["gens"])
+    torn = os.path.join(path, name, f"_gen={nxt}")
+    shutil.copytree(os.path.join(path, name, f"_gen={d['gens'][-1]}"), torn)
+    _drop_success(torn)
+
+
+@pytest.mark.parametrize("crash", ["write", "publish", "delete"])
+@pytest.mark.parametrize("caller", sorted(LEDGER))
+def test_ledger_crash_reads_pre_or_post_and_retry_converges(
+    spark, tmp_path, monkeypatch, caller, crash
+):
+    c = LEDGER[caller]()
+    ref = str(tmp_path / "ref")  # the same run with no crash
+    c.build(spark, ref)
+    pre = _state(spark, ref, c.kind)
+    c.run(spark, ref)
+    post = _state(spark, ref, c.kind)
+    assert post != pre
+
+    path = str(tmp_path / "crashed")
+    c.build(spark, path)
+    if c.leftover:
+        _leave_torn_generation(path, c.kind)
+    with monkeypatch.context() as m:
+        if crash == "write":
+            m.setattr(DataFrameWriter, "parquet", _crash_write(c.writes))
+        elif crash == "publish":
+            m.setattr(os, "replace", _crash_replace)
+        else:
+            m.setattr(shutil, "rmtree", _crash_rmtree(lambda p: "_gen=" in p))
+        with pytest.raises(Crash):
+            c.run(spark, path)
+    # only a compaction deletes after its publish: old generations
+    seen = post if crash == "delete" and not c.leftover else pre
+    assert _state(spark, path, c.kind) == seen
+
+    c.run(spark, path)  # the retry: a redelivered batch or a rerun
+    assert _state(spark, path, c.kind) == post
+    recorded = {
+        n: d["gens"] for n, d in index_manifest(path, c.kind)["datasets"].items()
+    }
+    assert _gen_dirs(path, c.kind) == recorded

@@ -390,7 +390,7 @@ def test_incremental_index_matches_batch_lsh(spark, docs, tmp_path):
     corpus = docs.filter(F.col("doc_id") <= 1)
     batch = docs.filter(F.col("doc_id") >= 2)
     build_minhash_index(corpus, path)
-    update_minhash_index(batch, path)
+    update_minhash_index(batch, path, 0)
     got = {
         (r["query_id"], r["match_id"])
         for r in query_minhash_index(spark, batch, path).collect()
@@ -419,12 +419,12 @@ def test_incremental_index_max_bucket_drops_hot(spark, docs, tmp_path):
     assert got == []
 
 
-def test_index_rebuild_clears_replay_markers(spark, tmp_path):
-    """A rebuilt index must not inherit the previous generation's
-    `_ingested` replay markers: a streaming run restarted with a fresh
-    checkpoint reuses batch ids from 0, and a stale marker would
-    silently skip the new run's index appends — every cross-batch pair
-    involving those docs lost with no error."""
+def test_index_rebuild_resets_the_batch_mark(spark, tmp_path):
+    """A rebuilt index must not inherit the previous build's batch
+    mark: a streaming run restarted with a fresh checkpoint reuses
+    batch ids from 0, and a stale mark would silently skip the new
+    run's index appends — every cross-batch pair involving those docs
+    lost with no error."""
     import pyspark.sql.functions as F
 
     from warp_pipe_spark.datapipe.dedup_index import (
@@ -436,7 +436,7 @@ def test_index_rebuild_clears_replay_markers(spark, tmp_path):
     docs = spark.createDataFrame(rows, "doc_id LONG, text STRING")
     idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
     sink = IngestDedupSink(spark, idx, out)
-    sink(docs.filter(F.col("doc_id") <= 2), 0)  # leaves marker batch_0
+    sink(docs.filter(F.col("doc_id") <= 2), 0)  # the index mark is now 0
 
     # new generation: rebuild base index over doc 1 only, restart the
     # stream with a fresh checkpoint — batch id 0 recurs with NEW docs
@@ -448,16 +448,17 @@ def test_index_rebuild_clears_replay_markers(spark, tmp_path):
     sink2(docs.filter(F.col("doc_id") == 2), 0)
     got = {tuple(r) for r in sink2.candidates().collect()}
     # doc 2's banding rows MUST have been appended: its exact-dup pair
-    # against base doc 1 surfaces; with a stale marker this is empty
+    # against base doc 1 surfaces; with a stale mark this is empty
     assert (2, 1) in got
 
 
-def test_index_bucket_cap_counts_distinct_docs_after_replay(spark, tmp_path):
-    """The documented append-then-crash replay window duplicates one
-    batch's postings in the index forever. The max_bucket cap must
-    count DISTINCT bucket membership: a raw row count would see 2x the
-    true size and silently drop a legitimate bucket — real candidate
-    pairs lost in every future query."""
+def test_index_bucket_cap_counts_distinct_docs_after_reingest(spark, tmp_path):
+    """A redelivered batch appends nothing (the manifest's batch mark),
+    but a doc re-ingested under a later batch id has its postings in
+    the index twice. The max_bucket cap must count DISTINCT bucket
+    membership: a raw row count would see 2x the true size and silently
+    drop a legitimate bucket — real candidate pairs lost in every
+    future query."""
     import pyspark.sql.functions as F
 
     from warp_pipe_spark.datapipe.dedup_index import (
@@ -472,13 +473,14 @@ def test_index_bucket_cap_counts_distinct_docs_after_replay(spark, tmp_path):
     build_minhash_index(docs.filter(F.col("doc_id") <= 2), path)
     b1 = docs.filter(F.col("doc_id") >= 3)
     update_minhash_index(b1, path, ingest_batch=1)
-    update_minhash_index(b1, path, ingest_batch=1)  # crash replay
+    update_minhash_index(b1, path, ingest_batch=1)  # redelivery: a no-op
+    update_minhash_index(b1, path, ingest_batch=2)  # a re-ingest
     want = {
         tuple(r)
         for r in query_minhash_index(spark, docs, path).collect()
     }
     # cap = true max bucket size (4 docs): nothing is over it, so the
-    # capped query must equal the uncapped one despite the duplicated
+    # capped query must equal the uncapped one despite the re-ingested
     # postings doubling raw counts in batch-1's buckets
     got = {
         tuple(r)
@@ -546,13 +548,39 @@ def test_ingest_sink_auto_compacts_behind_threshold(spark, tmp_path):
     assert asof_ac == asof_nc
 
 
+def test_ingest_sink_compacts_before_the_listing_threshold(spark, tmp_path):
+    """The sink's index read lists each band generation as one path; it
+    compacts once the generations reach Spark's parallel-listing
+    threshold, so the steady per-batch query never lists in a job."""
+    import pyspark.sql.functions as F
+
+    from warp_pipe_spark.datapipe.dedup_index import IngestDedupSink
+    from warp_pipe_spark.io import index_manifest
+
+    rows = [(i, BASE if i % 2 else OTHER) for i in range(10)]
+    docs = spark.createDataFrame(rows, "doc_id LONG, text STRING")
+    conf = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "3")
+    try:
+        idx = str(tmp_path / "idx")
+        sink = IngestDedupSink(spark, idx, str(tmp_path / "out"))
+        n_gens = []
+        for b in range(5):
+            sink(docs.filter(F.col("doc_id").isin(2 * b, 2 * b + 1)), b)
+            bands = index_manifest(idx, "minhash")["datasets"]["bands"]
+            n_gens.append(len(bands["gens"]))
+    finally:
+        spark.conf.set(conf, old)
+    assert n_gens == [2, 1, 2, 1, 2]
+
+
 def test_ingest_dedup_sink_candidates_guards(spark, tmp_path):
     """candidates() on a fresh sink (no out_dir yet) is None, and an
-    uncommitted batch dir (no _SUCCESS: a crash mid-candidate-write)
-    is invisible rather than a scan error."""
+    unrecorded candidates generation (a crash before batch 1's
+    manifest publish) is invisible rather than read or a scan error."""
     import os
-
-    import pyspark.sql.functions as F
+    import shutil
 
     from warp_pipe_spark.datapipe.dedup_index import IngestDedupSink
 
@@ -563,9 +591,12 @@ def test_ingest_dedup_sink_candidates_guards(spark, tmp_path):
     docs = spark.createDataFrame(rows, "doc_id LONG, text STRING")
     sink(docs, 0)
     want = {tuple(r) for r in sink.candidates().collect()}
-    # crash mid-write of batch 1: dir exists, no commit marker
-    half = os.path.join(str(tmp_path / "out"), "batch_1")
-    os.makedirs(half)
+    assert want
+    # crash before batch 1's commit: a whole generation, unrecorded
+    pairs = str(tmp_path / "out" / "pairs")
+    newest = max(os.listdir(pairs), key=lambda d: int(d[5:]))
+    shutil.copytree(os.path.join(pairs, newest), os.path.join(pairs, "_gen=9"))
+    os.makedirs(os.path.join(pairs, "_gen=10"))
     assert {tuple(r) for r in sink.candidates().collect()} == want
 
 
@@ -599,7 +630,7 @@ def test_ingest_dedup_sink_streams_batches(spark, tmp_path):
     for r in minhash_lsh_pairs(docs).collect():
         assert (r["doc_b"], r["doc_a"]) in got
     assert (3, 1) in got and (5, 1) in got and (5, 3) in got
-    # replaying batch 1 is a no-op (marker skips append, output rewrite)
+    # replaying batch 1 is a no-op (the batch marks skip both commits)
     before = got
     sink(docs.filter(F.col("doc_id").isin(3, 4)), 1)
     after = {
@@ -646,49 +677,61 @@ def test_hash_embed_integer_exact_and_discriminative(spark):
     assert all(abs(v) <= len(BASE.split()) for v in out[1])
 
 
-def test_ingest_dedup_sink_crash_after_marker_recovers(spark, tmp_path):
-    """Crash window between index append+marker and the output write:
-    replaying the batch must regenerate the identical candidate output
-    without double-appending the index."""
+def test_ingest_dedup_sink_crash_before_candidates_commit_recovers(
+    spark, tmp_path, monkeypatch
+):
+    """Crash window between the index append's commit and the
+    candidates' commit: replaying the batch must regenerate the
+    identical candidate output without double-appending the index."""
+    import pyspark.sql.functions as F
+
+    from warp_pipe_spark import io as wio
+    from warp_pipe_spark.datapipe.dedup_index import IngestDedupSink
+
+    rows = [(1, BASE), (2, OTHER), (3, BASE), (4, NEAR)]
+    docs = spark.createDataFrame(rows, "doc_id LONG, text STRING")
+    b0, b1 = docs.filter(F.col("doc_id") <= 2), docs.filter(F.col("doc_id") >= 3)
+    ref = IngestDedupSink(spark, str(tmp_path / "ref_idx"), str(tmp_path / "ref_out"))
+    ref(b0, 0)
+    ref(b1, 1)
+    want = sorted(map(tuple, ref.candidates().collect()))
+    assert (3, 1) in want  # batch 1 surfaces a cross-batch pair
+
+    idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
+    sink = IngestDedupSink(spark, idx, out)
+    sink(b0, 0)
+    real = wio.publish_file
+
+    def crash_on_candidates(path, chunks, *a):
+        if path.startswith(out):
+            raise OSError("crash before the candidates commit")
+        real(path, chunks, *a)
+
+    monkeypatch.setattr(wio, "publish_file", crash_on_candidates)
+    with pytest.raises(OSError, match="candidates commit"):
+        sink(b1, 1)
+    monkeypatch.undo()
+    gens = wio.index_manifest(idx, "minhash")["datasets"]["bands"]["gens"]
+    assert sorted(map(tuple, sink.candidates().collect())) != want
+
+    sink(b1, 1)  # foreachBatch redelivery
+    assert sorted(map(tuple, sink.candidates().collect())) == want
+    # no double append happened
+    assert wio.index_manifest(idx, "minhash")["datasets"]["bands"]["gens"] == gens
+
+
+def test_ingest_sink_recovers_from_crashed_compaction(spark, tmp_path, monkeypatch):
+    """A crash inside the sink's inline compaction, at its manifest
+    publish or part-way through deleting the old band generations:
+    a fresh sink (as after a restart) redelivers the crashed batch and
+    runs the next one, and surfaces exactly the candidates of a run
+    with no crash, with no unrecorded generation left."""
     import os
     import shutil
 
     import pyspark.sql.functions as F
 
-    from warp_pipe_spark.datapipe.dedup_index import IngestDedupSink
-
-    rows = [(1, BASE), (2, BASE), (3, NEAR), (4, OTHER)]
-    docs = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    sink = IngestDedupSink(spark, str(tmp_path / "idx"), str(tmp_path / "out"))
-    sink(docs.filter(F.col("doc_id") <= 2), 0)
-    b1 = docs.filter(F.col("doc_id") >= 3)
-    sink(b1, 1)
-    want = sorted(map(tuple, sink.candidates().collect()))
-    n_band_files = sum(
-        len(fs) for _, _, fs in os.walk(str(tmp_path / "idx" / "bands"))
-    )
-    # simulate the crash: batch 1's output vanishes, marker survives
-    shutil.rmtree(str(tmp_path / "out" / "batch_1"))
-    sink(b1, 1)  # foreachBatch redelivery
-    got = sorted(map(tuple, sink.candidates().collect()))
-    assert got == want
-    # no double append happened
-    n_after = sum(
-        len(fs) for _, _, fs in os.walk(str(tmp_path / "idx" / "bands"))
-    )
-    assert n_after == n_band_files
-
-
-def test_ingest_sink_heals_crashed_compaction_swap(spark, tmp_path, monkeypatch):
-    """A crash between compact_minhash_index's two renames leaves
-    `bands` missing. The next sink call (a fresh sink, as after a
-    restart) must repair it before the marker check skips the append:
-    the redelivered batch and the one after it surface exactly the
-    candidates of a run with no crash."""
-    import os
-
-    import pyspark.sql.functions as F
-
+    from warp_pipe_spark import io as wio
     from warp_pipe_spark.datapipe.dedup_index import (
         IngestDedupSink,
         build_minhash_index,
@@ -713,26 +756,42 @@ def test_ingest_sink_heals_crashed_compaction_swap(spark, tmp_path, monkeypatch)
         ref(batch, b)
     want = {tuple(r) for r in ref.candidates().collect()}
 
-    idx, out, sink = run("crash")
-    sink(batches[0], 0)
-    real_rename, calls = os.rename, {"n": 0}
+    real_replace, real_rmtree = os.replace, shutil.rmtree
+    for crash in ("publish", "delete"):
+        idx, out, sink = run(crash)
+        sink(batches[0], 0)
 
-    def crash_on_second(src, dst):
-        calls["n"] += 1
-        if calls["n"] == 2:
-            raise OSError("crash between the swap renames")
-        real_rename(src, dst)
+        def rmtree(path, *a, **kw):
+            if "_gen=" in str(path):
+                raise OSError("crash in the compaction")
+            real_rmtree(path, *a, **kw)
 
-    monkeypatch.setattr(os, "rename", crash_on_second)
-    with pytest.raises(OSError, match="swap renames"):
-        sink(batches[1], 1)
-    monkeypatch.setattr(os, "rename", real_rename)
-    assert not os.path.isdir(os.path.join(idx, "bands"))
+        # batch 1's appends commit first; the compaction publish is
+        # the index's second manifest publish of the batch
+        calls = {"n": 0}
 
-    healed = IngestDedupSink(spark, idx, out, auto_compact_files=0)
-    healed(batches[1], 1)  # foreachBatch redelivery of the crashed batch
-    healed(batches[2], 2)
-    assert {tuple(r) for r in healed.candidates().collect()} == want and want
+        def replace_second(src, dst):
+            if dst.startswith(idx):
+                calls["n"] += 1
+                if calls["n"] == 2:
+                    raise OSError("crash in the compaction")
+            real_replace(src, dst)
+
+        if crash == "publish":
+            monkeypatch.setattr(os, "replace", replace_second)
+        else:
+            monkeypatch.setattr(shutil, "rmtree", rmtree)
+        with pytest.raises(OSError, match="in the compaction"):
+            sink(batches[1], 1)
+        monkeypatch.undo()
+
+        healed = IngestDedupSink(spark, idx, out, auto_compact_files=0)
+        healed(batches[1], 1)  # foreachBatch redelivery of the crashed batch
+        healed(batches[2], 2)
+        assert {tuple(r) for r in healed.candidates().collect()} == want and want
+        bands = os.path.join(idx, "bands")
+        recorded = wio.index_manifest(idx, "minhash")["datasets"]["bands"]["gens"]
+        assert sorted(os.listdir(bands)) == [f"_gen={g}" for g in recorded]
 
 
 def test_quality_model_score_exact_and_sign(spark):
@@ -974,11 +1033,10 @@ def test_chunk_overlap_rejects_nonpositive_stride(spark):
 
 
 def _mhidx_snapshot(spark, path):
-    """Query results + as-of views + raw index rows, for byte-identity
-    comparison across a compaction."""
-    import pyspark.sql.functions as F
-
+    """Query results + as-of views + raw index rows (every copy), for
+    byte-identity comparison across a compaction."""
     from warp_pipe_spark.datapipe.dedup_index import query_minhash_index
+    from warp_pipe_spark.io import open_index
 
     all_docs = spark.createDataFrame(
         [(1, BASE), (2, BASE), (3, NEAR), (4, OTHER)],
@@ -994,9 +1052,10 @@ def _mhidx_snapshot(spark, path):
             spark, all_docs, path, max_ingest_batch=0
         ).collect()
     )
-    rows = frozenset(
+    bands = open_index(spark, path, "minhash")[1]("bands")
+    rows = sorted(
         (r["band"], r["key"], r["doc_id"], r["ingest_batch"])
-        for r in spark.read.parquet(path + "/bands").collect()
+        for r in bands.collect()
     )
     assert full  # doc 2 duplicates doc 1: never empty
     return full, asof0, rows
@@ -1027,28 +1086,29 @@ def test_compact_index_preserves_results_and_merges_files(spark, docs, tmp_path)
     stats = compact_minhash_index(spark, path)
 
     assert _mhidx_snapshot(spark, path) == before
-    assert stats["rows_after"] == stats["rows_before"]  # no replay dupes here
+    assert stats["rows_after"] == stats["rows_before"]
     assert stats["files_after"] < stats["files_before"]
-    # one file per band dir — the advertised layout
-    bands_dir = path + "/bands"
-    for d in os.listdir(bands_dir):
+    # one generation left, one file per band dir — the advertised layout
+    gens = os.listdir(path + "/bands")
+    assert len(gens) == 1, gens
+    gen_dir = os.path.join(path, "bands", gens[0])
+    for d in os.listdir(gen_dir):
         if d.startswith("band="):
             files = [
                 f
-                for f in os.listdir(os.path.join(bands_dir, d))
+                for f in os.listdir(os.path.join(gen_dir, d))
                 if f.endswith(".parquet")
             ]
             assert len(files) == 1, (d, files)
-    # leftovers of the swap must be gone
-    assert not os.path.exists(path + "/bands._compact")
-    assert not os.path.exists(path + "/bands._trash")
 
 
-def test_compact_index_drops_replay_duplicate_postings(spark, docs, tmp_path):
-    """An append-then-crash replay re-appends a whole batch under the
-    SAME ingest_batch tag (the marker's documented redelivery window).
-    Readers already neutralize the duplicates; compaction removes them
-    — with identical query output and identical distinct rows."""
+def test_compact_index_after_redelivered_append_keeps_one_copy(
+    spark, docs, tmp_path
+):
+    """A redelivered append (the SAME ingest_batch id) is a no-op, so
+    the index holds one copy of the batch and compaction, which no
+    longer deduplicates, keeps exactly its rows — with identical query
+    output."""
     import pyspark.sql.functions as F
 
     from warp_pipe_spark.datapipe.dedup_index import (
@@ -1061,13 +1121,14 @@ def test_compact_index_drops_replay_duplicate_postings(spark, docs, tmp_path):
     build_minhash_index(docs.filter(F.col("doc_id") <= 1), path)
     batch = docs.filter(F.col("doc_id") == 2)
     update_minhash_index(batch, path, ingest_batch=0)
-    update_minhash_index(batch, path, ingest_batch=0)  # the replay
-    before = _mhidx_snapshot(spark, path)
+    once = _mhidx_snapshot(spark, path)
+    update_minhash_index(batch, path, ingest_batch=0)  # the redelivery
+    assert _mhidx_snapshot(spark, path) == once
 
     stats = compact_minhash_index(spark, path)
 
-    assert stats["rows_after"] < stats["rows_before"]
-    assert _mhidx_snapshot(spark, path) == before  # distinct rows identical
+    assert stats["rows_after"] == stats["rows_before"]
+    assert _mhidx_snapshot(spark, path) == once
 
 
 def test_compact_index_missing_raises(spark, tmp_path):

@@ -1,8 +1,10 @@
 """The five persisted indexes share one lifecycle (io.write_index /
 io.open_index): opening or appending launches no Spark job before the
-function's own action, and a build that dies before its manifest is
-published leaves an index that refuses to open."""
+function's own action, a build that dies before its manifest is
+published leaves an index that refuses to open, and appending one
+batch id twice equals appending it once."""
 
+import json
 import re
 import uuid
 
@@ -28,6 +30,7 @@ from warp_pipe_spark.datapipe.similarity import (
     ivf_topk_indexed,
     update_ivf_index,
 )
+from warp_pipe_spark.io import read_table
 
 WORDS = ["the", "data", "pipeline", "spark", "index", "stream", "fox", "dog"]
 
@@ -48,7 +51,8 @@ def emb(spark):
 
 
 #: kind -> (build(docs, emb, path, alt), open(spark, docs, emb, path),
-#: append(docs, emb, path) or None); `alt` builds with other parameters
+#: append(docs, emb, path, batch_id) or None); `alt` builds with other
+#: parameters
 KINDS = {
     "bloom": (
         lambda d, e, p, alt: write_bloom(
@@ -56,12 +60,14 @@ KINDS = {
             m_bits=1 << (12 if alt else 14), k_hashes=3,
         ),
         lambda s, d, e, p: read_bloom(s, p)[0],
-        lambda d, e, p: update_bloom(d.select(F.col("doc_id").alias("key")), p),
+        lambda d, e, p, b: update_bloom(
+            d.select((F.col("doc_id") + 1000).alias("key")), p, b
+        ),
     ),
     "bm25": (
         lambda d, e, p, alt: build_text_index(d, p, n_term_buckets=4 if alt else 8),
         lambda s, d, e, p: bm25_topk_indexed(s, p, ["the", "fox"]),
-        lambda d, e, p: update_text_index(d, p),
+        lambda d, e, p, b: update_text_index(d, p, b),
     ),
     "dsir": (
         lambda d, e, p, alt: build_dsir_index(
@@ -78,12 +84,12 @@ KINDS = {
             d.filter(F.col("doc_id") % 2 == int(alt)), p
         ),
         lambda s, d, e, p: query_minhash_index(s, d, p),
-        lambda d, e, p: update_minhash_index(d, p, ingest_batch=0),
+        lambda d, e, p, b: update_minhash_index(d, p, b),
     ),
     "ivf": (
         lambda d, e, p, alt: build_ivf_index(e, p, n_centroids=2 if alt else 3),
         lambda s, d, e, p: ivf_topk_indexed(s, e.filter("vec_id < 5"), p, k=3),
-        lambda d, e, p: update_ivf_index(e.filter("vec_id < 10"), p),
+        lambda d, e, p, b: update_ivf_index(e.filter("vec_id < 10"), p, b),
     ),
 }
 
@@ -133,8 +139,16 @@ def test_open_and_append_launch_no_job_before_an_action(
     # ivf_topk_indexed collects the probed cell ids; nothing else acts
     assert n_actions == (kind == "ivf")
     if append is not None:
-        stray, n_actions = _jobs(spark, monkeypatch, lambda: append(docs, emb, path))
-        assert stray == set() and n_actions >= 1
+        for b in (0, 1):
+            stray, n_actions = _jobs(
+                spark, monkeypatch, lambda: append(docs, emb, path, b)
+            )
+            assert stray == set() and n_actions >= 1
+        # a build plus two appends still opens with no job
+        stray, n_actions = _jobs(
+            spark, monkeypatch, lambda: open_(spark, docs, emb, path)
+        )
+        assert stray == set() and n_actions == (kind == "ivf")
     assert open_(spark, docs, emb, path).count() > 0
 
 
@@ -158,6 +172,72 @@ def test_interrupted_rebuild_refuses_to_open(
         open_(spark, docs, emb, path)
     if append is not None:
         with pytest.raises(FileNotFoundError, match=re.escape(path)):
-            append(docs, emb, path)
+            append(docs, emb, path, 0)
     build(docs, emb, path, True)  # a finished rebuild opens again
     assert open_(spark, docs, emb, path).count() > 0
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("kind", sorted(k for k in KINDS if KINDS[k][2]))
+def test_appending_one_batch_id_twice_equals_appending_it_once(
+    spark, docs, emb, tmp_path, kind
+):
+    build, open_, append = KINDS[kind]
+    path = str(tmp_path / kind)
+
+    def snapshot():
+        """Every dataset's rows, and what the index answers."""
+        read = wio.open_index(spark, path, kind)[1]
+        names = wio.index_manifest(path, kind)["datasets"]
+        return {n: _rows(read(n)) for n in names}, _rows(open_(spark, docs, emb, path))
+
+    build(docs, emb, path, False)
+    before = snapshot()
+    append(docs, emb, path, 0)
+    once = snapshot()
+    append(docs, emb, path, 0)  # a redelivered batch
+    assert snapshot() == once and once[0] != before[0]
+    assert wio.index_manifest(path, kind)["mark"] == 0
+    append(docs, emb, path, 1)  # the next batch id lands
+    assert wio.index_manifest(path, kind)["mark"] == 1
+
+
+def test_bm25_redelivered_append_does_not_double_count(spark, tmp_path):
+    """sf0.001 documents: even doc_ids built, odd ones appended as batch
+    0 twice. A bare append counted the batch twice and moved doc 153
+    from (2, 0.922232) to (4, 1.881278)."""
+    docs = read_table(spark, "/root/testdata/sf0.001", "documents")
+    docs = docs.select("doc_id", "text")
+    path = str(tmp_path / "bm25")
+    build_text_index(docs.filter("doc_id % 2 = 0"), path)
+    odd = docs.filter("doc_id % 2 = 1")
+    terms = ["the", "data", "pipeline"]
+    update_text_index(odd, path, 0)
+    once = bm25_topk_indexed(spark, path, terms).collect()
+    update_text_index(odd, path, 0)
+    twice = bm25_topk_indexed(spark, path, terms).collect()
+    assert twice == once
+    top = twice[0]
+    assert (top["doc_id"], top["n_terms_hit"], round(top["score"], 6)) == (
+        153, 2, 0.922232
+    )
+
+
+def test_index_manifest_without_generations_names_a_rebuild(spark, tmp_path):
+    """An index written before the generation ledger has a manifest
+    with only kind, params and schemas: opening it asks for a rebuild
+    instead of reading layout it cannot place."""
+    path = tmp_path / "bm25"
+    path.mkdir()
+    schema = spark.range(1).schema.jsonValue()
+    old = {"kind": "bm25", "params": {"n_term_buckets": 8}}
+    old["schemas"] = {"stats": schema}
+    (path / wio.INDEX_MANIFEST).write_text(json.dumps(old))
+    with pytest.raises(ValueError, match="rebuild"):
+        wio.open_index(spark, str(path), "bm25")
+    new = spark.createDataFrame([(1, "a")], "doc_id LONG, text STRING")
+    with pytest.raises(ValueError, match="rebuild"):
+        update_text_index(new, str(path), 0)

@@ -4,6 +4,7 @@ state), stay idempotent under foreachBatch redelivery, and route the
 audit reasons correctly."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from warp_pipe_spark.datapipe.ingest import CorpusQualityGateSink, quality_gate
 from warp_pipe_spark.datapipe.text import pii_scrub
@@ -80,33 +81,81 @@ def test_empty_sink_reads_none(spark, tmp_path):
     assert sink.accepted() is None and sink.rejected() is None
 
 
-def test_half_written_batch_dir_invisible_until_redelivered(spark, tmp_path):
-    """Crash mid-write: a batch dir without Spark's _SUCCESS marker
+def _crash_on_write(monkeypatch, name):
+    """Make the parquet write of the ledger dataset `name` write its
+    files, drop Spark's `_SUCCESS` and raise: a crash mid-write."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    real = DataFrameWriter.parquet
+
+    def parquet(self, path, *a, **kw):
+        real(self, path, *a, **kw)
+        if f"/{name}/_gen=" in path:
+            os.remove(os.path.join(path, "_SUCCESS"))
+            raise OSError(f"crash inside the {name} write")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+
+
+def test_half_written_batch_dir_invisible_until_redelivered(
+    spark, tmp_path, monkeypatch
+):
+    """Crash mid-write: a batch whose accept generation is half written
     must not be read (no partial output surfaces); redelivering the
     batch restores it."""
-    import os
-    import shutil
+    docs = _docs(spark)
+    b0 = docs.filter(F.col("doc_id") % 2 == 0)
+    b1 = docs.filter(F.col("doc_id") % 2 == 1)
+    ref = CorpusQualityGateSink(spark, str(tmp_path / "ref"))
+    ref(b0, 0)
+    ref(b1, 1)
+    want = {tuple(r) for r in ref.accepted().collect()}
 
+    sink = CorpusQualityGateSink(spark, str(tmp_path / "gate"))
+    sink(b0, 0)
+    batch0 = {tuple(r) for r in sink.accepted().collect()}
+    with monkeypatch.context() as m:
+        _crash_on_write(m, "accept")
+        with pytest.raises(OSError, match="accept write"):
+            sink(b1, 1)
+    assert {tuple(r) for r in sink.accepted().collect()} == batch0 < want
+    sink(b1, 1)  # foreachBatch redelivery
+    assert {tuple(r) for r in sink.accepted().collect()} == want
+
+
+def test_crash_between_accept_and_reject_leaves_the_batch_invisible(
+    spark, tmp_path, monkeypatch
+):
+    """A batch commits accept and reject together: a crash after its
+    accept rows are written but inside the reject write leaves neither
+    visible, so accepted() and rejected() never disagree about which
+    batches landed, and the redelivery lands both."""
     docs = _docs(spark)
     b0 = docs.filter(F.col("doc_id") % 2 == 0)
     b1 = docs.filter(F.col("doc_id") % 2 == 1)
     sink = CorpusQualityGateSink(spark, str(tmp_path / "gate"))
     sink(b0, 0)
-    sink(b1, 1)
-    want = {tuple(r) for r in sink.accepted().collect()}
-    # simulate the crash: batch 1's accept dir loses its commit marker
-    os.remove(os.path.join(sink.accept_dir, "batch_1", "_SUCCESS"))
-    partial = {tuple(r) for r in sink.accepted().collect()}
-    assert partial < want  # batch 1's rows gone, batch 0 intact
-    shutil.rmtree(os.path.join(sink.accept_dir, "batch_1"))
+    acc0 = {r["doc_id"] for r in sink.accepted().collect()}
+    rej0 = {r["doc_id"] for r in sink.rejected().collect()}
+    with monkeypatch.context() as m:
+        _crash_on_write(m, "reject")
+        with pytest.raises(OSError, match="reject write"):
+            sink(b1, 1)
+    assert {r["doc_id"] for r in sink.accepted().collect()} == acc0
+    assert {r["doc_id"] for r in sink.rejected().collect()} == rej0
     sink(b1, 1)  # foreachBatch redelivery
-    assert {tuple(r) for r in sink.accepted().collect()} == want
+    acc = {r["doc_id"] for r in sink.accepted().collect()}
+    rej = {r["doc_id"] for r in sink.rejected().collect()}
+    assert acc > acc0 and rej > rej0
+    assert acc | rej == {r["doc_id"] for r in docs.collect()}
 
 
 def test_compact_shrinks_files_preserves_rows(spark, tmp_path):
-    """Per-batch compaction: file counts drop to 1 per committed dir,
-    accepted()/rejected() results are byte-identical, and the commit
-    markers survive so the dirs stay readable."""
+    """Compaction folds each dataset's batch generations into one
+    generation of one file; accepted()/rejected() results are
+    byte-identical."""
     import os
 
     docs = _docs(spark)
@@ -119,10 +168,10 @@ def test_compact_shrinks_files_preserves_rows(spark, tmp_path):
     assert r["files_after"] < r["files_before"]
     assert {tuple(x) for x in sink.accepted().collect()} == want_acc
     assert {tuple(x) for x in sink.rejected().collect()} == want_rej
-    for root in (sink.accept_dir, sink.reject_dir):
-        for d in os.listdir(root):
-            if d.startswith("batch_"):
-                assert os.path.exists(os.path.join(root, d, "_SUCCESS")), d
+    for name in ("accept", "reject"):
+        (gen,) = os.listdir(os.path.join(sink.base_dir, name))
+        files = os.listdir(os.path.join(sink.base_dir, name, gen))
+        assert len([f for f in files if f.endswith(".parquet")]) == 1, files
 
 
 def test_null_text_doc_is_rejected_not_dropped(spark, tmp_path):

@@ -235,15 +235,16 @@ def test_index_manifest_round_trips_params_and_schemas(spark, tmp_path):
     assert jobs == []  # every schema comes from the manifest
     assert frames["parted"].columns == ["k", "v", "part"]  # partition col last
     for name, df in frames.items():  # the schema an inference would find
-        assert df.schema == spark.read.parquet(f"{path}/{name}").schema
+        assert df.schema == spark.read.parquet(f"{path}/{name}/_gen=0").schema
     assert _rows(frames["flat"]) == [(1, "a"), (2, "b")]
     assert _rows(read("parted", "part", [1, 5])) == [(2, "y", 1), (3, "z", 1)]
     assert read("parted", "part", [5]).count() == 0
 
-    write_index(path, "demo", {"n": 4}, {"flat": (flat, ())}, append=True)
-    assert len(_rows(read("flat"))) == 4
+    write_index(path, "demo", {"n": 4}, {"flat": (flat, ())}, batch_id=0)
+    assert len(_rows(read("flat"))) == 2  # the generations it opened
+    assert len(_rows(open_index(spark, path, "demo")[1]("flat"))) == 4
     with pytest.raises(ValueError, match="other parameters"):
-        write_index(path, "demo", {"n": 5}, {"flat": (flat, ())}, append=True)
+        write_index(path, "demo", {"n": 5}, {"flat": (flat, ())}, batch_id=1)
 
 
 def test_index_without_manifest_raises_naming_the_path(spark, tmp_path):

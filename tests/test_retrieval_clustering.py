@@ -1092,7 +1092,7 @@ def test_text_index_append_equals_full_rebuild(spark, sf_dir, tmp_path):
     terms = ["the", "data", "quality"]
     inc = str(tmp_path / "inc")
     build_text_index(docs.filter("doc_id % 2 = 0"), inc, n_term_buckets=8)
-    update_text_index(docs.filter("doc_id % 2 = 1"), inc)
+    update_text_index(docs.filter("doc_id % 2 = 1"), inc, 0)
     full = str(tmp_path / "full")
     build_text_index(docs, full, n_term_buckets=8)
 
@@ -1105,6 +1105,33 @@ def test_text_index_append_equals_full_rebuild(spark, sf_dir, tmp_path):
         for r in bm25_topk_indexed(spark, full, terms).collect()
     ]
     assert a == b and len(a) == 10
+
+
+def test_text_index_compaction_keeps_topk_identical(spark, sf_dir, tmp_path):
+    """io.compact_index on each of postings, df and stats folds a build
+    plus two appends into one generation each, and bm25_topk_indexed
+    returns identical rows before and after."""
+    import os
+
+    from warp_pipe_spark.datapipe.retrieval import (
+        bm25_topk_indexed,
+        build_text_index,
+        update_text_index,
+    )
+    from warp_pipe_spark.io import compact_index, read_table
+
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    terms = ["the", "data", "pipeline"]
+    path = str(tmp_path / "idx")
+    build_text_index(docs.filter("doc_id % 3 = 0"), path, n_term_buckets=8)
+    for b in (1, 2):
+        update_text_index(docs.filter(f"doc_id % 3 = {b}"), path, b)
+    before = bm25_topk_indexed(spark, path, terms).collect()
+    for name in ("postings", "df", "stats"):
+        stats = compact_index(spark, path, "bm25", name)
+        assert stats["rows_after"] == stats["rows_before"]
+        assert len(os.listdir(os.path.join(path, name))) == 1
+    assert bm25_topk_indexed(spark, path, terms).collect() == before and before
 
 
 def test_text_index_empty_query_and_unknown_term(spark, tmp_path):

@@ -191,7 +191,7 @@ def test_ivf_incremental_update_matches_full_build(spark, tmp_path):
     # indexes share the identical codebook.
     batch = emb.filter(F.col("vec_id") % 10 == 7)
     build_ivf_index(emb.filter(F.col("vec_id") % 10 != 7), incr_dir, n_centroids=5)
-    update_ivf_index(batch, incr_dir)
+    update_ivf_index(batch, incr_dir, 0)
 
     queries = emb.filter(F.col("vec_id") < 10)
     a = sorted(map(tuple, ivf_topk_indexed(spark, queries, full_dir, k=5).collect()))

@@ -253,7 +253,7 @@ def test_compact_dataset_reduces_files_and_preserves_rows(spark, tmp_path):
         ).write.mode("append").partitionBy("bucket").parquet(path)
 
     before_rows = spark.read.parquet(path).count()
-    out = compact_dataset(spark, path, target_files=1)
+    out = compact_dataset(spark, path)
     assert out["files_before"] > out["files_after"]
     for b in range(3):
         d = os.path.join(path, f"bucket={b}")

@@ -148,7 +148,9 @@ def build_parser() -> argparse.ArgumentParser:
         "reject (audit reasons) parquet out",
     )
     qg.add_argument("--docs", required=True)
-    qg.add_argument("--out", required=True, help="base dir (accept/ + reject/)")
+    qg.add_argument(
+        "--out", required=True, help="gate ledger dir (accept/ + reject/), replaced"
+    )
     lt = sub.add_parser(
         "live-tail",
         help="tail a live Postgres logical-replication slot into a "
@@ -336,11 +338,18 @@ def main(argv: list[str] | None = None, out=None) -> int:
         print(f"packed layout -> {args.out}", file=out)
         return 0
     if args.command == "quality-gate":
+        import os
+
         from warp_pipe_spark.datapipe.ingest import CorpusQualityGateSink
+        from warp_pipe_spark.io import INDEX_MANIFEST
         from warp_pipe_spark.session import get_spark
 
         spark = get_spark("warp_pipe_corpus")
         docs = spark.read.parquet(args.docs)
+        # a rerun replaces the output: with no manifest the sink's first
+        # batch rebuilds the ledger, deleting the previous run's rows
+        if os.path.exists(manifest := os.path.join(args.out, INDEX_MANIFEST)):
+            os.remove(manifest)
         sink = CorpusQualityGateSink(spark, args.out)
         sink(docs, 0)
         n_acc = sink.accepted().count()

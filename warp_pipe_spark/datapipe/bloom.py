@@ -242,19 +242,23 @@ def read_bloom(spark, path: str):
     return words, params["m_bits"], params["k_hashes"]
 
 
-def update_bloom(new_keys: DataFrame, path: str, key_col: str = "key") -> None:
-    """Append an ingest batch's keys into a persisted filter — the
-    bloom twin of update_minhash_index / update_ivf_index /
-    update_text_index. Bloom bits are pure-UNION state (no deletes,
-    no counts), so maintenance is a parquet append of the batch's
-    packed words: duplicate word_idx rows across appends OR together
-    at open time (read_bloom's one bit_or aggregate). Cost ∝
+def update_bloom(
+    new_keys: DataFrame, path: str, batch_id: int, key_col: str = "key"
+) -> None:
+    """Append ingest batch `batch_id`'s keys into a persisted filter as
+    one generation (io.write_index: an id at or below the manifest's
+    mark is a no-op) — the bloom twin of update_minhash_index /
+    update_ivf_index / update_text_index. Bloom bits are pure-UNION
+    state (no deletes, no counts), so maintenance is a parquet append
+    of the batch's packed words: duplicate word_idx rows across
+    appends OR together at open time (read_bloom's one bit_or
+    aggregate). Cost ∝
     |batch|·k_hashes; the reference key set is never re-read. The
     build-time m_bits/k_hashes come from the index manifest — a batch
     can never be hashed under a different geometry than the build."""
     params, _ = open_index(new_keys.sparkSession, path, "bloom")
     words = build_bloom(new_keys, key_col, params["m_bits"], params["k_hashes"])
-    write_index(path, "bloom", params, {"words": (words, ())}, append=True)
+    write_index(path, "bloom", params, {"words": (words, ())}, batch_id)
 
 
 def bloom_gate_packed(

@@ -29,36 +29,30 @@ exactly like dedup.drop_hot_buckets.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from warp_pipe_spark.datapipe.dedup import band_rows
 from warp_pipe_spark.io import (
-    committed_batch_dirs,
+    INDEX_MANIFEST,
+    append_batch,
+    compact_index,
+    index_manifest,
     n_parquet_files,
     open_index,
-    rewrite_and_swap,
-    settle_swap,
     write_index,
 )
 
 
 def build_minhash_index(docs: DataFrame, path: str) -> None:
     """Write the corpus banding rows partitioned by band (8 fixed
-    partitions; within each, files accumulate per append batch),
-    committed through the index manifest (io.write_index). The base
-    corpus is tagged ingest_batch = -1; appends tag their batch id so
-    queries can pin an as-of-batch view (replay determinism).
-
-    A (re)build also clears the `_ingested` replay markers: they
-    describe appends to the PREVIOUS index generation, and a streaming
-    run restarted with a fresh checkpoint reuses batch ids from 0 — a
-    stale marker would silently skip the new run's index appends, and
-    every cross-batch pair involving those documents would be missing
-    with no error anywhere."""
-    shutil.rmtree(os.path.join(path, "_ingested"), ignore_errors=True)
+    partitions; each append adds one generation of them), committed
+    through the index manifest (io.write_index). The base corpus is
+    tagged ingest_batch = -1; appends tag their batch id so queries can
+    pin an as-of-batch view (replay determinism). A (re)build resets
+    the manifest's batch mark: a streaming run restarted with a fresh
+    checkpoint reuses batch ids from 0, and its appends must land."""
     bands = band_rows(docs).withColumn("ingest_batch", F.lit(-1).cast("long"))
     write_index(path, "minhash", {}, {"bands": (bands, ("band",))})
 
@@ -66,92 +60,36 @@ def build_minhash_index(docs: DataFrame, path: str) -> None:
 def update_minhash_index(
     new_docs: DataFrame,
     path: str,
-    ingest_batch: int = -1,
+    ingest_batch: int,
     rows: DataFrame | None = None,
 ) -> None:
-    """Append one ingest batch's banding rows. Cost ∝ |batch|: one
-    signature pass over the new docs, blind append into the band
-    partitions — the existing index is never read or rewritten.
-    `rows` passes precomputed band_rows(new_docs) (e.g. a persisted
-    copy shared with the query side) so the signature fold is not
-    recomputed."""
+    """Append ingest batch `ingest_batch`'s banding rows as one new
+    generation (io.write_index): cost ∝ |batch|, one signature pass
+    over the new docs; the existing index is never read or rewritten. A
+    batch id at or below the manifest's mark is already in the index,
+    so its append is a no-op. `rows` passes precomputed
+    band_rows(new_docs) (e.g. a persisted copy shared with the query
+    side) so the signature fold is not recomputed."""
     bands = (rows if rows is not None else band_rows(new_docs)).withColumn(
         "ingest_batch", F.lit(ingest_batch).cast("long")
     )
-    write_index(path, "minhash", {}, {"bands": (bands, ("band",))}, append=True)
+    write_index(path, "minhash", {}, {"bands": (bands, ("band",))}, ingest_batch)
 
 
 def compact_minhash_index(spark: SparkSession, path: str) -> dict:
-    """Rewrite the band partitions into one file each — the
-    maintenance op that keeps the append-only design viable long-term.
-    `update` is deliberately a blind append (cost ∝ batch, measured
-    flat at 16x index in SCALE.md round 10), which means every ingest
-    batch leaves one file set per band partition: after 10k
-    micro-batches each band dir holds ~10k small files and the
-    listing + footer overhead — not the data — starts to dominate
-    `query`'s index scan. Same trade and same remedy as any
-    append-optimized table (Delta OPTIMIZE, Iceberg rewrite_data_files);
-    on a real cluster this op IS that command.
-
-    Semantics are preserved exactly:
-      - every (band, key, doc_id, ingest_batch) row survives, so
-        `max_ingest_batch` as-of views — the replay-determinism
-        contract — return byte-identical results after compaction;
-      - EXACT duplicate rows are dropped: they exist only as
-        append-then-crash replay residue (the marker's documented
-        redelivery window re-appends a whole batch under the SAME
-        ingest_batch tag), and every reader already neutralizes them
-        (the pair output is distinct, the bucket cap counts distinct
-        doc_ids) — removing them changes no result, it just stops
-        paying their scan cost forever;
-      - `_ingested` markers are untouched: they describe which batch
-        ids are IN the index, which compaction does not change.
-
-    Crash-safe: committed through io.rewrite_and_swap, with the
-    compacted copy row-count verified inside its write step, so a copy
-    that lost rows is discarded and the index left untouched. A crash
-    in the swap is healed at the next call or the next IngestDedupSink
-    batch. Requires the same exclusive access as build_minhash_index:
-    pause ingest for the compaction.
-
+    """Fold the band generations into one, one file per band dir
+    (io.compact_index) — the maintenance op that keeps the append-only
+    design viable long-term. Every append leaves one generation of
+    files per band partition: after 10k micro-batches the listing +
+    footer overhead — not the data — dominates `query`'s index scan.
+    Same trade and same remedy as any append-optimized table (Delta
+    OPTIMIZE, Iceberg rewrite_data_files). Every (band, key, doc_id,
+    ingest_batch) row survives, so `max_ingest_batch` as-of views
+    return identical results after compaction. Requires the same
+    exclusive access as build_minhash_index: pause ingest for it.
     Returns {"rows_before", "rows_after", "files_before",
-    "files_after"} so callers (and tests) can assert the effect."""
-    bands = os.path.join(path, "bands")
-
-    def write(tmp: str) -> dict:
-        df = spark.read.parquet(bands)
-        rows_before = df.count()
-        files_before = n_parquet_files(bands)
-        # repartition BY the partition column: each band lands wholly in
-        # one shuffle partition, so partitionBy emits exactly one file
-        # per band dir — the one shuffle is the price of the rewrite
-        (
-            df.dropDuplicates(["band", "key", "doc_id", "ingest_batch"])
-            .repartition("band")
-            .write.mode("overwrite")
-            .partitionBy("band")
-            .parquet(tmp)
-        )
-        rows_after = spark.read.parquet(tmp).count()
-        dupes = (
-            rows_before
-            - df.select("band", "key", "doc_id", "ingest_batch").distinct().count()
-        )
-        if rows_after != rows_before - dupes:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise RuntimeError(
-                f"compaction wrote {rows_after} rows, expected "
-                f"{rows_before - dupes} ({rows_before} - {dupes} replay "
-                "duplicates) — compacted copy discarded, index untouched"
-            )
-        return {
-            "rows_before": rows_before,
-            "rows_after": rows_after,
-            "files_before": files_before,
-        }
-
-    stats = rewrite_and_swap(bands, write)
-    return {**stats, "files_after": n_parquet_files(bands)}
+    "files_after"}."""
+    return compact_index(spark, path, "minhash", "bands")
 
 
 def query_minhash_index(
@@ -194,12 +132,10 @@ def query_minhash_index(
         qb.select("band", "key").distinct(), ["band", "key"], "left_semi"
     )
     if max_bucket is not None:
-        # bucket size = DISTINCT docs per (band, key): an append-then-
-        # crash replay leaves duplicated postings in the index forever
-        # (the documented redelivery window), and a plain count would
-        # see up to 2x the true size — silently dropping a legitimate
-        # bucket in every future query. The final pair distinct absorbs
-        # duplicate join output; the CAP must count true membership.
+        # bucket size = DISTINCT docs per (band, key): a doc re-ingested
+        # under a later batch id has its postings in the index twice,
+        # and a plain count would drop a legitimate bucket at half its
+        # cap. The final pair distinct absorbs duplicate join output.
         hot = (
             idx.groupBy("band", "key")
             .agg(F.count_distinct("match_id").alias("_n"))
@@ -225,19 +161,16 @@ class IngestDedupSink:
     Per batch: append the batch's banding rows tagged with the batch
     id (update-then-query, so every cross-batch pair surfaces exactly
     when its LATER document arrives, and batch-internal pairs surface
-    in both directions within their batch), then write the batch's
-    candidates — computed against the as-of-this-batch index view —
-    to `out_dir/batch_<id>`. Idempotent under Structured Streaming's
-    at-least-once foreachBatch contract: the as-of view makes a
-    replayed query byte-identical even after later batches landed, a
-    marker per batch_id skips the index append on replay (a crash
-    between append and marker merely duplicates one batch's postings,
-    which the pair distinct absorbs and the count-distinct bucket cap
-    ignores), and the candidate output is overwritten per batch_id,
-    never appended. Markers are cleared by build_minhash_index, so a
-    rebuilt index never skips appends for reused batch ids. On an
-    `index_dir` with no index, the first batch builds an empty one
-    (publishing its manifest) before its append."""
+    in both directions within their batch), then commit the batch's
+    candidates — computed against the as-of-this-batch index view — to
+    the `candidates` ledger at `out_dir` (io.append_batch). Both
+    commits go through a manifest's batch mark, so under Structured
+    Streaming's at-least-once foreachBatch contract a redelivered batch
+    appends nothing twice: after a crash between the two, the replay
+    skips the index append and its as-of query rebuilds the identical
+    candidates. A rebuilt index resets its mark. On an `index_dir` with
+    no index, the first batch builds an empty one (publishing its
+    manifest) before its append."""
 
     def __init__(
         self,
@@ -262,59 +195,50 @@ class IngestDedupSink:
         # size the threshold so that amortized cost stays below the
         # append cost for your corpus:batch ratio (512 ≈ tens of
         # batches of headroom at 8 bands × a handful of files per
-        # append). None disables (pre-r15 behavior: compaction is the
-        # caller's maintenance op). Compaction is result-invariant
+        # append). It also runs once the band generations reach
+        # Spark's parallel-listing threshold, so the query's index read
+        # never lists in a Spark job. None disables (compaction is then
+        # the caller's maintenance op). Compaction is result-invariant
         # (see compact_minhash_index) and runs AFTER the batch's
-        # candidates are written, so a crash mid-compaction replays
-        # into the recovery path, never into missing output.
+        # candidates commit, so a crash mid-compaction never costs
+        # output.
         self.auto_compact_files = auto_compact_files
 
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.index_dir, "_ingested", f"batch_{batch_id}")
-
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        # an auto-compaction that crashed inside its swap left `bands`
-        # missing: repair it before the marker check skips the append
-        # and the query or the file-count threshold reads the void, and
-        # delete the sidecar copy a heal (this one or a reader's) left
-        if not settle_swap(os.path.join(self.index_dir, "bands")):
+        bands = os.path.join(self.index_dir, "bands")
+        if not os.path.exists(bands):
             build_minhash_index(batch.limit(0), self.index_dir)
         # ONE persisted signature pass per micro-batch: without it the
         # banding fold runs three times (index append + the query
         # plan's two uses of the batch side)
         rows = band_rows(batch).persist()
         try:
-            marker = self._marker(batch_id)
-            if not os.path.exists(marker):
-                update_minhash_index(
-                    batch, self.index_dir, ingest_batch=batch_id, rows=rows
-                )
-                os.makedirs(os.path.dirname(marker), exist_ok=True)
-                with open(marker, "w") as f:
-                    f.write("")
-            query_minhash_index(
+            update_minhash_index(batch, self.index_dir, batch_id, rows=rows)
+            pairs = query_minhash_index(
                 self.spark,
                 batch,
                 self.index_dir,
                 self.max_bucket,
                 max_ingest_batch=batch_id,
                 rows=rows,
-            ).write.mode("overwrite").parquet(
-                os.path.join(self.out_dir, f"batch_{batch_id}")
+            )
+            append_batch(
+                self.out_dir, "candidates", {"pairs": (pairs, ())}, batch_id
             )
         finally:
             rows.unpersist()
-        if self.auto_compact_files is not None and (
-            n_parquet_files(os.path.join(self.index_dir, "bands"))
-            > self.auto_compact_files
-        ):
+        if self.auto_compact_files is None:
+            return
+        m = index_manifest(self.index_dir, "minhash")
+        conf = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+        n_gens, listing = len(m["datasets"]["bands"]["gens"]), self.spark.conf.get(conf)
+        if n_parquet_files(bands) > self.auto_compact_files or n_gens >= int(listing):
             compact_minhash_index(self.spark, self.index_dir)
 
     def candidates(self) -> DataFrame | None:
-        """All candidate pairs surfaced so far (one multi-path scan over
-        io.committed_batch_dirs); None before the first committed
+        """All candidate pairs committed so far; None before the first
         batch."""
-        dirs = committed_batch_dirs(self.out_dir)
-        if not dirs:
+        if not os.path.exists(os.path.join(self.out_dir, INDEX_MANIFEST)):
             return None
-        return self.spark.read.parquet(*dirs).distinct()
+        pairs = open_index(self.spark, self.out_dir, "candidates")[1]("pairs")
+        return pairs.distinct()

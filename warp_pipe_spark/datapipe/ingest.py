@@ -25,13 +25,7 @@ from warp_pipe_spark.datapipe.text import (
     pii_scrub,
     quality_model_score,
 )
-from warp_pipe_spark.io import (
-    committed_batch_dirs,
-    compact_dataset,
-    open_index,
-    settle_swap,
-    swapped_batch_dirs,
-)
+from warp_pipe_spark.io import INDEX_MANIFEST, append_batch, compact_index, open_index
 
 
 def quality_gate(docs: DataFrame) -> DataFrame:
@@ -74,14 +68,16 @@ class CorpusQualityGateSink:
     """foreachBatch target: gate each micro-batch of raw documents,
     PII-scrub the survivors, and route accept/reject to parquet.
 
-    Layout: `base_dir/accept/batch_<id>` holds the scrubbed accepted
-    docs (full doc schema + per-category PII counts), and
-    `base_dir/reject/batch_<id>` holds (doc_id, reject_reason) for
-    audit. Both are OVERWRITTEN per batch_id — under Structured
-    Streaming's at-least-once foreachBatch contract a redelivered
-    batch rewrites its own dirs byte-identically (the gate is
-    deterministic and per-doc), so the sink is idempotent with no
-    marker file needed.
+    Layout: a `gate` ledger (io.write_index) at `base_dir` with two
+    datasets: `accept` holds the scrubbed accepted docs (full doc schema
+    + per-category PII counts), `reject` holds (doc_id, reject_reason)
+    for audit. A batch commits both as one generation through one
+    manifest publish (io.append_batch), so a crash anywhere leaves the
+    batch wholly visible or wholly invisible, and under Structured
+    Streaming's at-least-once foreachBatch contract a redelivered batch
+    (id ≤ the ledger's mark) is skipped — idempotent with no marker
+    file. A fresh checkpoint needs a fresh `base_dir`, as for
+    Spark's file sink.
 
     Scale shape: gate + scrub are the per-doc map/agg stages of their
     underlying operators — per-batch cost is O(batch), no state reads,
@@ -91,8 +87,7 @@ class CorpusQualityGateSink:
 
     def __init__(self, spark: SparkSession, base_dir: str) -> None:
         self.spark = spark
-        self.accept_dir = os.path.join(base_dir, "accept")
-        self.reject_dir = os.path.join(base_dir, "reject")
+        self.base_dir = base_dir
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         # persist both inputs for the two write jobs: without it the
@@ -119,49 +114,35 @@ class CorpusQualityGateSink:
     def _write_batch(
         self, batch_id: int, accept: DataFrame, reject: DataFrame
     ) -> None:
-        """Overwrite batch_id's accept and reject dirs: the committed-
-        batch layout every gate sink shares (read back through
-        io.committed_batch_dirs), after deleting the sidecars a
-        reader's heal of a crashed compaction left."""
-        for root in (self.accept_dir, self.reject_dir):
-            for path in swapped_batch_dirs(root):
-                settle_swap(path)
-        name = f"batch_{batch_id}"
-        accept.write.mode("overwrite").parquet(os.path.join(self.accept_dir, name))
-        reject.write.mode("overwrite").parquet(os.path.join(self.reject_dir, name))
+        """Commit batch_id's accept and reject rows: the ledger every
+        gate sink shares."""
+        datasets = {"accept": (accept, ()), "reject": (reject, ())}
+        append_batch(self.base_dir, "gate", datasets, batch_id)
 
-    def _read(self, root: str) -> DataFrame | None:
-        dirs = committed_batch_dirs(root)
-        if not dirs:
+    def _read(self, name: str) -> DataFrame | None:
+        if not os.path.exists(os.path.join(self.base_dir, INDEX_MANIFEST)):
             return None
-        return self.spark.read.parquet(*dirs)
+        return open_index(self.spark, self.base_dir, "gate")[1](name)
 
     def accepted(self) -> DataFrame | None:
         """All accepted (scrubbed) docs across committed batches."""
-        return self._read(self.accept_dir)
+        return self._read("accept")
 
     def rejected(self) -> DataFrame | None:
         """All rejected (doc_id, reject_reason) across batches."""
-        return self._read(self.reject_dir)
+        return self._read("reject")
 
-    def compact(self, target_files: int = 1) -> dict[str, int]:
-        """Small-file maintenance: rewrite each COMMITTED batch dir down
-        to `target_files` parquet files (a micro-batch on local[32]
-        writes up to 32). Compaction stays WITHIN batch dirs on
-        purpose — merging across batches would let a redelivered batch
-        reintroduce rows a merge already absorbed; per-dir rewrites
-        leave the redelivery contract untouched and inherit
-        io.compact_dataset's rewrite-and-swap crash recovery. Returns
-        total {"files_before", "files_after"}."""
+    def compact(self) -> dict[str, int]:
+        """Small-file maintenance: fold each dataset's batch generations
+        into one file (io.compact_index; a micro-batch on local[32]
+        writes up to 32). Results are unchanged, and a redelivered
+        batch is still skipped by the mark. Returns total
+        {"files_before", "files_after"}."""
         totals = {"files_before": 0, "files_after": 0}
-        for root in (self.accept_dir, self.reject_dir):
-            # committed_batch_dirs heals crashed swaps first, so a
-            # batch whose previous compaction died mid-rename is
-            # healed and re-compacted rather than skipped forever
-            for full in committed_batch_dirs(root):
-                r = compact_dataset(self.spark, full, target_files)
-                totals["files_before"] += r["files_before"]
-                totals["files_after"] += r["files_after"]
+        for name in ("accept", "reject"):
+            r = compact_index(self.spark, self.base_dir, "gate", name)
+            totals["files_before"] += r["files_before"]
+            totals["files_after"] += r["files_after"]
         return totals
 
 
@@ -171,9 +152,8 @@ class DsirGateSink(CorpusQualityGateSink):
     route docs with logw_micro >= min_logw_micro to accept/, the rest
     to reject/ with their score for audit — "keep what looks like the
     target" as an ingest gate, the DSIR analogue of the quality-gate
-    sink (same committed-batch layout, same idempotent overwrite-per-
-    batch_id redelivery contract, same accepted()/rejected()/compact()
-    surface inherited unchanged).
+    sink (same ledger, same skip-on-redelivery contract, same
+    accepted()/rejected()/compact() surface inherited unchanged).
 
     The index is opened ONCE at construction, from its manifest and
     with no Spark job; per-batch cost is one batch explode, one
@@ -219,10 +199,9 @@ class BloomGateSink(CorpusQualityGateSink):
     bloom filter of already-ingested keys (datapipe.bloom) and route
     NOVEL docs to accept/, flagged candidate-duplicates to reject/
     with their key for the downstream exact-verify — URL/fingerprint
-    ingest dedup as a streaming gate (same committed-batch layout and
-    idempotent overwrite-per-batch_id redelivery contract as the
-    quality and DSIR gates; accepted()/rejected()/compact() inherited
-    unchanged).
+    ingest dedup as a streaming gate (same ledger and skip-on-
+    redelivery contract as the quality and DSIR gates;
+    accepted()/rejected()/compact() inherited unchanged).
 
     The index is a write_bloom directory — m_bits/k_hashes travel
     WITH it in its manifest (re-supplied parameters that disagreed

@@ -162,24 +162,27 @@ def build_text_index(
     (pytest-pinned). n_term_buckets travels in the index manifest
     (io.write_index): a modulus that disagreed with the build would
     silently prune the WRONG partition dirs."""
-    _write_text_index(docs, path, n_term_buckets, append=False)
+    _write_text_index(docs, path, n_term_buckets, None)
 
 
-def update_text_index(new_docs: DataFrame, path: str) -> None:
-    """Append an ingest batch to a persisted text index: postings, df
-    deltas, and stats partials all APPEND into place (the additive
-    layout makes the merge a query-time sum) — cost ∝ |batch| tokens,
-    the corpus is never re-read, and the bucket modulus is the
+def update_text_index(new_docs: DataFrame, path: str, batch_id: int) -> None:
+    """Append ingest batch `batch_id` to a persisted text index:
+    postings, df deltas and stats partials land as one generation of
+    all three (io.write_index: an id at or below the manifest's mark is
+    a no-op, so a redelivered batch is never counted twice; the
+    additive layout makes the merge a query-time sum) — cost ∝ |batch|
+    tokens, the corpus is never re-read, and the bucket modulus is the
     manifest's. The lexical twin of update_minhash_index /
-    update_ivf_index. After many small appends, io.compact_dataset on
-    each of postings/, df/ and stats/ rewrites every bucket dir down to
-    one file, committed through io.rewrite_and_swap (pause appends
-    while it runs)."""
+    update_ivf_index. After many small appends, io.compact_index on
+    each of postings, df and stats folds the generations into one file
+    per bucket dir (pause appends while it runs)."""
     params, _ = open_index(new_docs.sparkSession, path, "bm25")
-    _write_text_index(new_docs, path, params["n_term_buckets"], append=True)
+    _write_text_index(new_docs, path, params["n_term_buckets"], batch_id)
 
 
-def _write_text_index(docs: DataFrame, path: str, n_term_buckets: int, append: bool):
+def _write_text_index(
+    docs: DataFrame, path: str, n_term_buckets: int, batch_id: int | None
+):
     from warp_pipe_spark.datapipe.text import h32
 
     tokd = _doc_tokens(docs)
@@ -197,7 +200,7 @@ def _write_text_index(docs: DataFrame, path: str, n_term_buckets: int, append: b
     df_ = posts.groupBy("tbucket", "term").agg(F.count(F.lit(1)).alias("df"))
     parts = ("tbucket",)
     datasets = {"postings": (posts, parts), "df": (df_, parts), "stats": (stats, ())}
-    write_index(path, "bm25", {"n_term_buckets": n_term_buckets}, datasets, append)
+    write_index(path, "bm25", {"n_term_buckets": n_term_buckets}, datasets, batch_id)
 
 
 def bm25_topk_indexed(

@@ -1408,17 +1408,19 @@ def build_ivf_index(
     write_index(path, "ivf", {"n_centroids": n_centroids}, datasets)
 
 
-def update_ivf_index(new_embeddings: DataFrame, path: str) -> None:
-    """Append an ingest batch to a persisted IVF index: assign each new
-    vector to its nearest EXISTING centroid and append into that cell's
-    partition dir. Cost ∝ |batch|·k dots + one partitioned append — the
-    corpus is never re-read (the IVF twin of
-    dedup_index.update_minhash_index). Centroids stay fixed; after
-    heavy drift (cells ballooning past the √N balance), rebuild with
-    build_ivf_index — the standard IVF maintenance tradeoff."""
+def update_ivf_index(new_embeddings: DataFrame, path: str, batch_id: int) -> None:
+    """Append ingest batch `batch_id` to a persisted IVF index as one
+    generation (io.write_index: an id at or below the manifest's mark
+    is a no-op): assign each new vector to its nearest EXISTING
+    centroid and append into that cell's partition dir. Cost ∝
+    |batch|·k dots + one partitioned append — the corpus is never
+    re-read (the IVF twin of dedup_index.update_minhash_index).
+    Centroids stay fixed; after heavy drift (cells ballooning past the
+    √N balance), rebuild with build_ivf_index — the standard IVF
+    maintenance tradeoff."""
     params, read = open_index(new_embeddings.sparkSession, path, "ivf")
     cells = _ivf_assign(new_embeddings, read("centroids"))
-    write_index(path, "ivf", params, {"cells": (cells, ("cent_id",))}, append=True)
+    write_index(path, "ivf", params, {"cells": (cells, ("cent_id",))}, batch_id)
 
 
 def ivf_topk_indexed(

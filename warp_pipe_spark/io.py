@@ -23,7 +23,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import shutil
 from collections.abc import Callable, Iterable
 from typing import TypeVar
@@ -459,45 +458,28 @@ def write_dataset(
     writer.parquet(path)
 
 
-def recover_swap(path: str) -> bool:
+def recover_swap(path: str) -> None:
     """Heal a `rewrite_and_swap` that crashed between its two renames,
     the one state in which `path` is missing: finish the swap when
     `<path>._compact` holds Spark's `_SUCCESS` job-commit marker,
     otherwise put `<path>._trash` back. Acts only on a missing `path`
-    and deletes nothing, so any reader may call it. Returns True if it
-    renamed a sidecar into place."""
+    and deletes nothing, so any reader may call it."""
     if os.path.exists(path):
-        return False
+        return
     tmp, trash = path + "._compact", path + "._trash"
     if os.path.exists(os.path.join(tmp, "_SUCCESS")):
         os.rename(tmp, path)
     elif os.path.isdir(trash):
         os.rename(trash, path)
-    else:
-        return False
-    return True
-
-
-def settle_swap(path: str) -> bool:
-    """Steps 1-2 of rewrite_and_swap, for writers only. Returns whether
-    `path` exists."""
-    recover_swap(path)
-    if not os.path.exists(path):
-        return False
-    shutil.rmtree(path + "._compact", ignore_errors=True)
-    shutil.rmtree(path + "._trash", ignore_errors=True)
-    return True
 
 
 def rewrite_and_swap(path: str, write: Callable[[str], _T]) -> _T:
-    """Crash-safe rewrite of the dataset dir `path`: the one commit
-    protocol behind compact_dataset, store.retention_compact and
-    dedup_index.compact_minhash_index.
+    """Crash-safe rewrite of the dataset dir `path`: the one two-rename
+    swap, behind compact_dataset and store.retention_compact.
 
       1. heal an earlier crash (recover_swap); no dataset at `path`
          raises FileNotFoundError;
-      2. delete stale `<path>._compact` and `<path>._trash` sidecars
-         (steps 1-2 are settle_swap, which sinks also run per batch);
+      2. delete stale `<path>._compact` and `<path>._trash` sidecars;
       3. `write(<path>._compact)`: the caller reads `path` and writes
          the rewritten copy as a Spark job (whose commit leaves
          `_SUCCESS`); raising there abandons the swap, `path` untouched;
@@ -511,11 +493,14 @@ def rewrite_and_swap(path: str, write: Callable[[str], _T]) -> _T:
     post-rewrite rows after a crash anywhere, and the next rewrite
     converges. Only writers delete sidecars. Single-writer: the caller
     holds exclusive write access to `path` for the duration (a
-    cron-shaped maintenance job, or a sink's own sequential batches).
+    cron-shaped maintenance job).
     Returns what `write` returned."""
-    if not settle_swap(path):
+    recover_swap(path)
+    if not os.path.exists(path):
         raise FileNotFoundError(f"no dataset at {path}")
     tmp, trash = path + "._compact", path + "._trash"
+    shutil.rmtree(tmp, ignore_errors=True)
+    shutil.rmtree(trash, ignore_errors=True)
     out = write(tmp)
     os.rename(path, trash)
     os.rename(tmp, path)
@@ -547,12 +532,17 @@ def publish_file(
     os.replace(tmp, path)
 
 
-#: The manifest of a persisted index: its kind, build parameters and
-#: each dataset's schema (write_index).
+#: The manifest of a persisted index or sink ledger: its kind, build
+#: parameters, batch high-water mark, and each dataset's schema,
+#: partition columns and recorded generations (write_index).
 INDEX_MANIFEST = "_INDEX.json"
 
 
-def _index_manifest(path: str, kind: str) -> dict:
+def index_manifest(path: str, kind: str) -> dict:
+    """The manifest of the `kind` index at `path`. A missing one raises
+    FileNotFoundError naming the path, one of another kind ValueError,
+    and one with no generation lists (written before the ledger)
+    ValueError naming a rebuild."""
     try:
         with open(os.path.join(path, INDEX_MANIFEST)) as f:
             m = json.load(f)
@@ -563,92 +553,164 @@ def _index_manifest(path: str, kind: str) -> dict:
         ) from None
     if m["kind"] != kind:
         raise ValueError(f"{path} holds a {m['kind']} index, not a {kind} index")
+    if "datasets" not in m:
+        raise ValueError(
+            f"the {kind} index at {path} has no generation lists (written by "
+            "an older version): delete it and rebuild it"
+        )
     return m
 
 
-def write_index(path: str, kind: str, params: dict, datasets: dict, append=False):
-    """Write `datasets`, `{name: (frame, partition columns)}`, as the
-    parquet datasets `<path>/<name>` of a persisted index: the commit
-    protocol of all five. A build deletes the manifest
-    `<path>/_INDEX.json`, overwrites the datasets, then publishes the
-    manifest (publish_file) with `kind`, `params` and each dataset's
-    read schema, taken from the frame's plan with no job. Parameters
-    thus travel with the index (one re-supplied at query time that
-    disagreed with the build would silently give wrong results), and a
-    build that dies midway leaves no manifest, so open_index refuses
-    the index instead of pairing new data with old parameters. An
-    append leaves the manifest as it is; its `params` must be the
-    manifest's."""
+def _gen_dir(path: str, name: str, g: int) -> str:
+    return os.path.join(path, name, f"_gen={g}")
+
+
+def _drop_unrecorded(path: str, m: dict) -> None:
+    """Delete the `_gen=` dirs of `m`'s datasets that it does not
+    record: what a crashed writer left. Writers only."""
+    for name, d in m["datasets"].items():
+        root = os.path.join(path, name)
+        for e in os.listdir(root) if os.path.isdir(root) else ():
+            if e.startswith("_gen=") and int(e[5:]) not in d["gens"]:
+                shutil.rmtree(os.path.join(root, e))
+
+
+def _next_gen(m: dict) -> int:
+    return 1 + max((g for d in m["datasets"].values() for g in d["gens"]), default=-1)
+
+
+def write_index(
+    path: str, kind: str, params: dict, datasets: dict, batch_id: int | None = None
+) -> None:
+    """Write `datasets`, `{name: (frame, partition columns)}`, into the
+    index or sink ledger at `path`: the commit protocol of the five
+    persisted indexes, the gate sinks and IngestDedupSink's candidates.
+
+    Every write goes to a fresh generation dir `<path>/<name>/_gen=<g>`,
+    g one past the newest recorded, which no reader lists; publishing
+    the manifest `<path>/_INDEX.json` (publish_file) is the commit. It
+    records `kind`, `params` (they travel with the index: one
+    re-supplied at query time that disagreed with the build would
+    silently give wrong results), the batch high-water mark, and each
+    dataset's read schema (from the frame's plan, no job), partition
+    columns and generations. A build (`batch_id` None) first deletes
+    the manifest and the datasets' generations, and sets the mark to
+    -1, so an index whose rebuild died refuses to open instead of
+    pairing new data with old parameters. An append (`params` must be
+    the manifest's) with `batch_id` ≤ the mark is a no-op; otherwise it
+    deletes the generations a crashed writer left unrecorded, writes
+    its own and republishes the manifest with g added to each dataset
+    and `batch_id` as the mark. A crash before the publish leaves the
+    append invisible and its retry redoes it, so each batch id commits
+    exactly once (the file-sink log of Structured Streaming).
+    Single-writer per `path`."""
     manifest = os.path.join(path, INDEX_MANIFEST)
-    if append and _index_manifest(path, kind)["params"] != params:
-        raise ValueError(f"append to {path} with other parameters: {params}")
-    if not append and os.path.exists(manifest):
-        os.remove(manifest)
-    mode, schemas = "append" if append else "overwrite", {}
+    if batch_id is None:
+        if os.path.exists(manifest):
+            os.remove(manifest)
+        fresh = {name: {"gens": []} for name in datasets}
+        m = {"kind": kind, "params": params, "mark": -1, "datasets": fresh}
+    else:
+        m = index_manifest(path, kind)
+        if m["params"] != params:
+            raise ValueError(f"append to {path} with other parameters: {params}")
+        if batch_id <= m["mark"]:
+            return
+        m["mark"] = batch_id
+    _drop_unrecorded(path, m)
+    g = _next_gen(m)
     for name, (df, part) in datasets.items():
-        df.write.mode(mode).partitionBy(*part).parquet(os.path.join(path, name))
+        df.write.mode("overwrite").partitionBy(*part).parquet(_gen_dir(path, name, g))
         # a read returns the partition columns last
         fields = [f for f in df.schema.fields if f.name not in part]
-        schemas[name] = StructType(fields + [df.schema[c] for c in part]).jsonValue()
-    if not append:
-        index = {"kind": kind, "params": params, "schemas": schemas}
-        publish_file(manifest, [json.dumps(index).encode()])
+        m["datasets"][name] = {
+            "schema": StructType(fields + [df.schema[c] for c in part]).jsonValue(),
+            "partition": list(part),
+            "gens": m["datasets"][name]["gens"] + [g],
+        }
+    publish_file(manifest, [json.dumps(m).encode()])
+
+
+def append_batch(path: str, kind: str, datasets: dict, batch_id: int) -> None:
+    """A foreachBatch sink's commit of batch `batch_id` to its own
+    ledger at `path` (write_index): the first batch builds the ledger
+    empty, publishing its manifest, then every batch appends, so a
+    redelivered batch is a no-op."""
+    if not os.path.exists(os.path.join(path, INDEX_MANIFEST)):
+        empty = {name: (df.limit(0), part) for name, (df, part) in datasets.items()}
+        write_index(path, kind, {}, empty)
+    write_index(path, kind, {}, datasets, batch_id)
+
+
+def _reader(spark: SparkSession, path: str, m: dict) -> Callable:
+    def read(name: str, col: str | None = None, values=()) -> DataFrame:
+        d = m["datasets"][name]
+        schema = StructType.fromJson(d["schema"])
+        dirs = [_gen_dir(path, name, g) for g in d["gens"]]
+        if col is not None:
+            parts = (f"{g}/{col}={v}" for g in dirs for v in values)
+            dirs = [p for p in parts if os.path.isdir(p)]
+        if not dirs:
+            return spark.createDataFrame([], schema)
+        root = os.path.join(path, name)
+        df = spark.read.schema(schema).option("basePath", root).parquet(*dirs)
+        df = df.drop("_gen")
+        return df if col is None else df.filter(F.col(col).isin(list(values)))
+
+    return read
 
 
 def open_index(spark: SparkSession, path: str, kind: str) -> tuple[dict, Callable]:
     """(params, read) of the `kind` index at `path`, from its manifest
     alone, so opening launches no Spark job. `read(name)` reads a
-    dataset with the manifest's schema; `read(name, col, values)` lists
-    only the existing `col=<value>` partition dirs and filters on them.
-    A missing manifest raises FileNotFoundError naming the path, one of
-    another kind ValueError."""
-    m = _index_manifest(path, kind)
-
-    def read(name: str, col: str | None = None, values=()) -> DataFrame:
-        root = os.path.join(path, name)
-        schema = StructType.fromJson(m["schemas"][name])
-        reader = spark.read.schema(schema)
-        if col is None:
-            return reader.parquet(root)
-        dirs = [d for v in values if os.path.isdir(d := f"{root}/{col}={v}")]
-        if not dirs:
-            return spark.createDataFrame([], schema)
-        pruned = reader.option("basePath", root).parquet(*dirs)
-        return pruned.filter(F.col(col).isin(list(values)))
-
-    return m["params"], read
+    dataset's recorded generations with the manifest's schema, as
+    explicit paths under one basePath: up to Spark's parallel-listing
+    threshold (spark.sql.sources.parallelPartitionDiscovery.threshold,
+    32) they are listed on the driver. `read(name, col, values)` lists
+    only the existing `col=<value>` partition dirs of those generations
+    and filters on them. Errors as index_manifest."""
+    m = index_manifest(path, kind)
+    return m["params"], _reader(spark, path, m)
 
 
-def committed_batch_dirs(root: str) -> list[str]:
-    """The committed `batch_<id>` dirs under `root`, sorted by name:
-    the layout of every foreachBatch sink that overwrites one dir per
-    batch id. A dir counts once Spark's job commit wrote its
-    `_SUCCESS`, and its name must be exactly `batch_<id>`, so neither a
-    dir a crash left half-written nor the `._compact`/`._trash`
-    sidecars of a compaction (each with its own `_SUCCESS`) is read. A
-    batch whose compaction crashed inside the swap is healed first. A
-    missing `root` holds no batches."""
-    if not os.path.isdir(root):
-        return []
-    for path in swapped_batch_dirs(root):
-        recover_swap(path)
-    return [
-        os.path.join(root, d)
-        for d in sorted(os.listdir(root))
-        if re.fullmatch(r"batch_\d+", d)
-        and os.path.exists(os.path.join(root, d, "_SUCCESS"))
-    ]
-
-
-def swapped_batch_dirs(root: str) -> set[str]:
-    """The `batch_<id>` paths under `root` that have a `._compact` or
-    `._trash` sidecar."""
-    if not os.path.isdir(root):
-        return set()
+def compact_index(spark: SparkSession, path: str, kind: str, name: str) -> dict:
+    """Fold the recorded generations of the dataset `<path>/<name>` of
+    an index or sink ledger into one new generation, one file per
+    partition dir: the small-file maintenance of every appended
+    artifact. The fold is row-count checked (a short copy is deleted
+    and raises, the index untouched); then the manifest is republished
+    with the new generation alone, mark unchanged, and only then are
+    the old ones deleted. A crash before the publish leaves the old
+    generations in force, one after it the new one; the next writer
+    deletes what is left unrecorded. Single-writer: pause appends while
+    it runs. Returns {"rows_before", "rows_after", "files_before",
+    "files_after"}."""
+    m = index_manifest(path, kind)
+    _drop_unrecorded(path, m)
+    d, root = m["datasets"][name], os.path.join(path, name)
+    old, part = [_gen_dir(path, name, g) for g in d["gens"]], d["partition"]
+    df = _reader(spark, path, m)(name)
+    rows_before, files_before = df.count(), sum(n_parquet_files(p) for p in old)
+    g = _next_gen(m)
+    new = _gen_dir(path, name, g)
+    folded = df.repartition(*part) if part else df.coalesce(1)
+    folded.write.mode("overwrite").partitionBy(*part).parquet(new)
+    d["gens"] = [g]
+    rows_after = _reader(spark, path, m)(name).count()
+    if rows_after != rows_before:
+        shutil.rmtree(new)
+        raise RuntimeError(
+            f"compaction of {root} wrote {rows_after} rows, expected "
+            f"{rows_before}: copy discarded, index untouched"
+        )
+    publish_file(os.path.join(path, INDEX_MANIFEST), [json.dumps(m).encode()])
+    for p in old:
+        shutil.rmtree(p)
     return {
-        os.path.join(root, m.group(1))
-        for d in os.listdir(root)
-        if (m := re.fullmatch(r"(batch_\d+)\._(?:compact|trash)", d))
+        "rows_before": rows_before,
+        "rows_after": rows_after,
+        "files_before": files_before,
+        "files_after": n_parquet_files(new),
     }
 
 
@@ -661,13 +723,11 @@ def n_parquet_files(path: str) -> int:
     )
 
 
-def compact_dataset(
-    spark: SparkSession, path: str, target_files: int = 1
-) -> dict[str, int]:
+def compact_dataset(spark: SparkSession, path: str) -> dict[str, int]:
     """Small-file compaction: rewrite an (optionally Hive-partitioned)
-    parquet dataset down to `target_files` per partition directory —
-    the maintenance job every long-lived streaming sink needs, since
-    each micro-batch appends at least one file per touched partition.
+    parquet dataset down to one file per partition directory — the
+    maintenance job every long-lived streaming sink needs, since each
+    micro-batch appends at least one file per touched partition.
     Committed through rewrite_and_swap.
     Returns {"files_before": n, "files_after": m}.
     """
@@ -686,11 +746,9 @@ def compact_dataset(
         ]
         before = n_parquet_files(path)
         if part_cols:
-            write_dataset(
-                df, tmp, partition_by=part_cols, files_per_partition=target_files
-            )
+            write_dataset(df, tmp, partition_by=part_cols)
         else:
-            df.coalesce(target_files).write.mode("overwrite").parquet(tmp)
+            df.coalesce(1).write.mode("overwrite").parquet(tmp)
         return before
 
     before = rewrite_and_swap(path, write)
