@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -50,3 +51,42 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def listing_threshold(spark):
+    """Spark's parallel-listing threshold, lowered to 4 for one test so
+    that a handful of dirs crosses it, and restored after."""
+    conf = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "4")
+    try:
+        yield 4
+    finally:
+        spark.conf.set(conf, old)
+
+
+@pytest.fixture
+def job_descriptions(spark):
+    """run(fn) -> (fn's result, the descriptions of the Spark jobs fn
+    launched in this thread), counted in a fresh job group. A listing
+    job's description starts with "Listing leaf files"."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"test-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "jobs of one call")
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        jsc = sc._jsc.sc()
+        jsc.listenerBus().waitUntilEmpty()
+        store = jsc.statusStore()
+        descriptions = []
+        for j in sorted(sc.statusTracker().getJobIdsForGroup(group)):
+            d = store.job(j).description()
+            descriptions.append(d.get() if d.isDefined() else "")
+        return out, descriptions
+
+    return run

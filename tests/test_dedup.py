@@ -548,31 +548,39 @@ def test_ingest_sink_auto_compacts_behind_threshold(spark, tmp_path):
     assert asof_ac == asof_nc
 
 
-def test_ingest_sink_compacts_before_the_listing_threshold(spark, tmp_path):
-    """The sink's index read lists each band generation as one path; it
-    compacts once the generations reach Spark's parallel-listing
-    threshold, so the steady per-batch query never lists in a job."""
+def test_ingest_sink_index_read_past_the_listing_threshold_lists_no_job(
+    spark, tmp_path, listing_threshold, job_descriptions
+):
+    """The band generations grow past Spark's parallel-listing threshold
+    with no compaction (the 512-file rule alone triggers it): opening
+    and reading the index launches no job, and the candidates equal a
+    run that compacts after every batch."""
     import pyspark.sql.functions as F
 
     from warp_pipe_spark.datapipe.dedup_index import IngestDedupSink
-    from warp_pipe_spark.io import index_manifest
+    from warp_pipe_spark.io import index_manifest, open_index
 
-    rows = [(i, BASE if i % 2 else OTHER) for i in range(10)]
+    rows = [(i, BASE if i % 2 else OTHER) for i in range(12)]
     docs = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    conf = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    old = spark.conf.get(conf)
-    spark.conf.set(conf, "3")
-    try:
-        idx = str(tmp_path / "idx")
-        sink = IngestDedupSink(spark, idx, str(tmp_path / "out"))
-        n_gens = []
-        for b in range(5):
-            sink(docs.filter(F.col("doc_id").isin(2 * b, 2 * b + 1)), b)
-            bands = index_manifest(idx, "minhash")["datasets"]["bands"]
-            n_gens.append(len(bands["gens"]))
-    finally:
-        spark.conf.set(conf, old)
-    assert n_gens == [2, 1, 2, 1, 2]
+    grow = IngestDedupSink(spark, str(tmp_path / "idx"), str(tmp_path / "out"))
+    folded = IngestDedupSink(
+        spark, str(tmp_path / "idx_c"), str(tmp_path / "out_c"),
+        auto_compact_files=0,
+    )
+    n_gens = []
+    for b in range(6):
+        batch = docs.filter(F.col("doc_id").isin(2 * b, 2 * b + 1))
+        grow(batch, b)
+        folded(batch, b)
+        bands = index_manifest(grow.index_dir, "minhash")["datasets"]["bands"]
+        n_gens.append(len(bands["gens"]))
+    assert n_gens == [2, 3, 4, 5, 6, 7]
+    _, jobs = job_descriptions(
+        lambda: open_index(spark, grow.index_dir, "minhash")[1]("bands")
+    )
+    assert jobs == []
+    got = {tuple(r) for r in grow.candidates().collect()}
+    assert got == {tuple(r) for r in folded.candidates().collect()} and got
 
 
 def test_ingest_dedup_sink_candidates_guards(spark, tmp_path):

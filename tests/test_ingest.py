@@ -174,6 +174,29 @@ def test_compact_shrinks_files_preserves_rows(spark, tmp_path):
         assert len([f for f in files if f.endswith(".parquet")]) == 1, files
 
 
+def test_gate_sink_read_past_the_listing_threshold_lists_no_job(
+    spark, tmp_path, listing_threshold, job_descriptions
+):
+    """accepted() over more batch generations than Spark's
+    parallel-listing threshold lists them on the driver: no job runs
+    before its action, and every committed batch's rows come back."""
+    sink = CorpusQualityGateSink(spark, str(tmp_path / "gate"))
+    n = listing_threshold + 2
+    for b in range(n):
+        sink._write_batch(
+            b,
+            spark.createDataFrame([(b, f"doc {b}")], "doc_id LONG, text STRING"),
+            spark.createDataFrame(
+                [(100 + b, "short")], "doc_id LONG, reject_reason STRING"
+            ),
+        )
+    acc, jobs = job_descriptions(sink.accepted)
+    assert jobs == []
+    assert sorted(tuple(r) for r in acc.collect()) == [
+        (b, f"doc {b}") for b in range(n)
+    ]
+
+
 def test_null_text_doc_is_rejected_not_dropped(spark, tmp_path):
     """A NULL-text doc must land in reject with a reason — never
     silently vanish from the accept/reject partition (the explode

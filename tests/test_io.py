@@ -3,8 +3,10 @@ a rewrite, a schema conf flip or the events nanos read never returns a
 stale schema. publish_file: the whole new file or the old one, never a
 torn or visible tmp file. The index manifest: write_index/open_index
 round-trip parameters and schemas, and refuse a missing manifest or
-one of another kind."""
+one of another kind. read_parquet_dirs is the package's only
+multi-path parquet read."""
 
+import ast
 import datetime as dt
 import os
 import uuid
@@ -263,3 +265,58 @@ def test_index_of_another_kind_raises(spark, tmp_path):
     write_index(path, "bloom", {}, {"words": (spark.range(3), ())})
     with pytest.raises(ValueError, match="bloom index, not a bm25 index"):
         open_index(spark, path, "bm25")
+
+
+def _multi_path_reads(tree):
+    """(enclosing function, line) of each `.parquet(...)` / `.load(...)`
+    call given a starred or more than one positional path."""
+
+    def walk(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                yield from walk(child, child.name)
+                continue
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr in ("parquet", "load")
+                and (
+                    len(child.args) > 1
+                    or any(isinstance(a, ast.Starred) for a in child.args)
+                )
+            ):
+                yield fn, child.lineno
+            yield from walk(child, fn)
+
+    return list(walk(tree, None))
+
+
+def test_multi_path_parquet_reads_go_through_read_parquet_dirs():
+    """A parquet read of more paths than Spark's parallel-listing
+    threshold lists them in a Spark job that takes every task slot.
+    io.read_parquet_dirs reads them in chunks listed on the driver, so
+    it must be the package's only multi-path parquet read, and the only
+    code that names the threshold."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "warp_pipe_spark"
+    reads, names = [], []
+    for path in sorted(root.rglob("*.py")):
+        src = path.read_text()
+        rel = str(path.relative_to(root))
+        reads += [(rel, fn) for fn, _ in _multi_path_reads(ast.parse(src))]
+        names += [
+            (rel, i)
+            for i, line in enumerate(src.splitlines(), 1)
+            if "parallelPartitionDiscovery" in line
+        ]
+    assert reads and set(reads) == {("io.py", "read_parquet_dirs")}, reads
+    io_tree = ast.parse((root / "io.py").read_text())
+    (helper,) = [
+        n for n in ast.walk(io_tree)
+        if isinstance(n, ast.FunctionDef) and n.name == "read_parquet_dirs"
+    ]
+    inside = range(helper.lineno, helper.end_lineno + 1)
+    assert names and all(
+        rel == "io.py" and line in inside for rel, line in names
+    ), names

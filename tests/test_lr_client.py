@@ -151,6 +151,16 @@ class FakeWalsender:
         c.sendall(_msg(b"C", b"SELECT\x00"))
         c.sendall(_msg(b"Z", b"I"))
 
+    def _absorb(self, c):
+        """Record the client's standby statuses, reply with silence."""
+        try:
+            while True:
+                t, body = self._read_client(c)
+                if t == b"d" and body[:1] == b"r":
+                    self.standby_lsns.append(struct.unpack("!q", body[9:17])[0])
+        except ConnectionError:
+            return
+
     def _stream(self, c):
         c.sendall(_msg(b"W", struct.pack("!bh", 0, 0)))  # CopyBothResponse
         lsn = 0x15D68C8
@@ -180,18 +190,10 @@ class FakeWalsender:
             # type byte + 2 of the 4 length bytes: a frame has STARTED
             self.max_delivered_lsn = lsn
             c.sendall(b"d" + struct.pack("!i", 64)[:2])
-            try:
-                while True:  # absorb client traffic, reply with silence
-                    self._read_client(c)
-            except ConnectionError:
-                return
+            return self._absorb(c)
         if self.hang_silent_after_payloads:
             self.max_delivered_lsn = lsn
-            try:
-                while True:  # absorb client traffic, reply with silence
-                    self._read_client(c)
-            except ConnectionError:
-                return
+            return self._absorb(c)
         c.sendall(_msg(b"c", b""))  # CopyDone
         while True:  # drain queued unsolicited standby statuses
             t, body = self._read_client(c)
@@ -399,10 +401,45 @@ def test_tail_idle_timeout_terminates_bounded_drain(tmp_path, plugin):
     elapsed = time.monotonic() - t0
     assert n == 3, n  # all delivered rows consumed, then idle-exit
     assert elapsed < 5.0, elapsed
-    # the wal2json tail's final PARTIAL batch (1 of 2 rows) was flushed
-    # by the timeout path, not lost waiting for batch_rows
+    # this server sends no keepalive either, so the wal2json tail's
+    # final PARTIAL batch (1 of 2 rows) was flushed by the timeout
+    # path, not lost waiting for batch_rows
     assert _drop_lines(drop, decode) == expected
     assert c.flushed_lsn == srv.max_delivered_lsn
+    c.close()
+    srv.thread.join(5)
+    assert srv.standby_lsns[-1] == srv.max_delivered_lsn
+
+
+def test_wal2json_trickle_lands_at_a_keepalive(tmp_path):
+    """A trickle source never fills a batch: three documents under
+    batch_rows=1000, then the keepalive a walsender sends once it has
+    caught up. The tail writes the three and confirms their end LSN at
+    that keepalive, while it is still running, not at its idle exit."""
+    srv = FakeWalsender(
+        WAL2JSON_DOCS[:3], keepalive_every=3, hang_silent_after_payloads=True
+    )
+    c = LRClient("127.0.0.1", srv.port, "testdb", "u", "wp_slot",
+                 status_interval_s=999.0)
+    c.connect()
+    c.create_slot()
+    drop = str(tmp_path / "drop")
+    tail = threading.Thread(
+        target=tail_to_drop_dir, args=(c, drop),
+        kwargs={"batch_rows": 1000, "idle_timeout_s": 3.0},
+    )
+    tail.start()
+    deadline = time.monotonic() + 2.0
+    while time.monotonic() < deadline and (
+        getattr(srv, "max_delivered_lsn", None) not in srv.standby_lsns
+    ):
+        time.sleep(0.02)
+    confirmed_while_running = tail.is_alive()
+    assert srv.standby_lsns[-1:] == [srv.max_delivered_lsn]
+    assert confirmed_while_running
+    assert _drop_lines(drop, lambda line: line) == WAL2JSON_DOCS[:3]
+    tail.join(10)
+    assert not tail.is_alive()
     c.close()
     srv.thread.join(5)
 

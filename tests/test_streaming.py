@@ -1315,6 +1315,78 @@ def test_compaction_worker_folds_bounds_debt_and_surfaces_errors(spark, tmp_path
     assert sink._read_meta()["deltas"] == {}
 
 
+@pytest.mark.parametrize("n_buckets", [None, 2])
+def test_read_state_past_the_listing_threshold_lists_no_job(
+    spark, tmp_path, listing_threshold, job_descriptions, n_buckets
+):
+    """read_state() over more key dirs than Spark's parallel-listing
+    threshold lists the dirs the pointer names on the driver, for the
+    plain bases and the folded keys alike: it launches no job before its
+    action, and returns the replayed rows."""
+    sink = _manual_sink(spark, tmp_path, n_buckets=n_buckets)
+    log = [(i, "INSERT", f"t{i % 12}", i, f"v{i}") for i in range(1, 25)]
+    log_1 = [(100 + i, "UPDATE", f"t{i % 12}", i, f"w{i}") for i in range(1, 25)
+             if i % 12 < 6]
+    sink.apply_batch(spark.createDataFrame(log, SCHEMA), batch_id=0)
+    sink.compact()
+    sink.apply_batch(spark.createDataFrame(log_1, SCHEMA), batch_id=1)
+    meta = sink._read_meta()
+    plain = set(meta["tables"]) - set(meta["deltas"])
+    assert len(plain) > listing_threshold
+    assert len(meta["deltas"]) > listing_threshold
+    state, jobs = job_descriptions(sink.read_state)
+    assert jobs == []
+    want = replay(spark.createDataFrame(log + log_1, SCHEMA), ["pk"])
+    assert _rows(state.select(*want.columns)) == _rows(want)
+
+
+def test_compact_past_the_listing_threshold_lists_no_job(
+    spark, tmp_path, listing_threshold, job_descriptions
+):
+    """compact() of a key holding more deltas than Spark's
+    parallel-listing threshold lists them on the driver: its jobs are
+    the fold's, none is a listing job, and the folded rows are the
+    replay's."""
+    sink = _manual_sink(spark, tmp_path)
+    log = [(i, "INSERT" if i <= 3 else "UPDATE", "users", i % 3, f"v{i}")
+           for i in range(1, 9)]
+    for batch_id, row in enumerate(log):
+        sink.apply_batch(spark.createDataFrame([row], SCHEMA), batch_id=batch_id)
+    assert len(sink._read_meta()["deltas"]["users"]) > listing_threshold
+    folded, jobs = job_descriptions(sink.compact)
+    assert folded == 1
+    assert jobs and not [d for d in jobs if d.startswith("Listing leaf files")]
+    assert sink._read_meta()["deltas"] == {}
+    assert _rows(sink.read_state()) == _rows(
+        replay(spark.createDataFrame(log, SCHEMA), ["pk"])
+    )
+
+
+def test_compaction_worker_jobs_carry_their_own_job_group(spark, tmp_path):
+    """The worker's jobs run in ParquetStateSink.COMPACTION_JOB_GROUP, so
+    a status-store reader can tell background compaction from the jobs
+    of the rounds that queued it."""
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = ParquetStateSink.COMPACTION_JOB_GROUP
+    before = set(tracker.getJobIdsForGroup(group))
+    sink = _mk_sink(spark, tmp_path)
+    sink.COMPACT_DELTAS = 1  # every delta is due
+    rounds = f"rounds-{uuid.uuid4().hex}"
+    sc.setJobGroup(rounds, "state-sink rounds")
+    try:
+        sink.apply_batch(spark.createDataFrame(MULTI, SCHEMA), batch_id=0)
+        sink.close()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert sink._read_meta()["deltas"] == {}
+    compaction = set(tracker.getJobIdsForGroup(group)) - before
+    assert compaction
+    assert not compaction & set(tracker.getJobIdsForGroup(rounds))
+
+
 def test_pre_schema_pointer_seeds_schema_from_every_dir(spark, tmp_path):
     """ADVICE r15: a pointer committed before the pointer carried a
     schema must not be seeded from the batch alone — that clips columns

@@ -38,7 +38,6 @@ from warp_pipe_spark.io import (
     INDEX_MANIFEST,
     append_batch,
     compact_index,
-    index_manifest,
     n_parquet_files,
     open_index,
     write_index,
@@ -195,10 +194,8 @@ class IngestDedupSink:
         # size the threshold so that amortized cost stays below the
         # append cost for your corpus:batch ratio (512 ≈ tens of
         # batches of headroom at 8 bands × a handful of files per
-        # append). It also runs once the band generations reach
-        # Spark's parallel-listing threshold, so the query's index read
-        # never lists in a Spark job. None disables (compaction is then
-        # the caller's maintenance op). Compaction is result-invariant
+        # append). None disables (compaction is then the caller's
+        # maintenance op). Compaction is result-invariant
         # (see compact_minhash_index) and runs AFTER the batch's
         # candidates commit, so a crash mid-compaction never costs
         # output.
@@ -229,10 +226,7 @@ class IngestDedupSink:
             rows.unpersist()
         if self.auto_compact_files is None:
             return
-        m = index_manifest(self.index_dir, "minhash")
-        conf = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-        n_gens, listing = len(m["datasets"]["bands"]["gens"]), self.spark.conf.get(conf)
-        if n_parquet_files(bands) > self.auto_compact_files or n_gens >= int(listing):
+        if n_parquet_files(bands) > self.auto_compact_files:
             compact_minhash_index(self.spark, self.index_dir)
 
     def candidates(self) -> DataFrame | None:

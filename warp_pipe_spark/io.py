@@ -21,6 +21,7 @@ form is produced by `changesets_as_audit_log` (to_json) on top.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -602,8 +603,10 @@ def write_index(
     its own and republishes the manifest with g added to each dataset
     and `batch_id` as the mark. A crash before the publish leaves the
     append invisible and its retry redoes it, so each batch id commits
-    exactly once (the file-sink log of Structured Streaming).
-    Single-writer per `path`."""
+    exactly once (the file-sink log of Structured Streaming). Readers
+    list any number of recorded generations on the driver
+    (read_parquet_dirs), so compact_index is due for the file count
+    only. Single-writer per `path`."""
     manifest = os.path.join(path, INDEX_MANIFEST)
     if batch_id is None:
         if os.path.exists(manifest):
@@ -642,6 +645,33 @@ def append_batch(path: str, kind: str, datasets: dict, batch_id: int) -> None:
     write_index(path, kind, {}, datasets, batch_id)
 
 
+def read_parquet_dirs(
+    spark: SparkSession, dirs: list[str], schema: StructType | None, **options
+) -> DataFrame:
+    """Read the driver-local parquet dirs `dirs`, which a manifest or
+    pointer already names, with reader `options`.
+
+    Spark lists the paths of one read in a "Listing leaf files" job
+    once they number more than its parallel-listing threshold
+    (spark.sql.sources.parallelPartitionDiscovery.threshold, 32), and
+    that job takes every task slot for a few hundred ms. So under a
+    `schema` the dirs are read in chunks of at most the threshold, each
+    listed on the driver, and the chunks are unioned by name; a read of
+    up to the threshold is the one plain scan. No conf is changed. A
+    dir with more than the threshold of subdirs still lists them in a
+    job. `schema` None is the mergeSchema read: one scan, since the
+    chunks' merged schemas could differ, and its listing and footer
+    merge run in Spark jobs as Spark decides."""
+    reader = spark.read.options(**options)
+    if schema is None:
+        return reader.option("mergeSchema", "true").parquet(*dirs)
+    reader = reader.schema(schema)
+    conf = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    n = max(1, int(spark.conf.get(conf)))
+    chunks = [reader.parquet(*dirs[i : i + n]) for i in range(0, len(dirs), n)]
+    return functools.reduce(DataFrame.unionByName, chunks)
+
+
 def _reader(spark: SparkSession, path: str, m: dict) -> Callable:
     def read(name: str, col: str | None = None, values=()) -> DataFrame:
         d = m["datasets"][name]
@@ -653,8 +683,7 @@ def _reader(spark: SparkSession, path: str, m: dict) -> Callable:
         if not dirs:
             return spark.createDataFrame([], schema)
         root = os.path.join(path, name)
-        df = spark.read.schema(schema).option("basePath", root).parquet(*dirs)
-        df = df.drop("_gen")
+        df = read_parquet_dirs(spark, dirs, schema, basePath=root).drop("_gen")
         return df if col is None else df.filter(F.col(col).isin(list(values)))
 
     return read
@@ -664,11 +693,10 @@ def open_index(spark: SparkSession, path: str, kind: str) -> tuple[dict, Callabl
     """(params, read) of the `kind` index at `path`, from its manifest
     alone, so opening launches no Spark job. `read(name)` reads a
     dataset's recorded generations with the manifest's schema, as
-    explicit paths under one basePath: up to Spark's parallel-listing
-    threshold (spark.sql.sources.parallelPartitionDiscovery.threshold,
-    32) they are listed on the driver. `read(name, col, values)` lists
-    only the existing `col=<value>` partition dirs of those generations
-    and filters on them. Errors as index_manifest."""
+    explicit paths under one basePath (read_parquet_dirs), so any
+    number of generations is listed on the driver. `read(name, col,
+    values)` lists only the existing `col=<value>` partition dirs of
+    those generations and filters on them. Errors as index_manifest."""
     m = index_manifest(path, kind)
     return m["params"], _reader(spark, path, m)
 

@@ -386,9 +386,9 @@ class LRClient:
     # -- replication stream ----------------------------------------------
 
     def start(self, start_lsn: int = 0, options: "dict[str, str] | None" = None):
-        """START_REPLICATION: yields XLogData (and Keepalive when the
-        server requests a reply — already answered internally). Ends
-        when the server sends CopyDone or closes.
+        """START_REPLICATION: yields XLogData and Keepalive frames (a
+        keepalive that requests a reply is already answered internally).
+        Ends when the server sends CopyDone or closes.
 
         options: plugin output options, rendered as the parenthesized
         option list of the replication grammar —
@@ -496,9 +496,10 @@ def tail_to_drop_dir(
 ) -> int:
     """Bridge the wal2json socket stream into the Structured Streaming
     source contract: buffer XLogData payloads, write each `batch_rows`
-    of them as one JSONL file, and confirm the batch's end LSN ONLY
-    after the file is durably renamed into `drop_dir` — crash-redelivery
-    is bounded by one batch and absorbed by the idempotent downstream.
+    of them (or fewer, at a keepalive) as one JSONL file, and confirm
+    the batch's end LSN ONLY after the file is durably renamed into
+    `drop_dir` — crash-redelivery is bounded by one batch and absorbed
+    by the idempotent downstream.
     Returns messages consumed (for tests / bounded drains).
 
     `max_messages` only bounds the drain from ABOVE — if the WAL
@@ -545,8 +546,11 @@ def _tail_drop_dir(
     (wal_start + payload length), never XLogData.wal_end: that is
     ServerWALEnd, the server's WAL head, and confirming it skips
     undelivered transactions after a restart. It is capped at
-    `confirm_floor()` when that is not None. `done()`, asked after each
-    frame, ends the drain.
+    `confirm_floor()` when that is not None. A Keepalive also writes
+    and confirms the pending lines: the walsender sends one once it has
+    caught up and the client has not confirmed all it sent, so a
+    trickle source lands within one keepalive instead of waiting for a
+    full batch. `done()`, asked after each data frame, ends the drain.
 
     `idle_timeout_s` stops cleanly (writing and confirming the pending
     lines) once the socket has been silent that long — "nothing new
@@ -586,7 +590,9 @@ def _tail_drop_dir(
         with client._conn.timeout(idle_timeout_s):
             try:
                 for msg in client.start(start_lsn, options=options):
-                    if not isinstance(msg, XLogData):
+                    if isinstance(msg, Keepalive):
+                        if flush():
+                            confirm()
                         continue
                     due = feed(msg, lines)
                     hi_lsn = max(hi_lsn, msg.wal_start + len(msg.payload))

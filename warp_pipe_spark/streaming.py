@@ -44,7 +44,7 @@ from pyspark.sql.types import StructType
 
 from warp_pipe_spark.apply import replay
 from warp_pipe_spark.changeset import AUDIT_LOG_SCHEMA
-from warp_pipe_spark.io import publish_file
+from warp_pipe_spark.io import publish_file, read_parquet_dirs
 
 
 def changeset_stream(
@@ -194,7 +194,10 @@ class ParquetStateSink(StateSink):
         `read_state()` frame taken between rounds stays readable until
         the caller's next round (or close) starts.
       - READS: `read_state()` scans the bases of keys without deltas as
-        they are and folds only the keys that hold deltas.
+        they are and folds only the keys that hold deltas. Reads and
+        compactions list the dirs the pointer names on the driver, in
+        chunks of Spark's parallel-listing threshold, so no read of any
+        number of dirs runs a listing job (io.read_parquet_dirs).
       - A compaction error in the worker re-raises on the next
         `apply_batch` or `close()`. `close()` waits for the worker and
         collects its garbage (a drained tail, shutdown); `compact()`
@@ -220,6 +223,8 @@ class ParquetStateSink(StateSink):
     #: rewrote its whole state every 16 rounds — 4× rewrite
     #: amplification — while its deltas stayed far below the byte rule)
     COMPACT_DELTAS = 64
+    #: the Spark job group of the compaction worker's jobs
+    COMPACTION_JOB_GROUP = "warp-pipe-state-compaction"
 
     def __init__(
         self,
@@ -471,9 +476,12 @@ class ParquetStateSink(StateSink):
     def _read_tables(
         self, rels: Sequence[str], schema: dict | None = None
     ) -> DataFrame | None:
-        """ONE multi-path scan over every referenced dir — a per-dir read
-        + N-way union builds an O(N) plan that dominates latency once a
-        read spans many keys. All dirs share the state schema, and each
+        """One read of every referenced dir (io.read_parquet_dirs): the
+        pointer names them all, so they are listed on the driver, in
+        chunks of Spark's parallel-listing threshold, and never in a
+        listing job that would take every task slot while a round's job
+        queues behind it. A per-dir read + N-way union would build an
+        O(N) plan instead. All dirs share the state schema, and each
         path is its own listing root (leaf dirs, so no partition-column
         discovery).
 
@@ -482,8 +490,8 @@ class ParquetStateSink(StateSink):
         consuming job runs, and dirs written before a source-side ALTER
         TABLE ADD COLUMN null-fill the missing columns (the parquet
         reader clips files to the requested schema). Without it
-        (pre-r15 pointers) the mergeSchema read provides the same
-        null-fill semantics at the cost of a footer-scan job.
+        (pre-r15 pointers) the one-scan mergeSchema read provides the
+        same null-fill semantics at the cost of a footer-scan job.
 
         pyarrow deltas carry no Spark version, so their dates/timestamps
         would follow the session's rebase mode (EXCEPTION fails on pre-
@@ -491,11 +499,13 @@ class ParquetStateSink(StateSink):
         if not rels:
             return None
         dirs = [os.path.join(self.state_dir, r) for r in rels]
-        reader = self.spark.read.option("datetimeRebaseMode", "CORRECTED")
         try:
-            if schema is not None:
-                return reader.schema(StructType.fromJson(schema)).parquet(*dirs)
-            return reader.option("mergeSchema", "true").parquet(*dirs)
+            return read_parquet_dirs(
+                self.spark,
+                dirs,
+                None if schema is None else StructType.fromJson(schema),
+                datetimeRebaseMode="CORRECTED",
+            )
         except Exception as e:
             raise StateCorruptError(
                 f"pointer references unreadable state dirs {dirs}: {e}"
@@ -688,7 +698,11 @@ class ParquetStateSink(StateSink):
             self._drain()
 
     def _work(self) -> None:
+        sc = self.spark.sparkContext
         try:
+            # the worker's jobs carry their own group, so a status-store
+            # reader can tell background compaction from a round's jobs
+            sc.setJobGroup(self.COMPACTION_JOB_GROUP, f"compaction of {self.state_dir}")
             while True:
                 with self._cv:
                     if not self._queue:
@@ -707,6 +721,7 @@ class ParquetStateSink(StateSink):
                 if self._worker is threading.current_thread():
                     self._worker = None
                     self._cv.notify_all()
+            sc._jsc.clearJobGroup()
 
     def _drain(self) -> None:
         """Block until the worker has emptied its queue."""
