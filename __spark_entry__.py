@@ -1449,20 +1449,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         the scale-safe twin of dedup_embedding_lsh (which pins 16
         planes for determinism but is quadratic in bucket occupancy as
         the corpus grows)."""
-        from warp_pipe_spark.datapipe.dedup import cosine_v
+        from warp_pipe_spark.datapipe.dedup import _pair_cosine, _scorable
         from warp_pipe_spark.datapipe.similarity import hyperplane_lsh_pairs
 
         emb = read_table(spark, sf, "embeddings")
         cand = hyperplane_lsh_pairs(emb, n_planes=None)
-        a = emb.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"))
-        b = emb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"))
-        sim = F.round(cosine_v(F.col("ea"), F.col("eb")), 6)
-        return (
-            cand.join(a, "vec_a")
-            .join(b, "vec_b")
-            .select("vec_a", "vec_b", sim.alias("cos_sim"))
-            .filter(F.col("cos_sim") >= 0.4)
-        )
+        scored = _pair_cosine(cand, _scorable(emb), "vec_a", "vec_b")
+        return scored.filter(F.col("cos_sim") >= 0.4)
 
     q.update(
         ann_topk=ann_topk,
@@ -3187,18 +3180,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from warp_pipe_spark.datapipe.similarity import topk_cosine
         from warp_pipe_spark.datapipe.text import hash_embed
 
-        emb = (
-            hash_embed(_docs(spark, sf), dims=8)
-            # zero vectors (all signed sums cancel) have undefined
-            # cosine; excluded on BOTH sides, same predicate as the
-            # oracle
-            .filter(F.greatest(*[F.abs(F.col(f"f{k}")) for k in range(8)]) > 0)
-            .select(
-                F.col("doc_id").alias("vec_id"),
-                F.array(*[F.col(f"f{k}").cast("double") for k in range(8)]).alias(
-                    "embedding"
-                ),
-            )
+        # zero vectors (all signed sums cancel) have undefined cosine:
+        # topk_cosine's similarity universe drops them on both sides,
+        # as the oracle's nonzero predicate does
+        emb = hash_embed(_docs(spark, sf), dims=8).select(
+            F.col("doc_id").alias("vec_id"),
+            F.array(*[F.col(f"f{k}").cast("double") for k in range(8)]).alias(
+                "embedding"
+            ),
         )
         return topk_cosine(emb, k=5, n_queries=10).select(
             "query_id",
@@ -3698,8 +3687,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # oracle (testdata min doc length is 10 tokens). All verified
         # green at sf0.001/0.01/0.1 this round.
         "emb_kmeans": 8,
-        "emb_semdedup": 8,
-        "emb_semdedup_auto": 8,
+        # (emb_semdedup/emb_semdedup_auto round-8 tags expired;
+        # re-tagged 17 below)
         "docs_pii_scrub": 8,
         "docs_bigram_ppl": 8,
         # round-7 filters review: ignore_tables is NULL-safe (a NULL
@@ -3780,8 +3769,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "docs_repetition_signals": 15,
         "docs_decontaminate": 15,
         "multimodal_decode_png": 15,
-        "ann_nn_descent": 15,
-        "ann_graph_search": 15,
+        # (ann_nn_descent/ann_graph_search round-15 tags expired;
+        # re-tagged 17 below)
         # round-12 fan-out guard (io.fan_out in repetition_signals,
         # decontaminate's corpus side, and png_media — the BMP/WAV/
         # stream codecs measured FASTER without it: their sub-second
@@ -3929,6 +3918,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # rides its existing 16 tag above; these two are r14-green:
         "dedup_ngram_jaccard_capped": 17,
         "dedup_containment": 17,
+        # similarity-family policies shared (one universe, one rounded
+        # score, one top-k, one centroid ranking, one PQ core): rows
+        # set-equal to the previous code at sf0.001/0.01/0.1 for every
+        # touched query. ann_topk/ann_ivf_topk/ann_ivf_indexed ride
+        # their 16 tags above and ann_recall_eval its 17; the rest are
+        # tagged 17, the round-16 window being full (the r14-green
+        # ones are staleness-mandatory in 17 anyway).
+        "ann_ivf_pq_topk": 17,
+        "ann_nn_descent": 17,
+        "ann_graph_search": 17,
+        "emb_pq_codes": 17,
+        "emb_pq_adc_topk": 17,
+        "emb_semdedup": 17,
+        "emb_semdedup_auto": 17,
+        "docs_text_ann": 17,
+        "dedup_embedding_lsh_auto": 17,
     }
 
     import glob as _glob

@@ -17,7 +17,8 @@ the host withheld (perfbench.env): on shared hosts steal, not the code,
 moves wall clock. `layers[name]` holds the Spark status-store counters
 (jobs, stages, tasks, executor run/CPU/GC ms, shuffle, spill, driver
 gap; perfbench.trace.spark_layer) and the Python-worker totals over the
-window of the recorded run; host load moves none of the counts and
+window of the recorded run, plus its `build_ms` (call → DataFrame; the
+rest of the run is the write); host load moves none of the counts and
 bytes among them.
 """
 
@@ -230,26 +231,34 @@ def choose_self_artifact(result: dict, prev: dict | None) -> str:
     return "BENCH_SELF.json" if same else "BENCH_SELF_LAST.json"
 
 
-def time_min(name: str, run) -> tuple[float, float]:
-    """(seconds, start time) of the fastest of `name`'s timed calls of
-    `run`: two, or one for SINGLE_SHOT."""
+def time_min(name: str, build, write) -> tuple[float, float, float]:
+    """(seconds, start time, build seconds) of the fastest of `name`'s
+    timed calls: two, or one for SINGLE_SHOT. A call is `build()` (the
+    call → DataFrame phase, timed on its own) then `write` of what it
+    returned."""
     samples = []
     for _ in range(1 if name in SINGLE_SHOT else 2):
         t0 = time.time()
-        run()
-        samples.append((time.time() - t0, t0))
+        out = build()
+        t1 = time.time()
+        write(out)
+        samples.append((time.time() - t0, t0, t1 - t0))
     return min(samples)
 
 
 def layer_profile(
-    status: SparkStatus, windows: dict[str, tuple[float, float]]
+    status: SparkStatus,
+    windows: dict[str, tuple[float, float]],
+    builds: dict[str, float],
 ) -> dict[str, dict[str, float]]:
     """Per query: the Spark layer counters and the Python-worker totals
-    over the (start, end) window of its recorded run."""
+    over the (start, end) window of its recorded run, and `build_ms`,
+    that run's call → DataFrame time (`builds`, seconds)."""
     return {
         name: {
             **spark_layer(status.window(lo, hi)),
             **status.python_window(lo, hi),
+            "build_ms": round(builds[name] * 1000, 1),
         }
         for name, (lo, hi) in windows.items()
     }
@@ -294,17 +303,16 @@ def main() -> None:
     # model; tools/scale_probe.py clears it to time raw computation)
     times: dict[str, float] = {}
     windows: dict[str, tuple[float, float]] = {}
+    builds: dict[str, float] = {}
     for name in HEADLINE:
-        sec, t0 = time_min(
+        sec, t0, builds[name] = time_min(
             name,
-            lambda: qs[name](spark, sf_dir)
-            .write.format("noop")
-            .mode("overwrite")
-            .save(),
+            lambda: qs[name](spark, sf_dir),
+            lambda df: df.write.format("noop").mode("overwrite").save(),
         )
         times[name] = round(sec, 3)
         windows[name] = (t0, t0 + sec)
-    layers = layer_profile(SparkStatus(spark).read(), windows)
+    layers = layer_profile(SparkStatus(spark).read(), windows, builds)
 
     # Instrumentation splits live in a SEPARATE dict: several re-time
     # work a registered headline query above already paid for (e.g. the

@@ -70,9 +70,9 @@ def test_plan_runs_soak_fixtures_are_always_single_shot():
     }
     for name in SINGLE_SHOT:
         calls = []
-        sec, t0 = time_min(name, lambda: calls.append(1))
+        sec, t0, build = time_min(name, lambda: calls.append(1), lambda _: None)
         assert len(calls) == 1
-        assert 0 <= sec < 1 and t0 > 0
+        assert 0 <= build <= sec < 1 and t0 > 0
 
 
 def test_time_min_records_the_faster_of_two_runs():
@@ -83,9 +83,12 @@ def test_time_min_records_the_faster_of_two_runs():
     from bench import time_min
 
     naps = [0.05, 0.0]
-    sec, t0 = time_min("docs_bm25", lambda: time.sleep(naps.pop(0)))
-    assert naps == []
-    assert 0 <= sec < 0.05 and t0 > 0
+    written = []
+    sec, t0, build = time_min(
+        "docs_bm25", lambda: time.sleep(naps.pop(0)) or len(naps), written.append
+    )
+    assert naps == [] and written == [1, 0]
+    assert 0 <= build <= sec < 0.05 and t0 > 0
 
 
 def test_single_shot_names_are_registered_headline_queries():
@@ -195,7 +198,7 @@ def test_compact_result_line_is_small_and_standalone():
 def test_layers_cover_every_headline_query():
     # the full artifact's `layers` schema: one entry per HEADLINE query
     # holding every spark_layer key and the Python-worker totals, each
-    # counted over that query's own window only
+    # counted over that query's own window only, and its build_ms
     from bench import HEADLINE, layer_profile
     from perfbench.trace import PYTHON_METRICS, SparkStatus, Window, spark_layer
 
@@ -219,12 +222,15 @@ def test_layers_cover_every_headline_query():
     status.python = [(10.6, {"python_run_ms": 7.0})]
     windows = {name: (20.0 + i, 20.5 + i) for i, name in enumerate(HEADLINE)}
     windows[HEADLINE[0]] = (10.0, 11.0)
-    layers = layer_profile(status, windows)
+    builds = {name: 0.0 for name in HEADLINE}
+    builds[HEADLINE[0]] = 0.0123
+    layers = layer_profile(status, windows, builds)
 
     assert list(layers) == HEADLINE
-    keys = set(spark_layer(Window())) | set(PYTHON_METRICS.values())
+    keys = set(spark_layer(Window())) | set(PYTHON_METRICS.values()) | {"build_ms"}
     assert all(set(v) == keys for v in layers.values())
     first = layers[HEADLINE[0]]
+    assert first["build_ms"] == 12.3
     assert (first["spark.jobs"], first["spark.stages"], first["spark.tasks"]) == (1, 1, 4)
     assert first["spark.executor_cpu_ms"] == 200.0
     assert first["spark.driver_gap_ms"] == 600.0

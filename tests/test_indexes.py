@@ -5,6 +5,7 @@ published leaves an index that refuses to open, and appending one
 batch id twice equals appending it once."""
 
 import json
+import os
 import re
 import uuid
 
@@ -241,3 +242,30 @@ def test_index_manifest_without_generations_names_a_rebuild(spark, tmp_path):
     new = spark.createDataFrame([(1, "a")], "doc_id LONG, text STRING")
     with pytest.raises(ValueError, match="rebuild"):
         update_text_index(new, str(path), 0)
+
+
+def test_whole_partitioned_dataset_read_past_the_listing_threshold_lists_no_job(
+    spark, sf_dir, tmp_path, listing_threshold, job_descriptions
+):
+    """A whole-dataset read of a partitioned ledger dataset (the IVF
+    cells, one `cent_id=` dir per cell) passes the partition leaf dirs,
+    listed on the driver, so neither `read("cells")` nor compacting the
+    cells launches a listing job, and the rows are unchanged."""
+    emb = read_table(spark, sf_dir, "embeddings")
+    path = str(tmp_path / "ivf")
+    build_ivf_index(emb, path, n_centroids=10)
+    update_ivf_index(emb.filter("vec_id < 20"), path, 0)
+    gen0 = wio._gen_dir(path, "cells", 0)
+    assert len([e for e in os.listdir(gen0) if e.startswith("cent_id=")]) == 10
+    assert 10 > listing_threshold
+
+    def rows():
+        return sorted(tuple(r) for r in wio.open_index(spark, path, "ivf")[1]("cells").collect())
+
+    want, jobs = job_descriptions(rows)
+    assert not [j for j in jobs if j.startswith("Listing leaf files")], jobs
+    assert len(want) == emb.count() + 20
+    out, jobs = job_descriptions(lambda: wio.compact_index(spark, path, "ivf", "cells"))
+    assert not [j for j in jobs if j.startswith("Listing leaf files")], jobs
+    assert out["rows_before"] == out["rows_after"] == len(want)
+    assert rows() == want

@@ -1,5 +1,7 @@
 """Similarity-search operators: brute-force top-k, hyperplane LSH, IVF."""
 
+import ast
+
 import pytest
 
 from warp_pipe_spark.datapipe.similarity import (
@@ -820,3 +822,160 @@ def test_ivf_cand_must_match_the_search_parameters(emb):
             search(emb, k=5, n_queries=10, n_probe=2, cand=cand)
         with pytest.raises(ValueError, match="stamp is None"):
             search(emb, k=5, n_queries=10, cand=hand_built)
+
+
+# One vector zeroed and one NULL: both are query ids (< 10) and neither
+# is a centroid (every 50th id) nor in the PQ codebook (ids 0..3).
+_ZERO, _NULL = 7, 8
+
+
+@pytest.fixture(scope="module")
+def degenerate_emb(emb):
+    from pyspark.sql import functions as F
+
+    e = emb.select("vec_id", "embedding")
+    vec = F.col("embedding")
+    return e.withColumn(
+        "embedding",
+        F.when(F.col("vec_id") == _ZERO, F.transform(vec, lambda x: x * 0))
+        .when(F.col("vec_id") == _NULL, F.lit(None).cast(e.schema["embedding"].dataType))
+        .otherwise(vec),
+    ).localCheckpoint(eager=True)
+
+
+def _entry_point_rows(name, spark, e, tmp_path):
+    from warp_pipe_spark.datapipe import similarity as sim
+    from warp_pipe_spark.datapipe.clustering import semdedup_pairs
+    from warp_pipe_spark.datapipe.dedup import embedding_near_dup_pairs
+
+    queries, rest = e.filter("vec_id < 10"), e.filter("vec_id >= 10")
+    if name == "topk_cosine":
+        return sim.topk_cosine(e, k=5, n_queries=10)
+    if name == "topk_update":
+        cached = sim.topk_cosine(e.filter("vec_id >= 100"), queries=queries, k=5)
+        return sim.topk_update(cached, e.filter("vec_id < 100"), queries, k=5)
+    if name == "ivf_topk_cosine":
+        return sim.ivf_topk_cosine(e, k=5, n_queries=10)
+    if name == "ivf_pq_topk":
+        return sim.ivf_pq_topk(e, k=5, n_queries=10)
+    if name == "ivf_topk_indexed":
+        sim.build_ivf_index(e, str(tmp_path / "ivf"), n_centroids=10)
+        return sim.ivf_topk_indexed(spark, queries, str(tmp_path / "ivf"), k=5)
+    if name == "nn_descent":
+        return sim.nn_descent(e, k=5, iters=1)
+    if name == "graph_search":
+        graph = sim.nn_descent(e, k=10, iters=1)
+        return sim.graph_search(graph, e, queries, k=5, hops=1)
+    if name == "nn_graph_insert":
+        graph = sim.nn_descent(rest, k=10, iters=1)
+        return sim.nn_graph_insert(graph, rest, queries, k=10, hops=1)
+    if name == "semantic_decontaminate":
+        return sim.semantic_decontaminate(e, queries, threshold=0.4)
+    if name == "embedding_near_dup_pairs":
+        return embedding_near_dup_pairs(e, threshold=0.4)
+    assert name == "semdedup_pairs"
+    return semdedup_pairs(e, k=8, iters=2, threshold=0.4)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "topk_cosine",
+        "topk_update",
+        "ivf_topk_cosine",
+        "ivf_pq_topk",
+        "ivf_topk_indexed",
+        "nn_descent",
+        "graph_search",
+        "nn_graph_insert",
+        "semantic_decontaminate",
+        "embedding_near_dup_pairs",
+        "semdedup_pairs",
+    ],
+)
+def test_every_cosine_entry_point_excludes_null_and_zero_vectors(
+    spark, degenerate_emb, tmp_path, name
+):
+    """Cosine is undefined for a NULL or zero-norm vector, and its NaN
+    ranks above every real neighbor in Spark and passes `>= t`: every
+    cosine entry point works on the similarity universe, so no output
+    row names either vector and no score is NaN."""
+    import math
+
+    df = _entry_point_rows(name, spark, degenerate_emb, tmp_path)
+    ids = [
+        c
+        for c in df.columns
+        if c in ("query_id", "neighbor_id", "vec_id", "nbr_id", "vec_a", "vec_b", "bench_id")
+    ]
+    rows = df.collect()
+    assert rows and ids
+    named = [r for r in rows if {r[c] for c in ids} & {_ZERO, _NULL}]
+    assert not named, named[:3]
+    if "cos_sim" in df.columns:
+        assert not [r for r in rows if math.isnan(r["cos_sim"])]
+
+
+def _references(tree, name, owner=None):
+    """The enclosing top-level function of each reference to `name`: a
+    bare name or import, or with `owner` the attribute `owner.name`."""
+    out = []
+
+    def hit(node):
+        if owner is not None:
+            return (
+                isinstance(node, ast.Attribute)
+                and node.attr == name
+                and isinstance(node.value, ast.Name)
+                and node.value.id == owner
+            )
+        return (isinstance(node, ast.Name) and node.id == name) or (
+            isinstance(node, ast.alias) and node.name == name
+        )
+
+    def walk(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                walk(child, fn or child.name)
+                continue
+            if hit(child):
+                out.append(fn)
+            walk(child, fn)
+
+    walk(tree, None)
+    return out
+
+
+def _sql_exists(tree):
+    """The enclosing top-level function of each string constant that
+    calls SQL `exists(`."""
+    out = []
+    for top in tree.body:
+        for node in ast.walk(top):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                if "exists(" in node.value.lower():
+                    out.append(getattr(top, "name", None))
+    return out
+
+
+def test_each_similarity_policy_has_one_implementation():
+    """The family's shared policies live in one function each, so the
+    paths cannot drift apart again: cosine_v is referenced only by the
+    rounded score (dedup._cos6), the nonzero predicate (`exists`, as
+    F.exists or in SQL) only in the universe (dedup._scorable), and similarity.py's
+    row_number only in the rank helper (_top_k) and the PQ codebook."""
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    files = sorted((repo / "warp_pipe_spark" / "datapipe").glob("*.py"))
+    files.append(repo / "__spark_entry__.py")
+    cos, nonzero = set(), set()
+    for path in files:
+        tree = ast.parse(path.read_text())
+        cos |= {(path.name, fn) for fn in _references(tree, "cosine_v")}
+        nonzero |= {(path.name, fn) for fn in _references(tree, "exists", "F")}
+        nonzero |= {(path.name, fn) for fn in _sql_exists(tree)}
+    assert cos == {("dedup.py", "_cos6")}, cos
+    assert nonzero == {("dedup.py", "_scorable")}, nonzero
+    sim = ast.parse((repo / "warp_pipe_spark/datapipe/similarity.py").read_text())
+    assert set(_references(sim, "row_number", "F")) == {"_top_k", "_pq_codebook"}

@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from warp_pipe_spark.datapipe.dedup import cosine_v
+from warp_pipe_spark.datapipe.dedup import _cos6, _scorable
 
 
 def _sqdist(a, b):
@@ -192,7 +192,8 @@ def semdedup_pairs(
     sum(|cluster|²) ≈ N²/k — choose k ≈ N/target_cluster_size to bound
     it (auto-sizing like auto_ivf_params applies). A pathological hot
     cluster is visible in the cluster-size histogram before paying the
-    join."""
+    join. Only the similarity universe is clustered (dedup._scorable):
+    a NULL or zero-norm vector has no cosine, so it is in no pair."""
     # keep_vector avoids a full-corpus re-join on vec_id solely to
     # recover the vector column the final assignment already carried.
     # localCheckpoint (r14): both sides of the cluster self-join read
@@ -202,7 +203,7 @@ def semdedup_pairs(
     # use, computed once, lineage cut; values are deterministic so the
     # pin moves cost, never results.
     assigned = kmeans_assign(
-        embeddings, k=k, iters=iters, keep_vector=True
+        _scorable(embeddings), k=k, iters=iters, keep_vector=True
     ).localCheckpoint(eager=False)
     a = assigned.select(
         "cluster", F.col("vec_id").alias("vec_a"), F.col("v").alias("va")
@@ -217,7 +218,7 @@ def semdedup_pairs(
             "cluster",
             "vec_a",
             "vec_b",
-            F.round(cosine_v(F.col("va"), F.col("vb")), 6).alias("cos_sim"),
+            _cos6(F.col("va"), F.col("vb")).alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= threshold)
     )

@@ -616,17 +616,6 @@ def _cast_double(vec: F.Column) -> F.Column:
     return F.transform(vec, lambda x: x.cast("double"))
 
 
-def cosine(a: F.Column, b: F.Column) -> F.Column:
-    """Sequential-fold cosine on double-cast vectors — deterministic
-    summation order so the oracle's replay matches bit-for-bit (up to
-    final rounding)."""
-    a, b = _cast_double(a), _cast_double(b)
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-    na = F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
-    nb = F.sqrt(F.aggregate(F.transform(b, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
-    return dot / (na * nb)
-
-
 def _star_fingerprint(e: DataFrame):
     """(count, 60-bit pair-hash sum) — an order-free set fingerprint."""
     h = h60(F.concat_ws("_", F.col("u"), F.col("v")))
@@ -771,11 +760,12 @@ def _arrow_list_matrix(arr) -> "np.ndarray | None":
 def cosine_v(a: F.Column, b: F.Column) -> F.Column:
     """Arrow-vectorized cosine: one float64 einsum per batch instead of
     three interpreted aggregate/zip_with folds per row (~6·dim lambda
-    invocations). Numerically it differs from `cosine` only in float64
-    summation ASSOCIATION (pairwise vs sequential), a ~1e-16 relative
-    wobble; callers round to 6 decimals, and the verified margin to the
-    nearest rounding boundary on the test corpora is >700× wider.
-    Use in hot verify paths; `cosine` remains the fold-exact reference.
+    invocations). Numerically it differs from the oracles' sequential
+    DuckDB fold (`_COS_SQL` in __spark_entry__.py, the reference) only
+    in float64 summation ASSOCIATION (pairwise vs sequential), a ~1e-16
+    relative wobble; scores are rounded to 6 decimals (`_cos6`), and the
+    verified margin to the nearest rounding boundary on the test corpora
+    is >700× wider.
 
     r14: Arrow-native UDF — batches arrive as pyarrow arrays and the
     (n, d) matrices are zero-copy reshapes of the list buffers
@@ -805,6 +795,48 @@ def cosine_v(a: F.Column, b: F.Column) -> F.Column:
         return pa.array(dot / (na * nb), type=pa.float64())
 
     return cos_udf(a, b)
+
+
+def _scorable(vectors: DataFrame) -> DataFrame:
+    """The similarity universe: the rows of a (vec_id, embedding) frame
+    whose id and vector are set and whose vector has a nonzero
+    component. Cosine is undefined for a NULL or zero-norm vector, and
+    its NaN would rank above every real neighbor (Spark orders NaN
+    above any double) and pass every `>= threshold` verdict, so every
+    cosine entry point applies this to each of its vector inputs."""
+    return vectors.filter(
+        "vec_id IS NOT NULL AND embedding IS NOT NULL"
+        " AND exists(embedding, x -> x != 0)"
+    )
+
+
+def _cos6(a: F.Column, b: F.Column) -> F.Column:
+    """The score every cosine path ranks and thresholds on: cosine_v
+    rounded HALF_UP to 6 places, as the DuckDB oracles round it."""
+    return F.round(cosine_v(a, b), 6)
+
+
+def _pair_cosine(
+    pairs: DataFrame,
+    vectors: DataFrame,
+    a: str,
+    b: str,
+    b_vectors: DataFrame | None = None,
+) -> DataFrame:
+    """`pairs` plus `cos_sim`, the rounded cosine of the vectors of its
+    id columns `a` and `b`. The vectors come from `vectors` (vec_id,
+    embedding), or from `b_vectors` for `b`, and attach by an inner
+    join on `a`, then one on `b`, so a pair naming an id outside the
+    frames drops out."""
+    va = vectors.select(F.col("vec_id").alias(a), F.col("embedding").alias("_va"))
+    vb = (vectors if b_vectors is None else b_vectors).select(
+        F.col("vec_id").alias(b), F.col("embedding").alias("_vb")
+    )
+    return (
+        pairs.join(va, a)
+        .join(vb, b)
+        .select(*pairs.columns, _cos6(F.col("_va"), F.col("_vb")).alias("cos_sim"))
+    )
 
 
 def embedding_near_dup_pairs(
@@ -866,24 +898,11 @@ def embedding_near_dup_pairs(
         )
     if n_blocks is None:
         n_blocks = max(1, min(32, -(-n // 512)))
-    # NULL id/vector rows never paired under the old join formulation
-    # (NULL comparisons are never true); here they must not reach the
-    # numpy stack, where a None crashes the whole block's task.
-    # Zero-norm embeddings are excluded EXPLICITLY by the same filter:
-    # cosine is undefined for a directionless vector, and the two
-    # historical implementations disagreed silently — Spark's NaN
-    # ordering (NaN > any double) made the old F.round(cos,6) >=
-    # threshold verdict EMIT zero-norm pairs with NaN cos_sim, while
-    # the numpy prefilter (nan >= x is False) dropped them. Dropping
-    # is the contract now (pinned in test_dedup): a zero vector can no
-    # more be "near" something than a NULL one.
-    clean = embeddings.filter(
-        F.col("vec_id").isNotNull()
-        & F.col("embedding").isNotNull()
-        & F.exists("embedding", lambda x: x != 0)
-    )
+    # the similarity universe: a None would crash the whole block's
+    # numpy stack, and a zero-norm row would score NaN
     blocks = (
-        clean.select(
+        _scorable(embeddings)
+        .select(
             "vec_id",
             "embedding",
             F.pmod(F.col("vec_id"), F.lit(n_blocks)).alias("blk"),

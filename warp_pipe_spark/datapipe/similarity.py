@@ -1,12 +1,24 @@
 """Similarity search over an embedding column (`array<float>`):
-brute-force cosine top-k (baseline) and LSH/IVF bucketed variants
-(the scale path).
+brute-force cosine top-k (baseline), LSH/IVF/graph variants (the scale
+path) and product quantization.
 
 Scale design: top-k never global-sorts — it's a window rank inside each
 query partition (shuffle keyed by query_id), and the candidate set is
 bounded by broadcast queries (brute force) or bucket co-membership
 (LSH/IVF). At 100 TB the brute-force path is a broadcast-join +
 per-partition partial top-k; the IVF path prunes to probed cells first.
+
+Every operator shares one implementation of each family policy, so the
+paths cannot drift apart:
+  - the similarity universe, dedup._scorable: NULL and zero-norm
+    vectors are dropped from every vector input of a cosine entry
+    point (their NaN would rank first and pass any threshold);
+  - the score, dedup._cos6 (cosine rounded to 6 places), and the id
+    pair scorer dedup._pair_cosine, which attaches both vectors;
+  - the rank, _top_k: per key, best rounded score first, ties to the
+    smaller id (cosine descending, ADC distance ascending);
+  - the nearest-centroid ranking, _nearest_centroids;
+  - the PQ core: _pq_codebook, _pq_dists and the ADC top-k _adc_topk.
 """
 
 from __future__ import annotations
@@ -16,8 +28,51 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from warp_pipe_spark.datapipe.dedup import _cast_double, cosine_v
+from warp_pipe_spark.datapipe.clustering import _sqdist
+from warp_pipe_spark.datapipe.dedup import (
+    _cast_double,
+    _cos6,
+    _pair_cosine,
+    _scorable,
+)
 from warp_pipe_spark.io import open_index, write_index
+
+
+def _top_k(
+    scored: DataFrame,
+    k: int,
+    by: str,
+    item: str,
+    score: str = "cos_sim",
+    ascending: bool = False,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """The family's one top-k: per `by`, the `k` rows best on the
+    rounded `score` (highest first, or lowest with `ascending`), ties
+    to the smaller `item`. Returns (by, item, *keep, rank, score), rank
+    the 1-based row_number; the `rank <= k` filter lets Spark cut each
+    key's rows map-side (WindowGroupLimit)."""
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    w = Window.partitionBy(by).orderBy(order, F.col(item).asc())
+    return scored.select(
+        by, item, *keep, F.row_number().over(w).alias("rank"), score
+    ).filter(F.col("rank") <= k)
+
+
+def _query_cosine(vectors: DataFrame, queries: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, cos_sim) of every vector against every
+    query but itself, both frames scorable (_scorable). The query side
+    is broadcast (the small side); the vectors stream through one
+    narrow stage."""
+    q = queries.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
+    )
+    c = vectors.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb")
+    )
+    return c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")).select(
+        "query_id", "neighbor_id", _cos6(F.col("q_emb"), F.col("c_emb")).alias("cos_sim")
+    )
 
 
 def topk_cosine(
@@ -35,27 +90,12 @@ def topk_cosine(
     keyed by query — AQE coalesces. Ties break by neighbor_id asc on the
     ROUNDED similarity so rank order is engine-independent.
     """
+    emb = _scorable(embeddings)
     if queries is None:
-        queries = embeddings.filter(F.col("vec_id") < n_queries)
-    q = queries.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    c = embeddings.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb")
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos_sim", F.round(cosine_v(F.col("q_emb"), F.col("c_emb")), 6))
-        .select("query_id", "neighbor_id", "cos_sim")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+        queries = emb.filter(F.col("vec_id") < n_queries)
+    else:
+        queries = _scorable(queries)
+    return _top_k(_query_cosine(emb, queries), k, "query_id", "neighbor_id")
 
 
 def topk_update(
@@ -83,31 +123,10 @@ def topk_update(
     cos_sim) — pass None-equivalent (empty) for a cold start.
     Conventions match topk_cosine: query side broadcast, self-matches
     excluded, ties break by neighbor_id asc on the rounded score."""
-    q = queries.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    c = new_vectors.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-    )
-    scored_new = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cos_sim", F.round(cosine_v(F.col("q_emb"), F.col("c_emb")), 6)
-        )
-        .select("query_id", "neighbor_id", "cos_sim")
-    )
     merged = cached.select("query_id", "neighbor_id", "cos_sim").unionByName(
-        scored_new
+        _query_cosine(_scorable(new_vectors), _scorable(queries))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        merged.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+    return _top_k(merged, k, "query_id", "neighbor_id")
 
 
 def semantic_decontaminate(
@@ -138,8 +157,8 @@ def semantic_decontaminate(
     per-doc argmax window run JVM-side on that small flagged set
     (embedding_near_dup_pairs' division of labor, dedup.py:808).
 
-    NULL and zero-norm vectors are excluded on BOTH sides (cosine is
-    undefined for a directionless vector — the dedup.py:874 contract).
+    NULL and zero-norm vectors are excluded on BOTH sides (the
+    similarity universe, dedup._scorable).
 
     `benchmark` is (vec_id, embedding); its ids are reported under
     `bench_id_col`. Corpus ids may collide with benchmark ids (a
@@ -151,14 +170,9 @@ def semantic_decontaminate(
             "matrix must stay broadcastable — split the benchmark or "
             "raise max_bench explicitly"
         )
-    clean = lambda df: df.filter(  # noqa: E731
-        F.col("vec_id").isNotNull()
-        & F.col("embedding").isNotNull()
-        & F.exists("embedding", lambda x: x != 0)
-    )
     bench_rows = sorted(
         (r["vec_id"], list(r["embedding"]))
-        for r in clean(benchmark).select("vec_id", "embedding").collect()
+        for r in _scorable(benchmark).select("vec_id", "embedding").collect()
     )
     spark = corpus.sparkSession
     if not bench_rows:
@@ -197,7 +211,7 @@ def semantic_decontaminate(
                 }
             )
 
-    cand = clean(corpus).select(
+    cand = _scorable(corpus).select(
         "vec_id", _cast_double(F.col("embedding")).alias("embedding")
     ).mapInPandas(
         gemm, f"vec_id long, {bench_id_col} long, cos_raw double"
@@ -207,13 +221,8 @@ def semantic_decontaminate(
         bench_id_col,
         F.round("cos_raw", 6).alias("cos_sim"),
     ).filter(F.col("cos_sim") >= threshold)
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cos_sim").desc(), F.col(bench_id_col).asc()
-    )
-    return (
-        flagged.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") == 1)
-        .select("vec_id", bench_id_col, "cos_sim")
+    return _top_k(flagged, 1, "vec_id", bench_id_col).select(
+        "vec_id", bench_id_col, "cos_sim"
     )
 
 
@@ -323,27 +332,29 @@ def hyperplane_lsh_pairs(
         raise ValueError(
             f"n_planes ({n_planes}) must be divisible by n_bands ({n_bands})"
         )
-    bits_per_band = n_planes // n_bands
-    sig = hyperplane_signatures(embeddings, n_planes)
-    bands = sig.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col("sig"), b * bits_per_band)
-                        .bitwiseAND(F.lit((1 << bits_per_band) - 1))
-                        .alias("key"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("vec_id", "bk.band", "bk.key")
     from warp_pipe_spark.datapipe.dedup import bucket_pairs
 
+    bands = _lsh_bands(embeddings, n_planes, n_bands)
     return bucket_pairs(bands, ["band", "key"], "vec_id", "vec_a", "vec_b")
+
+
+def _lsh_bands(vectors: DataFrame, n_planes: int, n_bands: int) -> DataFrame:
+    """(vec_id, band, key): each vector's hyperplane signature cut into
+    n_bands keys of n_planes/n_bands bits."""
+    bits = n_planes // n_bands
+    sig = hyperplane_signatures(vectors.select("vec_id", "embedding"), n_planes)
+    keys = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.shiftright(F.col("sig"), b * bits)
+            .bitwiseAND(F.lit((1 << bits) - 1))
+            .alias("key"),
+        )
+        for b in range(n_bands)
+    ]
+    return sig.select("vec_id", F.explode(F.array(*keys)).alias("bk")).select(
+        "vec_id", "bk.band", "bk.key"
+    )
 
 
 def nn_descent(
@@ -386,18 +397,7 @@ def nn_descent(
     """
     if k_build is None:
         k_build = 2 * k
-    # Zero-norm embeddings are excluded up front: cosine to a
-    # directionless vector is undefined (NaN), and NaN ordering is
-    # engine-dependent — Spark's Window orderBy(desc) ranks NaN FIRST
-    # (NaN > any double) where np.lexsort places it LAST, so a zero
-    # vector would silently change ranks depending on which scoring
-    # path ran. The contract (pinned in test_similarity) matches
-    # embedding_near_dup_pairs: zero vectors join NULL vectors outside
-    # the similarity universe.
-    emb = embeddings.select("vec_id", "embedding").filter(
-        F.col("embedding").isNotNull()
-        & F.exists("embedding", lambda x: x != 0)
-    )
+    emb = _scorable(embeddings).select("vec_id", "embedding")
 
     def _score_topk(up: DataFrame, flagged: bool = False) -> DataFrame:
         # r14 rework: hash joins + ONE batched einsum (cosine_v) + one
@@ -433,25 +433,7 @@ def nn_descent(
         # the old semi-join's — (a,b) survives iff the directed
         # candidate set contained it — so the window input, and the
         # output, are bit-identical (re-verified at all three SFs).
-        lo_e = emb.select(
-            F.col("vec_id").alias("_lo"), F.col("embedding").alias("_le")
-        )
-        hi_e = emb.select(
-            F.col("vec_id").alias("_hi"), F.col("embedding").alias("_he")
-        )
-        flag_cols = ["_fwd", "_rev"] if flagged else []
-        ps = (
-            up.join(hi_e, "_hi")
-            .join(lo_e, "_lo")
-            .select(
-                "_lo",
-                "_hi",
-                F.round(cosine_v(F.col("_le"), F.col("_he")), 6).alias(
-                    "cos_sim"
-                ),
-                *flag_cols,
-            )
-        )
+        ps = _pair_cosine(up, emb, "_hi", "_lo")
         fwd = F.col("_fwd") if flagged else F.lit(True)
         rev = F.col("_rev") if flagged else F.lit(True)
         dirs = F.filter(
@@ -478,16 +460,7 @@ def nn_descent(
             F.col("_d.n").alias("nbr_id"),
             "cos_sim",
         )
-        w = Window.partitionBy("vec_id").orderBy(
-            F.col("cos_sim").desc(), F.col("nbr_id").asc()
-        )
-        return (
-            scored.withColumn(
-                "rank", F.row_number().over(w).cast("int")
-            )
-            .filter(F.col("rank") <= k_build)
-            .select("vec_id", "nbr_id", "rank", "cos_sim")
-        )
+        return _top_k(scored, k_build, "vec_id", "nbr_id")
 
     # the banding pairs ARE the seed's unordered candidate set
     # (vec_a < vec_b, distinct): the mirror-union + distinct the seed
@@ -579,21 +552,13 @@ def graph_search(
     the detours greedy search needs."""
     if beam is None:
         beam = 2 * k
-    # Same zero-norm contract as nn_descent (they share the NaN
-    # hazard: a zero-norm LSH entry point would score NaN and Spark's
-    # NaN-first desc ordering would rank it ABOVE every real
-    # neighbor): zero vectors sit outside the similarity universe — a
-    # zero-norm corpus vector is never a candidate, a zero-norm query
-    # returns no rows.
-    _nonzero = lambda c: F.col(c).isNotNull() & F.exists(  # noqa: E731
-        c, lambda x: x != 0
-    )
-    emb = embeddings.select("vec_id", "embedding").filter(
-        _nonzero("embedding")
-    )
+    # the similarity universe: a zero-norm or NULL corpus vector is
+    # never a candidate, such a query returns no rows
+    emb = _scorable(embeddings).select("vec_id", "embedding")
+    queries = _scorable(queries)
     q = queries.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    ).filter(_nonzero("q_emb"))
+    )
 
     # r15: the query vector RIDES THE FRONTIER (`q_emb` column, joined
     # on once at the entry phase) instead of being re-joined every hop
@@ -613,57 +578,16 @@ def graph_search(
                 "query_id",
                 "neighbor_id",
                 "q_emb",
-                F.round(cosine_v(F.col("q_emb"), F.col("_ce")), 6).alias(
-                    "cos_sim"
-                ),
+                _cos6(F.col("q_emb"), F.col("_ce")).alias("cos_sim"),
             )
-        )
-
-    def _truncate(scored: DataFrame, width: int) -> DataFrame:
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= width)
-            .select("query_id", "neighbor_id", "q_emb", "rank", "cos_sim")
         )
 
     # entry points: corpus nodes sharing an LSH band with the query —
     # pass the SAME n_planes/n_bands the graph was seeded with
     # (nn_descent's arguments); a mismatched signature space gives
     # unrelated entry nodes and silently degraded recall
-    bits = n_planes // n_bands
-
-    def _bands(df: DataFrame, idcol: str):
-        sig = hyperplane_signatures(
-            df.select(F.col(idcol).alias("vec_id"), "embedding"), n_planes
-        )
-        return sig.select(
-            F.col("vec_id").alias(idcol),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.shiftright(F.col("sig"), b * bits)
-                            .bitwiseAND(F.lit((1 << bits) - 1))
-                            .alias("key"),
-                        )
-                        for b in range(n_bands)
-                    ]
-                )
-            ).alias("bk"),
-        ).select(idcol, "bk.band", "bk.key")
-
-    qb = _bands(
-        queries.select(F.col("vec_id").alias("query_id"), "embedding"),
-        "query_id",
-    )
-    cb = _bands(
-        emb.select(F.col("vec_id").alias("neighbor_id"), "embedding"),
-        "neighbor_id",
-    )
+    qb = _lsh_bands(queries, n_planes, n_bands).withColumnRenamed("vec_id", "query_id")
+    cb = _lsh_bands(emb, n_planes, n_bands).withColumnRenamed("vec_id", "neighbor_id")
     # the ONLY query-table join: entry rows take their q_emb here and
     # the frontier carries it through every hop (duplicate entry pairs
     # — a query and corpus vector sharing >1 band — are preserved
@@ -675,7 +599,9 @@ def graph_search(
     # it is pinned: unpinned, the lineage doubles per hop. A/B at sf0.1
     # (25 queries, 1950-node k=20 graph, hops=3): pinned 5.2-5.5 s, one
     # lazy plan 5.5-5.9 s, bit-identical results.
-    frontier = _truncate(_score(entry), beam).localCheckpoint(eager=True)
+    frontier = _top_k(
+        _score(entry), beam, "query_id", "neighbor_id", keep=("q_emb",)
+    ).localCheckpoint(eager=True)
     edges = graph.select(
         F.col("vec_id").alias("neighbor_id"), F.col("nbr_id")
     )
@@ -704,7 +630,9 @@ def graph_search(
                 "query_id", F.explode("_nbrs").alias("neighbor_id"), "q_emb"
             )
         )
-        scored = _truncate(_score(expanded), beam)
+        scored = _top_k(
+            _score(expanded), beam, "query_id", "neighbor_id", keep=("q_emb",)
+        )
         # the LAST hop stays unpinned (r15): the pin exists because the
         # frontier feeds the NEXT hop twice (union branches) — the
         # final frontier feeds only the caller's single action, and the
@@ -765,15 +693,8 @@ def nn_graph_insert(
     bit-equality in tests/test_similarity.py."""
     if beam is None:
         beam = 2 * k
-    _nonzero = lambda c: F.col(c).isNotNull() & F.exists(  # noqa: E731
-        c, lambda x: x != 0
-    )
-    old_emb = embeddings.select("vec_id", "embedding").filter(
-        _nonzero("embedding")
-    )
-    new_emb = new_vectors.select("vec_id", "embedding").filter(
-        _nonzero("embedding")
-    )
+    old_emb = _scorable(embeddings).select("vec_id", "embedding")
+    new_emb = _scorable(new_vectors).select("vec_id", "embedding")
     # ONE pre-flight job (VERDICT r13 item 5 folded the former
     # limit(1).count() empty probe into the collision check): a left
     # join of the batch against the corpus ids yields the batch size
@@ -852,17 +773,7 @@ def nn_graph_insert(
         .select("vec_a", "vec_b")
     )
     nn_pairs = mates.select("vec_a", "vec_b").union(shared).distinct()
-    a = new_emb.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"))
-    b = new_emb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"))
-    nn_scored = (
-        nn_pairs.join(a, "vec_a")
-        .join(b, "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(cosine_v(F.col("ea"), F.col("eb")), 6).alias("cos_sim"),
-        )
-    )
+    nn_scored = _pair_cosine(nn_pairs, new_emb, "vec_a", "vec_b")
     nn_both = nn_scored.select(
         F.col("vec_a").alias("vec_id"), F.col("vec_b").alias("nbr_id"), "cos_sim"
     ).union(
@@ -899,14 +810,7 @@ def nn_graph_insert(
             "left_anti",
         )
     )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cos_sim").desc(), F.col("nbr_id").asc()
-    )
-    reranked = (
-        merged.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("vec_id", "nbr_id", "rank", "cos_sim")
-    )
+    reranked = _top_k(merged, k, "vec_id", "nbr_id")
     untouched = graph.select("vec_id", "nbr_id", "rank", "cos_sim").join(
         affected, "vec_id", "left_anti"
     )
@@ -987,34 +891,40 @@ def nn_graph_delete(
         # must not duplicate): existing edges win
         .join(surviving.select("vec_id", "nbr_id"), ["vec_id", "nbr_id"], "left_anti")
     )
-    ea = embeddings.select(
-        F.col("vec_id"), F.col("embedding").alias("_ea")
-    )
-    eb = embeddings.select(
-        F.col("vec_id").alias("nbr_id"), F.col("embedding").alias("_eb")
-    )
-    cand = (
-        cand_ids.join(ea, "vec_id")
-        .join(eb, "nbr_id")
-        .select(
-            "vec_id",
-            "nbr_id",
-            F.round(cosine_v(F.col("_ea"), F.col("_eb")), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cos_sim").desc(), F.col("nbr_id").asc()
-    )
-    repaired = (
-        surviving.unionByName(cand)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("vec_id", "nbr_id", "rank", "cos_sim")
-    )
+    cand = _pair_cosine(cand_ids, _scorable(embeddings), "vec_id", "nbr_id")
+    repaired = _top_k(surviving.unionByName(cand), k, "vec_id", "nbr_id")
     untouched = kept.join(affected, "vec_id", "left_anti").select(
         "vec_id", "nbr_id", "rank", "cos_sim"
     )
     return untouched.unionByName(repaired)
+
+
+def _pq_codebook(embeddings: DataFrame, k: int) -> DataFrame:
+    """The deterministic stand-in codebook both PQ halves use: the k
+    lowest-id vectors as float64, coded 0..k-1 — (code, cv)."""
+    return (
+        embeddings.orderBy("vec_id")
+        .limit(k)
+        .select(
+            (F.row_number().over(Window.orderBy("vec_id")) - 1).alias("code"),
+            _cast_double(F.col("embedding")).alias("cv"),
+        )
+    )
+
+
+def _pq_dists(v: F.Column, sub: int, m: int) -> list[F.Column]:
+    """d0..d{m-1}: the squared L2 distance of each `sub`-wide subvector
+    of `v` (array<double>) to the codeword `cv`'s, rounded to 6 places
+    so argmins and sums are engine-independent."""
+    return [
+        F.round(
+            _sqdist(
+                F.slice(v, j * sub + 1, sub), F.slice(F.col("cv"), j * sub + 1, sub)
+            ),
+            6,
+        ).alias(f"d{j}")
+        for j in range(m)
+    ]
 
 
 def pq_codes(
@@ -1036,7 +946,6 @@ def pq_codes(
     subspace quantization error."""
     if dim % m:
         raise ValueError(f"dim={dim} not divisible by m={m}")
-    sub = dim // m
     # guard: a dim mismatch would silently slice short subvectors into
     # wrong distances — probe the actual width once (one bounded
     # first() job, the hyperplane_signatures precedent) and fail loud
@@ -1045,33 +954,9 @@ def pq_codes(
         raise ValueError(
             f"pq_codes: expected dim={dim}, embeddings carry {row['d']}"
         )
-    cb = (
-        embeddings.orderBy("vec_id")
-        .limit(k)
-        .select(
-            (
-                F.row_number().over(Window.orderBy("vec_id")) - 1
-            ).alias("code"),
-            _cast_double(F.col("embedding")).alias("cv"),
-        )
-    )
-    v = _cast_double(F.col("embedding"))
-    dists = [
-        F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.slice(v, j * sub + 1, sub),
-                    F.slice(F.col("cv"), j * sub + 1, sub),
-                    lambda x, y: (x - y) * (x - y),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        ).alias(f"d{j}")
-        for j in range(m)
-    ]
-    scored = embeddings.join(F.broadcast(cb)).select("vec_id", "code", *dists)
+    dists = _pq_dists(_cast_double(F.col("embedding")), dim // m, m)
+    cb = F.broadcast(_pq_codebook(embeddings, k))
+    scored = embeddings.join(cb).select("vec_id", "code", *dists)
     mins = [
         F.min(F.struct(F.col(f"d{j}"), F.col("code"))).alias(f"m{j}")
         for j in range(m)
@@ -1084,6 +969,52 @@ def pq_codes(
             sum(F.col(f"m{j}.d{j}") for j in range(m)), 6
         ).alias("qerr"),
     )
+
+
+def _adc_topk(
+    embeddings: DataFrame,
+    dim: int,
+    m: int,
+    k_cb: int,
+    k: int,
+    n_queries: int,
+    cand: DataFrame | None = None,
+) -> DataFrame:
+    """ADC top-k of the first `n_queries` vec_ids: each query meets the
+    codebook once in a lookup table of m·k_cb subspace distances
+    (broadcast), each candidate's distance is its m codes' lookups
+    summed in ONE groupBy(query, vec), and _top_k ranks ascending. The
+    candidates are every other vector's codes, or with `cand` its
+    (query_id, vec_id) pairs. (query_id, vec_id, rank long, adc_dist)."""
+    codes = pq_codes(embeddings, dim, m, k_cb)
+    q = embeddings.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"),
+        _cast_double(F.col("embedding")).alias("qv"),
+    )
+    lut = F.broadcast(
+        q.crossJoin(_pq_codebook(embeddings, k_cb)).select(
+            "query_id", "code", *_pq_dists(F.col("qv"), dim // m, m)
+        )
+    )
+    unpiv = codes.select(
+        "vec_id",
+        F.posexplode(
+            F.array(*[F.col(f"code_{j}") for j in range(m)])
+        ).alias("j", "code"),
+    )
+    if cand is None:
+        joined = unpiv.join(lut, "code").filter(F.col("vec_id") != F.col("query_id"))
+    else:
+        joined = cand.join(unpiv, "vec_id").join(lut, ["query_id", "code"])
+    # pick subspace j's distance column for this row's j
+    d = F.element_at(F.array(*[F.col(f"d{j}") for j in range(m)]), F.col("j") + 1)
+    summed = (
+        joined.select("query_id", "vec_id", d.alias("d"))
+        .groupBy("query_id", "vec_id")
+        .agg(F.round(F.sum("d"), 6).alias("adc_dist"))
+    )
+    top = _top_k(summed, k, "query_id", "vec_id", "adc_dist", ascending=True)
+    return top.withColumn("rank", F.col("rank").cast("long"))
 
 
 def pq_adc_topk(
@@ -1108,66 +1039,23 @@ def pq_adc_topk(
     embeddings stay cold while search runs on the 32× smaller codes.
     Returns (query_id, vec_id, rank, adc_dist); ties break by vec_id,
     the query row itself is excluded."""
-    sub = dim // m
-    codes = pq_codes(embeddings, dim, m, k_cb)
-    q = embeddings.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        _cast_double(F.col("embedding")).alias("qv"),
+    return _adc_topk(embeddings, dim, m, k_cb, k, n_queries)
+
+
+def _nearest_centroids(
+    vectors: DataFrame,
+    cent: DataFrame,
+    n: int,
+    by: str = "vec_id",
+    emb: str = "embedding",
+) -> DataFrame:
+    """Each vector's `n` nearest centroids of `cent` (cent_id,
+    cent_emb; broadcast) by rounded cosine, ties to the smaller
+    cent_id: (by, cent_id, emb, rank, csim)."""
+    scored = vectors.crossJoin(F.broadcast(cent)).select(
+        by, emb, "cent_id", _cos6(F.col(emb), F.col("cent_emb")).alias("csim")
     )
-    cb = (
-        embeddings.orderBy("vec_id")
-        .limit(k_cb)
-        .select(
-            (F.row_number().over(Window.orderBy("vec_id")) - 1).alias("code"),
-            _cast_double(F.col("embedding")).alias("cv"),
-        )
-    )
-    lut = q.crossJoin(cb).select(
-        "query_id",
-        "code",
-        *[
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.slice(F.col("qv"), j * sub + 1, sub),
-                        F.slice(F.col("cv"), j * sub + 1, sub),
-                        lambda x, y: (x - y) * (x - y),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ).alias(f"d{j}")
-            for j in range(m)
-        ],
-    )
-    unpiv = codes.select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[F.col(f"code_{j}") for j in range(m)])
-        ).alias("j", "code"),
-    )
-    joined = unpiv.join(F.broadcast(lut), "code").select(
-        "query_id",
-        "vec_id",
-        # pick subspace j's distance column for this row's j
-        F.element_at(
-            F.array(*[F.col(f"d{jj}") for jj in range(m)]), F.col("j") + 1
-        ).alias("d"),
-    )
-    summed = (
-        joined.filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.round(F.sum("d"), 6).alias("adc_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        summed.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "adc_dist")
-    )
+    return _top_k(scored, n, by, "cent_id", "csim", keep=(emb,))
 
 
 def ivf_candidates(
@@ -1176,51 +1064,37 @@ def ivf_candidates(
     n_centroids: int = 10,
     n_probe: int = 3,
 ) -> DataFrame:
-    """The IVF candidate set both search paths prune to: DISTINCT
-    (query_id, vec_id) where vec_id's cell is one of query_id's
-    n_probe nearest centroids (query row excluded). ONE scoring pass
-    computes the centroid ranking for assignment (crank == 1, all
-    vectors) and probing (crank <= n_probe, query vectors) — filtering
-    by vec_id commutes with the vec_id-partitioned row_number, so the
-    set is exactly what the per-path builders derive independently.
+    """The IVF candidate set the exact-rerank and PQ searches score:
+    DISTINCT (query_id, vec_id) where vec_id's cell is one of
+    query_id's n_probe nearest centroids (query row excluded), over
+    the similarity universe. ONE scoring pass computes the centroid
+    ranking for assignment (rank 1, all vectors) and probing (rank <=
+    n_probe, query vectors).
 
-    Exists for compositions that run SEVERAL searches over the same
-    probe decisions (ann_recall_eval: exact-rerank + two PQ variants):
-    measured r15, Catalyst reuses NONE of the separately-built IVF
-    subtrees (0 ReusedExchange in the committed r14 plan — the paths
-    prune different columns, so the canonical subtrees differ), so the
-    composition paid the centroid scoring 6x. Pin this once
-    (localCheckpoint) and pass it as `cand=`.
+    A composition that runs SEVERAL searches over the same probe
+    decisions (ann_recall_eval: exact-rerank + two PQ variants) pins
+    this once (localCheckpoint) and passes it as `cand=`: measured
+    r15, Catalyst reuses NONE of the separately-built IVF subtrees
+    (the paths prune different columns, so the canonical subtrees
+    differ).
 
     The three parameters are stamped into `query_id`'s column metadata
     (it survives localCheckpoint), and a search given `cand=` raises
     unless the stamp matches its own n_queries/n_centroids/n_probe —
     otherwise it would silently search other probe decisions than its
     arguments name."""
-    cent = _ivf_centroids(embeddings, n_centroids)
-    scored = embeddings.crossJoin(F.broadcast(cent)).withColumn(
-        "csim", F.round(cosine_v(F.col("embedding"), F.col("cent_emb")), 6)
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("csim").desc(), F.col("cent_id").asc()
-    )
-    ranked = scored.withColumn("crank", F.row_number().over(w))
-    assign = ranked.filter(F.col("crank") == 1).select("vec_id", "cent_id")
+    emb = _scorable(embeddings)
+    ranked = _nearest_centroids(emb, _ivf_centroids(emb, n_centroids), max(1, n_probe))
+    assign = ranked.filter(F.col("rank") == 1).select("vec_id", "cent_id")
     probes = ranked.filter(
-        (F.col("vec_id") < n_queries) & (F.col("crank") <= n_probe)
+        (F.col("vec_id") < n_queries) & (F.col("rank") <= n_probe)
     ).select(F.col("vec_id").alias("query_id"), "cent_id")
+    stamp = {_IVF_STAMP: _ivf_params(n_queries, n_centroids, n_probe)}
     return (
         probes.join(assign, "cent_id")
         .filter(F.col("query_id") != F.col("vec_id"))
-        .select("query_id", "vec_id")
+        .select(F.col("query_id").alias("query_id", metadata=stamp), "vec_id")
         .distinct()
-        .select(
-            F.col("query_id").alias(
-                "query_id",
-                metadata={_IVF_STAMP: _ivf_params(n_queries, n_centroids, n_probe)},
-            ),
-            "vec_id",
-        )
     )
 
 
@@ -1231,11 +1105,14 @@ def _ivf_params(n_queries: int, n_centroids: int, n_probe: int) -> dict:
     return {"n_queries": n_queries, "n_centroids": n_centroids, "n_probe": n_probe}
 
 
-def _check_ivf_cand(
-    cand: DataFrame, n_queries: int, n_centroids: int, n_probe: int
-) -> None:
-    """Raise unless `cand` is an ivf_candidates set built with these
-    parameters (its `query_id` metadata stamp)."""
+def _ivf_cand(
+    cand: DataFrame | None, embeddings: DataFrame, n_queries: int, n_centroids: int, n_probe: int
+) -> DataFrame:
+    """`cand`, or a fresh ivf_candidates set when it is None. Raises
+    unless `cand` is an ivf_candidates set built with these parameters
+    (its `query_id` metadata stamp)."""
+    if cand is None:
+        return ivf_candidates(embeddings, n_queries, n_centroids, n_probe)
     got = None
     if "query_id" in cand.columns:
         got = cand.schema["query_id"].metadata.get(_IVF_STAMP)
@@ -1244,6 +1121,7 @@ def _check_ivf_cand(
         raise ValueError(
             f"cand= is not ivf_candidates{want}: its query_id stamp is {got}"
         )
+    return cand
 
 
 def ivf_pq_topk(
@@ -1270,76 +1148,9 @@ def ivf_pq_topk(
     tie-break, query row excluded. A `cand=` must be an
     ivf_candidates set built with this call's n_queries/n_centroids/
     n_probe (ValueError otherwise)."""
-    sub = dim // m
-    if cand is None:
-        cand = ivf_candidates(embeddings, n_queries, n_centroids, n_probe)
-    else:
-        _check_ivf_cand(cand, n_queries, n_centroids, n_probe)
-    codes = pq_codes(embeddings, dim, m, k_cb)
-    q = embeddings.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        _cast_double(F.col("embedding")).alias("qv"),
-    )
-    cb = (
-        embeddings.orderBy("vec_id")
-        .limit(k_cb)
-        .select(
-            (F.row_number().over(Window.orderBy("vec_id")) - 1).alias("code"),
-            _cast_double(F.col("embedding")).alias("cv"),
-        )
-    )
-    lut = q.crossJoin(cb).select(
-        "query_id",
-        "code",
-        *[
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.slice(F.col("qv"), j * sub + 1, sub),
-                        F.slice(F.col("cv"), j * sub + 1, sub),
-                        lambda x, y: (x - y) * (x - y),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ).alias(f"d{j}")
-            for j in range(m)
-        ],
-    )
-    unpiv = codes.select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[F.col(f"code_{j}") for j in range(m)])
-        ).alias("j", "code"),
-    )
-    # candidate-restricted: only probed-cell members reach the lookup
-    joined = (
-        cand.join(unpiv, "vec_id")
-        .join(F.broadcast(lut), ["query_id", "code"])
-        .select(
-            "query_id",
-            "vec_id",
-            F.element_at(
-                F.array(*[F.col(f"d{jj}") for jj in range(m)]), F.col("j") + 1
-            ).alias("d"),
-        )
-    )
-    summed = joined.groupBy("query_id", "vec_id").agg(
-        F.round(F.sum("d"), 6).alias("adc_dist")
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        summed.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "rank",
-            "adc_dist",
-        )
+    cand = _ivf_cand(cand, embeddings, n_queries, n_centroids, n_probe)
+    return _adc_topk(embeddings, dim, m, k_cb, k, n_queries, cand).withColumnRenamed(
+        "vec_id", "neighbor_id"
     )
 
 
@@ -1352,16 +1163,10 @@ def _ivf_centroids(embeddings: DataFrame, n_centroids: int, step: int = 50) -> D
 
 
 def _ivf_assign(embeddings: DataFrame, cent: DataFrame) -> DataFrame:
-    """Nearest centroid per vector (rounded sim, centroid-id tie-break):
-    broadcast-join narrow stage + per-vector top-1 window."""
-    scored = embeddings.crossJoin(F.broadcast(cent)).withColumn(
-        "csim", F.round(cosine_v(F.col("embedding"), F.col("cent_emb")), 6)
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("csim").desc(), F.col("cent_id").asc())
-    return (
-        scored.withColumn("crank", F.row_number().over(w))
-        .filter(F.col("crank") == 1)
-        .select("vec_id", "embedding", "cent_id")
+    """Each scorable vector's cell: (vec_id, embedding, cent_id) of its
+    nearest centroid."""
+    return _nearest_centroids(_scorable(embeddings), cent, 1).select(
+        "vec_id", "embedding", "cent_id"
     )
 
 
@@ -1381,7 +1186,7 @@ def auto_ivf_params(n_rows: int) -> int:
 def build_ivf_index(
     embeddings: DataFrame, path: str, n_centroids: int | None = 10
 ) -> None:
-    """Persist an IVF index: `<path>/cells` holds every vector
+    """Persist an IVF index: `<path>/cells` holds every scorable vector
     partitioned BY ITS CELL (partitionBy(cent_id)), `<path>/centroids`
     the centroid vectors, and the index manifest (io.write_index) the
     requested n_centroids, which bounds the codebook. Searching then
@@ -1394,6 +1199,7 @@ def build_ivf_index(
     n_centroids=None sizes the index as √N via auto_ivf_params — the
     configuration whose coarse and fine search both grow with √corpus;
     the oracle-compared query pins 10 for deterministic replay."""
+    embeddings = _scorable(embeddings)
     if n_centroids is None:
         n = embeddings.count()
         n_centroids = auto_ivf_params(n)
@@ -1411,9 +1217,9 @@ def build_ivf_index(
 def update_ivf_index(new_embeddings: DataFrame, path: str, batch_id: int) -> None:
     """Append ingest batch `batch_id` to a persisted IVF index as one
     generation (io.write_index: an id at or below the manifest's mark
-    is a no-op): assign each new vector to its nearest EXISTING
-    centroid and append into that cell's partition dir. Cost ∝
-    |batch|·k dots + one partitioned append — the corpus is never
+    is a no-op): assign each new scorable vector to its nearest
+    EXISTING centroid and append into that cell's partition dir. Cost
+    ∝ |batch|·k dots + one partitioned append — the corpus is never
     re-read (the IVF twin of dedup_index.update_minhash_index).
     Centroids stay fixed; after heavy drift (cells ballooning past the
     √N balance), rebuild with build_ivf_index — the standard IVF
@@ -1432,7 +1238,7 @@ def ivf_topk_indexed(
     max_probe_collect: int = 100_000,
 ) -> DataFrame:
     """Search a persisted IVF index: probe the n_probe nearest cells
-    per query, then exact top-k inside probed cells only.
+    per scorable query, then exact top-k inside probed cells only.
 
     The probed cell-id set (n_queries × n_probe ids — planning
     metadata, not data) is collected and inlined as a LITERAL
@@ -1460,21 +1266,12 @@ def ivf_topk_indexed(
             "the codebook) — probe via a cent_id join without the "
             "inlined partition predicate instead"
         )
-    cent = read("centroids")
-    q = queries.select(
+    q = _scorable(queries).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
-    qscored = q.crossJoin(F.broadcast(cent)).withColumn(
-        "csim", F.round(cosine_v(F.col("q_emb"), F.col("cent_emb")), 6)
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("csim").desc(), F.col("cent_id").asc()
-    )
-    probes = (
-        qscored.withColumn("crank", F.row_number().over(w))
-        .filter(F.col("crank") <= n_probe)
-        .select("query_id", "q_emb", "cent_id")
-    )
+    probes = _nearest_centroids(
+        q, read("centroids"), n_probe, "query_id", "q_emb"
+    ).select("query_id", "q_emb", "cent_id")
     probed_cells = sorted({r["cent_id"] for r in probes.select("cent_id").distinct().collect()})
     return _ivf_search(probes, read("cells", "cent_id", probed_cells), k)
 
@@ -1482,24 +1279,18 @@ def ivf_topk_indexed(
 def _ivf_search(probes: DataFrame, cells: DataFrame, k: int) -> DataFrame:
     """Exact top-k inside the probed cells: each (query_id, q_emb,
     cent_id) probe scores every other vector of its cell."""
-    sim = F.round(cosine_v(F.col("q_emb"), F.col("embedding")), 6)
-    return _ivf_rank(
+    return _top_k(
         probes.join(cells, "cent_id")
         .filter(F.col("query_id") != F.col("vec_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), sim.alias("cos_sim"))
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            _cos6(F.col("q_emb"), F.col("embedding")).alias("cos_sim"),
+        )
         .dropDuplicates(["query_id", "neighbor_id"]),
         k,
-    )
-
-
-def _ivf_rank(ranked: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        ranked.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
+        "query_id",
+        "neighbor_id",
     )
 
 
@@ -1511,52 +1302,39 @@ def ivf_topk_cosine(
     n_probe: int = 3,
     cand: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF-style ANN: deterministic centroids (every (N//n_centroids)-th
-    vector), assign each vector to its nearest centroid, queries probe
-    the `n_probe` nearest cells, exact top-k within probed cells.
+    """IVF-style ANN: deterministic centroids (every 50th vec_id),
+    each scorable vector assigned to its nearest centroid, queries (the
+    first `n_queries` vec_ids) probe the `n_probe` nearest cells, exact
+    top-k within probed cells.
 
     At scale: centroid assignment is a broadcast-join narrow stage;
     search touches n_probe/n_centroids of the data — the pruning is the
     point. Output (query_id, neighbor_id, rank, cos_sim).
 
+    Two paths, one result. Without `cand`, the probes join the assigned
+    cells, whose rows carry their vectors (_ivf_search, the persisted
+    index's search); reranking a fresh ivf_candidates set instead, which
+    must re-attach both vectors by join, measured slower on
+    ann_ivf_topk (sf0.1 on 4 cores, 10 interleaved process pairs:
+    median 0.669 s vs 0.615 s). A `cand=` (a pinned ivf_candidates set
+    shared by several searches) is reranked: the query vectors attach
+    from the n_queries-row query side, the neighbor vectors by vec_id.
+    It must be built with this call's n_queries/n_centroids/n_probe
+    (ValueError otherwise).
+
     Centroid choice is fully deterministic (every `step`-th vec_id,
     bounded, never a bare limit on an unordered scan) so the DuckDB
-    oracle can replay the probe decisions exactly. A `cand=` must be an
-    ivf_candidates set built with this call's n_queries/n_centroids/
-    n_probe (ValueError otherwise)."""
-    if cand is not None:
-        _check_ivf_cand(cand, n_queries, n_centroids, n_probe)
-        # precomputed candidate set (a pinned ivf_candidates): attach
-        # the query vectors (broadcast — n_queries rows) and the
-        # neighbor vectors, score exactly as below. cand is already
-        # DISTINCT (query_id, vec_id), so no dedup is needed; each
-        # (query, vector) pair exists at most once either way because a
-        # vector belongs to exactly one cell.
-        q = embeddings.filter(F.col("vec_id") < n_queries).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
+    oracle can replay the probe decisions exactly."""
+    q = embeddings.filter(F.col("vec_id") < n_queries)
+    if cand is None:
+        cent = _ivf_centroids(_scorable(embeddings), n_centroids)
+        probes = _nearest_centroids(_scorable(q), cent, n_probe).select(
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"), "cent_id"
         )
-        sim = F.round(cosine_v(F.col("q_emb"), F.col("embedding")), 6)
-        return _ivf_rank(
-            cand.join(embeddings.select("vec_id", "embedding"), "vec_id")
-            .join(F.broadcast(q), "query_id")
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                sim.alias("cos_sim"),
-            ),
-            k,
-        )
-    cent = _ivf_centroids(embeddings, n_centroids)
-    scored = embeddings.crossJoin(F.broadcast(cent)).withColumn(
-        "csim", F.round(cosine_v(F.col("embedding"), F.col("cent_emb")), 6)
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("csim").desc(), F.col("cent_id").asc())
-    # queries probe n_probe nearest centroids
-    probes = (
-        scored.filter(F.col("vec_id") < n_queries)
-        .withColumn("crank", F.row_number().over(w))
-        .filter(F.col("crank") <= n_probe)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"), "cent_id")
-    )
-    return _ivf_search(probes, _ivf_assign(embeddings, cent), k)
+        return _ivf_search(probes, _ivf_assign(embeddings, cent), k)
+    # cand names scorable ids only, so the inner joins keep the
+    # similarity universe
+    cand = _ivf_cand(cand, embeddings, n_queries, n_centroids, n_probe)
+    scored = _pair_cosine(cand, embeddings, "vec_id", "query_id", q)
+    scored = scored.withColumnRenamed("vec_id", "neighbor_id")
+    return _top_k(scored, k, "query_id", "neighbor_id")

@@ -672,13 +672,30 @@ def read_parquet_dirs(
     return functools.reduce(DataFrame.unionByName, chunks)
 
 
+def _leaf_dirs(gen: str, part: list[str]) -> list[str]:
+    """The partition leaf dirs of the generation dir `gen`, partitioned
+    by the columns `part` (`gen` itself when there are none), listed on
+    the driver."""
+    dirs = [gen]
+    for c in part:
+        dirs = [
+            os.path.join(d, e)
+            for d in dirs
+            for e in sorted(os.listdir(d))
+            if e.startswith(f"{c}=") and os.path.isdir(os.path.join(d, e))
+        ]
+    return dirs
+
+
 def _reader(spark: SparkSession, path: str, m: dict) -> Callable:
     def read(name: str, col: str | None = None, values=()) -> DataFrame:
         d = m["datasets"][name]
         schema = StructType.fromJson(d["schema"])
-        dirs = [_gen_dir(path, name, g) for g in d["gens"]]
-        if col is not None:
-            parts = (f"{g}/{col}={v}" for g in dirs for v in values)
+        gens = [_gen_dir(path, name, g) for g in d["gens"]]
+        if col is None:
+            dirs = [p for g in gens for p in _leaf_dirs(g, d["partition"])]
+        else:
+            parts = (f"{g}/{col}={v}" for g in gens for v in values)
             dirs = [p for p in parts if os.path.isdir(p)]
         if not dirs:
             return spark.createDataFrame([], schema)
@@ -693,10 +710,12 @@ def open_index(spark: SparkSession, path: str, kind: str) -> tuple[dict, Callabl
     """(params, read) of the `kind` index at `path`, from its manifest
     alone, so opening launches no Spark job. `read(name)` reads a
     dataset's recorded generations with the manifest's schema, as
-    explicit paths under one basePath (read_parquet_dirs), so any
-    number of generations is listed on the driver. `read(name, col,
-    values)` lists only the existing `col=<value>` partition dirs of
-    those generations and filters on them. Errors as index_manifest."""
+    explicit paths under one basePath (read_parquet_dirs): the
+    partition leaf dirs of a partitioned dataset, else the generation
+    dirs, so any number of generations and partitions is listed on the
+    driver. `read(name, col, values)` lists only the existing
+    `col=<value>` partition dirs of those generations and filters on
+    them. Errors as index_manifest."""
     m = index_manifest(path, kind)
     return m["params"], _reader(spark, path, m)
 
