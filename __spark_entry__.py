@@ -285,7 +285,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         then replay(truncate_kinds=...): the first half of each table's
         log is cleared, later rows survive, and no truncate row ever
         reaches final state."""
-        from warp_pipe_spark.apply import TRUNCATE_KINDS
+        from warp_pipe_spark.changeset import TRUNCATE_KINDS
 
         cs = _cs(spark, sf)
         marks = cs.groupBy("table_name").agg(
@@ -3934,6 +3934,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "emb_semdedup_auto": 17,
         "docs_text_ann": 17,
         "dedup_embedding_lsh_auto": 17,
+        # TRUNCATE_KINDS moved to changeset.py: cs_truncate_replay
+        # imports it from there (same tuple, same plan); tagged 17, the
+        # round-16 window being full
+        "cs_truncate_replay": 17,
     }
 
     import glob as _glob

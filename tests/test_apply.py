@@ -242,7 +242,7 @@ TRUNC_LOG = [
 
 
 def test_replay_truncate_clears_table_up_to_mark(spark):
-    from warp_pipe_spark.apply import TRUNCATE_KINDS
+    from warp_pipe_spark.changeset import TRUNCATE_KINDS
 
     df = spark.createDataFrame(TRUNC_LOG, TRUNC_SCHEMA)
     got = {
@@ -265,7 +265,7 @@ def test_merge_batch_truncate_clears_prior_state(spark):
     """A truncate arriving in a LATER micro-batch clears state merged
     earlier: state rows keep their original ids (< truncate id), so the
     unioned fold sees and clears them."""
-    from warp_pipe_spark.apply import TRUNCATE_KINDS
+    from warp_pipe_spark.changeset import TRUNCATE_KINDS
 
     b1 = spark.createDataFrame(TRUNC_LOG[:3], TRUNC_SCHEMA)
     b2 = spark.createDataFrame(TRUNC_LOG[3:], TRUNC_SCHEMA)
@@ -282,7 +282,7 @@ def test_truncate_tombstone_blocks_late_arrivals(spark):
     delete tombstones under out-of-order delivery."""
     from pyspark.sql import functions as F
 
-    from warp_pipe_spark.apply import TRUNCATE_KINDS
+    from warp_pipe_spark.changeset import TRUNCATE_KINDS
 
     b1 = spark.createDataFrame(
         [(4, "truncate", "users", None, None), (5, "insert", "users", 3, "c")],

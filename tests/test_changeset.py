@@ -113,3 +113,25 @@ def test_reference_json_timestamp_is_utc_in_any_session_tz(spark):
         assert '"timestamp":"2024-06-01T12:00:00Z"' in out, out
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def test_kind_sets_are_spelled_only_in_changeset():
+    """Which kind values read as a delete or a truncate is one policy,
+    changeset.DELETE_KINDS / TRUNCATE_KINDS: no tuple or list literal of
+    delete or truncate kind strings exists anywhere else in the
+    package."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "warp_pipe_spark"
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, (ast.Tuple, ast.List)) and any(
+                isinstance(e, ast.Constant)
+                and isinstance(e.value, str)
+                and e.value.lower() in ("delete", "truncate")
+                for e in node.elts
+            ):
+                found.append((str(path.relative_to(root)), node.lineno))
+    assert found and {p for p, _ in found} == {"changeset.py"}, found

@@ -1758,31 +1758,112 @@ def test_live_bootstrap_then_tail_converges_to_live_table(live, spark, tmp_path)
         }
         assert got == live_rows == {(1, "a2"), (3, "c")}
     finally:
-        try:
-            reader.close()
-        except Exception:
-            pass
-        try:
-            rep.drop_slot()
-        except Exception:
-            try:
-                rep.close()
-            except Exception:
-                pass
-            for _ in range(5):
-                try:
-                    ctl._simple_query(f"DROP_REPLICATION_SLOT {rep.slot}")
-                    break
-                except Exception:
-                    time.sleep(0.5)
-        try:
-            ctl._simple_query(f"DROP PUBLICATION IF EXISTS {pub}")
-        except Exception:
-            pass
+        _drop_boot(ctl, rep, reader, pub)
+
+
+def _drop_boot(ctl, rep, reader, pub):
+    """Teardown of a bootstrap test: the snapshot reader, the slot (by
+    name from `ctl` when `rep` cannot drop it) and the publication."""
+    try:
+        reader.close()
+    except Exception:
+        pass
+    try:
+        rep.drop_slot()
+    except Exception:
         try:
             rep.close()
         except Exception:
             pass
+        for _ in range(5):
+            try:
+                ctl._simple_query(f"DROP_REPLICATION_SLOT {rep.slot}")
+                break
+            except Exception:
+                time.sleep(0.5)
+    try:
+        ctl._simple_query(f"DROP PUBLICATION IF EXISTS {pub}")
+    except Exception:
+        pass
+    try:
+        rep.close()
+    except Exception:
+        pass
+
+
+def test_live_truncate_mid_tail_clears_the_default_sink(live, spark, tmp_path):
+    """A real TRUNCATE in the middle of a live tail: snapshot bootstrap
+    seeds a default ParquetStateSink, then the pgoutput tail's drop dir
+    streams through wal2json_stream, one micro-batch per committed
+    transaction, into the same sink. The truncate's batch clears the
+    seeded and tailed rows, so the final state equals a live SELECT."""
+    from pyspark.sql import functions as F
+
+    from warp_pipe_spark.changeset import column_value
+    from warp_pipe_spark.pgoutput import tail_pgoutput_to_drop_dir
+    from warp_pipe_spark.streaming import ParquetStateSink, wal2json_stream
+
+    ctl, _, tbl = live
+    pub = f"wp_pub_trunc_{os.getpid()}"
+    rep = _client(f"wp_live_trunc_{os.getpid()}")
+    rep.plugin = "pgoutput"
+    rep.connect()
+    reader = _client(f"wp_live_truncread_{os.getpid()}")
+    reader.connect(replication=False)
+    try:
+        ctl._simple_query(f"CREATE TABLE {tbl} (id int primary key, val text)")
+        ctl._simple_query(f"CREATE PUBLICATION {pub} FOR TABLE {tbl}")
+        ctl._simple_query(f"INSERT INTO {tbl} VALUES (1,'a'), (2,'b')")
+        lsn, snap = rep.create_slot_with_snapshot()
+        # one transaction each: an update before the truncate, the
+        # truncate, then rows after it
+        for sql in (
+            f"UPDATE {tbl} SET val='a2' WHERE id=1",
+            f"TRUNCATE {tbl}",
+            f"INSERT INTO {tbl} VALUES (3,'c'), (4,'d')",
+            f"UPDATE {tbl} SET val='c2' WHERE id=3",
+        ):
+            ctl._simple_query(sql)
+        seed_rows = reader.snapshot_read(snap, f"SELECT id, val FROM {tbl}")
+        sink = ParquetStateSink(spark, str(tmp_path / "state"), pk_cols=["pk"])
+        sink.apply_batch(
+            spark.createDataFrame(
+                [(0, "INSERT", tbl, int(r[0]), r[1]) for r in seed_rows],
+                "id LONG, action STRING, table_name STRING, pk LONG, val STRING",
+            ),
+            batch_id=0,
+        )
+        drop = str(tmp_path / "drop")
+        n = tail_pgoutput_to_drop_dir(
+            rep, drop, publication=pub, start_lsn=lsn,
+            max_changes=5, idle_timeout_s=10.0,
+        )
+        assert n == 5
+        typed = wal2json_stream(spark, drop, max_files_per_trigger=1).select(
+            "id",
+            F.col("kind").alias("action"),
+            F.col("table").alias("table_name"),
+            column_value("new_values", "id").cast("long").alias("pk"),
+            column_value("new_values", "val").alias("val"),
+        )
+        q = (
+            typed.writeStream.foreachBatch(sink)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        got = {
+            (r["pk"], r["val"])
+            for r in sink.read_state().select("pk", "val").collect()
+        }
+        live_rows = {
+            (int(r[0]), r[1])
+            for r in ctl._simple_query(f"SELECT id, val FROM {tbl}")
+        }
+        assert got == live_rows == {(3, "c2"), (4, "d")}
+    finally:
+        _drop_boot(ctl, rep, reader, pub)
 
 
 def test_live_cli_bootstrap_then_tail(live, tmp_path, capsys):

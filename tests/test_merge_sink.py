@@ -441,35 +441,33 @@ TRUNC_LOG = [
 ]
 
 
-def test_merge_sink_truncate_default_raises_never_upserts(spark):
-    """on_truncate='error' (the default): a truncate in the batch fails
-    loudly instead of folding into the MERGE as an upsert-shaped row."""
-    sink = MergeStateSink(spark, InMemoryMergeExecutor(spark), pk_cols=["pk"])
-    with pytest.raises(ValueError, match="truncate changeset"):
-        sink.apply_batch(spark.createDataFrame(TRUNC_LOG, SCHEMA), 0)
-
-
 def test_merge_sink_truncate_clear_applies_table_clear(spark):
-    """on_truncate='clear': prior state for the table is cleared up to
-    the truncate id; post-truncate rows and other tables survive; no
-    truncate row ever lands in state."""
-    sink = MergeStateSink(
-        spark, InMemoryMergeExecutor(spark), pk_cols=["pk"],
-        on_truncate="clear",
-    )
+    """A default sink clears a truncated table: prior state for the table
+    is cleared up to the truncate id; post-truncate rows and other
+    tables survive; no truncate row ever lands in state — the
+    truncate-aware replay. A redelivered truncate batch changes
+    nothing."""
+    from warp_pipe_spark.changeset import TRUNCATE_KINDS
+
+    sink = MergeStateSink(spark, InMemoryMergeExecutor(spark), pk_cols=["pk"])
     sink.apply_batch(spark.createDataFrame(TRUNC_LOG[:3], SCHEMA), 0)
-    sink.apply_batch(spark.createDataFrame(TRUNC_LOG[3:], SCHEMA), 1)
-    assert _state(sink) == {("pets", 1, "rex"), ("users", 3, "c")}
+    b = spark.createDataFrame(TRUNC_LOG[3:], SCHEMA)
+    sink.apply_batch(b, 1)
+    log = spark.createDataFrame(TRUNC_LOG, SCHEMA)
+    want = {
+        (r["table_name"], r["pk"], r["val"])
+        for r in replay(log, ["pk"], truncate_kinds=TRUNCATE_KINDS).collect()
+    }
+    assert _state(sink) == want == {("pets", 1, "rex"), ("users", 3, "c")}
+    sink.apply_batch(b, 1)  # redelivered
+    assert _state(sink) == want
 
 
 def test_merge_sink_truncate_clear_redelivery_noop(spark):
     """The clear is id-guarded: replaying the truncate batch must not
     delete rows merged after the truncate (exactly-once observable
     state, same contract as the MERGE conditions)."""
-    sink = MergeStateSink(
-        spark, InMemoryMergeExecutor(spark), pk_cols=["pk"],
-        on_truncate="clear",
-    )
+    sink = MergeStateSink(spark, InMemoryMergeExecutor(spark), pk_cols=["pk"])
     b = spark.createDataFrame(TRUNC_LOG, SCHEMA)
     sink.apply_batch(b, 0)
     before = _state(sink)
@@ -481,9 +479,7 @@ def test_sql_executor_truncate_clear_emits_id_guarded_delete(spark):
     from warp_pipe_spark.merge_sink import SqlMergeExecutor
 
     rec = _RecordingSqlSpark()
-    sink = MergeStateSink(
-        spark, SqlMergeExecutor(rec), pk_cols=["pk"], on_truncate="clear"
-    )
+    sink = MergeStateSink(spark, SqlMergeExecutor(rec), pk_cols=["pk"])
     sink.apply_batch(spark.createDataFrame(TRUNC_LOG, SCHEMA), 0)
     deletes = [s for s in rec.stmts if s.startswith("DELETE FROM")]
     assert deletes == ["DELETE FROM users WHERE id <= 4"]
@@ -492,31 +488,45 @@ def test_sql_executor_truncate_clear_emits_id_guarded_delete(spark):
     assert any("MERGE INTO pets t" in s for s in rec.stmts)
 
 
-def test_on_truncate_unchecked_skips_the_scan(spark):
-    """'unchecked' is the explicit opt-out for truncate-free sources:
-    no per-batch truncate detection job runs (review finding — the
-    scan cost bought nothing on audit/wal2json-v1 streams), and a
-    truncate row reaching such a sink folds like any other unknown
-    kind instead of raising."""
-    from warp_pipe_spark.merge_sink import InMemoryMergeExecutor, MergeStateSink
+def test_truncate_free_batch_runs_one_routing_aggregate(spark):
+    """The truncate check costs a truncate-free batch no job of its own:
+    one routing aggregate names the tables to clear and to merge, and it
+    is the sink's only read outside the executor. On two rows onto an
+    empty in-memory target the batch runs 4 jobs: the aggregate's 2 and
+    the executor's 2. A truncate that reaches the sink still clears."""
+    import uuid
 
-    ex = InMemoryMergeExecutor(spark)
-    sink = MergeStateSink(
-        spark, ex, pk_cols=["pk"], on_truncate="unchecked"
-    )
+    sc = spark.sparkContext
+    inside = []
+
+    class Counted(InMemoryMergeExecutor):
+        def merge(self, *args):
+            before = jobs()
+            super().merge(*args)
+            inside.append(jobs() - before)
+
+    def jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    ex = Counted(spark)
+    sink = MergeStateSink(spark, ex, pk_cols=["pk"])
     batch = spark.createDataFrame(
-        [
-            (1, "INSERT", "t", 1, "a"),
-            (2, "truncate", "t", None, None),
-        ],
-        "id LONG, action STRING, table_name STRING, pk LONG, val STRING",
+        [(1, "INSERT", "t", 1, "a"), (2, "INSERT", "t", 2, "b")], SCHEMA
     )
-    sink.apply_batch(batch, 0)
-    # the insert landed; the truncate neither raised nor cleared
-    vals = [r["val"] for r in ex.tables["t"].collect() if r["val"]]
-    assert vals == ["a"]
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="unchecked"):
-        MergeStateSink(spark, ex, pk_cols=["pk"], on_truncate="bogus")
+    batch.collect()
+    group = f"merge-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "one truncate-free batch")
+    try:
+        sink.apply_batch(batch, 0)
+        total = jobs()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert (total, sum(inside)) == (4, 2)
+    sink.apply_batch(
+        spark.createDataFrame(
+            [(3, "truncate", "t", None, None), (4, "INSERT", "t", 3, "c")], SCHEMA
+        ),
+        1,
+    )
+    assert {r["val"] for r in ex.tables["t"].collect()} == {"c"}

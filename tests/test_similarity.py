@@ -873,6 +873,8 @@ def _entry_point_rows(name, spark, e, tmp_path):
         return sim.semantic_decontaminate(e, queries, threshold=0.4)
     if name == "embedding_near_dup_pairs":
         return embedding_near_dup_pairs(e, threshold=0.4)
+    if name == "hyperplane_lsh_pairs":
+        return sim.hyperplane_lsh_pairs(e, n_planes=16, n_bands=4)
     assert name == "semdedup_pairs"
     return semdedup_pairs(e, k=8, iters=2, threshold=0.4)
 
@@ -891,6 +893,7 @@ def _entry_point_rows(name, spark, e, tmp_path):
         "semantic_decontaminate",
         "embedding_near_dup_pairs",
         "semdedup_pairs",
+        "hyperplane_lsh_pairs",
     ],
 )
 def test_every_cosine_entry_point_excludes_null_and_zero_vectors(

@@ -215,7 +215,9 @@ def test_sink_steady_batch_work_independent_of_backlog_width(spark, tmp_path):
     assert read_a == read_b == {"t0", "t1"}
     got = {
         (r["table_name"], r["pk"], r["val"])
-        for r in orig_read(sorted(sink._read_pointer().values())).collect()
+        for r in orig_read(
+            sorted(sink._read_pointer().values()), sink._read_meta()["schema"]
+        ).collect()
         if r["table_name"] in ("t0", "t1") and r["pk"] in (0, 1)
     }
     assert got == {("t0", 0, "u"), ("t1", 1, "u")}
@@ -503,7 +505,10 @@ def test_bucketed_sink_delete_empties_bucket_cleanly(spark, tmp_path):
     # delete every pk that landed in one bucket
     target_key = sorted(p0)[0]
     victims = [
-        row["pk"] for row in sink._read_tables([p0[target_key]]).collect()
+        row["pk"]
+        for row in sink._read_tables(
+            [p0[target_key]], sink._read_meta()["schema"]
+        ).collect()
     ]
     assert victims
     dels = [(100 + j, "DELETE", "users", pk, None) for j, pk in enumerate(victims)]
@@ -756,18 +761,56 @@ def test_sink_schema_evolution_dropped_column_keeps_state_data(spark, tmp_path):
     assert got == {(1, "a"), (2, None), (6, None)}
 
 
-def test_bucketed_sink_truncate_clears_all_buckets(spark, tmp_path):
-    """truncate_kinds opt-in: a `truncate` changeset (pgoutput source)
-    clears EVERY committed bucket of its table — including buckets no
-    batch row hashes into — drops emptied pointer entries, leaves other
-    tables untouched, and keeps post-truncate rows. Without the opt-in
-    the sink's O(touched) contract is unchanged."""
-    from warp_pipe_spark.apply import TRUNCATE_KINDS
+TRUNC_LOG = [
+    (1, "insert", "users", 1, "a"),
+    (2, "insert", "users", 2, "b"),
+    (3, "insert", "pets", 1, "rex"),
+    (4, "truncate", "users", None, None),
+    (5, "insert", "users", 3, "c"),
+]
 
+
+def _state_rows(sink, asof=None):
+    state = sink.read_state() if asof is None else sink.read_state_asof(asof)
+    return _rows(state.select("id", "action", "table_name", "pk", "val"))
+
+
+def _truncate_oracle(spark, rows):
+    from warp_pipe_spark.changeset import TRUNCATE_KINDS
+
+    log = spark.createDataFrame(rows, SCHEMA)
+    return _rows(replay(log, ["pk"], truncate_kinds=TRUNCATE_KINDS).select(*log.columns))
+
+
+def test_default_sink_truncate_clears_table_without_phantom_row(spark, tmp_path):
+    """A default sink gives a `truncate` changeset table-clear semantics:
+    the truncated table's earlier rows are gone and no truncate row is
+    stored, merge-on-read and after compact(), and the state equals the
+    truncate-aware replay. A redelivered truncate batch converges to the
+    same state."""
+    sink = _manual_sink(spark, tmp_path)
+    sink.apply_batch(spark.createDataFrame(TRUNC_LOG[:3], SCHEMA), batch_id=0)
+    trunc = spark.createDataFrame(TRUNC_LOG[3:], SCHEMA)
+    sink.apply_batch(trunc, batch_id=1)
+    want = _truncate_oracle(spark, TRUNC_LOG)
+    assert want == {(3, "insert", "pets", 1, "rex"), (5, "insert", "users", 3, "c")}
+    assert _state_rows(sink) == want  # merge-on-read
+    sink.compact()
+    assert _state_rows(sink) == want
+    sink.apply_batch(trunc, batch_id=1)  # redelivered
+    assert _state_rows(sink) == want
+    sink.compact()
+    assert _state_rows(sink) == want
+
+
+def test_bucketed_sink_truncate_clears_all_buckets(spark, tmp_path):
+    """A `truncate` changeset (pgoutput source) clears EVERY committed
+    bucket of its table when its batch applies — including buckets no
+    batch row hashes into: the table's keys leave the pointer in the
+    batch's own commit, other tables stay untouched, and post-truncate
+    rows land as usual. Redelivery converges to the same state."""
     B = 8
-    sink = _manual_sink(
-        spark, tmp_path, n_buckets=B, truncate_kinds=TRUNCATE_KINDS
-    )
+    sink = _manual_sink(spark, tmp_path, n_buckets=B)
     seed = [(i, "INSERT", "users", i, f"v{i}") for i in range(1, 33)] + [
         (100, "INSERT", "pets", 1, "rex")
     ]
@@ -782,11 +825,12 @@ def test_bucketed_sink_truncate_clears_all_buckets(spark, tmp_path):
         (201, "INSERT", "users", 50, "survivor"),
     ]
     sink.apply_batch(spark.createDataFrame(batch, SCHEMA), batch_id=1)
-    # the truncate reaches every bucket of its table as a delta, so a
-    # compaction of any one bucket clears it
-    assert {k for k in sink._read_meta()["deltas"]} == {
-        f"users#b{b}" for b in range(B)
-    }
+    # at apply time: no base of users is left, and the one delta is
+    # the survivor's bucket
+    meta = sink._read_meta()
+    assert not [k for k in meta["tables"] if k.startswith("users#b")]
+    (key,) = meta["deltas"]
+    assert key.startswith("users#b")
     want = {("pets", 1, "rex"), ("users", 50, "survivor")}
 
     def state():
@@ -796,37 +840,68 @@ def test_bucketed_sink_truncate_clears_all_buckets(spark, tmp_path):
         }
 
     assert state() == want  # merge-on-read
-    for key in seeded:  # one bucket at a time, the worker's grain
-        sink._compact_key(key)
-        assert state() == want
     sink.compact()
-    got = state()
-    assert got == want
-    # emptied buckets lost their pointer entries; no truncate row in state
-    p = sink._read_pointer()
-    users_keys = [k for k in p if k.startswith("users#b")]
-    assert len(users_keys) == 1  # only the survivor's bucket remains
-    # redelivery of the truncate batch converges to the same state
-    sink.apply_batch(spark.createDataFrame(batch, SCHEMA), batch_id=1)
+    assert state() == want
+    assert len([k for k in sink._read_pointer() if k.startswith("users#b")]) == 1
+    sink.apply_batch(spark.createDataFrame(batch, SCHEMA), batch_id=1)  # redelivered
     sink.compact()
-    got2 = {
-        (r["table_name"], r["pk"], r["val"])
-        for r in sink.read_state().collect()
-    }
-    assert got2 == got
+    assert state() == want
+
+
+def test_truncate_while_compacting_its_table_resurrects_nothing(spark, tmp_path):
+    """A truncate that lands while the worker is folding its table waits
+    for the fold, then clears its result: the compaction cannot commit a
+    base of pre-truncate rows after the clear."""
+    import threading
+    import time
+
+    sink = _mk_sink(spark, tmp_path)
+    sink.COMPACT_DELTAS = 1  # every delta is due
+    folding = threading.Event()
+    real = sink._read_tables
+
+    def slow(rels, schema):
+        worker = threading.current_thread().name == "state-sink-compactor"
+        if worker and any("/users/" in r for r in rels):
+            folding.set()  # the worker has read the pointer it will fold
+            time.sleep(1.0)
+        return real(rels, schema)
+
+    sink._read_tables = slow
+    sink.apply_batch(spark.createDataFrame(TRUNC_LOG[:3], SCHEMA), batch_id=0)
+    assert folding.wait(60)
+    sink.apply_batch(spark.createDataFrame(TRUNC_LOG[3:], SCHEMA), batch_id=1)
+    sink.close()
+    want = _truncate_oracle(spark, TRUNC_LOG)
+    assert _state_rows(sink) == want
+    sink.compact()
+    assert _state_rows(sink) == want
+
+
+def test_truncate_keeps_history_for_asof_reads(spark, tmp_path):
+    """With retain_history the cleared dirs stay in place: an as-of read
+    of a batch before the truncate still sees the table's old rows."""
+    sink = _manual_sink(spark, tmp_path, retain_history=True)
+    sink.apply_batch(spark.createDataFrame(TRUNC_LOG[:3], SCHEMA), batch_id=0)
+    sink.apply_batch(spark.createDataFrame(TRUNC_LOG[3:], SCHEMA), batch_id=1)
+    before = _rows(replay(spark.createDataFrame(TRUNC_LOG[:3], SCHEMA), ["pk"]))
+    after = _truncate_oracle(spark, TRUNC_LOG)
+    for _ in range(2):  # and after the folds
+        assert _state_rows(sink, 0) == before
+        assert _state_rows(sink, 1) == _state_rows(sink) == after
+        sink.compact()
 
 
 def test_streamed_truncate_clears_state_through_wal2json_stream(spark, tmp_path):
-    """The round's truncate semantics wired END-TO-END through the
-    STREAMING path: pgoutput-shaped drop-dir docs (insert batch, then a
-    truncate + post-truncate insert) flow through wal2json_stream into
-    a truncate-aware ParquetStateSink — the table clears mid-stream and
-    only the post-truncate row survives."""
+    """Truncate semantics wired END-TO-END through the STREAMING path:
+    pgoutput-shaped drop-dir docs (insert batch, then a truncate +
+    post-truncate insert) flow through wal2json_stream into a default
+    ParquetStateSink — the table clears mid-stream and only the
+    post-truncate row survives."""
     import json as _json
 
     from pyspark.sql import functions as F
 
-    from warp_pipe_spark.apply import TRUNCATE_KINDS
     from warp_pipe_spark.changeset import column_value
     from warp_pipe_spark.streaming import wal2json_stream
 
@@ -860,10 +935,7 @@ def test_streamed_truncate_clears_state_through_wal2json_stream(spark, tmp_path)
         column_value("new_values", "id").cast("long").alias("pk"),
         column_value("new_values", "val").alias("val"),
     )
-    sink = ParquetStateSink(
-        spark, str(tmp_path / "state"), pk_cols=["pk"],
-        truncate_kinds=TRUNCATE_KINDS,
-    )
+    sink = ParquetStateSink(spark, str(tmp_path / "state"), pk_cols=["pk"])
     q = (
         typed.writeStream.foreachBatch(sink)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
@@ -1387,56 +1459,46 @@ def test_compaction_worker_jobs_carry_their_own_job_group(spark, tmp_path):
     assert not compaction & set(tracker.getJobIdsForGroup(rounds))
 
 
-def test_pre_schema_pointer_seeds_schema_from_every_dir(spark, tmp_path):
-    """ADVICE r15: a pointer committed before the pointer carried a
-    schema must not be seeded from the batch alone — that clips columns
-    only untouched tables' dirs hold (here `email`, held by users while
-    the batch touches pets), and the next commit makes the clip
-    permanent. The schema is seeded once from every committed dir."""
+@pytest.mark.parametrize("missing", ["schema", "deltas"])
+def test_pointer_of_an_older_version_is_refused(spark, tmp_path, missing):
+    """A pointer that names committed dirs but lacks their schema or the
+    deltas map was written by an older version: reads and appends refuse
+    it with a StateCorruptError that says to replay into a fresh state
+    dir, rather than guessing its schema from the dirs."""
     import json
-    import os
 
-    state = tmp_path / "state"
-    spark.createDataFrame(
-        [(1, "INSERT", "users", 1, "a", "a@x.com")], SCHEMA + ", email STRING"
-    ).write.parquet(str(state / "tables" / "users" / "v_0"))
-    spark.createDataFrame([(2, "INSERT", "pets", 1, "rex")], SCHEMA).write.parquet(
-        str(state / "tables" / "pets" / "v_0")
-    )
-    with open(os.path.join(state, "_POINTER.json"), "w") as f:
-        json.dump(
-            {
-                "batch_id": 0,
-                "n_buckets": None,
-                "tables": {"users": "tables/users/v_0", "pets": "tables/pets/v_0"},
-            },
-            f,
-        )
-    sink = _mk_sink(spark, tmp_path)
-    sink.apply_batch(
-        spark.createDataFrame([(3, "UPDATE", "pets", 1, "rex2")], SCHEMA),
-        batch_id=1,
-    )
-    want = {("users", "a", "a@x.com"), ("pets", "rex2", None)}
-    for s in (sink, _mk_sink(spark, tmp_path)):  # and after a restart
-        assert {
-            (r["table_name"], r["val"], r["email"])
-            for r in s.read_state().collect()
-        } == want
+    from warp_pipe_spark.streaming import StateCorruptError
+
+    sink = _manual_sink(spark, tmp_path)
+    sink.apply_batch(spark.createDataFrame(MULTI, SCHEMA), batch_id=0)
+    sink.compact()
+    path = tmp_path / "state" / "_POINTER.json"
+    meta = json.loads(path.read_text())
+    del meta[missing]
+    path.write_text(json.dumps(meta))
+    for op in (
+        sink.read_state,
+        lambda: sink.apply_batch(spark.createDataFrame(USERS_ONLY, SCHEMA), 1),
+    ):
+        with pytest.raises(StateCorruptError, match="fresh state dir"):
+            op()
 
 
 def test_appends_racing_the_worker_lose_no_delta(spark, tmp_path):
     """Stress: every append makes a key due, so the worker compacts
     while the caller keeps appending (switch interval shortened to
     interleave the threads more often). A compaction commit that dropped
-    a delta appended meanwhile, or an append that lost a compaction's
-    base, would show as a state differing from the one-shot replay."""
+    a delta appended meanwhile, an append that lost a compaction's base,
+    or a truncate racing a fold of its table would show as a state
+    differing from the one-shot replay."""
     import sys
 
     sink = _mk_sink(spark, tmp_path)
     sink.COMPACT_DELTAS = 1
     rows = [
         (i, ("INSERT", "UPDATE", "UPDATE", "DELETE")[i % 4], f"t{i % 3}", i % 7, f"v{i}")
+        if i % 25
+        else (i, "truncate", f"t{i % 3}", None, None)
         for i in range(1, 121)
     ]
     interval = sys.getswitchinterval()
@@ -1449,9 +1511,7 @@ def test_appends_racing_the_worker_lose_no_delta(spark, tmp_path):
     finally:
         sys.setswitchinterval(interval)
     assert sink._read_meta()["deltas"] == {}
-    assert _rows(sink.read_state()) == _rows(
-        replay(spark.createDataFrame(rows, SCHEMA), ["pk"])
-    )
+    assert _state_rows(sink) == _truncate_oracle(spark, rows)
 
 
 def test_run_until_drained_closes_the_sink(spark, tmp_path):

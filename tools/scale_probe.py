@@ -1508,24 +1508,22 @@ def soak_probe(spark, r: int = 10, limit: int = 5_000, n_buckets: int = 32) -> i
 def trunc_probe(
     spark, rows_per_table: int = 100_000, n_buckets: int = 8
 ) -> int:
-    """Truncate table-clear cost envelope, MEASURED (round 11): a
-    truncate batch pays O(truncated table's state) ONCE — the widened
-    read+rewrite over all its buckets, the floor for a clear — while
-    steady batches before AND after keep the O(touched) cost the
-    round-10 --fanout probe pinned. Asserts: (1) correctness — the
-    truncated table holds exactly its post-truncate rows, the other
-    table is untouched; (2) recovery — the first steady batch AFTER
-    the truncate costs <= 1.5x the pre-truncate steady baseline (no
-    lingering widening)."""
+    """Truncate table-clear cost envelope, measured: a truncate batch
+    waits for the compaction worker, then drops the truncated table's
+    keys (all its buckets) from the pointer in the batch's own commit
+    — no read or rewrite of the table's state — while steady batches
+    before AND after keep the O(touched) cost the --fanout probe
+    pinned. Asserts: (1) correctness — the truncated table holds
+    exactly its post-truncate rows, the other table is untouched; (2)
+    recovery — the first steady batch AFTER the truncate costs <= 1.5x
+    the pre-truncate steady baseline."""
     import tempfile
 
-    from warp_pipe_spark.apply import TRUNCATE_KINDS
     from warp_pipe_spark.streaming import ParquetStateSink
 
     work = tempfile.mkdtemp(prefix="wp_trunc_")
     sink = ParquetStateSink(
-        spark, os.path.join(work, "state"), pk_cols=["pk"],
-        n_buckets=n_buckets, truncate_kinds=TRUNCATE_KINDS,
+        spark, os.path.join(work, "state"), pk_cols=["pk"], n_buckets=n_buckets,
     )
     next_id = [0]
     next_batch = [0]

@@ -28,9 +28,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from warp_pipe_spark.changeset import KIND_DELETE, KIND_TRUNCATE
-
-TRUNCATE_KINDS = (KIND_TRUNCATE, "TRUNCATE")
+from warp_pipe_spark.changeset import DELETE_KINDS, TRUNCATE_KINDS
 
 
 def split_truncates(
@@ -97,21 +95,24 @@ def replay(
     id_col: str = "id",
     kind_col: str = "action",
     table_col: str | None = "table_name",
-    delete_kinds: tuple[str, ...] = (KIND_DELETE, "DELETE"),
     drop_deletes: bool = True,
     truncate_kinds: tuple[str, ...] | None = None,
 ) -> DataFrame:
     """Fold changesets (typed/decoded form: one column per field) into
-    final state: last writer wins per PK, delete tombstones drop rows.
+    final state: last writer wins per PK, delete tombstones (a kind in
+    changeset.DELETE_KINDS) drop rows.
 
-    truncate_kinds: pass TRUNCATE_KINDS when the log can carry
-    `truncate` changesets (our pgoutput source emits one per truncated
-    table) — each table's rows at-or-before its latest truncate are
-    cleared via split_truncates BEFORE the fold, so a truncate is a
-    table clear, never an upsert-shaped no-op row. Opt-in (default
-    None) because the guard adds a broadcast join the pinned
-    single-exchange flagship plan doesn't need for truncate-free
-    sources (audit triggers, wal2json).
+    truncate_kinds: pass changeset.TRUNCATE_KINDS when the log can
+    carry `truncate` changesets (our pgoutput source emits one per
+    truncated table) — each table's rows at-or-before its latest
+    truncate are cleared via split_truncates BEFORE the fold, so a
+    truncate is a table clear, never an upsert-shaped no-op row.
+    Opt-in (default None) because a fold cannot tell whether a log
+    carries truncates without running a job, and the guard adds a
+    broadcast join the pinned single-exchange flagship plan doesn't
+    need for truncate-free sources (audit triggers, wal2json). The
+    state sinks need no opt-in: each sees its batch's truncates in
+    work it already runs and always clears.
 
     O4 duplicate-skip comes for free: a redelivered changeset (same id,
     same content) lands in the same (table, pk) partition and only the
@@ -144,7 +145,7 @@ def replay(
         # (the audit schema allows it), which would silently drop the
         # row from final state as if it were a delete tombstone
         folded = folded.filter(
-            F.col(kind_col).isNull() | ~F.col(kind_col).isin(*delete_kinds)
+            F.col(kind_col).isNull() | ~F.col(kind_col).isin(*DELETE_KINDS)
         )
     return folded
 

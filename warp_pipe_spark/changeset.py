@@ -31,9 +31,9 @@ KIND_DELETE = "delete"
 # truncates never reach it), but OUR pgoutput source emits it
 # (pgoutput.py truncate fan-out). It must survive normalization: folding
 # it to '' would let the apply path treat a table clear as an
-# upsert-shaped no-op row. apply.split_truncates / replay(truncate_kinds=)
-# give it table-clear semantics; pipelines that can't handle it
-# dead-letter it via pipeline.reject_truncates().
+# upsert-shaped no-op row. Both state sinks always give it table-clear
+# semantics, replay(truncate_kinds=) on request; pipelines that can't
+# handle it dead-letter it via pipeline.reject_truncates().
 KIND_TRUNCATE = "truncate"
 # pg_logical_emit_message payloads (pgoutput.py 'M' frames) — the
 # public outbox/marker mechanism. Preserved like truncate: NULL
@@ -41,6 +41,10 @@ KIND_TRUNCATE = "truncate"
 # fold as row changes, while outbox consumers filter kind='message'.
 KIND_MESSAGE = "message"
 KINDS = (KIND_INSERT, KIND_UPDATE, KIND_DELETE)
+# the kind values every apply path reads as a delete / a truncate: the
+# normalized kind and the audit trigger's upper-case TG_OP spelling
+DELETE_KINDS = (KIND_DELETE, "DELETE")
+TRUNCATE_KINDS = (KIND_TRUNCATE, "TRUNCATE")
 
 # column triple: name, raw string value, declared source type
 CHANGESET_COLUMN = T.StructType(

@@ -320,7 +320,10 @@ def hyperplane_lsh_pairs(
     auto_lsh_params — the configuration that stays linear as the corpus
     grows; pass it at any real scale. The default stays a fixed 16 so
     the oracle-compared queries (and their DuckDB replays) remain
-    deterministic at any test SF."""
+    deterministic at any test SF. Only the scorable universe
+    (dedup._scorable) is banded: a NULL or zero-norm vector has no
+    signature and appears in no pair."""
+    embeddings = _scorable(embeddings)
     if n_planes is None:
         n_planes, n_bands = auto_lsh_params(embeddings.count(), n_bands)
     if n_planes % n_bands != 0:

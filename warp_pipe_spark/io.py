@@ -646,7 +646,7 @@ def append_batch(path: str, kind: str, datasets: dict, batch_id: int) -> None:
 
 
 def read_parquet_dirs(
-    spark: SparkSession, dirs: list[str], schema: StructType | None, **options
+    spark: SparkSession, dirs: list[str], schema: StructType, **options
 ) -> DataFrame:
     """Read the driver-local parquet dirs `dirs`, which a manifest or
     pointer already names, with reader `options`.
@@ -654,18 +654,13 @@ def read_parquet_dirs(
     Spark lists the paths of one read in a "Listing leaf files" job
     once they number more than its parallel-listing threshold
     (spark.sql.sources.parallelPartitionDiscovery.threshold, 32), and
-    that job takes every task slot for a few hundred ms. So under a
-    `schema` the dirs are read in chunks of at most the threshold, each
+    that job takes every task slot for a few hundred ms. So the dirs
+    are read under `schema` in chunks of at most the threshold, each
     listed on the driver, and the chunks are unioned by name; a read of
     up to the threshold is the one plain scan. No conf is changed. A
     dir with more than the threshold of subdirs still lists them in a
-    job. `schema` None is the mergeSchema read: one scan, since the
-    chunks' merged schemas could differ, and its listing and footer
-    merge run in Spark jobs as Spark decides."""
-    reader = spark.read.options(**options)
-    if schema is None:
-        return reader.option("mergeSchema", "true").parquet(*dirs)
-    reader = reader.schema(schema)
+    job."""
+    reader = spark.read.options(**options).schema(schema)
     conf = "spark.sql.sources.parallelPartitionDiscovery.threshold"
     n = max(1, int(spark.conf.get(conf)))
     chunks = [reader.parquet(*dirs[i : i + n]) for i in range(0, len(dirs), n)]

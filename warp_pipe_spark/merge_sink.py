@@ -41,10 +41,9 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from warp_pipe_spark.apply import TRUNCATE_KINDS, replay
+from warp_pipe_spark.apply import replay
+from warp_pipe_spark.changeset import DELETE_KINDS, TRUNCATE_KINDS
 from warp_pipe_spark.streaming import StateSink
-
-DELETE_KINDS = ("delete", "DELETE")
 
 
 def batch_winners(
@@ -403,24 +402,15 @@ class MergeStateSink(StateSink):
     Atomicity and redelivery-idempotence come from the target format's
     transaction (Delta/Iceberg commit) plus the id-guarded conditions.
 
-    on_truncate: what a `truncate` changeset in the batch does (only
-    the pgoutput source emits them, one per truncated table).
-      - 'error' (default): raise — a truncate must NEVER silently fold
-        into the MERGE as an upsert-shaped no-op row; an operator who
-        hits this either enables 'clear' or routes truncates to a
-        dead-letter with pipeline.reject_truncates() upstream.
-      - 'clear': table-clear semantics — executor.clear(table, id)
-        deletes target rows at-or-before the truncate id, and batch
-        rows the truncate supersedes are dropped before the fold
-        (apply.split_truncates' contract). Redelivery stays a no-op:
-        the clear is id-guarded, post-truncate rows survive it.
-      - 'unchecked': SKIP the per-batch truncate scan entirely — for
-        sources that cannot emit truncates (audit-trigger mode,
-        wal2json v1), where paying a detection aggregation every
-        micro-batch forever buys nothing. Explicit opt-out, never the
-        default: a pgoutput source behind 'unchecked' would fold a
-        table clear as an upsert-shaped no-op, the exact silent
-        corruption 'error' exists to stop.
+    TRUNCATE: a `truncate` changeset (only the pgoutput source emits
+    them, one per truncated table) always clears its table. One routing
+    aggregate per batch — per table, the latest truncate id and the
+    latest other id — names both the tables to clear and the tables to
+    merge, so a truncate-free batch pays no extra job for the check.
+    `executor.clear(table, id)` deletes target rows at-or-before the
+    truncate id, and batch rows the truncate supersedes are dropped
+    before the fold (apply.split_truncates' contract). Redelivery stays
+    a no-op: the clear is id-guarded, post-truncate rows survive it.
     """
 
     def __init__(
@@ -431,78 +421,61 @@ class MergeStateSink(StateSink):
         id_col: str = "id",
         kind_col: str = "action",
         table_col: str = "table_name",
-        on_truncate: str = "error",
     ):
-        if on_truncate not in ("error", "clear", "unchecked"):
-            raise ValueError(
-                "on_truncate must be 'error', 'clear' or 'unchecked', "
-                f"got {on_truncate!r}"
-            )
         self.spark = spark
         self.executor = executor
         self.pk_cols = list(pk_cols)
         self.id_col = id_col
         self.kind_col = kind_col
         self.table_col = table_col
-        self.on_truncate = on_truncate
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         # unroutable rows (NULL table_name) are skipped like
         # ParquetStateSink does — sorted() would TypeError on None and
         # the equality route below can never match them anyway
         batch = batch.filter(F.col(self.table_col).isNotNull())
-        # per-table latest-truncate marks: one tiny agg job per batch —
-        # the price of never letting a table clear slip through as an
-        # upsert. Tables number O(tables); the collect is the same
-        # driver-side routing read as `touched` below. Truncate-free
-        # sources skip the scan with on_truncate='unchecked'.
-        marks = {}
-        if self.on_truncate != "unchecked":
-            marks = {
-                r[0]: r[1]
-                for r in batch.filter(
-                    F.col(self.kind_col).isin(*TRUNCATE_KINDS)
-                )
-                .groupBy(self.table_col)
-                .agg(F.max(self.id_col))
-                .collect()
-            }
+        # coalesce: a NULL kind is not a truncate
+        is_trunc = F.coalesce(
+            F.col(self.kind_col).isin(*TRUNCATE_KINDS), F.lit(False)
+        )
+        # the batch's one routing read: per table its latest truncate id
+        # (the clear mark) and its latest other id. Tables number
+        # O(tables), so the collect is a driver-side routing table.
+        routes = (
+            batch.groupBy(self.table_col)
+            .agg(
+                F.max(F.when(is_trunc, F.col(self.id_col))),
+                F.max(F.when(~is_trunc, F.col(self.id_col))),
+            )
+            .collect()
+        )
+        marks = {t: m for t, m, _ in routes if m is not None}
+        # a table merges iff a row of it outlives its truncate
+        touched = sorted(
+            t for t, m, o in routes if o is not None and (m is None or o > m)
+        )
         if marks:
-            if self.on_truncate == "error":
-                raise ValueError(
-                    "truncate changeset(s) for table(s) "
-                    f"{sorted(marks)} reached MergeStateSink("
-                    "on_truncate='error'); construct the sink with "
-                    "on_truncate='clear' or dead-letter truncates "
-                    "upstream (pipeline.reject_truncates)"
-                )
-            superseded = F.col(self.kind_col).isin(*TRUNCATE_KINDS)
+            superseded = is_trunc
             for t, tid in marks.items():
                 superseded = superseded | (
-                    (F.col(self.table_col) == t)
-                    & (F.col(self.id_col) <= tid)
+                    (F.col(self.table_col) == t) & (F.col(self.id_col) <= tid)
                 )
-            # coalesce: NULL kind must read "not superseded", not NULL
-            batch = batch.filter(~F.coalesce(superseded, F.lit(False)))
+            batch = batch.filter(~superseded)
             for t in sorted(marks):
                 self.executor.clear(t, marks[t], self.id_col)
+        # no cache: the fold partitions by table, so each table's filter
+        # reaches below it and each MERGE folds only its own table's rows
         winners = batch_winners(
             batch, self.pk_cols, self.id_col, self.kind_col, self.table_col
-        ).persist()
-        try:
-            touched = [
-                r[0] for r in winners.select(self.table_col).distinct().collect()
-            ]
-            for t in sorted(touched):
-                self.executor.merge(
-                    t,
-                    winners.filter(F.col(self.table_col) == t),
-                    self.pk_cols,
-                    self.id_col,
-                    self.kind_col,
-                )
-        finally:
-            winners.unpersist()
+        )
+        for t in touched:
+            self.executor.merge(
+                t,
+                winners.filter(F.col(self.table_col) == t),
+                self.pk_cols,
+                self.id_col,
+                self.kind_col,
+            )
 
     def read_state(self) -> DataFrame | None:
         return self.executor.read_state()

@@ -277,9 +277,10 @@ def reject_truncates(kind_field: str = "kind") -> RecordStage:
     truncate change per truncated table (pgoutput.py; the reference's
     wal2json path never sees truncates, so this is surface we created);
     an apply target without table-clear semantics must never fold one
-    as an upsert-shaped no-op row. Pipelines whose sink CAN clear
-    tables use apply.replay(truncate_kinds=...) / split_truncates
-    instead of this stage; everyone else routes the truncate to the
+    as an upsert-shaped no-op row. Pipelines that end in a state sink
+    (ParquetStateSink, MergeStateSink) or a truncate-aware fold
+    (apply.replay(truncate_kinds=...)) need no stage: those always
+    clear the table. Everyone else routes the truncate to the
     dead-letter output where it is an auditable event, not silent
     state corruption."""
 

@@ -43,7 +43,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from warp_pipe_spark.apply import replay
-from warp_pipe_spark.changeset import AUDIT_LOG_SCHEMA
+from warp_pipe_spark.changeset import AUDIT_LOG_SCHEMA, TRUNCATE_KINDS
 from warp_pipe_spark.io import publish_file, read_parquet_dirs
 
 
@@ -188,6 +188,18 @@ class ParquetStateSink(StateSink):
         compaction removes only the deltas it folded and keeps newer ones.
       - IDEMPOTENT: a redelivered batch lands as one more delta; the fold
         dedups on id, so checkpoint replay after a crash is safe.
+      - TRUNCATE: a `truncate` changeset (the pgoutput source emits one
+        per truncated table) clears its table when its batch applies.
+        The batch's rows of the table up to its latest truncate never
+        land, and the same commit drops every key of the table (all its
+        buckets' bases and deltas) into `garbage`, or keeps the dirs for
+        time travel under retain_history. With in-order delivery every
+        committed row precedes the truncate, so this equals folding it;
+        a redelivered truncate batch clears again and re-lands the same
+        rows. The check is an Arrow `is_in` over the collected batch, no
+        Spark job. A truncating apply first waits for the worker, so no
+        in-flight compaction commits a base of the table after the
+        clear; truncates are rare, so the wait costs little.
       - DEFERRED GC: dirs a compaction supersedes are listed in the
         pointer's `garbage` and deleted at the start of the next
         `apply_batch` or in `close()`, in the caller's thread, so a
@@ -236,7 +248,6 @@ class ParquetStateSink(StateSink):
         table_col: str = "table_name",
         n_buckets: int | None = None,
         retain_history: bool = False,
-        truncate_kinds: "tuple[str, ...] | None" = None,
     ):
         if n_buckets is not None and n_buckets < 1:
             # 0 would round-trip through the pointer as falsy and collide
@@ -254,14 +265,6 @@ class ParquetStateSink(StateSink):
         # read_state_asof(batch_id) time travel (Delta-style). Storage
         # then grows with change volume until externally vacuumed.
         self.retain_history = retain_history
-        # truncate_kinds: opt in (pass apply.TRUNCATE_KINDS) when the
-        # stream can carry `truncate` changesets — only the pgoutput
-        # source emits them (one per truncated table); audit-trigger and
-        # keyset sources cannot. A truncate row is appended to EVERY
-        # bucket of its table (the clear must reach buckets the batch's
-        # own rows don't touch, and compaction folds one key at a time),
-        # and the fold's table-clear (apply.split_truncates) applies it.
-        self.truncate_kinds = tuple(truncate_kinds) if truncate_kinds else None
         # serialises pointer read-modify-write commits: the caller's
         # appends and GC against the worker's compactions
         self._lock = threading.Lock()
@@ -282,8 +285,9 @@ class ParquetStateSink(StateSink):
         """Full pointer metadata (bases, deltas, garbage, committed
         schema), or None if no committed state yet; StateCorruptError =
         state that exists but can't be read (never silently treated as
-        empty). Pointers written before deltas existed read as "no
-        deltas"."""
+        empty). A pointer written by an older version names dirs but
+        lacks their schema or the deltas map: it is refused, and its
+        changesets are replayed into a fresh state dir."""
         path = self._pointer_path()
         if not os.path.exists(path):
             tables_dir = os.path.join(self.state_dir, "tables")
@@ -304,9 +308,15 @@ class ParquetStateSink(StateSink):
                     f"n_buckets={self.n_buckets} — bucket layout is fixed "
                     "at first commit"
                 )
+            if self._rels(meta) and None in (meta.get("schema"), meta.get("deltas")):
+                raise StateCorruptError(
+                    f"state pointer {path} was written by an older version "
+                    "(no schema or no deltas): replay the changesets into "
+                    "a fresh state dir"
+                )
             meta["tables"] = dict(meta["tables"])
-            meta["deltas"] = {k: list(v) for k, v in meta.get("deltas", {}).items()}
-            meta["garbage"] = list(meta.get("garbage", ()))
+            meta["deltas"] = {k: list(v) for k, v in meta["deltas"].items()}
+            meta["garbage"] = list(meta["garbage"])
             return meta
         except StateCorruptError:
             raise
@@ -323,8 +333,8 @@ class ParquetStateSink(StateSink):
         state-row schema (StructType.jsonValue) every committed dir is
         readable UNDER (missing columns in older dirs null-fill — the
         additive-evolution contract): storing it lets readers skip
-        parquet schema inference entirely. None (the first empty commit
-        / pre-r15 pointers) falls back to the mergeSchema read."""
+        parquet schema inference entirely. It is None only in the
+        first, empty commit."""
         os.makedirs(self.state_dir, exist_ok=True)
         # atomic commit point
         publish_file(self._pointer_path(), [json.dumps(meta).encode()])
@@ -405,18 +415,6 @@ class ParquetStateSink(StateSink):
                 )
         return {"type": "struct", "fields": merged}
 
-    def _committed_schema(self, meta: dict) -> dict | None:
-        """The pointer's committed schema. A non-empty pointer without
-        one (written before the pointer carried it) is seeded ONCE from
-        a mergeSchema read over every committed dir: seeding from the
-        batch alone would clip columns only untouched keys' dirs hold,
-        and the next commit would make the clip permanent."""
-        rels = self._rels(meta)
-        if meta.get("schema") is None and rels:
-            seeded = self._read_tables(sorted(rels))
-            meta["schema"] = self._nullable_schema_json(seeded.schema)
-        return meta.get("schema")
-
     # -- layout ------------------------------------------------------------
 
     def _bucket_col(self):
@@ -473,9 +471,7 @@ class ParquetStateSink(StateSink):
                 return rel
             n += 1
 
-    def _read_tables(
-        self, rels: Sequence[str], schema: dict | None = None
-    ) -> DataFrame | None:
+    def _read_tables(self, rels: Sequence[str], schema: dict) -> DataFrame | None:
         """One read of every referenced dir (io.read_parquet_dirs): the
         pointer names them all, so they are listed on the driver, in
         chunks of Spark's parallel-listing threshold, and never in a
@@ -489,9 +485,7 @@ class ParquetStateSink(StateSink):
         schema inference outright — no footer is opened before the
         consuming job runs, and dirs written before a source-side ALTER
         TABLE ADD COLUMN null-fill the missing columns (the parquet
-        reader clips files to the requested schema). Without it
-        (pre-r15 pointers) the one-scan mergeSchema read provides the
-        same null-fill semantics at the cost of a footer-scan job.
+        reader clips files to the requested schema).
 
         pyarrow deltas carry no Spark version, so their dates/timestamps
         would follow the session's rebase mode (EXCEPTION fails on pre-
@@ -503,7 +497,7 @@ class ParquetStateSink(StateSink):
             return read_parquet_dirs(
                 self.spark,
                 dirs,
-                None if schema is None else StructType.fromJson(schema),
+                StructType.fromJson(schema),
                 datetimeRebaseMode="CORRECTED",
             )
         except Exception as e:
@@ -512,18 +506,14 @@ class ParquetStateSink(StateSink):
             ) from e
 
     def _fold(self, rows: DataFrame) -> DataFrame:
-        return replay(
-            rows, self.pk_cols, self.id_col, self.kind_col, self.table_col,
-            truncate_kinds=self.truncate_kinds,
-        )
+        return replay(rows, self.pk_cols, self.id_col, self.kind_col, self.table_col)
 
     def _state_of(self, entry: dict) -> "DataFrame | None":
         """State of a pointer or history entry: the bases of keys without
         deltas as one plain scan, unioned with the fold of the keys that
         hold deltas (their bases and deltas, one more scan). A base is
         folded state already, so only keys with deltas pay the shuffle."""
-        deltas = entry.get("deltas", {})
-        schema = entry.get("schema")
+        deltas, schema = entry["deltas"], entry["schema"]
         plain = self._read_tables(
             sorted(rel for key, rel in entry["tables"].items() if key not in deltas),
             schema=schema,
@@ -566,16 +556,7 @@ class ParquetStateSink(StateSink):
         self._collect_garbage()
         out = batch
         if self.n_buckets:
-            # each row's buckets as a list: its pk's bucket, or EVERY
-            # bucket for a truncate (the clear must reach buckets the
-            # batch's own rows don't touch)
-            buckets = F.array(self._bucket_col())
-            if self.truncate_kinds:
-                buckets = F.when(
-                    F.col(self.kind_col).isin(*self.truncate_kinds),
-                    F.sequence(F.lit(0), F.lit(self.n_buckets - 1)),
-                ).otherwise(buckets)
-            out = out.withColumn(self.BUCKET_PART, buckets)
+            out = out.withColumn(self.BUCKET_PART, self._bucket_col())
         rows = out.toArrow()
         ids = rows[self.id_col]
         mx, n = pc.max(ids).as_py(), pc.count(ids).as_py()
@@ -586,13 +567,20 @@ class ParquetStateSink(StateSink):
         # are surfaced; the sink's contract is to apply the applicable
         # rows (they still count toward the offset watermark).
         rows = rows.filter(pc.is_valid(rows[self.table_col]))
-        if self.n_buckets:
-            lists = rows[self.BUCKET_PART]
-            rows = (
-                rows.drop_columns([self.BUCKET_PART])
-                .take(pc.list_parent_indices(lists))
-                .append_column(self.BUCKET_PART, pc.list_flatten(lists))
-            )
+        # a truncate clears its table: the batch's rows of the table up
+        # to its latest truncate (the mark) never land, the truncates
+        # included, and the commit below drops every key of the table
+        table, row_id = pc.field(self.table_col), pc.field(self.id_col)
+        trunc = rows.filter(
+            pc.field(self.kind_col).isin(TRUNCATE_KINDS) & row_id.is_valid()
+        ).to_pydict()
+        marks: dict[str, int] = {}
+        for t, i in zip(trunc[self.table_col], trunc[self.id_col]):
+            marks[t] = max(i, marks.get(t, i))
+        for t, mark in marks.items():
+            rows = rows.filter((table != t) | (row_id > mark))
+        if marks:  # no in-flight fold may commit a cleared key after the clear
+            self._drain()
         meta = self._read_meta()
         if meta is None:
             # commit an EMPTY pointer before the first dirs are written:
@@ -613,7 +601,7 @@ class ParquetStateSink(StateSink):
         # widen the committed schema with the batch's columns: the commit
         # must describe every dir the new pointer references. Derived
         # from the plan, not a job.
-        schema = self._merge_schema_json(self._committed_schema(meta), batch.schema)
+        schema = self._merge_schema_json(meta["schema"], batch.schema)
         landed: dict[str, str] = {}
         for t in sorted(pc.unique(rows[self.table_col]).to_pylist()):
             table_rows = rows.filter(pc.equal(rows[self.table_col], t))
@@ -630,9 +618,15 @@ class ParquetStateSink(StateSink):
                     f"{rel}/{self.BUCKET_PART}={b}",
                     table_rows.filter(pc.equal(part, b)),
                 )
-        if landed:
+        if landed or marks:
             with self._lock:
                 cur = self._read_meta()
+                for key in {*cur["tables"], *cur["deltas"]}:
+                    if self._split_key(key)[0] in marks:
+                        dropped = [cur["tables"].pop(key, None)]
+                        dropped += cur["deltas"].pop(key, [])
+                        if not self.retain_history:
+                            cur["garbage"].extend(r for r in dropped if r)
                 for key, rel in landed.items():
                     cur["deltas"].setdefault(key, []).append(rel)
                 cur["batch_id"] = batch_id
@@ -766,7 +760,7 @@ class ParquetStateSink(StateSink):
         inputs = ([base] if base else []) + deltas
         obs = Observation()
         folded = self._fold(
-            self._read_tables(inputs, schema=self._committed_schema(meta))
+            self._read_tables(inputs, schema=meta["schema"])
         ).observe(obs, F.count(F.lit(1)).alias("_n"))
         table, bucket = self._split_key(key)
         staging = os.path.join(self.state_dir, "_staging.compact")
