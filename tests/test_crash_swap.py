@@ -1,11 +1,12 @@
 """Crash consistency of the package's two commit protocols.
 
-io.rewrite_and_swap, the two-rename swap behind io.compact_dataset and
-store.retention_compact: each caller is crashed at each os.rename of
-the swap and inside the trash rmtree. The crashed state must read as
-exactly the pre- or the post-compaction rows once a reader has healed
-it, and a retried compaction, entered in the unhealed crashed state,
-must converge to the post-compaction rows and leave no sidecar behind.
+io.rewrite_and_swap, the two-rename swap whose only caller is
+store.retention_compact: the retention rewrite is crashed at each
+os.rename of the swap and inside the trash rmtree. The crashed state
+must read as exactly the pre- or the post-compaction rows once a
+reader has healed it, and a retried compaction, entered in the
+unhealed crashed state, must converge to the post-compaction rows and
+leave no sidecar behind.
 
 The generation ledger (io.write_index / io.compact_index) behind every
 appended index and sink: an index append, a compaction and a gate-sink
@@ -28,7 +29,7 @@ from warp_pipe_spark.datapipe.dedup_index import (
 )
 from warp_pipe_spark.datapipe.ingest import CorpusQualityGateSink
 from warp_pipe_spark.datapipe.retrieval import build_text_index, update_text_index
-from warp_pipe_spark.io import compact_dataset, index_manifest, open_index, recover_swap
+from warp_pipe_spark.io import index_manifest, open_index, recover_swap
 from warp_pipe_spark.store import retention_compact
 
 
@@ -38,26 +39,6 @@ def _rows(df):
 
 class Crash(Exception):
     pass
-
-
-class _PlainDataset:
-    """io.compact_dataset on a plain three-file dataset dir."""
-
-    def build(self, spark, base):
-        docs = spark.range(20).selectExpr("id AS doc_id", "concat('doc ', id) AS text")
-        docs.repartition(3).write.parquet(self.swapped(base))
-        rows = [(i, f"doc {i}") for i in range(20)]
-        return rows, rows
-
-    def swapped(self, base):
-        return os.path.join(base, "data")
-
-    def compact(self, spark, base):
-        compact_dataset(spark, self.swapped(base))
-
-    def read(self, spark, base):
-        recover_swap(self.swapped(base))
-        return _rows(spark.read.parquet(self.swapped(base)))
 
 
 class _Retention:
@@ -139,7 +120,7 @@ CRASHES = {
     ),
 }
 
-CALLERS = {"compact_dataset": _PlainDataset, "retention_compact": _Retention}
+CALLERS = {"retention_compact": _Retention}
 
 
 def _crashed(c, spark, base, monkeypatch, crash):

@@ -317,62 +317,6 @@ def test_apply_quality_model_plan_broadcasts_weights(spark):
     assert "SortMergeJoin" not in plan
 
 
-def _bpe_reference(word_counts, n_merges):
-    """Pure-Python BPE (Sennrich et al. 2016 alg.), the oracle for
-    train_bpe: greedy non-overlapping merges, ties (count desc, left
-    asc, right asc)."""
-    vocab = {w: list(w) for w in word_counts}
-    merges = []
-    for _ in range(n_merges):
-        counts = {}
-        for w, syms in vocab.items():
-            c = word_counts[w]
-            for a, b in zip(syms, syms[1:]):
-                counts[(a, b)] = counts.get((a, b), 0) + c
-        if not counts:
-            break
-        pair = min(counts, key=lambda p: (-counts[p], p[0], p[1]))
-        merges.append(pair)
-        a, b = pair
-        for w, syms in vocab.items():
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            vocab[w] = out
-    return merges, vocab
-
-
-def test_train_bpe_matches_reference_implementation(spark):
-    """The distributed merge loop must reproduce the classic
-    single-machine algorithm exactly: same ordered merges, same final
-    symbol sequences — including the greedy 'aaa' overlap case."""
-    from warp_pipe_spark.datapipe.text import train_bpe
-
-    corpus = [
-        "low low low lower lower lowest",
-        "newer newer newer new new wider wide aaa aaa",
-    ]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(corpus)], "doc_id LONG, text STRING"
-    )
-    wcounts = {}
-    for t in corpus:
-        for w in t.split(" "):
-            wcounts[w] = wcounts.get(w, 0) + 1
-    want_merges, want_vocab = _bpe_reference(wcounts, 12)
-    merges, vocab_df = train_bpe(docs, n_merges=12)
-    assert merges == want_merges
-    got_vocab = {
-        r["w"]: list(r["symbols"]) for r in vocab_df.collect()
-    }
-    assert got_vocab == want_vocab
-
-
 def test_logistic_loss_is_finite_at_extreme_scores(spark):
     """The epoch-loss expression must stay finite where F.exp
     overflows (|s| > 709): softplus form, exact vs math.log1p at

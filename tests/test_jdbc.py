@@ -131,3 +131,45 @@ def test_slot_lag_query_pins_the_monitoring_sql():
     assert "retained_wal_bytes" in q and "confirm_lag_bytes" in q
     one = slot_lag_query("wp_slot")
     assert "WHERE slot_name = 'wp_slot'" in one
+
+
+def test_keyset_fetch_forwards_each_round_to_poll_microbatch(
+    spark, tmp_path, monkeypatch
+):
+    """keyset_fetch drives a KeysetPoller against a live audit table:
+    each round is one poll_microbatch call with the factory's url,
+    table and JDBC properties, the committed offset as last_id and the
+    poller's limit. poll_microbatch is replaced by an in-memory table
+    of ids 1..5 (no Postgres here), read 3 rows per round."""
+    from warp_pipe_spark import jdbc
+    from warp_pipe_spark.streaming import KeysetPoller
+
+    calls = []
+
+    def poll_microbatch(spark, url, last_id, table, limit, properties):
+        calls.append((url, last_id, table, limit, properties))
+        ids = [(i,) for i in range(1, 6) if i > last_id][:limit]
+        return spark.createDataFrame(ids, "id LONG")
+
+    class Sink:
+        def __init__(self):
+            self.applied = []
+
+        def apply_observed(self, batch, batch_id):
+            ids = [r["id"] for r in batch.collect()]
+            self.applied.append((batch_id, ids))
+            return (max(ids), len(ids)) if ids else (None, 0)
+
+    monkeypatch.setattr(jdbc, "poll_microbatch", poll_microbatch)
+    url, props = "jdbc:postgresql://example/db", {"user": "wp"}
+    fetch = jdbc.keyset_fetch(url, table="wp.audit", properties=props)
+    sink = Sink()
+    poller = KeysetPoller(spark, fetch, sink, str(tmp_path / "offset.json"), limit=3)
+
+    assert [poller.poll_once(), poller.poll_once()] == [3, 2]
+    assert calls == [
+        (url, 0, "wp.audit", 3, props),
+        (url, 3, "wp.audit", 3, props),
+    ]
+    assert sink.applied == [(0, [1, 2, 3]), (3, [4, 5])]
+    assert poller.committed_offset() == 5

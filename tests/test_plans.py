@@ -743,18 +743,3 @@ def test_profile_table_sketch_sized_shuffles(spark):
     assert n_exchanges(p) <= 4, t
 
 
-def test_triangle_count_no_cartesian(spark):
-    """triangle_count's joins are all equi-keyed (degree attach, wedge
-    build on the middle vertex, closure on the (x, y) pair) — never a
-    cartesian or nested-loop, the difference between O(m^1.5) and
-    O(n^2) at graph scale."""
-    from warp_pipe_spark.datapipe.clustering import triangle_count
-
-    edges = spark.range(1000).selectExpr(
-        "CAST(conv(substring(md5(concat('s|', id)), 1, 8), 16, 10) AS BIGINT) % 100 AS src",
-        "CAST(conv(substring(md5(concat('d|', id)), 1, 8), 16, 10) AS BIGINT) % 100 AS dst",
-    )
-    p = plan_of(spark, triangle_count(edges))
-    t = tree_of(p)
-    assert "CartesianProduct" not in t, t
-    assert "BroadcastNestedLoopJoin" not in t, t

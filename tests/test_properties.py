@@ -619,45 +619,6 @@ def test_repetition_signals_match_python_spec(spark, texts):
     assert set(got) == want_ids
 
 
-@settings(max_examples=10, deadline=None)
-@given(
-    st.lists(
-        st.lists(
-            st.text(alphabet="abc", min_size=1, max_size=5),
-            min_size=1,
-            max_size=8,
-        ),
-        min_size=1,
-        max_size=3,
-    ),
-    st.integers(1, 8),
-)
-def test_train_bpe_matches_reference_on_random_corpora(
-    spark, docs_words, n_merges
-):
-    """train_bpe == the pure-Python Sennrich reference for random tiny
-    corpora — merges in order and final symbol sequences, beyond the
-    single fixture corpus."""
-    from test_ingest import _bpe_reference
-
-    from warp_pipe_spark.datapipe.text import train_bpe
-
-    corpus = [" ".join(ws) for ws in docs_words]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(corpus)], "doc_id LONG, text STRING"
-    )
-    wcounts = {}
-    for t in corpus:
-        for w in t.split(" "):
-            if w:
-                wcounts[w] = wcounts.get(w, 0) + 1
-    want_merges, want_vocab = _bpe_reference(wcounts, n_merges)
-    merges, vocab_df = train_bpe(df, n_merges=n_merges)
-    assert merges == want_merges
-    got_vocab = {r["w"]: list(r["symbols"]) for r in vocab_df.collect()}
-    assert got_vocab == want_vocab
-
-
 # --- round-14 operators ----------------------------------------------
 
 

@@ -1151,95 +1151,3 @@ def test_text_index_empty_query_and_unknown_term(spark, tmp_path):
     )
     one = bm25_topk_indexed(spark, path, ["d"]).collect()
     assert [r["doc_id"] for r in one] == [2]
-
-
-# --- triangle counting -----------------------------------------------
-
-
-def test_triangle_count_hand_graphs(spark):
-    """K4 (every node in 3 of the 4 triangles), a 4-path (none), two
-    triangles sharing an edge (shared nodes in 2 each), plus dirty
-    input: self-loops, duplicates, and reversed duplicates must not
-    change any count; reruns identical."""
-    from warp_pipe_spark.datapipe.clustering import triangle_count
-
-    k4 = [(a, b) for a in range(4) for b in range(4) if a < b]
-    dirty = k4 + [(2, 2), (1, 0), (3, 2), (0, 1)]  # loop + reversals/dups
-    edges = spark.createDataFrame(dirty, "src LONG, dst LONG")
-    got = {r["node"]: r["n_triangles"] for r in triangle_count(edges).collect()}
-    assert got == {0: 3, 1: 3, 2: 3, 3: 3}
-
-    path = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 3)], "src LONG, dst LONG"
-    )
-    assert triangle_count(path).count() == 0
-
-    bowtie = spark.createDataFrame(
-        [(0, 1), (1, 2), (0, 2), (2, 3), (3, 4), (2, 4)],
-        "src LONG, dst LONG",
-    )
-    got = {r["node"]: r["n_triangles"] for r in triangle_count(bowtie).collect()}
-    assert got == {0: 1, 1: 1, 2: 2, 3: 1, 4: 1}
-    again = {
-        r["node"]: r["n_triangles"] for r in triangle_count(bowtie).collect()
-    }
-    assert again == got
-
-
-def test_triangle_count_coactivity_matches_duckdb(spark, sf_dir):
-    """Full-pipeline replica on real data: the user co-activity graph
-    (users sharing an (event_type, hour) bucket, bucket_pairs with the
-    hot-bucket cap a no-op at this SF) triangle-counted by the
-    degree-oriented algorithm must equal DuckDB's sorted-triple
-    formulation — orientation strategy changes the join sizes, never
-    the triangle set."""
-    import duckdb
-
-    from warp_pipe_spark.datapipe.clustering import triangle_count
-    from warp_pipe_spark.datapipe.dedup import bucket_pairs
-    from warp_pipe_spark.io import read_table
-
-    ev = read_table(spark, sf_dir, "events").filter(
-        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-    )
-    buckets = ev.select(
-        "user_id",
-        "event_type",
-        F.date_trunc("hour", F.col("ts")).alias("hr"),
-    ).distinct()
-    edges = bucket_pairs(
-        buckets, ["event_type", "hr"], "user_id", "src", "dst",
-        max_bucket=10_000,
-    )
-    got = sorted(
-        (r["node"], r["n_triangles"]) for r in triangle_count(edges).collect()
-    )
-    want = sorted(map(tuple, duckdb.sql(f"""
-    WITH ev AS (
-      SELECT DISTINCT user_id, event_type, date_trunc('hour', ts) AS hr
-      FROM read_parquet('{sf_dir}/events.parquet')
-      WHERE user_id IS NOT NULL AND ts IS NOT NULL
-    ),
-    und AS (
-      SELECT DISTINCT least(a.user_id, b.user_id) AS a,
-                      greatest(a.user_id, b.user_id) AS b
-      FROM ev a JOIN ev b
-        ON a.event_type = b.event_type AND a.hr = b.hr
-       AND a.user_id < b.user_id
-    ),
-    tri AS (
-      SELECT e1.a AS n1, e1.b AS n2, e2.b AS n3
-      FROM und e1
-      JOIN und e2 ON e2.a = e1.a AND e2.b > e1.b
-      JOIN und e3 ON e3.a = e1.b AND e3.b = e2.b
-    ),
-    pern AS (
-      SELECT n1 AS node FROM tri
-      UNION ALL SELECT n2 FROM tri
-      UNION ALL SELECT n3 FROM tri
-    )
-    SELECT node, CAST(count(*) AS BIGINT) AS n_triangles
-    FROM pern GROUP BY node
-    """).fetchall()))
-    assert len(got) > 0
-    assert got == want

@@ -752,54 +752,6 @@ def test_semantic_decontaminate_finds_leaked_eval_items(spark, sf_dir):
     assert got == want
 
 
-def test_topk_update_equals_full_rebuild(spark, sf_dir):
-    """Incremental exact top-k: seed with topk_cosine over half the
-    corpus, feed the other half through topk_update in TWO batches —
-    the final table must equal a one-shot topk_cosine over the full
-    corpus row-for-row (scores, ranks, tie order), per-update work
-    touching only the batch."""
-    from warp_pipe_spark.datapipe.similarity import topk_cosine, topk_update
-    from warp_pipe_spark.io import read_table
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    queries = emb.filter("vec_id < 10")
-    old = emb.filter("vec_id % 2 = 0")
-    b1 = emb.filter("vec_id % 4 = 1")
-    b2 = emb.filter("vec_id % 4 = 3")
-
-    cached = topk_cosine(old, queries=queries, k=5)
-    cached = topk_update(cached, b1, queries, k=5).localCheckpoint(eager=True)
-    got = sorted(
-        map(tuple, topk_update(cached, b2, queries, k=5).collect())
-    )
-    want = sorted(
-        map(tuple, topk_cosine(emb, queries=queries, k=5).collect())
-    )
-    assert got == want and len(got) == 50
-
-
-def test_topk_update_cold_start_and_self_exclusion(spark):
-    """Cold start (empty cache) over one batch == topk_cosine over
-    that batch; a query vector arriving in the batch never matches
-    itself."""
-    from warp_pipe_spark.datapipe.similarity import topk_cosine, topk_update
-
-    emb = spark.createDataFrame(
-        [(i, [float(i % 3), float((i * 7) % 5), 1.0]) for i in range(12)],
-        "vec_id LONG, embedding ARRAY<DOUBLE>",
-    )
-    queries = emb.filter("vec_id < 3")
-    empty = spark.createDataFrame(
-        [], "query_id long, neighbor_id long, rank long, cos_sim double"
-    )
-    got = sorted(map(tuple, topk_update(empty, emb, queries, k=4).collect()))
-    want = sorted(
-        map(tuple, topk_cosine(emb, queries=queries, k=4).collect())
-    )
-    assert got == want
-    assert all(qid != nid for qid, nid, _, _ in got)
-
-
 def test_ivf_cand_must_match_the_search_parameters(emb):
     """A pinned ivf_candidates set carries its n_queries/n_centroids/
     n_probe in query_id's metadata (through localCheckpoint); a search
@@ -851,9 +803,6 @@ def _entry_point_rows(name, spark, e, tmp_path):
     queries, rest = e.filter("vec_id < 10"), e.filter("vec_id >= 10")
     if name == "topk_cosine":
         return sim.topk_cosine(e, k=5, n_queries=10)
-    if name == "topk_update":
-        cached = sim.topk_cosine(e.filter("vec_id >= 100"), queries=queries, k=5)
-        return sim.topk_update(cached, e.filter("vec_id < 100"), queries, k=5)
     if name == "ivf_topk_cosine":
         return sim.ivf_topk_cosine(e, k=5, n_queries=10)
     if name == "ivf_pq_topk":
@@ -883,7 +832,6 @@ def _entry_point_rows(name, spark, e, tmp_path):
     "name",
     [
         "topk_cosine",
-        "topk_update",
         "ivf_topk_cosine",
         "ivf_pq_topk",
         "ivf_topk_indexed",

@@ -1,16 +1,71 @@
 """S8 websocket broadcast sink: real RFC 6455 server, real client
 sockets, per-changeset JSON frames (demo-service main.go parity)."""
 
+import base64
+import hashlib
 import json
+import socket
+import struct
 
 import pytest
 
-from warp_pipe_spark.sinks import (
-    WebSocketBroadcastSink,
-    read_ws_frames,
-    ws_handshake,
-    ws_text_frame,
-)
+from warp_pipe_spark.sinks import WebSocketBroadcastSink, ws_text_frame
+
+_WS_GUID = "258EAFA5-E914-47DA-95CA-C5AB0DC85B11"  # RFC 6455 §1.3
+
+
+def read_ws_frames(sock: socket.socket, n_frames: int) -> list[str]:
+    """Client-side frame reader: reads n unmasked text frames and
+    returns their payloads (assumes len < 2^16)."""
+    out = []
+    buf = b""
+    while len(out) < n_frames:
+        chunk = sock.recv(65536)
+        if not chunk:
+            break
+        buf += chunk
+        while len(buf) >= 2:
+            ln = buf[1] & 0x7F
+            off = 2
+            if ln == 126:
+                if len(buf) < 4:
+                    break
+                (ln,) = struct.unpack("!H", buf[2:4])
+                off = 4
+            if len(buf) < off + ln:
+                break
+            out.append(buf[off : off + ln].decode())
+            buf = buf[off + ln :]
+    return out
+
+
+def ws_handshake(host: str, port: int) -> socket.socket:
+    """Client handshake: returns a connected socket that has completed
+    the RFC 6455 upgrade, with the server's accept key checked against
+    one computed here from the spec."""
+    s = socket.create_connection((host, port), timeout=5.0)
+    key = base64.b64encode(b"0123456789abcdef").decode()
+    s.sendall(
+        (
+            f"GET /ws HTTP/1.1\r\nHost: {host}:{port}\r\n"
+            "Upgrade: websocket\r\nConnection: Upgrade\r\n"
+            f"Sec-WebSocket-Key: {key}\r\n"
+            "Sec-WebSocket-Version: 13\r\n\r\n"
+        ).encode()
+    )
+    resp = b""
+    while b"\r\n\r\n" not in resp:
+        chunk = s.recv(4096)
+        if not chunk:
+            raise ValueError("server closed during handshake")
+        resp += chunk
+    first = resp.split(b"\r\n", 1)[0]
+    if b"101" not in first:
+        raise ValueError(f"upgrade refused: {first!r}")
+    expect = base64.b64encode(hashlib.sha1((key + _WS_GUID).encode()).digest())
+    if expect not in resp:
+        raise ValueError("bad Sec-WebSocket-Accept")
+    return s
 
 
 def test_frame_encoding_lengths():

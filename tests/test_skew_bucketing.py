@@ -1,12 +1,10 @@
-"""Skew-salted aggregation correctness + the bucketed co-located join
-plan guarantee (zero exchanges on a bucket-aligned join)."""
-
-import re
+"""Skew-salted aggregation correctness + the top-k plan guarantee
+(TakeOrderedAndProject, no global sort)."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from warp_pipe_spark.io import read_table, write_bucketed
+from warp_pipe_spark.io import read_table
 from warp_pipe_spark.skew import salted_agg, top_k
 
 SF = "/root/testdata/sf0.001"
@@ -151,115 +149,3 @@ def test_top_k_compiles_to_take_ordered(spark):
     g = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
     p = _plan(spark, top_k(g, [F.col("n").desc(), F.col("user_id")], 10))
     assert "TakeOrderedAndProject" in p, _tree(p)
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Co-located join: orders ⋈ lineitem both bucketed by orderkey →
-    the join plan has ZERO Exchange nodes (broadcast disabled to force
-    the sort-merge path a 100 TB fact-fact join would take)."""
-    orders = read_table(spark, SF, "orders")
-    li = read_table(spark, SF, "lineitem")
-    write_bucketed(
-        orders, "b_orders", ["o_orderkey"], 8, path=str(tmp_path / "bo")
-    )
-    write_bucketed(
-        li, "b_lineitem", ["l_orderkey"], 8, path=str(tmp_path / "bl")
-    )
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = (
-            spark.table("b_orders")
-            .join(
-                spark.table("b_lineitem"),
-                F.col("o_orderkey") == F.col("l_orderkey"),
-            )
-            .groupBy("o_orderpriority")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        p = _plan(spark, j)
-        tree = _tree(p)
-        join_part = tree.split("HashAggregate")[-1]  # below the agg: the join
-        assert "SortMergeJoin" in tree, tree
-        assert not re.search(r"[+:]- Exchange", join_part), tree
-        # and it still returns the right answer
-        got = {r["o_orderpriority"]: r["n"] for r in j.collect()}
-        want = {
-            r["o_orderpriority"]: r["n"]
-            for r in orders.join(li, orders.o_orderkey == li.l_orderkey)
-            .groupBy("o_orderpriority")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        assert got == want
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
-# --- dataset writer: no small-file explosion ---------------------------
-
-
-def test_write_dataset_one_file_per_partition_dir(spark, tmp_path):
-    """partitionBy after repartition-on-partition-cols: each partition
-    directory gets exactly files_per_partition files, regardless of
-    input task count (the naive write emits tasks x values files)."""
-    import os
-
-    from warp_pipe_spark.io import write_dataset
-
-    df = spark.range(0, 10_000, 1, 16).selectExpr(
-        "id", "CAST(id % 7 AS STRING) AS bucket"
-    )
-    path = str(tmp_path / "ds")
-    write_dataset(df, path, partition_by=["bucket"])
-
-    for b in range(7):
-        d = os.path.join(path, f"bucket={b}")
-        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
-        assert len(files) == 1, (b, files)
-    assert spark.read.parquet(path).count() == 10_000
-
-
-def test_write_dataset_max_records_splits_skewed_partition(spark, tmp_path):
-    import os
-
-    from warp_pipe_spark.io import write_dataset
-
-    # one hot value with 9k rows, one cold with 1k
-    df = spark.range(0, 10_000, 1, 8).selectExpr(
-        "id", "CASE WHEN id < 9000 THEN 'hot' ELSE 'cold' END AS bucket"
-    )
-    path = str(tmp_path / "ds2")
-    write_dataset(df, path, partition_by=["bucket"], max_records_per_file=2500)
-
-    hot = [f for f in os.listdir(os.path.join(path, "bucket=hot")) if f.endswith(".parquet")]
-    cold = [f for f in os.listdir(os.path.join(path, "bucket=cold")) if f.endswith(".parquet")]
-    assert len(hot) == 4  # 9000 / 2500 → 4 sequential files from one task
-    assert len(cold) == 1
-    assert spark.read.parquet(path).count() == 10_000
-
-
-def test_compact_dataset_reduces_files_and_preserves_rows(spark, tmp_path):
-    import os
-
-    from warp_pipe_spark.io import compact_dataset
-
-    path = str(tmp_path / "messy")
-    # simulate a streaming sink: many small appends per partition
-    for i in range(5):
-        spark.range(i * 100, (i + 1) * 100, 1, 4).selectExpr(
-            "id", "CAST(id % 3 AS STRING) AS bucket"
-        ).write.mode("append").partitionBy("bucket").parquet(path)
-
-    before_rows = spark.read.parquet(path).count()
-    out = compact_dataset(spark, path)
-    assert out["files_before"] > out["files_after"]
-    for b in range(3):
-        d = os.path.join(path, f"bucket={b}")
-        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
-        assert len(files) == 1
-    after = spark.read.parquet(path)
-    assert after.count() == before_rows == 500
-    assert not os.path.exists(path + "._compact")
-    assert not os.path.exists(path + "._trash")

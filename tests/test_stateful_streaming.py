@@ -1,164 +1,25 @@
-"""applyInPandasWithState sessionization: state must persist across
-micro-batches and emit sessions exactly when the gap closes them."""
-
-import time
+"""Streaming twins of batch operators: the same helper drained from a
+file stream over several micro-batches must equal its batch result."""
 
 import pytest
-
-from warp_pipe_spark.analytics import stateful_sessionize
-
-SCHEMA = "user_id LONG, ts_ms LONG, value DOUBLE"
 
 T0 = 1_700_000_000_000  # arbitrary epoch ms
 MIN = 60_000
 
 
-def _write(spark, rows, path):
-    spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode("append").parquet(path)
-
-
-def test_sessions_emitted_across_microbatches(spark, tmp_path):
-    drop = str(tmp_path / "drop")
-    ckpt = str(tmp_path / "ckpt")
-
-    # batch 1: user 1 has two close events; user 2 one event
-    _write(spark, [(1, T0, 1.0), (1, T0 + 5 * MIN, 2.0), (2, T0, 5.0)], drop)
-    # batch 2 (separate file): user 1 returns 2h later -> closes session 1
-    _write(spark, [(1, T0 + 125 * MIN, 4.0)], drop)
-
-    from pyspark.sql import types as T
-
-    # the state store allocates one instance per shuffle partition per
-    # micro-batch; 2 keys don't need 8 — keeps the test fast. Baked
-    # into the checkpoint at first start, so set it before .start().
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-
-    stream = (
-        spark.readStream.schema(T.StructType.fromDDL(SCHEMA))
-        .option("maxFilesPerTrigger", 1)  # force one micro-batch per file
-        .parquet(drop)
-    )
-    q = (
-        # use_timeout=False: pending ProcessingTime timers would keep an
-        # availableNow query alive forever (empty timer micro-batches)
-        stateful_sessionize(stream, gap_minutes=30, use_timeout=False)
-        .writeStream.format("memory")
-        .queryName("sessions_out")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
+@pytest.fixture(autouse=True)
+def two_shuffle_partitions(spark):
+    """The state store allocates one instance per shuffle partition per
+    micro-batch; a handful of keys don't need 8, so each drain runs on
+    2 (baked into the checkpoint at first start) and the session's
+    setting is restored after."""
+    conf = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
     try:
-        terminated = q.awaitTermination(120)
-        assert terminated, "availableNow drain did not terminate"
+        yield
     finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-
-    rows = {
-        (r["user_id"], r["start_ms"], r["end_ms"], r["n_events"], r["sum_value"])
-        for r in spark.sql("SELECT * FROM sessions_out").collect()
-    }
-    # exactly ONE closed session: user 1's first (2 events, sum 3.0),
-    # closed by the event that arrived in the SECOND micro-batch.
-    assert rows == {(1, T0, T0 + 5 * MIN, 2, 3.0)}
-
-
-# --- stateful funnel: conversion detected across micro-batches ---------
-
-FSCHEMA = "user_id LONG, ts_ms LONG, event_type STRING"
-
-
-def _fwrite(spark, rows, path):
-    spark.createDataFrame(rows, FSCHEMA).coalesce(1).write.mode("append").parquet(path)
-
-
-def _fdrain(spark, drop, ckpt, name, one_file_per_batch=False):
-    from pyspark.sql import types as T
-
-    from warp_pipe_spark.analytics import stateful_funnel
-
-    reader = spark.readStream.schema(T.StructType.fromDDL(FSCHEMA))
-    if one_file_per_batch:
-        reader = reader.option("maxFilesPerTrigger", 1)
-    q = (
-        stateful_funnel(reader.parquet(drop))
-        .writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-    return {r["user_id"]: r for r in spark.sql(f"SELECT * FROM {name}").collect()}
-
-
-def test_funnel_conversion_across_microbatches(spark, tmp_path):
-    """The click arrives in micro-batch 1, the purchase in micro-batch
-    2 (maxFilesPerTrigger=1 forces the split) — the conversion must
-    fire from STATE, not from any same-batch join."""
-    drop, ckpt = str(tmp_path / "drop"), str(tmp_path / "ckpt")
-    _fwrite(
-        spark,
-        [
-            (1, T0, "click"),
-            (2, T0, "purchase"),  # purchase BEFORE any click: no conversion
-            (3, T0, "click"),
-        ],
-        drop,
-    )
-    _fwrite(
-        spark,
-        [
-            (1, T0 + 5 * MIN, "purchase"),  # converts (click was batch 1)
-            (2, T0 + MIN, "click"),  # click after purchase: still pending
-            (1, T0 + 9 * MIN, "purchase"),  # second purchase: must NOT re-emit
-        ],
-        drop,
-    )
-    got = _fdrain(spark, drop, ckpt, "funnel_b", one_file_per_batch=True)
-    assert set(got) == {1}
-    assert got[1]["click_ms"] == T0
-    assert got[1]["purchase_ms"] == T0 + 5 * MIN
-    assert got[1]["gap_ms"] == 5 * MIN
-
-
-def test_funnel_matches_batch_query_semantics(spark, tmp_path):
-    """Streamed conversions == the batch events_funnel rule (first
-    click, any later purchase) on the same rows."""
-    drop, ckpt = str(tmp_path / "dropm"), str(tmp_path / "ckptm")
-    rows = [
-        (10, T0, "view"),
-        (10, T0 + MIN, "click"),
-        (10, T0 + 2 * MIN, "click"),
-        (10, T0 + 3 * MIN, "purchase"),
-        (11, T0, "purchase"),
-        (11, T0 + MIN, "click"),
-        (12, T0, "click"),
-    ]
-    _fwrite(spark, rows, drop)
-    got = _fdrain(spark, drop, ckpt, "funnel_m")
-    assert set(got) == {10}
-    assert got[10]["click_ms"] == T0 + MIN and got[10]["purchase_ms"] == T0 + 3 * MIN
-
-
-def test_funnel_sorts_across_arrow_chunk_seams(spark, tmp_path):
-    """arrow.maxRecordsPerBatch=1 forces one chunk per row: a purchase
-    row delivered in an earlier chunk than its click must still
-    convert — the group is buffered and sorted ONCE, not per chunk."""
-    drop, ckpt = str(tmp_path / "drop"), str(tmp_path / "ckpt")
-    # file order: purchase first, click second (same micro-batch)
-    _fwrite(spark, [(1, T0 + 5 * MIN, "purchase"), (1, T0, "click")], drop)
-
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1")
-    try:
-        got = _fdrain(spark, drop, ckpt, "funnel_chunks")
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    assert set(got) == {1}
-    assert got[1]["gap_ms"] == 5 * MIN
+        spark.conf.set(conf, old)
 
 
 def test_sketch_registers_stream_equals_batch(spark, tmp_path):
@@ -186,7 +47,6 @@ def test_sketch_registers_stream_equals_batch(spark, tmp_path):
         (r["d"], r["j"], r["counter"]) for r in cms_registers(batch_df).collect()
     }
 
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
     stream = (
         spark.readStream.schema(T.StructType.fromDDL(schema))
         .option("maxFilesPerTrigger", 1)
@@ -230,7 +90,6 @@ def test_attribution_stream_stream_join_matches_batch(spark, tmp_path):
     the drained inner-join output must equal the batch twin (the same
     function on static frames) — including a cross-batch match and
     excluding a pair outside the 30-minute window."""
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     from warp_pipe_spark.analytics import attribution_join
@@ -254,7 +113,6 @@ def test_attribution_stream_stream_join_matches_batch(spark, tmp_path):
             "append"
         ).parquet(path)
 
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
     cs = (
         spark.readStream.schema(T.StructType.fromDDL(ASCHEMA))
         .option("maxFilesPerTrigger", 1)
@@ -291,67 +149,3 @@ def test_attribution_stream_stream_join_matches_batch(spark, tmp_path):
     assert got == want == {(1, 4, 5 * MIN), (2, 5, 5 * MIN)}
 
 
-def test_funnel_late_click_revises_first_click(spark, tmp_path):
-    """A step_a arriving LATE (earlier event time, later micro-batch)
-    must revise the user's true first click: user 1's purchase at
-    t+60 follows the late click at t+50 — a first-seen-wins state
-    would drop the conversion (purchase < stale first_click) and a
-    later purchase would report an inflated gap."""
-    drop, ckpt = str(tmp_path / "d"), str(tmp_path / "c")
-    _fwrite(spark, [(1, T0 + 100, "click"), (2, T0 + 100, "click")], drop)
-    time.sleep(1.1)  # file mtime order = micro-batch order
-    _fwrite(
-        spark,
-        [(1, T0 + 50, "click"), (1, T0 + 60, "purchase"),
-         (2, T0 + 150, "purchase")],
-        drop,
-    )
-    got = _fdrain(spark, drop, ckpt, "late_click_out", one_file_per_batch=True)
-    # user 1 converts on the TRUE first click (t+50), gap 10
-    assert (got[1]["click_ms"], got[1]["purchase_ms"], got[1]["gap_ms"]) == (
-        T0 + 50, T0 + 60, 10,
-    )
-    # user 2's in-order conversion: gap 50 against its only click
-    assert got[2]["gap_ms"] == 50
-
-
-def test_sessionize_late_event_widens_not_corrupts(spark, tmp_path):
-    """An event LATE across the micro-batch seam (event time before the
-    open session's last-seen) must widen the session, never move
-    last-seen backwards — that emits end_ms < start_ms and mis-splits
-    the next gap test."""
-    from pyspark.sql import types as T
-
-    drop, ckpt = str(tmp_path / "sd"), str(tmp_path / "sc")
-    _write(spark, [(1, T0 + 10 * MIN, 1.0)], drop)
-    time.sleep(1.1)
-    # batch 2: a LATE event 10 min before the seen one, then a closer
-    # 35 min after the TRUE last-seen (T0+10min): gap 35 > 30 closes it
-    _write(spark, [(1, T0, 2.0), (1, T0 + 45 * MIN, 4.0)], drop)
-
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    stream = (
-        spark.readStream.schema(T.StructType.fromDDL(SCHEMA))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drop)
-    )
-    q = (
-        stateful_sessionize(stream, gap_minutes=30, use_timeout=False)
-        .writeStream.format("memory")
-        .queryName("late_sessions_out")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        assert q.awaitTermination(120)
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-    rows = {
-        (r["user_id"], r["start_ms"], r["end_ms"], r["n_events"], r["sum_value"])
-        for r in spark.sql("SELECT * FROM late_sessions_out").collect()
-    }
-    # ONE closed session spanning [T0, T0+10min] with both early events;
-    # end >= start always, and the late event did not reset the gap base
-    assert rows == {(1, T0, T0 + 10 * MIN, 2, 3.0)}

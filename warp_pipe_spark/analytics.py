@@ -1,7 +1,8 @@
 """Event-time analytics over the `events` stream table — the windowed
 surface the reference lacks (SURVEY.md §2.8 marks watermarks/windows
-"absent") but Structured Streaming gives natively; exposed both as
-batch queries (oracle-checkable) and as a streaming aggregation.
+"absent") but Structured Streaming gives natively; exposed as batch
+queries (oracle-checkable), and attribution_join and the sketch
+registers run unchanged on a stream.
 
 Scale: tumbling windows are a keyed aggregation (partial agg map-side);
 sessionization is one shuffle keyed by user with an in-partition scan —
@@ -12,83 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-FUNNEL_OUT_SCHEMA = (
-    "user_id LONG, click_ms LONG, purchase_ms LONG, gap_ms LONG"
-)
-_FUNNEL_STATE_SCHEMA = "first_click LONG"
-
-
-def stateful_funnel(
-    stream: DataFrame,
-    step_a: str = "click",
-    step_b: str = "purchase",
-) -> DataFrame:
-    """Stateful two-step funnel detection over an unbounded stream
-    (§2.8 extension #2): emit one row per user the FIRST time a
-    `step_b` event arrives at/after that user's first `step_a` —
-    conversion detected incrementally, across micro-batches, without
-    ever re-scanning history.
-
-    State per user is a single LONG (first click timestamp; sentinel
-    -1 after conversion fires so redeliveries can't double-emit).
-    Keyed by user (one shuffle); state store grows with |users seen|,
-    not |events| — the incremental twin of the batch `events_funnel`
-    aggregate, and the state discipline (tiny fixed-width state,
-    monotone transitions, at-least-once-safe emission) is the one that
-    holds at 100 TB/day.
-
-    Input needs (user_id LONG, ts_ms LONG, event_type STRING).
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def fn(key, pdf_iter, state):
-        import pandas as pd
-
-        (user_id,) = key
-        first_click = state.get[0] if state.exists else None
-        out = []
-        # a group arrives as MULTIPLE Arrow chunks (split at
-        # maxRecordsPerBatch / upstream partition bounds) — sorting each
-        # chunk alone would process events out of time order across the
-        # chunk seam, so buffer the whole group and sort ONCE. Memory is
-        # bounded by one user's rows in one micro-batch.
-        chunks = [pdf for pdf in pdf_iter]
-        pdf = pd.concat(chunks).sort_values("ts_ms") if chunks else None
-        if pdf is not None:
-            for t, et in zip(pdf["ts_ms"], pdf["event_type"]):
-                if first_click == -1:
-                    break  # already converted; ignore the rest
-                t = int(t)
-                if et == step_a and (first_click is None or t < first_click):
-                    # min, not first-seen: a LATE step_a arriving in a
-                    # later micro-batch must revise the user's true
-                    # first click, or a same-batch step_b after it is
-                    # wrongly dropped and later conversions report an
-                    # inflated gap_ms
-                    first_click = t
-                elif et == step_b and first_click is not None and t >= first_click:
-                    out.append((user_id, first_click, t, t - first_click))
-                    first_click = -1
-        if first_click is not None:
-            state.update((first_click,))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["user_id", "click_ms", "purchase_ms", "gap_ms"]
-            )
-
-    return (
-        stream.select("user_id", "ts_ms", "event_type")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=FUNNEL_OUT_SCHEMA,
-            stateStructType=_FUNNEL_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
 
 
 def hourly_rollup(events: DataFrame) -> DataFrame:
@@ -144,112 +68,6 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
             F.count("*").alias("n_events"),
             F.min(F.unix_millis("ts")).alias("start_ms"),
             F.max(F.unix_millis("ts")).alias("end_ms"),
-        )
-    )
-
-
-SESSION_OUT_SCHEMA = (
-    "user_id LONG, start_ms LONG, end_ms LONG, n_events LONG, sum_value DOUBLE"
-)
-_SESSION_STATE_SCHEMA = "start LONG, last LONG, n LONG, s DOUBLE"
-
-
-def stateful_sessionize(
-    stream: DataFrame, gap_minutes: int = 30, use_timeout: bool = True
-) -> DataFrame:
-    """Custom STATEFUL streaming operator (§2.8 extension):
-    applyInPandasWithState sessionization. Per-user session state
-    (start, last-seen, count, sum) lives in the state store across
-    micro-batches; a session is emitted when a later event arrives more
-    than `gap_minutes` after the last one, or — in continuous tailing
-    mode — when the processing-time timeout fires with no new events.
-
-    use_timeout: register a ProcessingTimeTimeout so idle sessions
-    flush. Leave True for continuous streams; set False for
-    availableNow drains — pending timers keep an availableNow query
-    triggering empty micro-batches, so it never terminates.
-
-    Input stream needs columns (user_id LONG, ts_ms LONG, value DOUBLE).
-    Scale: state is keyed by user (one shuffle); per-key state is O(1)
-    — four scalars — so the state store grows with |active users|, not
-    |events|. Arrow-batched like every Python boundary in this repo.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    gap_ms = gap_minutes * 60 * 1000
-
-    def fn(key, pdf_iter, state):
-        import pandas as pd
-
-        cols = ["user_id", "start_ms", "end_ms", "n_events", "sum_value"]
-        (user_id,) = key
-        if state.hasTimedOut:
-            start, last, n, s = state.get
-            state.remove()
-            yield pd.DataFrame([(user_id, start, last, n, s)], columns=cols)
-            return
-        cur = tuple(state.get) if state.exists else None
-        closed = []
-        # buffer + single sort: per-chunk sorting would break event-time
-        # order across the Arrow chunk seam (see stateful_funnel)
-        chunks = [pdf for pdf in pdf_iter]
-        merged = pd.concat(chunks).sort_values("ts_ms") if chunks else None
-        if merged is not None:
-            for t, v in zip(merged["ts_ms"], merged["value"]):
-                t, v = int(t), float(v)
-                if cur is None:
-                    cur = (t, t, 1, v)
-                elif t - cur[1] > gap_ms:
-                    closed.append((user_id, *cur))
-                    cur = (t, t, 1, v)
-                else:
-                    # min/max, not (start, t): an event LATE across the
-                    # micro-batch seam (t < last) must widen the open
-                    # session, never move `last` backwards — that emits
-                    # end_ms < start_ms and mis-splits the next event's
-                    # gap test. Absent a watermark, merging late events
-                    # into the open session is the documented policy.
-                    cur = (
-                        min(cur[0], t),
-                        max(cur[1], t),
-                        cur[2] + 1,
-                        cur[3] + v,
-                    )
-        state.update(cur)
-        if use_timeout:
-            state.setTimeoutDuration(gap_ms)
-        if closed:
-            yield pd.DataFrame(closed, columns=cols)
-
-    return (
-        stream.select("user_id", "ts_ms", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=SESSION_OUT_SCHEMA,
-            stateStructType=_SESSION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if use_timeout
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
-    )
-
-
-def streaming_hourly(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Streaming form of hourly_rollup with late-data handling: the
-    watermark bounds state (windows older than max(event_time) -
-    watermark are finalized and evicted)."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "event_type",
-            F.col("w.start").alias("window_start"),
-            "n_events",
         )
     )
 

@@ -284,79 +284,6 @@ def prototypes_prune(
     )
 
 
-def triangle_count(edges: DataFrame) -> DataFrame:
-    """Exact per-node triangle counts over an undirected edge list
-    `edges(src, dst)` — the classic DEGREE-ORIENTED algorithm
-    (Schank/Wagner; the MapReduce formulation popularized by Suri &
-    Vassilvitskii's "last reducer" paper): orient every edge from its
-    lower-(degree, id) endpoint to the higher one, build wedges by
-    joining the oriented list with itself on the middle vertex, and
-    close each wedge against the oriented edge set with one more
-    equi-join. Returns (node, n_triangles) for nodes in ≥1 triangle.
-
-    Why orientation is the scale story: a naive wedge join keyed on an
-    undirected adjacency explodes around hub nodes (a degree-d hub
-    contributes d² wedges). Orientation caps every node's out-degree
-    at O(√m) — the total wedge count drops from Σd² to O(m^1.5), the
-    optimal bound for exact counting — so the hub that would OOM one
-    reducer instead fans its wedges across its (bounded) out-list.
-    All three passes are plain equi-joins + algebraic counts: no
-    windows, no collects, map-side partial aggregation everywhere.
-
-    Determinism: ties in the orientation order break on node id;
-    self-loops and duplicate/reversed edge rows are normalized away
-    first (distinct on the (min, max) form), so any engine replays
-    the exact same triangle set."""
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionByName(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    with_deg = (
-        und.join(deg.withColumnRenamed("node", "a"), "a")
-        .withColumnRenamed("deg", "deg_a")
-        .join(
-            deg.withColumnRenamed("node", "b").withColumnRenamed(
-                "deg", "deg_b"
-            ),
-            "b",
-        )
-    )
-    oriented = with_deg.select(
-        F.when(
-            (F.col("deg_a") < F.col("deg_b"))
-            | ((F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))),
-            F.struct(F.col("a").alias("lo"), F.col("b").alias("hi")),
-        )
-        .otherwise(F.struct(F.col("b").alias("lo"), F.col("a").alias("hi")))
-        .alias("e")
-    ).select(F.col("e.lo").alias("lo"), F.col("e.hi").alias("hi"))
-    w1 = oriented.select(F.col("lo").alias("mid"), F.col("hi").alias("x"))
-    w2 = oriented.select(F.col("lo").alias("mid"), F.col("hi").alias("y"))
-    wedges = w1.join(w2, "mid").filter(F.col("x") < F.col("y"))
-    # the closing edge in (min, max) form is exactly a row of `und`
-    closed = wedges.join(
-        und.select(F.col("a").alias("x"), F.col("b").alias("y")), ["x", "y"]
-    )
-    per_node = (
-        closed.select(F.col("mid").alias("node"))
-        .unionByName(closed.select(F.col("x").alias("node")))
-        .unionByName(closed.select(F.col("y").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
-    )
-    return per_node
-
-
 def pagerank(
     edges: DataFrame,
     damping: float = 0.85,

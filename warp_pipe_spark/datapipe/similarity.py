@@ -98,37 +98,6 @@ def topk_cosine(
     return _top_k(_query_cosine(emb, queries), k, "query_id", "neighbor_id")
 
 
-def topk_update(
-    cached: DataFrame,
-    new_vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-) -> DataFrame:
-    """Incremental EXACT top-k under corpus growth — the EDBT 2020
-    incremental-top-k idea (reuse the previous answer; touch only the
-    delta) re-expressed for the served-similarity table a CDC-fed
-    corpus maintains: when an ingest batch arrives, merge the CACHED
-    per-query top-k with scores against ONLY the new vectors and
-    re-rank. Exactness argument: old vectors' cosines are unchanged,
-    so no old vector outside the cached top-k can enter the new
-    top-k — the cached k rows are a sufficient summary of the entire
-    old corpus. Per-update cost is |queries|·|batch| scoring + a
-    (k+|batch|)-bounded re-rank per query, independent of corpus
-    size; applied per micro-batch it keeps a "similar items" table
-    exact under ingest without ever rescoring the corpus
-    (pytest-pinned equal to a full topk_cosine rebuild, including
-    tie order).
-
-    `cached` is topk_cosine-shaped (query_id, neighbor_id, rank,
-    cos_sim) — pass None-equivalent (empty) for a cold start.
-    Conventions match topk_cosine: query side broadcast, self-matches
-    excluded, ties break by neighbor_id asc on the rounded score."""
-    merged = cached.select("query_id", "neighbor_id", "cos_sim").unionByName(
-        _query_cosine(_scorable(new_vectors), _scorable(queries))
-    )
-    return _top_k(merged, k, "query_id", "neighbor_id")
-
-
 def semantic_decontaminate(
     corpus: DataFrame,
     benchmark: DataFrame,

@@ -590,80 +590,6 @@ def bpe_pair_counts(docs: DataFrame, top_k: int = 50) -> DataFrame:
     )
 
 
-def train_bpe(docs: DataFrame, n_merges: int = 50):
-    """FULL BPE tokenizer training (Sennrich et al. 2016) — the
-    iterative loop bpe_pair_counts computes one step of. Returns
-    (merges, vocab_df): `merges` is the ordered list of (left, right)
-    symbol pairs a tokenizer applies, `vocab_df` the final
-    (word, count, symbols) frame.
-
-    Scale shape: the ONE corpus-sized pass is the initial word count
-    (map-side combinable); every merge iteration then runs on the
-    VOCAB-sized frame (distinct words), exactly the classic BPE trick
-    bpe_pair_counts already uses — pair statistics weighted by word
-    count, never corpus-exploded. The driver loop holds one merged
-    pair per iteration and localCheckpoints the vocab frame each step
-    (the kmeans/pagerank discipline — 50 iterations of
-    expression-on-expression would otherwise stack an unanalyzable
-    plan). Greedy left-to-right merging within a word via an
-    F.aggregate fold (an 'aaa' word under pair (a,a) becomes
-    ['aa','a'], the standard non-overlapping semantics). Ties break
-    (count desc, left asc, right asc) — deterministic across engines
-    and reruns. No end-of-word marker (documented divergence from the
-    paper; add one by appending it to `symbols` before calling).
-    """
-    wc = (
-        explode_nonnull(docs, _tokens(F.col("text")), "w")
-        .select("w")
-        .filter(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count("*").cast("long").alias("c"))
-    )
-    vocab = wc.select(
-        "w", "c", F.split(F.col("w"), "(?!$)").alias("symbols")
-    ).localCheckpoint(eager=True)
-    merges: list[tuple[str, str]] = []
-    pair_struct = F.transform(
-        F.sequence(F.lit(1), F.size("symbols") - 1),
-        lambda i: F.struct(
-            F.element_at("symbols", i).alias("l"),
-            F.element_at("symbols", i + 1).alias("r"),
-        ),
-    )
-    for _ in range(n_merges):
-        top = (
-            vocab.filter(F.size("symbols") >= 2)
-            .select("c", F.explode(pair_struct).alias("p"))
-            .groupBy("p.l", "p.r")
-            .agg(F.sum("c").alias("n"))
-            .orderBy(F.desc("n"), F.asc("l"), F.asc("r"))
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        left, right = top[0]["l"], top[0]["r"]
-        merges.append((left, right))
-        merged_sym = left + right
-        fold = F.aggregate(
-            F.col("symbols"),
-            F.array().cast("array<string>"),
-            lambda acc, x: F.when(
-                (F.size(acc) > 0)
-                & (F.element_at(acc, -1) == F.lit(left))
-                & (x == F.lit(right)),
-                F.concat(
-                    F.slice(acc, 1, F.size(acc) - 1),
-                    F.array(F.lit(merged_sym)),
-                ),
-            ).otherwise(F.concat(acc, F.array(x))),
-        )
-        vocab = vocab.withColumn("symbols", fold).localCheckpoint(
-            eager=True
-        )
-    return merges, vocab
-
-
 def h32(col: Column) -> Column:
     """Shared 32-bit string hash: first 8 hex chars of md5 as an int.
     DuckDB replays it as ('0x' || substr(md5(x),1,8))::BIGINT."""

@@ -390,75 +390,6 @@ changesets AS (
 """
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    keys: "tuple[str, ...] | list[str]",
-    n_buckets: int = 32,
-    path: str | None = None,
-    sort_by: "tuple[str, ...] | list[str] | None" = None,
-) -> None:
-    """Persist `df` hash-bucketed by `keys` — the co-located-join
-    primitive. Two tables bucketed by the same key with the same bucket
-    count join with ZERO exchanges (each bucket pairs 1:1), which at
-    100 TB removes the dominant shuffle from repeated fact-to-fact
-    joins; `sort_by` additionally pre-sorts within buckets so the
-    sort-merge join skips its Sort. Asserted in tests/test_bucketing.py.
-    """
-    w = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, *keys)
-    if sort_by:
-        w = w.sortBy(*sort_by)
-    if path:
-        w = w.option("path", path)
-    w.saveAsTable(table)
-
-
-def write_dataset(
-    df: DataFrame,
-    path: str,
-    partition_by: "tuple[str, ...] | list[str] | None" = None,
-    max_records_per_file: int | None = None,
-    files_per_partition: int = 1,
-) -> None:
-    """Hive-partitioned dataset writer that CANNOT small-file-explode.
-
-    The naive `df.write.partitionBy(k)` emits one file per (task ×
-    partition-value) — with 200 tasks and 1,000 dates that's 200k tiny
-    files, the classic 100 TB lake-rot failure. This writer first
-    repartitions BY THE PARTITION COLUMNS, so with
-    files_per_partition=1 (the default) each partition directory gets
-    EXACTLY one task's output. files_per_partition>1 adds a per-row
-    salt — a DETERMINISTIC hash of the whole row mod N, never
-    monotonically_increasing_id: a nondeterministic shuffle key is the
-    SPARK-23207 correctness hole, where a fetch-failure recompute
-    re-keys rows differently and the output silently drops/duplicates
-    rows. Identical rows share a salt (they cannot be told apart
-    anyway); hash collisions between (value, salt) groups can still
-    merge tasks, so >1 is a parallelism knob, not an exact file
-    count. `maxRecordsPerFile`
-    caps file size where a single partition value is huge (the
-    skewed-date case) — Spark splits the oversized task output into
-    sequentially-numbered files.
-    """
-    w = df
-    if partition_by:
-        parts = [F.col(c) for c in partition_by]
-        if files_per_partition > 1:
-            salt = F.pmod(
-                F.xxhash64(*[F.col(c) for c in df.columns]),
-                F.lit(files_per_partition),
-            )
-            w = df.repartition(*(parts + [salt]))
-        else:
-            w = df.repartition(*parts)
-    writer = w.write.mode("overwrite")
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
 def recover_swap(path: str) -> None:
     """Heal a `rewrite_and_swap` that crashed between its two renames,
     the one state in which `path` is missing: finish the swap when
@@ -476,7 +407,7 @@ def recover_swap(path: str) -> None:
 
 def rewrite_and_swap(path: str, write: Callable[[str], _T]) -> _T:
     """Crash-safe rewrite of the dataset dir `path`: the one two-rename
-    swap, behind compact_dataset and store.retention_compact.
+    swap, whose only caller is store.retention_compact.
 
       1. heal an earlier crash (recover_swap); no dataset at `path`
          raises FileNotFoundError;
@@ -763,38 +694,6 @@ def n_parquet_files(path: str) -> int:
     return sum(
         1 for _, _, files in os.walk(path) for f in files if f.endswith(".parquet")
     )
-
-
-def compact_dataset(spark: SparkSession, path: str) -> dict[str, int]:
-    """Small-file compaction: rewrite an (optionally Hive-partitioned)
-    parquet dataset down to one file per partition directory — the
-    maintenance job every long-lived streaming sink needs, since each
-    micro-batch appends at least one file per touched partition.
-    Committed through rewrite_and_swap.
-    Returns {"files_before": n, "files_after": m}.
-    """
-
-    def write(tmp: str) -> int:
-        df = spark.read.parquet(path)
-        # partition columns are inferred from the directory layout
-        part_cols = [
-            f.name
-            for f in df.schema.fields
-            if any(
-                seg.startswith(f.name + "=")
-                for root, dirs, _ in os.walk(path)
-                for seg in dirs
-            )
-        ]
-        before = n_parquet_files(path)
-        if part_cols:
-            write_dataset(df, tmp, partition_by=part_cols)
-        else:
-            df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        return before
-
-    before = rewrite_and_swap(path, write)
-    return {"files_before": before, "files_after": n_parquet_files(path)}
 
 
 def changesets_as_audit_log(cs: DataFrame) -> DataFrame:

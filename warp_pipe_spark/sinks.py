@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import base64
 import hashlib
-import json
 import socket
 import struct
 import threading
@@ -186,55 +185,3 @@ class WebSocketBroadcastSink:
                     c.close()
                 self._clients = []
 
-
-def read_ws_frames(sock: socket.socket, n_frames: int) -> list[str]:
-    """Tiny client-side frame reader for tests/tools: reads n unmasked
-    text frames and returns their payloads (assumes len < 2^16)."""
-    out = []
-    buf = b""
-    while len(out) < n_frames:
-        chunk = sock.recv(65536)
-        if not chunk:
-            break
-        buf += chunk
-        while len(buf) >= 2:
-            ln = buf[1] & 0x7F
-            off = 2
-            if ln == 126:
-                if len(buf) < 4:
-                    break
-                (ln,) = struct.unpack("!H", buf[2:4])
-                off = 4
-            if len(buf) < off + ln:
-                break
-            out.append(buf[off : off + ln].decode())
-            buf = buf[off + ln :]
-    return out
-
-
-def ws_handshake(host: str, port: int) -> socket.socket:
-    """Client handshake helper (tests/tools): returns a connected socket
-    that has completed the RFC 6455 upgrade."""
-    s = socket.create_connection((host, port), timeout=5.0)
-    key = base64.b64encode(b"0123456789abcdef").decode()
-    s.sendall(
-        (
-            f"GET /ws HTTP/1.1\r\nHost: {host}:{port}\r\n"
-            "Upgrade: websocket\r\nConnection: Upgrade\r\n"
-            f"Sec-WebSocket-Key: {key}\r\n"
-            "Sec-WebSocket-Version: 13\r\n\r\n"
-        ).encode()
-    )
-    resp = b""
-    while b"\r\n\r\n" not in resp:
-        chunk = s.recv(4096)
-        if not chunk:
-            raise ValueError("server closed during handshake")
-        resp += chunk
-    first = resp.split(b"\r\n", 1)[0]
-    if b"101" not in first:
-        raise ValueError(f"upgrade refused: {first!r}")
-    expect = _accept_key(key).encode()
-    if expect not in resp:
-        raise ValueError("bad Sec-WebSocket-Accept")
-    return s

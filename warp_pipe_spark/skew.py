@@ -66,9 +66,9 @@ def salted_agg(
     # hot key still lands on one reducer with no error anywhere. When
     # no measure column exists to salt on (pure row counts), salt on
     # every column instead: rows identical in ALL columns may share a
-    # salt, but such rows are indistinguishable anyway (the same
-    # argument io.write_dataset makes for its file salt), and any
-    # distinguishable row spreads.
+    # salt, but such rows are indistinguishable anyway (a hash of the
+    # whole row is deterministic, so a recompute re-keys them alike),
+    # and any distinguishable row spreads.
     salt_cols = list(salt_on) if salt_on else sorted(
         {c for _, c in measures.values() if isinstance(c, str)}
     ) or list(df.columns)
