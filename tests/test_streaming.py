@@ -170,14 +170,19 @@ def test_sink_steady_batch_work_independent_of_backlog_width(spark, tmp_path):
     sink.apply_batch(spark.createDataFrame(seed1, SCHEMA), batch_id=0)
     sink.compact()
 
+    # every state read, Spark's (read_state) and the compaction's Arrow one
     reads: list[list[str]] = []
     orig_read = sink._read_tables
 
-    def spy(rels, **kw):
-        reads.append(sorted(rels))
-        return orig_read(rels, **kw)
+    def spying(read):
+        def spy(rels, schema):
+            reads.append(sorted(rels))
+            return read(rels, schema)
 
-    sink._read_tables = spy
+        return spy
+
+    sink._read_tables = spying(orig_read)
+    sink._read_arrow = spying(sink._read_arrow)
 
     def narrow(batch_id, id_base):
         batch = [
@@ -858,7 +863,7 @@ def test_truncate_while_compacting_its_table_resurrects_nothing(spark, tmp_path)
     sink = _mk_sink(spark, tmp_path)
     sink.COMPACT_DELTAS = 1  # every delta is due
     folding = threading.Event()
-    real = sink._read_tables
+    real = sink._read_arrow
 
     def slow(rels, schema):
         worker = threading.current_thread().name == "state-sink-compactor"
@@ -867,7 +872,7 @@ def test_truncate_while_compacting_its_table_resurrects_nothing(spark, tmp_path)
             time.sleep(1.0)
         return real(rels, schema)
 
-    sink._read_tables = slow
+    sink._read_arrow = slow
     sink.apply_batch(spark.createDataFrame(TRUNC_LOG[:3], SCHEMA), batch_id=0)
     assert folding.wait(60)
     sink.apply_batch(spark.createDataFrame(TRUNC_LOG[3:], SCHEMA), batch_id=1)
@@ -1416,9 +1421,9 @@ def test_compact_past_the_listing_threshold_lists_no_job(
     spark, tmp_path, listing_threshold, job_descriptions
 ):
     """compact() of a key holding more deltas than Spark's
-    parallel-listing threshold lists them on the driver: its jobs are
-    the fold's, none is a listing job, and the folded rows are the
-    replay's."""
+    parallel-listing threshold reads them on the driver with pyarrow: it
+    launches no Spark job at all, listing or fold, and the folded rows
+    are the replay's."""
     sink = _manual_sink(spark, tmp_path)
     log = [(i, "INSERT" if i <= 3 else "UPDATE", "users", i % 3, f"v{i}")
            for i in range(1, 9)]
@@ -1427,36 +1432,56 @@ def test_compact_past_the_listing_threshold_lists_no_job(
     assert len(sink._read_meta()["deltas"]["users"]) > listing_threshold
     folded, jobs = job_descriptions(sink.compact)
     assert folded == 1
-    assert jobs and not [d for d in jobs if d.startswith("Listing leaf files")]
+    assert jobs == []
     assert sink._read_meta()["deltas"] == {}
     assert _rows(sink.read_state()) == _rows(
         replay(spark.createDataFrame(log, SCHEMA), ["pk"])
     )
 
 
-def test_compaction_worker_jobs_carry_their_own_job_group(spark, tmp_path):
-    """The worker's jobs run in ParquetStateSink.COMPACTION_JOB_GROUP, so
-    a status-store reader can tell background compaction from the jobs
-    of the rounds that queued it."""
+def test_compaction_worker_launches_no_spark_job(spark, tmp_path):
+    """With every delta due, the worker folds each key on the driver:
+    between two marker jobs, the only Spark jobs are the rounds' (each
+    one Arrow collect), though the worker compacted every key before
+    close() returned. Spark's job ids are one sequence, so a job any
+    thread ran in between has an id between the markers'."""
     import uuid
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    group = ParquetStateSink.COMPACTION_JOB_GROUP
-    before = set(tracker.getJobIdsForGroup(group))
+
+    def marker_job() -> int:
+        group = f"marker-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "marker")
+        try:
+            sc.parallelize([0], 1).count()
+        finally:
+            sc._jsc.clearJobGroup()
+        (job,) = tracker.getJobIdsForGroup(group)
+        return job
+
     sink = _mk_sink(spark, tmp_path)
     sink.COMPACT_DELTAS = 1  # every delta is due
+    batches = [spark.createDataFrame(rows, SCHEMA) for rows in (MULTI, USERS_ONLY)]
     rounds = f"rounds-{uuid.uuid4().hex}"
+    first = marker_job()
     sc.setJobGroup(rounds, "state-sink rounds")
     try:
-        sink.apply_batch(spark.createDataFrame(MULTI, SCHEMA), batch_id=0)
-        sink.close()
+        for batch_id, batch in enumerate(batches, start=1):
+            sink.apply_batch(batch, batch_id=batch_id)
     finally:
         sc._jsc.clearJobGroup()
-    assert sink._read_meta()["deltas"] == {}
-    compaction = set(tracker.getJobIdsForGroup(group)) - before
-    assert compaction
-    assert not compaction & set(tracker.getJobIdsForGroup(rounds))
+    sink.close()
+    last = marker_job()
+    meta = sink._read_meta()
+    assert meta["deltas"] == {} and set(meta["tables"]) == {"users", "pets"}
+    assert meta["tables"]["users"].endswith("v_2")  # folded after the last round
+    round_jobs = set(tracker.getJobIdsForGroup(rounds))
+    assert len(round_jobs) == len(batches)
+    assert set(range(first + 1, last)) - round_jobs == set()
+    assert _rows(sink.read_state()) == _rows(
+        replay(spark.createDataFrame(MULTI + USERS_ONLY, SCHEMA), ["pk"])
+    )
 
 
 @pytest.mark.parametrize("missing", ["schema", "deltas"])
@@ -1611,15 +1636,40 @@ def _sorted_rows(df, cols):
     )
 
 
+def _fold_with_spark_writer(sink):
+    """Fold every key that holds deltas the way compaction did before it
+    ran on the driver: `replay` over Spark's read of the key's dirs,
+    written by Spark's parquet writer as the key's new base."""
+    import os
+
+    meta = sink._read_meta()
+    for key, deltas in sorted(meta["deltas"].items()):
+        base = meta["tables"].get(key)
+        table, bucket = sink._split_key(key)
+        rel = f"tables/{table}/v_{meta['batch_id']}"
+        if bucket is not None:
+            rel += f"/{sink.BUCKET_PART}={bucket}"
+        replay(
+            sink._read_tables(([base] if base else []) + deltas, meta["schema"]),
+            sink.pk_cols,
+        ).write.parquet(os.path.join(sink.state_dir, rel))
+        meta["tables"][key] = rel
+    meta["deltas"] = {}
+    sink._commit(meta)
+
+
 @pytest.mark.parametrize("n_buckets", [None, 4])
 def test_arrow_deltas_are_type_faithful(spark, tmp_path, n_buckets, request):
-    """Deltas are written by pyarrow from the Arrow collect, bases by
-    Spark's parquet writer (compaction). Every column type reads back
-    as it went in — from deltas alone, from Spark-written bases, and
-    from a base and a delta folded in one read, where the two writers'
-    encodings mix (INT96 vs INT64 timestamps, INT64 vs fixed-length
-    decimals). The session reads with the strictest rebase mode, so the
-    ancient dates and timestamps prove the sink does not depend on it."""
+    """Deltas are written by pyarrow from the Arrow collect, and so are
+    the bases compaction folds from them. Every column type reads back
+    as it went in — from deltas alone, from folded bases, and from a
+    base and a delta folded in one read. The upgrade path: bases that
+    Spark's parquet writer wrote (as compaction did before it ran on the
+    driver) mix the two writers' encodings (INT96 vs INT64 timestamps,
+    INT64 vs fixed-length decimals) in a read, and a compaction folds
+    them into pyarrow bases with the same rows. The session reads with
+    the strictest rebase mode, so the ancient dates and timestamps prove
+    the sink does not depend on it."""
     import glob
 
     import pyarrow.parquet as pq
@@ -1636,8 +1686,9 @@ def test_arrow_deltas_are_type_faithful(spark, tmp_path, n_buckets, request):
         _typed_rows(26, 6, "UPDATE", "v2"),
     ]
     sink = _manual_sink(spark, tmp_path, n_buckets=n_buckets)
+    upgraded = _manual_sink(spark, tmp_path / "upgrade", n_buckets=n_buckets)
 
-    def check(n_batches):
+    def check(sink, n_batches):
         got = sink.read_state()
         assert [f.dataType for f in got.schema] == [f.dataType for f in schema]
         want = replay(
@@ -1648,28 +1699,79 @@ def test_arrow_deltas_are_type_faithful(spark, tmp_path, n_buckets, request):
         )
         assert _sorted_rows(got, schema.names) == _sorted_rows(want, schema.names)
 
-    def writers(rels):
+    def writers(sink, rels=None):
         return {
             pq.ParquetFile(f).metadata.created_by.split()[0]
-            for rel in rels
+            for rel in (sink._rels(sink._read_meta()) if rels is None else rels)
             for f in glob.glob(f"{sink.state_dir}/{rel}/*.parquet")
         }
 
-    for b in (0, 1):
+    def apply(sink, b):
         sink.apply_batch(spark.createDataFrame(batches[b], schema), batch_id=b)
-    assert writers(sink._rels(sink._read_meta())) == {"parquet-cpp-arrow"}
-    check(2)  # deltas only
+
+    def mixed_key(sink):
+        meta = sink._read_meta()
+        return next(k for k in sorted(meta["deltas"]) if k in meta["tables"])
+
+    def key_rels(sink, key):
+        meta = sink._read_meta()
+        return [meta["tables"][key]] + meta["deltas"].get(key, [])
+
+    for s in (sink, upgraded):
+        apply(s, 0)
+        apply(s, 1)
+        assert writers(s) == {"parquet-cpp-arrow"}
+        check(s, 2)  # deltas only
     sink.compact()
-    assert writers(sink._rels(sink._read_meta())) == {"parquet-mr"}
-    check(2)  # Spark-written bases only
-    sink.apply_batch(spark.createDataFrame(batches[2], schema), batch_id=2)
-    meta = sink._read_meta()
-    mixed = [k for k in meta["deltas"] if k in meta["tables"]]
-    assert mixed
-    assert writers([meta["tables"][mixed[0]]] + meta["deltas"][mixed[0]]) == {
+    assert writers(sink) == {"parquet-cpp-arrow"}
+    check(sink, 2)  # folded bases only
+    _fold_with_spark_writer(upgraded)
+    assert writers(upgraded) == {"parquet-mr"}
+    check(upgraded, 2)  # Spark-written bases only
+    for s in (sink, upgraded):
+        apply(s, 2)
+        check(s, 3)  # a base and a delta of one key in one read
+    key = mixed_key(upgraded)
+    assert writers(upgraded, key_rels(upgraded, key)) == {
         "parquet-mr", "parquet-cpp-arrow",
     }
-    check(3)  # a base and a delta of one key in one fold
+    for s in (sink, upgraded):
+        s.compact()  # ... and in one fold
+        check(s, 3)
+    assert writers(sink) == {"parquet-cpp-arrow"}
+    # the folded key's new base is pyarrow's; untouched keys keep theirs
+    assert writers(upgraded, key_rels(upgraded, key)) == {"parquet-cpp-arrow"}
+
+
+def test_compaction_refuses_a_legacy_rebased_base(spark, tmp_path, request):
+    """A base Spark's writer wrote under the LEGACY rebase mode holds
+    Julian-shifted pre-1582 values that only Spark's reader shifts back:
+    compaction refuses it with StateCorruptError instead of folding
+    shifted dates, and the committed state still reads as the replay."""
+    from pyspark.sql import types as T
+
+    from warp_pipe_spark.streaming import StateCorruptError
+
+    mode = "spark.sql.parquet.datetimeRebaseModeInWrite"
+    prior = spark.conf.get(mode)
+    request.addfinalizer(lambda: spark.conf.set(mode, prior))
+    schema = T.StructType.fromDDL(TYPED)
+    log = _typed_rows(1, 6, "INSERT", "v0"), _typed_rows(7, 3, "UPDATE", "v1")
+    sink = _manual_sink(spark, tmp_path)
+    sink.apply_batch(spark.createDataFrame(log[0], schema), batch_id=0)
+    spark.conf.set(mode, "LEGACY")
+    _fold_with_spark_writer(sink)
+    spark.conf.set(mode, prior)
+    sink.apply_batch(spark.createDataFrame(log[1], schema), batch_id=1)
+    want = replay(spark.createDataFrame(log[0] + log[1], schema), ["pk"])
+    assert _sorted_rows(sink.read_state(), schema.names) == _sorted_rows(
+        want, schema.names
+    )
+    with pytest.raises(StateCorruptError, match="LEGACY"):
+        sink.compact()
+    assert _sorted_rows(sink.read_state(), schema.names) == _sorted_rows(
+        want, schema.names
+    )
 
 
 def test_type_arrow_cannot_carry_raises_before_commit(spark, tmp_path):

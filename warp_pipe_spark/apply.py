@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -148,6 +150,29 @@ def replay(
             F.col(kind_col).isNull() | ~F.col(kind_col).isin(*DELETE_KINDS)
         )
     return folded
+
+
+def _replay_arrow(
+    rows: pa.Table,
+    pk_cols: Sequence[str],
+    id_col: str = "id",
+    kind_col: str = "action",
+    table_col: str | None = "table_name",
+) -> pa.Table:
+    """`replay` on the driver, over an Arrow table: the same fold with no
+    Spark job, for state small enough to hold in driver memory (one
+    state-sink key). Rows are sorted by (table, *pk) and then id
+    descending, so a key's first row is its last writer; the group-by
+    treats NULL key values as one key, as the window's partitioning does,
+    and a NULL id sorts last, as under the window's DESC NULLS LAST.
+    Delete tombstones are kept, as under `replay(drop_deletes=False)`:
+    the caller drops them. The result is sorted by key; `replay` is the
+    reference its rows are tested against."""
+    keys = ([table_col] if table_col else []) + list(pk_cols)
+    ranked = rows.sort_by([(k, "ascending") for k in keys] + [(id_col, "descending")])
+    ranked = ranked.append_column("_rn", pa.array(np.arange(ranked.num_rows)))
+    first = ranked.group_by(keys, use_threads=False).aggregate([("_rn", "first")])
+    return ranked.take(first["_rn_first"]).drop_columns(["_rn"])
 
 
 def snapshot_diff(

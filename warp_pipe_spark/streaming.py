@@ -18,9 +18,10 @@ Parity map (SURVEY.md §2.8):
 The foreachBatch sink keeps per-table state as parquet, merge-on-read:
 each micro-batch is collected to the driver as Arrow in one job and
 appended as one delta file per touched key, reads fold base ∪ deltas,
-and a background worker folds deltas into new bases — at cluster scale
-you'd swap the parquet dirs for Delta MERGE-on-read (deletion vectors),
-same plan shape.
+and a background worker folds a key's deltas into a new base on the
+driver with pyarrow, launching no Spark job — at cluster scale you'd
+swap the parquet dirs for Delta MERGE-on-read (deletion vectors), same
+plan shape.
 """
 
 from __future__ import annotations
@@ -39,11 +40,12 @@ import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
-from warp_pipe_spark.apply import replay
-from warp_pipe_spark.changeset import AUDIT_LOG_SCHEMA, TRUNCATE_KINDS
+from warp_pipe_spark.apply import _replay_arrow, replay
+from warp_pipe_spark.changeset import AUDIT_LOG_SCHEMA, DELETE_KINDS, TRUNCATE_KINDS
 from warp_pipe_spark.io import publish_file, read_parquet_dirs
 
 
@@ -62,6 +64,10 @@ def changeset_stream(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.load(drop_dir)
+
+
+#: footer keys of a parquet file Spark wrote under a LEGACY rebase mode
+_LEGACY_REBASE = {b"org.apache.spark.legacyDateTime", b"org.apache.spark.legacyINT96"}
 
 
 class StateCorruptError(RuntimeError):
@@ -158,7 +164,8 @@ class ParquetStateSink(StateSink):
         parquet file per key the batch touches with pyarrow, and reads
         the batch's (max_id, n_rows) off the collected id column. No
         stats job, no persist, no read of old state, no state shuffle,
-        no Spark file-commit protocol.
+        no Spark file-commit protocol. Compaction adds no job either,
+        so a tail's only Spark jobs are its rounds'.
       - DRIVER MEMORY: an apply collects one whole micro-batch to the
         driver, so a batch must fit `spark.driver.maxResultSize` (1g by
         default) and the driver heap. Bound it with the poller's `limit`
@@ -173,9 +180,13 @@ class ParquetStateSink(StateSink):
       - AMORTIZED COMPACTION: a key is queued for a single background
         worker once its deltas outweigh its base in bytes (a key with
         no base yet: outweigh its oldest delta) or reach COMPACT_DELTAS
-        dirs. The worker folds one key at a time into a
-        new base (the copy-on-write merge), off the round's critical
-        path; its cost is amortized over the rounds that made the debt.
+        dirs. The worker folds one key at a time into a new base (the
+        copy-on-write merge), off the round's critical path; its cost
+        is amortized over the rounds that made the debt. The fold runs
+        on the driver: pyarrow reads the key's base and deltas, the
+        last-writer-wins fold is `apply._replay_arrow` (the same policy
+        as `replay`), and pyarrow writes the base. It launches no Spark
+        job, so it takes no task slot a round's job would queue for.
       - BOUNDED READ AMPLIFICATION: a key is queued the moment a read of
         it would scan more than 2× its base bytes, which keeps reads at
         ≤2× while the worker keeps up. A key at twice either cap
@@ -188,6 +199,12 @@ class ParquetStateSink(StateSink):
         compaction removes only the deltas it folded and keeps newer ones.
       - IDEMPOTENT: a redelivered batch lands as one more delta; the fold
         dedups on id, so checkpoint replay after a crash is safe.
+      - TOMBSTONES: a compacted base keeps each key's winning delete
+        row, and reads drop them, so a batch delivered out of id order
+        (a file stream over the files of one job) cannot resurrect a
+        row an earlier batch deleted. A key whose winners are all
+        deletes is dropped from the pointer, so a late change to it is
+        not guarded.
       - TRUNCATE: a `truncate` changeset (the pgoutput source emits one
         per truncated table) clears its table when its batch applies.
         The batch's rows of the table up to its latest truncate never
@@ -206,26 +223,31 @@ class ParquetStateSink(StateSink):
         `read_state()` frame taken between rounds stays readable until
         the caller's next round (or close) starts.
       - READS: `read_state()` scans the bases of keys without deltas as
-        they are and folds only the keys that hold deltas. Reads and
-        compactions list the dirs the pointer names on the driver, in
-        chunks of Spark's parallel-listing threshold, so no read of any
-        number of dirs runs a listing job (io.read_parquet_dirs).
+        they are and folds only the keys that hold deltas. Reads list
+        the dirs the pointer names on the driver, in chunks of Spark's
+        parallel-listing threshold, so no read of any number of dirs
+        runs a listing job (io.read_parquet_dirs).
       - A compaction error in the worker re-raises on the next
         `apply_batch` or `close()`. `close()` waits for the worker and
         collects its garbage (a drained tail, shutdown); `compact()`
         drains the worker and folds every key (tests, single-scan reads).
 
-    LOCAL-FS CONTRACT: the driver writes deltas with pyarrow and
-    commits via `os.replace` / `shutil.rmtree` / `os.listdir` against
-    `state_dir`, so the state dir must be a driver-local path on one
-    POSIX filesystem (the fixtures use tmpfs). There a compaction's
-    base rename is metadata-only and `os.replace` is atomic. On HDFS
+    LOCAL-FS CONTRACT: the driver writes deltas and bases with pyarrow
+    and commits via `os.replace` / `shutil.rmtree` / `os.listdir`
+    against `state_dir`, so the state dir must be a driver-local path
+    on one POSIX filesystem (the fixtures use tmpfs). There a
+    compaction's base rename is metadata-only and `os.replace` is
+    atomic, and the fold gains nothing from Spark's executors. On HDFS
     the same sequencing holds via FileSystem.rename; on an OBJECT STORE
     (s3://, gs://) renames are COPY+DELETE — neither atomic nor
     metadata-only — so this sink does not apply there: swap the parquet
     dirs for a Delta/Iceberg merge-on-read table, which keeps the
     identical plan shape (append per touched key, keyed fold on read)
-    behind the table format's own atomic commit.
+    behind the table format's own atomic commit. A compaction holds one
+    key's base and deltas in driver memory (plus their sorted copy),
+    as an apply holds one batch: a key is its table's state over
+    `n_buckets`, so a table too large for the driver needs enough
+    buckets that one bucket fits.
     """
 
     POINTER = "_POINTER.json"
@@ -235,8 +257,6 @@ class ParquetStateSink(StateSink):
     #: rewrote its whole state every 16 rounds — 4× rewrite
     #: amplification — while its deltas stayed far below the byte rule)
     COMPACT_DELTAS = 64
-    #: the Spark job group of the compaction worker's jobs
-    COMPACTION_JOB_GROUP = "warp-pipe-state-compaction"
 
     def __init__(
         self,
@@ -505,8 +525,41 @@ class ParquetStateSink(StateSink):
                 f"pointer references unreadable state dirs {dirs}: {e}"
             ) from e
 
-    def _fold(self, rows: DataFrame) -> DataFrame:
-        return replay(rows, self.pk_cols, self.id_col, self.kind_col, self.table_col)
+    def _read_arrow(self, rels: Sequence[str], schema: dict) -> pa.Table:
+        """Every parquet file of `rels`, read on the driver with pyarrow
+        under the committed `schema` json: a column a dir predates
+        null-fills, as in `_read_tables`, and each column is cast to the
+        schema's Arrow type, so pyarrow files and bases Spark's writer
+        wrote (INT96 timestamps, fixed-length decimals) read alike. A
+        Spark file written under a LEGACY rebase mode is refused: its
+        pre-1582 values are Julian-shifted, and only Spark undoes that."""
+        target = to_arrow_schema(StructType.fromJson(schema))
+        parts = []
+        try:
+            for rel in rels:
+                path = os.path.join(self.state_dir, rel)
+                for name in sorted(os.listdir(path)):
+                    if name.startswith(("_", ".")) or not name.endswith(".parquet"):
+                        continue
+                    f = pq.ParquetFile(
+                        os.path.join(path, name), coerce_int96_timestamp_unit="us"
+                    )
+                    if _LEGACY_REBASE & set(f.metadata.metadata or {}):
+                        raise ValueError(f"{rel}/{name} has LEGACY-rebased values")
+                    t = f.read()
+                    parts.append(pa.table(
+                        [
+                            t[c.name].cast(c.type) if c.name in t.column_names
+                            else pa.nulls(t.num_rows, c.type)
+                            for c in target
+                        ],
+                        schema=target,
+                    ))
+        except (OSError, ValueError, pa.ArrowException) as e:
+            raise StateCorruptError(
+                f"pointer references unreadable state dirs {list(rels)}: {e}"
+            ) from e
+        return pa.concat_tables(parts) if parts else target.empty_table()
 
     def _state_of(self, entry: dict) -> "DataFrame | None":
         """State of a pointer or history entry: the bases of keys without
@@ -518,16 +571,20 @@ class ParquetStateSink(StateSink):
             sorted(rel for key, rel in entry["tables"].items() if key not in deltas),
             schema=schema,
         )
+        if plain is not None:  # a base keeps its delete tombstones
+            kind = F.col(self.kind_col)
+            plain = plain.filter(kind.isNull() | ~kind.isin(*DELETE_KINDS))
         if not deltas:
             return plain
-        folded = self._fold(
+        folded = replay(
             self._read_tables(
                 sorted(
                     [entry["tables"][k] for k in deltas if k in entry["tables"]]
                     + [d for ds in deltas.values() for d in ds]
                 ),
                 schema=schema,
-            )
+            ),
+            self.pk_cols, self.id_col, self.kind_col, self.table_col,
         )
         return folded if plain is None else plain.unionByName(folded)
 
@@ -609,12 +666,12 @@ class ParquetStateSink(StateSink):
                 f"tables/{quote(t, safe='')}/d_{batch_id}", None, meta
             )
             if not self.n_buckets:
-                landed[t] = self._write_delta(rel, table_rows)
+                landed[t] = self._write_dir(rel, table_rows)
                 continue
             part = table_rows[self.BUCKET_PART]
             table_rows = table_rows.drop_columns([self.BUCKET_PART])
             for b in sorted(pc.unique(part).to_pylist()):
-                landed[self._key(t, b)] = self._write_delta(
+                landed[self._key(t, b)] = self._write_dir(
                     f"{rel}/{self.BUCKET_PART}={b}",
                     table_rows.filter(pc.equal(part, b)),
                 )
@@ -635,7 +692,7 @@ class ParquetStateSink(StateSink):
             self._schedule(cur, sorted(landed))
         return mx, n
 
-    def _write_delta(self, rel: str, rows: "pa.Table") -> str:
+    def _write_dir(self, rel: str, rows: "pa.Table") -> str:
         path = os.path.join(self.state_dir, rel)
         os.makedirs(path, exist_ok=True)
         pq.write_table(rows, os.path.join(path, "part-00000.parquet"))
@@ -692,11 +749,7 @@ class ParquetStateSink(StateSink):
             self._drain()
 
     def _work(self) -> None:
-        sc = self.spark.sparkContext
         try:
-            # the worker's jobs carry their own group, so a status-store
-            # reader can tell background compaction from a round's jobs
-            sc.setJobGroup(self.COMPACTION_JOB_GROUP, f"compaction of {self.state_dir}")
             while True:
                 with self._cv:
                     if not self._queue:
@@ -715,7 +768,6 @@ class ParquetStateSink(StateSink):
                 if self._worker is threading.current_thread():
                     self._worker = None
                     self._cv.notify_all()
-            sc._jsc.clearJobGroup()
 
     def _drain(self) -> None:
         """Block until the worker has emptied its queue."""
@@ -751,24 +803,32 @@ class ParquetStateSink(StateSink):
 
     def _compact_key(self, key: str, only_if_due: bool = False) -> None:
         """Fold `key`'s base and the deltas committed now into a new
-        base; deltas appended meanwhile stay deltas."""
+        base, on the driver; deltas appended meanwhile stay deltas."""
         meta = self._read_meta()
         deltas = meta["deltas"].get(key, [])
         if not deltas or (only_if_due and not self._debt(meta, key)):
             return
         base = meta["tables"].get(key)
         inputs = ([base] if base else []) + deltas
-        obs = Observation()
-        folded = self._fold(
-            self._read_tables(inputs, schema=meta["schema"])
-        ).observe(obs, F.count(F.lit(1)).alias("_n"))
+        folded = _replay_arrow(
+            self._read_arrow(inputs, meta["schema"]),
+            self.pk_cols, self.id_col, self.kind_col, self.table_col,
+        )
+        # the base keeps delete tombstones, so a change delivered later
+        # with a lower id (files of one job streamed out of id order)
+        # cannot resurrect a deleted row; a key of tombstones only is
+        # dropped, so the cleared state costs nothing (is_in is False for
+        # a NULL kind, so a NULL-kind row counts as live, as in replay)
+        deleted = pc.is_in(folded[self.kind_col], pa.array(DELETE_KINDS))
+        live = bool(pc.sum(pc.invert(deleted)).as_py())
         table, bucket = self._split_key(key)
-        staging = os.path.join(self.state_dir, "_staging.compact")
-        shutil.rmtree(staging, ignore_errors=True)
-        folded.write.mode("overwrite").parquet(staging)
+        staging = "_staging.compact"
+        shutil.rmtree(os.path.join(self.state_dir, staging), ignore_errors=True)
+        if live:
+            self._write_dir(staging, folded)
         with self._lock:
             cur = self._read_meta()
-            if obs.get["_n"]:
+            if live:
                 rel = self._fresh_rel(
                     f"tables/{quote(table, safe='')}/v_{meta['batch_id']}",
                     bucket,
@@ -776,12 +836,11 @@ class ParquetStateSink(StateSink):
                 )
                 vdir = os.path.join(self.state_dir, rel)
                 os.makedirs(os.path.dirname(vdir), exist_ok=True)
-                os.replace(staging, vdir)
+                os.replace(os.path.join(self.state_dir, staging), vdir)
                 cur["tables"][key] = rel
             else:
                 # every row of the key was deleted: empty state is NO
                 # pointer entry (a dir with no rows would be unreadable)
-                shutil.rmtree(staging, ignore_errors=True)
                 cur["tables"].pop(key, None)
             newer = [d for d in cur["deltas"].get(key, []) if d not in deltas]
             if newer:
